@@ -216,19 +216,13 @@ class BioCypherSpark:
                 return True
             out = self.translator.translate_edges(staged)
             self._accumulate_missing(out.missing)
-            # gate on the SCHEMA: translate_edges always returns frames, so
-            # a frame-None check can never skip — without rel-as-node
-            # classes these were two extra Bolt foreachPartition jobs over
-            # provably-empty frames on every merge call
-            from .pipeline import schema_has_rel_as_node
+            # the translator reifies every edge whose class is
+            # represented_as: node, which the schema alone cannot rule out
+            # for arbitrary input; helper edges ride in the plain edge write
+            from .translate import RAN_HIDDEN_COLS
 
-            if schema_has_rel_as_node(self.mapping):
-                from .translate import RAN_HIDDEN_COLS
-
-                self.online_writer.write_nodes(out.ran_nodes.drop(*RAN_HIDDEN_COLS))
-            self.online_writer.write_edges(out.edges)
-            if schema_has_rel_as_node(self.mapping):
-                self.online_writer.write_edges(out.ran_edges)
+            self.online_writer.write_nodes(out.ran_nodes.drop(*RAN_HIDDEN_COLS))
+            self.online_writer.write_edges(out.edges.unionByName(out.ran_edges))
             return True
         if self.offline:
             return self.write_edges(entities)

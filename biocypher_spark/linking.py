@@ -262,22 +262,22 @@ def canonicalize(
         .filter(F.col("nkey").isNotNull())
         .distinct()
     )
-    surfaces = surfaces.persist()
     spark = mentions.sparkSession
-    # count-probe, not collect-probe: on the large-domain path a limited
-    # collect would serialize driver_cc_threshold rows to the driver only to
-    # discard them; the count ships nothing. The small path pays one extra
-    # (cached) action for its full collect.
-    if surfaces.limit(driver_cc_threshold).count() < driver_cc_threshold:
-        keys = [r["nkey"] for r in surfaces.collect()]
+    # one limited collect both picks the path and, on the driver path, IS
+    # the key list; on the distributed path it ships at most
+    # driver_cc_threshold short keys once and drops them
+    keys = [r["nkey"] for r in surfaces.limit(driver_cc_threshold).collect()]
+    if len(keys) < driver_cc_threshold:
         comp_map = canonicalize_local(keys, threshold, max_block_size)
-        surfaces.unpersist()
         out = spark.createDataFrame(
             [(k, comp_map.get(k, k)) for k in keys], "nkey string, canonical_id string"
         )
         out._driver_sized = True  # bounded by driver_cc_threshold: safe to broadcast
         return out
+    del keys
 
+    # blocking and the self-loops below both read the surfaces
+    surfaces = surfaces.persist()
     pairs = candidate_pairs_guarded(surfaces, threshold=threshold, max_block_size=max_block_size)
     edges = score_pairs(pairs, threshold)
     loops = surfaces.select(F.col("nkey").alias("ka"), F.col("nkey").alias("kb"), F.lit(1.0).alias("sim"))

@@ -6,20 +6,36 @@ triple construction -> schema translate (broadcast join) -> dedup (shuffle)
 -> Neo4j-admin-import batch layout, with per-partition lineage and metrics
 tables and checkpoint-resume per stage.
 
-Checkpoint model: each stage materializes to ``{run_dir}/{stage}`` parquet;
-on resume, stages whose output has a ``_SUCCESS`` marker are *read back*
-instead of recomputed. Lineage rows are keyed by conv_id hash-bucket ranges
-so a re-run can both verify coverage and re-process only missing buckets.
+Checkpoint model. Stages land in ``{run_dir}/{stage}`` parquet in this
+order: ``mentions``, ``linked``, ``nodes``, ``edges``. The nodes/edges
+checkpoints are written straight from the translated frames (rel-as-node
+dedup applied), and the Neo4j CSVs are then emitted FROM those checkpoints
+read back, so each corpus-scale aggregate runs once, inside its own
+checkpoint write. A ``{run_dir}/csv/_SUCCESS`` marker lands after the
+import-call script; it is the only "CSVs already written" signal. On
+resume, stages with a ``_SUCCESS`` marker are read back instead of
+recomputed (their DataFrames are never built), and the CSVs are
+re-emitted — after wiping stale part files — unless the csv marker AND
+both the nodes and edges checkpoints it was written from are present.
+
+Lineage rows (stage, conv_id/node/source hash bucket, rows) are observed on
+the checkpoint writes themselves (``DataFrame.observe``, no extra job); a
+read-back stage is counted with one aggregate instead. The lineage and
+metrics tables are tens of driver-side rows, written with pyarrow.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
-from typing import Optional
+from datetime import datetime, timezone
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import extract_mentions, extract_mentions_expr
@@ -62,6 +78,18 @@ DEFAULT_SCHEMA_DICT: dict = {
 }
 
 _LINEAGE_BUCKETS = 16
+_LINEAGE_SCHEMA = pa.schema(
+    [
+        ("stage", pa.string()),
+        ("partition_key", pa.string()),
+        ("status", pa.string()),
+        ("rows", pa.int64()),
+        ("ts", pa.timestamp("s", tz="UTC")),
+    ]
+)
+_METRICS_SCHEMA = pa.schema(
+    [("metric", pa.string()), ("value", pa.float64()), ("ts", pa.timestamp("us", tz="UTC"))]
+)
 
 
 def load_default_schema_mapping() -> SchemaMapping:
@@ -131,12 +159,15 @@ class KGPipeline:
     ):
         from .writer.base import require_local_dir
 
-        # the CSV batch layout, resume markers, and stale-part wipe all go
-        # through the LOCAL filesystem (os.path/glob), mirroring the
-        # reference: neo4j-admin import itself consumes a local directory.
+        # the CSV batch layout, resume markers, stale-part wipe, and the
+        # lineage/metrics tables all go through the LOCAL filesystem
+        # (os.path/glob/pyarrow), mirroring the reference: neo4j-admin
+        # import itself consumes a local directory.
         self.spark = spark
         self.outdir = require_local_dir(output_directory, "pipeline batch")
-        self.run_dir = run_dir or os.path.join(output_directory, "_run")
+        self.run_dir = (
+            require_local_dir(run_dir, "pipeline run") if run_dir else os.path.join(output_directory, "_run")
+        )
         os.makedirs(self.run_dir, exist_ok=True)
         if schema_config_path == DEFAULT_SCHEMA:
             self.mapping = load_default_schema_mapping()
@@ -155,13 +186,38 @@ class KGPipeline:
     def _is_done(self, stage: str) -> bool:
         return os.path.exists(os.path.join(self._stage_path(stage), "_SUCCESS"))
 
-    def _checkpoint(self, stage: str, df: DataFrame, resume: bool) -> DataFrame:
-        """Materialize a stage (or read it back when resuming)."""
+    def _mark_done(self, stage: str) -> None:
+        os.makedirs(self._stage_path(stage), exist_ok=True)
+        with open(os.path.join(self._stage_path(stage), "_SUCCESS"), "w"):
+            pass
+
+    def _checkpoint(
+        self, stage: str, build: Callable[[], DataFrame], resume: bool, key_col: str = "conv_id"
+    ) -> DataFrame:
+        """Materialize a stage (or read it back when resuming) and record its
+        lineage. ``build`` runs only when the stage is (re)computed."""
         path = self._stage_path(stage)
         if resume and self._is_done(stage):
-            return self.spark.read.parquet(path)
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+            back = self.spark.read.parquet(path)
+            self._record_lineage(stage, back, key_col)
+            return back
+        df = build()
+        obs = Observation()
+        if key_col in df.columns:
+            bucket = F.pmod(F.xxhash64(key_col), F.lit(_LINEAGE_BUCKETS))
+            counts = [
+                F.count(F.when(F.col("_lineage_bucket") == b, 1)).alias(f"bucket={b}")
+                for b in range(_LINEAGE_BUCKETS)
+            ]
+            observed = df.withColumn("_lineage_bucket", bucket).observe(obs, *counts).drop("_lineage_bucket")
+        else:
+            observed = df.observe(obs, F.count(F.lit(1)).alias("all"))
+        observed.write.mode("overwrite").parquet(path)
+        ts = int(time.time())
+        # empty buckets are skipped, as the groupBy in _record_lineage does
+        self._lineage_rows += [(stage, k, "done", n, ts) for k, n in obs.get.items() if n or k == "all"]
+        # the known schema spares a schema-inference job per read-back
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def _wipe_stale_parts(self) -> None:
         """Remove {Label}-part*.csv left by a partially-completed previous run
@@ -172,7 +228,7 @@ class KGPipeline:
             os.remove(f)
 
     def _record_lineage(self, stage: str, df: DataFrame, key_col: str = "conv_id") -> None:
-        """Per-partition lineage: rows per conv_id hash bucket."""
+        """Per-partition lineage of a read-back stage: rows per key hash bucket."""
         if key_col not in df.columns:
             self._lineage_rows.append((stage, "all", "done", df.count(), int(time.time())))
             return
@@ -184,23 +240,27 @@ class KGPipeline:
         for r in rows:
             self._lineage_rows.append((stage, f"bucket={r['bucket']}", "done", r["count"], int(time.time())))
 
+    def _write_table(self, name: str, rows: list[tuple], schema: pa.Schema) -> str:
+        """Overwrite ``{run_dir}/{name}`` with one driver-written parquet file."""
+        path = os.path.join(self.run_dir, name)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+        # microsecond UTC timestamps read back in Spark as TimestampType
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"), coerce_timestamps="us")
+        self._mark_done(name)
+        return path
+
     def _flush_metrics(self, counts: dict, stage_secs: dict) -> str:
         """Metrics table (north rule: lineage + metrics tables): one row per
         (metric, value) — row counts per stage plus wall seconds per stage."""
         rows = [(f"rows_{k}", float(v)) for k, v in counts.items()]
         rows += [(f"sec_{k}", round(float(v), 3)) for k, v in stage_secs.items()]
-        path = os.path.join(self.run_dir, "metrics")
-        df = self.spark.createDataFrame(rows, "metric string, value double")
-        df.withColumn("ts", F.current_timestamp()).coalesce(1).write.mode("overwrite").parquet(path)
-        return path
+        now = datetime.now(timezone.utc)
+        return self._write_table("metrics", [(*r, now) for r in rows], _METRICS_SCHEMA)
 
     def _flush_lineage(self) -> str:
-        path = os.path.join(self.run_dir, "lineage")
-        df = self.spark.createDataFrame(
-            self._lineage_rows, "stage string, partition_key string, status string, rows long, ts long"
-        )
-        df.withColumn("ts", F.timestamp_seconds("ts")).write.mode("overwrite").parquet(path)
-        return path
+        return self._write_table("lineage", self._lineage_rows, _LINEAGE_SCHEMA)
 
     # -- triple construction --------------------------------------------------
 
@@ -216,35 +276,45 @@ class KGPipeline:
         self._lineage_rows = []
         stage_secs: dict[str, float] = {}
         t0 = time.time()
-        # resume handling lives entirely inside _checkpoint (read-back when
-        # the stage's _SUCCESS exists); building the stage DataFrame first
-        # is free — DAG construction is lazy, no job runs on the skip path
         fn = extract_mentions if self.use_pandas_extraction else extract_mentions_expr
-        mentions = self._checkpoint("mentions", fn(transcripts, patterns), resume)
-        self._record_lineage("mentions", mentions)
+        mentions = self._checkpoint("mentions", lambda: fn(transcripts, patterns), resume)
         stage_secs["mentions"] = time.time() - t0
 
         t0 = time.time()
-        linked = self._checkpoint("linked", link_mentions(mentions, self.link_threshold), resume)
-        self._record_lineage("linked", linked)
+        # link_mentions runs canonicalize's driver collect when called, so
+        # it is built only when the stage is recomputed
+        linked = self._checkpoint("linked", lambda: link_mentions(mentions, self.link_threshold), resume)
         stage_secs["linked"] = time.time() - t0
 
         t0 = time.time()
         node_tuples, edge_tuples = self._build_tuples(linked)
-        # pin the tuple frames (distinct entities / aggregated pairs — tiny
-        # next to the corpus): the writer emission, the parquet checkpoints,
-        # and the missing-type frame each run their own action, and without
-        # the pin every one re-executes the corpus-scale co-occurrence
-        # shuffle from the linked checkpoint (the translate DAG ran 2-3x per
-        # run; same fix stream_kg applies per micro-batch)
-        from .materialize import materialize
-
-        node_tuples = materialize(node_tuples)
-        edge_tuples = materialize(edge_tuples)
-
         tn = self.translator.translate_nodes(node_tuples)
         te = self.translator.translate_edges(edge_tuples)
         missing = tn.missing.unionByName(te.missing)
+
+        # checkpoints must agree with the emitted CSVs, including for
+        # rel-as-node schemas: apply the writer's first-wins dedup of reified
+        # nodes + helper-edge rebuild (dedup_rel_as_nodes is the D3 logic
+        # write_edges applies), so the nodes checkpoint carries the reified
+        # nodes and the edges checkpoint only the SURVIVING helper edges.
+        # Skipped when no edge tuple can be reified: translate_edges always
+        # returns a ran_nodes frame, empty by construction in that case.
+        nodes_out, edges_out, ran_dups = tn.nodes, te.edges, None
+        if tuples_reify(self.translator):
+            from .dedup import dedup_rel_as_nodes
+
+            ran_nodes_kept, ran_edges_kept, ran_dups = dedup_rel_as_nodes(te.ran_nodes, te.ran_edges)
+            nodes_out = nodes_out.unionByName(ran_nodes_kept)
+            edges_out = edges_out.unionByName(ran_edges_kept)
+
+        # the CSVs are only reusable alongside the checkpoints they were
+        # emitted from; otherwise drop the marker BEFORE rewriting those
+        # checkpoints, so a crash in between re-emits on the next resume
+        csv_done = resume and self._is_done("nodes") and self._is_done("edges") and self._is_done("csv")
+        if not csv_done:
+            shutil.rmtree(self._stage_path("csv"), ignore_errors=True)
+        nodes = self._checkpoint("nodes", lambda: nodes_out, resume, key_col="node_id")
+        edges = self._checkpoint("edges", lambda: edges_out, resume, key_col="source_id")
 
         writer = Neo4jBatchWriter(
             self.spark,
@@ -258,48 +328,25 @@ class KGPipeline:
             ordered_parts=False,
             track_seen=False,
         )
-        # a resumed run whose node/edge stages are already checkpointed must
-        # not re-emit part files: part numbering continues across runs, so a
-        # second emission would append duplicate {Label}-partNNN.csv files
-        already_written = resume and self._is_done("nodes") and self._is_done("edges")
-        if not already_written:
-            # a previous run may have crashed AFTER emitting part files but
-            # BEFORE the nodes/edges checkpoints landed (checkpointing happens
-            # after the writes) — or this may be a plain re-run into the same
-            # outdir. Stale parts would survive alongside the new emission and
-            # the import-call glob {Label}-part.* would feed duplicated rows
-            # to neo4j-admin import, so wipe them first.
+        if not csv_done:
+            # part numbering continues across runs, so parts left by a
+            # crashed run (or a plain re-run into the same outdir) would
+            # survive beside the new emission and the import-call glob
+            # {Label}-part.* would feed duplicated rows to neo4j-admin
+            # import: wipe them first
             self._wipe_stale_parts()
-            writer.write_nodes(tn.nodes)
-            writer.write_edges(te)
+            writer.write_nodes(nodes)
+            writer.write_edges(edges)
             writer.write_import_call()
-
-        # checkpoints must agree with the emitted CSVs, including for
-        # rel-as-node schemas: mirror the writer's first-wins dedup of
-        # reified nodes + helper-edge rebuild (dedup_rel_as_nodes is the
-        # same D3 logic write_edges applies), so PipelineResult.nodes
-        # carries the reified nodes and .edges carries only the SURVIVING
-        # helper edges rather than the translator's pre-dedup frame
-        nodes_out, edges_out = tn.nodes, te.edges
-        if te.ran_nodes is not None and schema_has_rel_as_node(self.mapping):
-            # gate on the SCHEMA, not the frame: translate_edges always
-            # returns a (possibly empty) ran_nodes DataFrame, and without
-            # rel-as-node classes the dedup window + two unions would run
-            # on provably-empty frames every run
-            from .dedup import dedup_rel_as_nodes
-
-            ran_nodes_kept, ran_edges_kept, _ = dedup_rel_as_nodes(te.ran_nodes, te.ran_edges)
-            nodes_out = nodes_out.unionByName(ran_nodes_kept)
-            edges_out = edges_out.unionByName(ran_edges_kept)
-        nodes = self._checkpoint("nodes", nodes_out, resume)
-        edges = self._checkpoint("edges", edges_out, resume)
-        self._record_lineage("nodes", nodes, key_col="node_id")
-        self._record_lineage("edges", edges, key_col="source_id")
+            self._mark_done("csv")
+        duplicate_edges = writer.get_duplicate_edges()
+        if ran_dups is not None and not csv_done:
+            # reified nodes dropped by the dedup above, recorded as the
+            # writer records its own rel-as-node duplicates
+            duplicate_edges = ran_dups if duplicate_edges is None else duplicate_edges.unionByName(ran_dups).distinct()
         lineage_path = self._flush_lineage()
         stage_secs["write"] = time.time() - t0
 
-        # totals from the lineage rows _record_lineage already collected —
-        # identical sums, three fewer full checkpoint scans
         counts = {
             stage: sum(r[3] for r in self._lineage_rows if r[0] == stage)
             for stage in ("mentions", "nodes", "edges")
@@ -311,20 +358,20 @@ class KGPipeline:
             mentions=mentions,
             missing_types=missing,
             duplicate_nodes=writer.get_duplicate_nodes(),
-            duplicate_edges=writer.get_duplicate_edges(),
+            duplicate_edges=duplicate_edges,
             lineage_path=lineage_path,
             counts=counts,
             metrics_path=metrics_path,
         )
 
 
-def schema_has_rel_as_node(mapping: SchemaMapping) -> bool:
-    """True when any edge class is reified (``represented_as: node`` with
-    source/target) — the only case the rel-as-node dedup can act on."""
-    return any(
-        conf.get("represented_as") == "node" and "source" in conf and "target" in conf
-        for conf in mapping.extended_schema.values()
-    )
+def tuples_reify(translator: SparkTranslator) -> bool:
+    """True when translate_edges can reify an edge tuple built by
+    build_triple_tuples. Those tuples are labelled ``{la}_{lb}`` (two
+    mention labels joined by "_"), so only a reified input label containing
+    "_" can match one; otherwise the translated ran_nodes / ran_edges frames
+    are empty by construction."""
+    return any("_" in label for label in translator.reified_input_labels())
 
 
 def edge_input_labels(mapping: SchemaMapping) -> set:

@@ -59,6 +59,8 @@ def _t(
     the rows anyway. CPU-heavy per-row paths (minhash/simhash/shingles,
     embedding folds, Arrow Python stages) keep the default: for them a
     single-split scan serializes the dominant cost on one core."""
+    if materialize and not rebalance:
+        raise ValueError("materialize=True pins the rebalanced input; it needs rebalance=True")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if not rebalance:
         return df

@@ -582,16 +582,20 @@ def embedding_dedup_against(
         .filter(F.col("cos") >= threshold)
     )
     # best match per vec_id as ONE hash aggregate instead of a row_number
-    # window (exchange + full sort) — max over struct (cos ASC-to-max,
-    # -ref_id ASC-to-max == ref_id min) reproduces the former
+    # window (exchange + full sort) — min over struct (NaN first, then
+    # -cos ASC == cos DESC, then ref_id ASC) reproduces the former
     # (cos DESC, ref_id ASC) pick exactly, including NaN-first (Spark
-    # orders NaN greatest in both max() and DESC sorts), gets map-side
-    # combine, and skips the sort. Duplicate (vec_id, ref_id) rows from
-    # cross-table collisions carry identical cos, so the struct max is
-    # total and the aggregate doubles as the candidate dedup. Round-6
-    # change; A/B'd in emb_near_dup's 'against' arm.
+    # orders NaN greatest in DESC sorts), gets map-side combine, and skips
+    # the sort. The tie-break orders ref_id itself, so string ids work.
+    # Duplicate (vec_id, ref_id) rows from cross-table collisions carry
+    # identical cos, so the struct min is total and the aggregate doubles
+    # as the candidate dedup.
     best = matches.groupBy("vec_id").agg(
-        F.max(F.struct(F.col("cos"), (-F.col("ref_id")).alias("_nr"), F.col("ref_id"))).alias("_b")
+        F.min(
+            F.struct(
+                (~F.isnan("cos")).alias("_num"), (-F.col("cos")).alias("_ncos"), F.col("ref_id"), F.col("cos")
+            )
+        ).alias("_b")
     ).select("vec_id", F.col("_b.ref_id").alias("ref_id"), F.col("_b.cos").alias("cos"))
     if matched_only:
         # callers that immediately filter to dup_of_ref=true (e.g. the

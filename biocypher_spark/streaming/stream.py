@@ -209,7 +209,7 @@ def stream_kg(
     """
     from ..linking import link_mentions
     from ..ontology import NullOntology
-    from ..pipeline import build_triple_tuples, edge_input_labels, load_default_schema_mapping
+    from ..pipeline import build_triple_tuples, edge_input_labels, load_default_schema_mapping, tuples_reify
     from ..translate import SparkTranslator
     from ..writer.neo4j import Neo4jBatchWriter
 
@@ -217,6 +217,7 @@ def stream_kg(
 
     schema_mapping = load_default_schema_mapping()
     translator = SparkTranslator(spark, NullOntology(schema_mapping))
+    reify = tuples_reify(translator)
     writer = Neo4jBatchWriter(
         spark, translator, output_directory, strict_mode=False, validate_props=False,
         ordered_parts=False, track_seen=True, lazy_seen_pins=True,
@@ -608,7 +609,9 @@ def stream_kg(
             _mark("translate_edges_pin")
             writer.write_nodes(tn.nodes)
             _mark("write_nodes")
-            writer.write_edges(te)
+            # the rel-as-node frames (their dedup and emptiness probe) only
+            # when the schema lets these tuples be reified
+            writer.write_edges(te if reify else te.edges)
             _mark("write_edges")
             writer.write_import_call()
             parts = sorted(

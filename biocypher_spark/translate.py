@@ -149,6 +149,11 @@ class SparkTranslator:
 
         self._mapping_rows = list(rows.values())
 
+    def reified_input_labels(self) -> set:
+        """Input labels translate_edges reifies: those whose class (the last
+        schema entry claiming the label) is ``represented_as: node``."""
+        return {row[0] for row in self._mapping_rows if row[3] == "node"}
+
     def mapping_df(self) -> DataFrame:
         return self.spark.createDataFrame(self._mapping_rows, _MAPPING_SCHEMA)
 

@@ -21,15 +21,15 @@ from __future__ import annotations
 
 import os
 from collections import OrderedDict
-from typing import Optional
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..dedup import edge_dedup_key
 from ..materialize import materialize
 from ..model import SEQ
-from ..naming import sentence_to_pascal
+from ..naming import sentence_to_pascal, to_list
 from ..translate import SparkTranslator, TranslatedEdges
 from .base import (
     BOOL_ARRAY,
@@ -481,33 +481,97 @@ class Neo4jBatchWriter:
 
     # -- nodes ----------------------------------------------------------------
 
+    def _declared_prop_dicts(self, kind: str) -> Optional[dict]:
+        """Property dicts of the labels the schema routes as ``kind`` when
+        each of them declares its properties — their line expressions then
+        need nothing from the data. None when a label would need
+        first-entity inference, or when ``validate_props`` needs the
+        per-label probe's collect anyway."""
+        if self.validate_props:
+            return None
+        schema = self.translator.ontology.mapping.extended_schema
+        routed = {cls: conf for cls, conf in schema.items() if to_list(conf.get("input_label"))}
+        if kind == "node":
+            labels = {cls for cls, conf in routed.items() if conf.get("represented_as") == "node"}
+            known = self.node_property_dict
+        else:
+            labels = {
+                conf.get("label_as_edge") or cls
+                for cls, conf in routed.items()
+                if conf.get("represented_as") not in (None, "node")
+            }
+            known = self.edge_property_dict
+        if not labels or not all(self._schema_props(label) for label in labels):
+            return None
+        return {label: known.get(label) or self._resolve_prop_dict(label, {}, kind) for label in sorted(labels)}
+
+    def _write_by_label(self, df: DataFrame, kind: str, line_for: Callable[[str, dict], Column]) -> None:
+        """Write each row's line (``line_for(label, props)``) to its label's
+        part files; labels that got rows get their headers.
+
+        When the schema declares the properties of every label it routes as
+        ``kind``, rows of those labels are written without looking at the
+        data first, and a count observed on that write tells whether any
+        row carries another label (rel-as-node helper edges, whose role
+        labels come from the data). Only such rows go through the
+        per-label first-row probe, which infers their property types; it
+        is skipped when there are none."""
+        label_col = "node_label" if kind == "node" else "relationship_label"
+        known = self.node_property_dict if kind == "node" else self.edge_property_dict
+        declared = self._declared_prop_dicts(kind)
+        if declared is not None:
+            hit = F.coalesce(F.col(label_col).isin(list(declared)), F.lit(False))
+            obs = Observation()
+            observed = df.observe(obs, F.count(F.when(~hit, 1)).alias("other"))
+            self._write_lines(observed.filter(hit), label_col, declared, line_for, known)
+            if not obs.get["other"]:
+                return
+            df = df.filter(~hit)
+        df = df.persist()
+        firsts = self._first_rows_per_label(df, label_col)
+        if firsts:
+            prop_dicts = {
+                label: known.get(label) or self._resolve_prop_dict(label, first_props, kind)
+                for label, first_props in firsts.items()
+            }
+            self._validate_consistent_props(df, label_col, prop_dicts)
+            self._write_lines(df, label_col, prop_dicts, line_for, known)
+        df.unpersist()
+
+    def _write_lines(
+        self, df: DataFrame, label_col: str, prop_dicts: dict, line_for: Callable[[str, dict], Column], known: dict
+    ) -> None:
+        """One text job writing each row's line to its label's part files;
+        labels that got rows join ``known`` (their headers are written)."""
+        # a label without a line format fails the job loudly instead of
+        # being written under another label's columns
+        line = plabel = F.raise_error(
+            F.concat(F.lit(f"no line format for {label_col} "), F.coalesce(F.col(label_col), F.lit("NULL")))
+        )
+        by_file = {}
+        for label, props in prop_dicts.items():
+            hit = F.col(label_col) == label
+            line = F.when(hit, line_for(label, props)).otherwise(line)
+            plabel = F.when(hit, F.lit(pascal_file_label(label))).otherwise(plabel)
+            by_file[pascal_file_label(label)] = label
+        lines_df = df.select(plabel.alias("_plabel"), line.alias("line"), F.col(SEQ))
+        written = write_part_files(lines_df, self.outdir, self.batch_size, ordered=self.ordered_parts)
+        for plab, names in written.items():
+            self.parts.setdefault(plab, []).extend(names)
+            label = by_file[plab]
+            known[label] = prop_dicts[label]
+
     def write_nodes(self, nodes: DataFrame, force: bool = False) -> bool:
         """NODE_SCHEMA DataFrame -> part files + headers. Returns True."""
         nodes = nodes.filter(F.col("node_id").isNotNull())
         nodes = self._dedup_against_seen(
             nodes.withColumn("_key", F.col("node_id")), ["_key"], "_seen_nodes", "node", "node_label"
         ).drop("_key")
-        nodes = nodes.persist()
-        firsts = self._first_rows_per_label(nodes, "node_label")
-        if not firsts:
-            nodes.unpersist()
-            return True
 
-        prop_dicts = {}
-        label_strings = {}
-        for label, first_props in firsts.items():
-            prop_dicts[label] = self.node_property_dict.get(label) or self._resolve_prop_dict(
-                label, first_props, "node"
-            )
-            self.node_property_dict[label] = prop_dicts[label]
-            label_strings[label] = self._all_labels(label, self.node_labels_order, force)
-        self._validate_consistent_props(nodes, "node_label", prop_dicts)
-
-        line, plabel = None, None
-        for label in firsts:
-            expr = node_line_expr(
-                prop_dicts[label],
-                label_strings[label],
+        def line_for(label: str, props: dict) -> Column:
+            return node_line_expr(
+                props,
+                self._all_labels(label, self.node_labels_order, force),
                 self.delim,
                 self.adelim,
                 self.quote,
@@ -515,18 +579,8 @@ class Neo4jBatchWriter:
                 self.array_mode,
                 self.node_line_includes_labels,
             )
-            e = F.lit(pascal_file_label(label))
-            if line is None:
-                line, plabel = expr, e
-            else:
-                line = F.when(F.col("node_label") == label, expr).otherwise(line)
-                plabel = F.when(F.col("node_label") == label, e).otherwise(plabel)
 
-        lines_df = nodes.select(plabel.alias("_plabel"), line.alias("line"), F.col(SEQ))
-        written = write_part_files(lines_df, self.outdir, self.batch_size, ordered=self.ordered_parts)
-        for plab, names in written.items():
-            self.parts.setdefault(plab, []).extend(names)
-        nodes.unpersist()
+        self._write_by_label(nodes, "node", line_for)
         self._write_node_headers()
         return True
 
@@ -615,27 +669,11 @@ class Neo4jBatchWriter:
             "edge",
             "relationship_label",
         ).drop("_key", "_klabel")
-        all_edges = all_edges.persist()
 
-        firsts = self._first_rows_per_label(all_edges, "relationship_label")
-        if not firsts:
-            all_edges.unpersist()
-            return True
-        prop_dicts = {}
-        for label, first_props in firsts.items():
-            prop_dicts[label] = self.edge_property_dict.get(label) or self._resolve_prop_dict(
-                label, first_props, "edge"
-            )
-            self.edge_property_dict[label] = prop_dicts[label]
-        self._validate_consistent_props(all_edges, "relationship_label", prop_dicts)
-
-        line = None
-        plabel = None
-        for label in firsts:
-            label_string = self._all_labels(label, self.edge_labels_order)
-            expr = edge_line_expr(
-                prop_dicts[label],
-                label_string,
+        def line_for(label: str, props: dict) -> Column:
+            return edge_line_expr(
+                props,
+                self._all_labels(label, self.edge_labels_order),
                 self.delim,
                 self.adelim,
                 self.quote,
@@ -644,18 +682,8 @@ class Neo4jBatchWriter:
                 self.array_mode,
                 self.edge_line_includes_labels,
             )
-            e = F.lit(pascal_file_label(label))
-            if line is None:
-                line, plabel = expr, e
-            else:
-                line = F.when(F.col("relationship_label") == label, expr).otherwise(line)
-                plabel = F.when(F.col("relationship_label") == label, e).otherwise(plabel)
 
-        lines_df = all_edges.select(plabel.alias("_plabel"), line.alias("line"), F.col(SEQ))
-        written = write_part_files(lines_df, self.outdir, self.batch_size, ordered=self.ordered_parts)
-        for plab, names in written.items():
-            self.parts.setdefault(plab, []).extend(names)
-        all_edges.unpersist()
+        self._write_by_label(all_edges, "edge", line_for)
         self._write_edge_headers()
         return True
 

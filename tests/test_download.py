@@ -150,5 +150,9 @@ def test_cache_record_without_microseconds(dl, fetcher):
     not crash expiry checks (the reference does — _get.py:193)."""
     fd = FileDownload("nomicro", "http://x/y.txt", lifetime=7)
     dl.download(fd)
-    dl.cache_dict["nomicro"]["date_downloaded"] = "2026-08-17 10:00:00"
+    # stamped relative to now (a fixed date expires once it is `lifetime`
+    # days old); str() of a zero-microsecond datetime has no fraction
+    stamp = (datetime.now() - timedelta(days=1)).replace(microsecond=0)
+    dl.cache_dict["nomicro"]["date_downloaded"] = str(stamp)
+    assert "." not in dl.cache_dict["nomicro"]["date_downloaded"]
     assert dl._is_cache_expired(FileDownload("nomicro", "x", lifetime=7)) is False

@@ -42,3 +42,12 @@ def test_unknown_mode_rejected(conf_guard):
     spark.conf.set(MATERIALIZE_CONF, "persist")
     with pytest.raises(ValueError, match="persist"):
         materialize(spark.range(3))
+
+
+def test_read_table_rejects_materialize_without_rebalance(spark, tmp_path):
+    # materialize pins the rebalanced input; without a rebalance it used to
+    # be ignored silently
+    from biocypher_spark.queries import _t
+
+    with pytest.raises(ValueError, match="rebalance"):
+        _t(spark, str(tmp_path), "documents", materialize=True, rebalance=False)

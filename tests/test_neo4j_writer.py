@@ -136,6 +136,54 @@ def test_rel_as_node(spark, bw, tmp_path):
     assert read(tmp_path / "IS_SOURCE_OF-header.csv") == ":START_ID;:END_ID;:TYPE"
 
 
+# a reified class declared the tutorial way: represented_as node, no
+# source/target and no label_as_edge — the translator reifies every edge
+# whose class is represented_as node
+_TUTORIAL_RAN_SCHEMA = {
+    "protein": {"represented_as": "node", "input_label": "protein", "properties": {"name": "str"}},
+    "protein protein interaction": {
+        "represented_as": "node",
+        "input_label": "interacts_with",
+        "properties": {"score": "float"},
+    },
+    "regulation": {
+        "represented_as": "edge",
+        "input_label": "regulates",
+        "label_as_edge": "REGULATES",
+        "properties": {"score": "float"},
+    },
+}
+
+
+@pytest.mark.parametrize("validate_props", [True, False])
+def test_rel_as_node_without_endpoints_via_facade(spark, tmp_path, validate_props):
+    """BioCypherSpark.write_edges writes the reified nodes and their
+    IS_PART_OF helper edges of a class without source/target; with
+    validate_props off the declared labels skip the per-label probe and
+    the helper edges are still written."""
+    from biocypher_spark.core import BioCypherSpark
+
+    bc = BioCypherSpark(
+        spark, output_directory=str(tmp_path), schema=_TUTORIAL_RAN_SCHEMA, validate_props=validate_props
+    )
+    assert bc.write_edges(
+        [
+            ("i1", "p1", "p2", "interacts_with", {"score": 0.5}),
+            ("i2", "p2", "p3", "interacts_with", {"score": 0.7}),
+            ("r1", "p1", "p3", "regulates", {"score": 0.9}),
+        ]
+    )
+    ppi = read(tmp_path / "ProteinProteinInteraction-part000.csv").strip().split("\n")
+    assert sorted(line.split(";")[0] for line in ppi) == ["i1", "i2"]
+    part_of = read(tmp_path / "IS_PART_OF-part000.csv").strip().split("\n")
+    assert sorted(tuple(line.split(";")[:2]) for line in part_of) == [
+        ("p1", "i1"), ("p2", "i1"), ("p2", "i2"), ("p3", "i2"),
+    ]
+    assert read(tmp_path / "IS_PART_OF-header.csv") == ":START_ID;:END_ID;:TYPE"
+    assert read(tmp_path / "REGULATES-part000.csv") == "p1;r1;0.9;p3;'REGULATES'\n"
+    assert os.path.isfile(tmp_path / "ProteinProteinInteraction-header.csv")
+
+
 def test_part_numbering_across_calls(spark, bw, tmp_path):
     _write_translated_nodes(spark, bw, protein_nodes(2))
     _write_translated_nodes(spark, bw, protein_nodes(4)[2:])

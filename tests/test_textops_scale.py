@@ -739,6 +739,30 @@ def test_embedding_dedup_against(spark):
     assert out[3]["ref_id"] is None and out[3]["cos"] is None
 
 
+def test_embedding_dedup_against_string_ids(spark):
+    """String vec_ids work, and cos ties still break to the lowest ref_id
+    (string order: 'r10' < 'r9')."""
+    from biocypher_spark.similarity import embedding_dedup_against
+
+    a = [1.0, 2.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0]
+    b = [-4.0, 3.0, -2.0, 1.0, -4.0, 3.0, -2.0, 1.0]
+    reference = spark.createDataFrame(
+        [("r9", a), ("r11", b), ("r10", a)], "vec_id string, embedding array<double>"
+    )
+    crawl = spark.createDataFrame(
+        [("c1", a), ("c2", [5.0, -1.0, 0.5, -2.0, 3.0, -0.5, 1.0, -4.0])],
+        "vec_id string, embedding array<double>",
+    )
+    out = {
+        r["vec_id"]: r
+        for r in embedding_dedup_against(
+            crawl, reference, threshold=0.95, num_tables=4, planes_per_table=2, dims=8
+        ).collect()
+    }
+    assert out["c1"]["dup_of_ref"] and out["c1"]["ref_id"] == "r10" and out["c1"]["cos"] == 1.0
+    assert not out["c2"]["dup_of_ref"] and out["c2"]["ref_id"] is None
+
+
 def test_semantic_dedup_clusters_and_reps(spark):
     # SemDeDup keep-set: identical vectors form one cluster with min-id
     # representative; unrelated vectors stay singleton reps
