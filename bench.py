@@ -296,12 +296,15 @@ def _jvm_cpu_seconds(spark) -> float:
 
 
 def run_pipeline_job(spark, n_turns: int, input_path: str | None = None) -> dict:
-    """End-to-end extract -> link -> canonicalize -> triples; returns
-    timings + triples/sec (the north-rule throughput metric)."""
+    """End-to-end extract -> link -> canonicalize -> triples over the
+    evidence DAG ``KGPipeline`` runs (``extract_mentions`` ->
+    ``link_mentions`` -> ``cooccurrence_pairs``); returns timings +
+    triples/sec (the north-rule throughput metric). ``evidence_rows``
+    counts one row per (turn, canonical entity pair)."""
     from pyspark.sql import functions as F
 
     from biocypher_spark.extract import extract_mentions
-    from biocypher_spark.linking import link_mentions
+    from biocypher_spark.linking import cooccurrence_pairs, link_mentions
     from biocypher_spark.transcripts import generate_transcripts
 
     if input_path:
@@ -310,13 +313,11 @@ def run_pipeline_job(spark, n_turns: int, input_path: str | None = None) -> dict
     else:
         transcripts = generate_transcripts(spark, n_turns)
         balance = True
-    from biocypher_spark.extract import extract_mentions_grouped
-    from biocypher_spark.linking import zero_shuffle_evidence
 
     t0 = time.time()
     c0 = _jvm_cpu_seconds(spark)
-    grouped = extract_mentions_grouped(transcripts, balance=balance).persist()
-    _linked, pairs = zero_shuffle_evidence(grouped)
+    mentions = extract_mentions(transcripts, balance=balance).persist()
+    pairs = cooccurrence_pairs(link_mentions(mentions))
     evidence = pairs.select(
         F.col("ca").alias("subj"),
         F.when((F.col("la") == "protein") & (F.col("lb") == "protein"), F.lit("INTERACTS_WITH"))
@@ -331,7 +332,7 @@ def run_pipeline_job(spark, n_turns: int, input_path: str | None = None) -> dict
     ).collect()[0]
     elapsed = time.time() - t0
     cpu = _jvm_cpu_seconds(spark) - c0
-    grouped.unpersist()
+    mentions.unpersist()
     return {
         "turns": n_turns,
         "evidence_rows": n_evidence,

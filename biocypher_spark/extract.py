@@ -1,22 +1,24 @@
 """Mention detection over transcript text (NEW stage; north_rule).
 
-Two implementations with identical output contracts for NON-OVERLAPPING
-pattern sets (the default gazetteer is one; the equivalence is asserted in
-tests). When two patterns can match overlapping spans of the same text, the
-``mapInPandas`` path's single combined alternation resolves the overlap by
+Two kernels with identical output contracts for NON-OVERLAPPING pattern
+sets (the default gazetteer is one; the equivalence is asserted in tests).
+When two patterns can match overlapping spans of the same text, the
+``mapInPandas`` kernel's single combined alternation resolves the overlap by
 leftmost-then-pattern-order precedence (each character is consumed once),
-while the per-pattern ``regexp_extract_all`` path scans the full text once
+while the per-pattern ``regexp_extract_all`` kernel scans the full text once
 PER label and reports every label's own matches — pick the variant whose
 semantics fit such gazetteers deliberately:
 
   * ``extract_mentions`` — Arrow-vectorized ``mapInPandas``: pandas
     batches scanned by one compiled alternation regex over salted,
-    size-balanced partitions. This is the flagship path required by the
-    north rule ("batched mention detection ... inside vectorized
-    pandas/Arrow UDFs, no per-row Python").
+    size-balanced partitions. The batch KG product (``KGPipeline``) runs
+    it; this is the path required by the north rule ("batched mention
+    detection ... inside vectorized pandas/Arrow UDFs, no per-row Python").
   * ``extract_mentions_expr`` — pure built-in ``regexp_extract_all`` +
-    ``explode``; stays in whole-stage codegen and is trivially expressible
-    as the DuckDB oracle SQL, so it anchors the correctness harness.
+    ``posexplode``; stays in whole-stage codegen and is trivially
+    expressible as the DuckDB oracle SQL, so it anchors the correctness
+    harness. ``streaming.stream.stream_mentions`` runs the same kernel and
+    also carries the event time ``ts``.
 
 Output: one row per mention with lineage back to (conv_id, turn_idx); the
 raw ``text`` column is never mutated (per-turn text-equality invariant).
@@ -29,6 +31,7 @@ is the Spark-native adapter for transcript corpora.
 from __future__ import annotations
 
 import re
+from functools import reduce
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -53,18 +56,16 @@ MENTION_SCHEMA = T.StructType(
 )
 
 
-def salt_partitions(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
-    """Size-balance by (conv_id, turn_idx) hash: hot conversations are
-    split across partitions instead of hammering one executor.
+def salt_partitions(df: DataFrame) -> DataFrame:
+    """Size-balance by (conv_id, turn_idx) hash into 2x default parallelism
+    partitions: hot conversations are split across partitions instead of
+    hammering one executor.
 
     Partitions on the RAW 64-bit xxhash64 — not a pre-bucketed
     ``pmod(hash, n)`` value: repartition re-hashes its key with murmur3, and
     murmur3 over only n distinct bucket ids is a balls-in-bins draw (~1/e of
-    partitions empty, 3-4x max skew). The full-domain hash spreads evenly.
-    ``num_partitions``: callers at scale should size this to the input
-    (an explicit repartition count is outside AQE's reach); the default
-    2x parallelism is the local/balanced-shard setting."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
+    partitions empty, 3-4x max skew). The full-domain hash spreads evenly."""
+    n = df.sparkSession.sparkContext.defaultParallelism * 2
     return df.repartition(n, F.xxhash64("conv_id", "turn_idx"))
 
 
@@ -167,83 +168,25 @@ def extract_mentions(
     # which is the scaling bottleneck on syscall-expensive hosts
     src = transcripts.select("conv_id", "turn_idx", "text")
     if balance:
-        src = salt_partitions(src, None)
+        src = salt_partitions(src)
     return src.mapInPandas(run, MENTION_SCHEMA)
 
 
-GROUPED_MENTION_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField(
-            "ms",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("input_label", T.StringType()),
-                        T.StructField("surface", T.StringType()),
-                        T.StructField("m_pos", T.IntegerType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
-def extract_mentions_grouped(
-    transcripts: DataFrame,
-    patterns: Optional[dict[str, str]] = None,
-    balance: bool = False,
-) -> DataFrame:
-    """Per-turn grouped extraction: one output row per turn carrying the
-    mention array.
-
-    This shape keeps downstream co-occurrence pair generation **turn-local**
-    — pairs expand from the array with JVM expressions, so the hot path has
-    zero shuffles (mentions = explode; pairs = array expansion; entity ids =
-    broadcast joins). At 10^12 turns that removes the only O(corpus)
-    shuffle of the evidence DAG.
-    """
-    patterns = patterns or DEFAULT_PATTERNS
-    labels, combined, gidx, simple = _compile_gazetteer(patterns)
-    n_labels = len(labels)
-
-    # same finditer kernel as extract_mentions (see the A/B note there);
-    # mentions accumulate into the per-row array instead of flat columns
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out_ms: list = []
-            for t in pdf["text"].values:
-                ms: list = []
-                if isinstance(t, str) and t:
-                    counts = [0] * n_labels
-                    for m in combined.finditer(t):
-                        g = (
-                            m.lastindex - 1
-                            if simple
-                            else next(j for j, gi in enumerate(gidx) if m.group(gi) is not None)
-                        )
-                        ms.append((labels[g], m.group(), counts[g]))
-                        counts[g] += 1
-                out_ms.append(ms)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].values,
-                    # nullable Int32 (not .astype("int32")): a NULL turn_idx
-                    # makes Arrow deliver the column as float64-with-NaN,
-                    # and the non-nullable cast raises on the whole batch
-                    "turn_idx": pd.array(pdf["turn_idx"], dtype="Int32"),
-                    "ms": out_ms,
-                }
-            )
-
-    src = transcripts.select("conv_id", "turn_idx", "text")
-    if balance:
-        src = salt_partitions(src, None)
-    return src.mapInPandas(run, GROUPED_MENTION_SCHEMA)
+def _regexp_mentions(transcripts: DataFrame, patterns: Optional[dict[str, str]], keys: tuple[str, ...]) -> DataFrame:
+    """The expression kernel: per label, ``regexp_extract_all`` +
+    ``posexplode`` (m_pos = occurrence index per (row, label)), unioned over
+    labels. ``keys`` are the input columns each mention row carries."""
+    per_label = []
+    for label, pat in (patterns or DEFAULT_PATTERNS).items():
+        hits = F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0))
+        per_label.append(
+            transcripts.select(
+                *keys,
+                F.lit(label).alias("input_label"),
+                F.posexplode(hits).alias("m_pos", "surface"),
+            ).select(*keys, "input_label", "surface", "m_pos")
+        )
+    return reduce(DataFrame.unionByName, per_label)
 
 
 def extract_mentions_expr(
@@ -251,22 +194,7 @@ def extract_mentions_expr(
     patterns: Optional[dict[str, str]] = None,
 ) -> DataFrame:
     """Built-in extraction: regexp_extract_all per label + posexplode."""
-    patterns = patterns or DEFAULT_PATTERNS
-    per_label = []
-    for label, pat in patterns.items():
-        hits = F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0))
-        per_label.append(
-            transcripts.select(
-                "conv_id",
-                "turn_idx",
-                F.lit(label).alias("input_label"),
-                F.posexplode(hits).alias("m_pos", "surface"),
-            ).select("conv_id", "turn_idx", "input_label", "surface", "m_pos")
-        )
-    out = per_label[0]
-    for other in per_label[1:]:
-        out = out.unionByName(other)
-    return out
+    return _regexp_mentions(transcripts, patterns, ("conv_id", "turn_idx"))
 
 
 def normalize_surface(col) -> F.Column:

@@ -49,26 +49,6 @@ def _cheap_block(key_col: str) -> F.Column:
     )
 
 
-def candidate_pairs(surfaces: DataFrame, key_col: str = "nkey") -> DataFrame:
-    """Blocked self-join: pairs of distinct normalized surfaces that share a
-    coarse block key (first alpha run + trailing digit run).
-
-    WARNING — skew: surfaces without a digit suffix collapse into <= 26
-    blocks, making the within-block join quadratic on a real corpus. Use
-    :func:`candidate_pairs_guarded` (the :func:`canonicalize` default), which
-    reroutes oversized blocks through the PPJoin prefix filter.
-    """
-    blocked = surfaces.withColumn("_block", _cheap_block(key_col))
-    a = blocked.select(F.col(key_col).alias("ka"), F.col("_block"))
-    b = blocked.select(F.col(key_col).alias("kb"), F.col("_block"))
-    return (
-        a.join(b, "_block")
-        .filter(F.col("ka") < F.col("kb"))
-        .select("ka", "kb")
-        .distinct()
-    )
-
-
 def candidate_pairs_guarded(
     surfaces: DataFrame,
     key_col: str = "nkey",
@@ -293,9 +273,7 @@ def canonicalize(
 
 def _pairwise(ents_col: str = "ents") -> F.Column:
     """Index-aware unordered pair expansion of an array column: each element
-    paired with every LATER element — struct(a, b) rows, JVM-side, no join.
-    Shared by :func:`cooccurrence_pairs` and :func:`zero_shuffle_evidence`
-    (one definition so the slice arithmetic cannot drift between them)."""
+    paired with every LATER element — struct(a, b) rows, JVM-side, no join."""
     return F.flatten(
         F.transform(
             F.col(ents_col),
@@ -353,72 +331,3 @@ def link_mentions(mentions: DataFrame, threshold: float = 0.35, mapping: DataFra
     return withkey.join(_bc(mapping), "nkey", "left").withColumn(
         "canonical_id", F.coalesce(F.col("canonical_id"), F.col("nkey"))
     )
-
-
-def zero_shuffle_evidence(grouped: DataFrame, threshold: float = 0.35) -> tuple:
-    """Evidence pairs from per-turn grouped mentions with NO corpus shuffle.
-
-    ``grouped`` is ``extract_mentions_grouped`` output. The DAG:
-      * mentions view = ``explode(ms)`` (narrow);
-      * canonical map = blocking + scoring + components over the *distinct
-        surface* domain (tiny shuffles only);
-      * per-turn pairs = JVM array expansion of ``ms`` (narrow);
-      * canonical ids attached to both pair sides via broadcast joins.
-
-    Returns (linked_mentions, evidence) where evidence has columns
-    (conv_id, turn_idx, ca, la, cb, lb), ca < cb by canonical id.
-
-    Evidence is MENTION-PAIR level: surfaces are deduped per turn by
-    normalized form BEFORE canonicalization, so two distinct variants of one
-    entity in the same turn yield one evidence row per variant pair. Making
-    rows unique per (turn, canonical pair) would need a distinct — i.e. the
-    corpus-wide shuffle this DAG exists to avoid — and consumers that want
-    entity-pair-level counts aggregate downstream anyway
-    (``cooccurrence_pairs`` groups by canonical ids; the bench counts
-    distinct triples separately).
-    """
-    mentions = grouped.select("conv_id", "turn_idx", F.explode("ms").alias("m")).select(
-        "conv_id", "turn_idx", F.col("m.input_label").alias("input_label"), F.col("m.surface").alias("surface")
-    )
-    mapping = canonicalize(mentions, threshold)
-
-    ents = F.array_distinct(
-        F.transform(
-            F.col("ms"),
-            lambda m: F.struct(
-                normalize_surface(m["surface"]).alias("k"), m["input_label"].alias("l")
-            ),
-        )
-    )
-    per_turn = grouped.select("conv_id", "turn_idx", ents.alias("ents"))
-    pairs = _pairwise()
-    exploded = per_turn.select("conv_id", "turn_idx", F.explode(pairs).alias("p"))
-    driver_sized = getattr(mapping, "_driver_sized", False)
-    map_a = mapping.select(F.col("nkey").alias("_ka"), F.col("canonical_id").alias("ca_id"))
-    map_b = mapping.select(F.col("nkey").alias("_kb"), F.col("canonical_id").alias("cb_id"))
-    if driver_sized:
-        map_a, map_b = F.broadcast(map_a), F.broadcast(map_b)
-    resolved = (
-        exploded.join(map_a, F.col("p.a.k") == F.col("_ka"), "left")
-        .join(map_b, F.col("p.b.k") == F.col("_kb"), "left")
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.coalesce(F.col("ca_id"), F.col("p.a.k")).alias("_ca"),
-            F.col("p.a.l").alias("_la"),
-            F.coalesce(F.col("cb_id"), F.col("p.b.k")).alias("_cb"),
-            F.col("p.b.l").alias("_lb"),
-        )
-        .filter(F.col("_ca") != F.col("_cb"))
-    )
-    a_first = F.col("_ca") < F.col("_cb")
-    evidence = resolved.select(
-        "conv_id",
-        "turn_idx",
-        F.when(a_first, F.col("_ca")).otherwise(F.col("_cb")).alias("ca"),
-        F.when(a_first, F.col("_la")).otherwise(F.col("_lb")).alias("la"),
-        F.when(a_first, F.col("_cb")).otherwise(F.col("_ca")).alias("cb"),
-        F.when(a_first, F.col("_lb")).otherwise(F.col("_la")).alias("lb"),
-    )
-    linked = link_mentions(mentions, threshold, mapping=mapping)
-    return linked, evidence

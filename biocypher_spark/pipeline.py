@@ -38,7 +38,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import extract_mentions, extract_mentions_expr
+from .extract import extract_mentions
 from .linking import link_mentions
 from .mapping import SchemaMapping
 from .model import SEQ
@@ -155,7 +155,6 @@ class KGPipeline:
         run_dir: Optional[str] = None,
         strict_mode: bool = False,
         link_threshold: float = 0.35,
-        use_pandas_extraction: bool = True,
     ):
         from .writer.base import require_local_dir
 
@@ -175,7 +174,6 @@ class KGPipeline:
             self.mapping = SchemaMapping(schema_config_path)
         self.translator = SparkTranslator(spark, NullOntology(self.mapping), strict_mode=strict_mode)
         self.link_threshold = link_threshold
-        self.use_pandas_extraction = use_pandas_extraction
         self._lineage_rows: list[tuple] = []
 
     # -- checkpoint helpers -------------------------------------------------
@@ -276,8 +274,7 @@ class KGPipeline:
         self._lineage_rows = []
         stage_secs: dict[str, float] = {}
         t0 = time.time()
-        fn = extract_mentions if self.use_pandas_extraction else extract_mentions_expr
-        mentions = self._checkpoint("mentions", lambda: fn(transcripts, patterns), resume)
+        mentions = self._checkpoint("mentions", lambda: extract_mentions(transcripts, patterns), resume)
         stage_secs["mentions"] = time.time() - t0
 
         t0 = time.time()

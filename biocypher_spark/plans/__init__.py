@@ -25,8 +25,3 @@ def count_shuffles(df: DataFrame) -> int:
 
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def pushed_filters(df: DataFrame) -> str:
-    plan = formatted_plan(df)
-    return "\n".join(line.strip() for line in plan.splitlines() if "PushedFilters" in line)

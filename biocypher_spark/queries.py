@@ -518,7 +518,7 @@ def kg_cooccurrence_triples(spark, sf_dir):
     """Flagship triple construction: extraction -> per-doc co-occurrence ->
     dedup -> (subj, pred, obj).
 
-    Pair generation is DOC-LOCAL (the zero_shuffle_evidence shape): one
+    Pair generation is DOC-LOCAL (the ``linking.cooccurrence_pairs`` shape): one
     ``collect_set`` aggregate per doc, then a JVM array expansion of the
     sorted set into its ordered pairs. The former self-join formulation
     ran the mapInPandas extraction in BOTH join branches (two Python

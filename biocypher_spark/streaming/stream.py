@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..extract import DEFAULT_PATTERNS
+from ..extract import DEFAULT_PATTERNS, _regexp_mentions
 from ..materialize import materialize
 
 TRANSCRIPT_SCHEMA = T.StructType(
@@ -59,24 +59,9 @@ def read_transcript_stream(spark: SparkSession, path: str, max_files_per_trigger
 
 
 def stream_mentions(transcripts: DataFrame, patterns: Optional[dict[str, str]] = None) -> DataFrame:
-    """Streaming mention extraction keeping the event time column."""
-    patterns = patterns or DEFAULT_PATTERNS
-    per_label = []
-    for label, pat in patterns.items():
-        hits = F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0))
-        per_label.append(
-            transcripts.select(
-                "conv_id",
-                "turn_idx",
-                "ts",
-                F.lit(label).alias("input_label"),
-                F.explode(hits).alias("surface"),
-            )
-        )
-    out = per_label[0]
-    for other in per_label[1:]:
-        out = out.unionByName(other)
-    return out
+    """Streaming mention extraction: the ``extract_mentions_expr`` kernel,
+    keeping the event time column ``ts``."""
+    return _regexp_mentions(transcripts, patterns, ("conv_id", "turn_idx", "ts"))
 
 
 def stream_exact_dedup(transcripts: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -222,7 +207,6 @@ def stream_kg(
         spark, translator, output_directory, strict_mode=False, validate_props=False,
         ordered_parts=False, track_seen=True, lazy_seen_pins=True,
     )
-    pats = patterns or DEFAULT_PATTERNS
 
     def identity_link(mentions: DataFrame) -> DataFrame:
         """Identity canonicalization: canonical_id IS the normalized surface.
@@ -458,9 +442,6 @@ def stream_kg(
         # persist step to ~1.3s with the same durable contents)
         width = spark.sparkContext.defaultParallelism
         combined = combined.coalesce(width if full else max(1, width // 8))
-        import time as _t
-
-        _p0 = _t.time()
         new = os.path.join(meta_dir, f"_seen_b{batch_id}")
         # partitionBy keeps the single write job but gives each kind its
         # own directory, so the per-attr restore/dedup scans
@@ -470,8 +451,6 @@ def stream_kg(
         if full:
             with open(os.path.join(new, _FULL_MARKER), "w") as fh:
                 fh.write("")
-        if os.environ.get("BIOCYPHER_STREAM_TIMING") == "1":
-            print(f"[persist_seen] write={_t.time() - _p0:.2f}s full={full}", flush=True)
         back = spark.read.parquet(new)
         if full:
             for attr in _SEEN_ATTRS:
@@ -550,17 +529,7 @@ def stream_kg(
 
     _restore_seen(_initial["last_batch"])
 
-    _timing = os.environ.get("BIOCYPHER_STREAM_TIMING") == "1"
-
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _t
-
-        marks = [("start", _t.time())]
-
-        def _mark(name: str) -> None:
-            if _timing:
-                marks.append((name, _t.time()))
-
         state = _read_committed()
         if batch_id <= state["last_batch"]:
             return  # at-least-once replay of an already-committed batch
@@ -576,8 +545,7 @@ def stream_kg(
         # actions (seen-dedup counts, first-row collects, the part write),
         # each of which would otherwise re-run it (measured 5-7 recomputes
         # per batch; the dominant cost of the stream before pinning)
-        mentions = materialize(stream_mentions(batch_df, pats))
-        _mark("extract_pin")
+        mentions = materialize(stream_mentions(batch_df, patterns))
         if mentions.limit(1).count() == 0:
             parts = state["part_files"]
         else:
@@ -603,16 +571,12 @@ def stream_kg(
             # earlier 56s->44s pin profiling predates the identity-link
             # fast path that made the upstream chain narrow)
             edge_tuples = materialize(edge_tuples)
-            _mark("link_translate_pin")
             tn = translator.translate_nodes(node_tuples)
             te = translator.translate_edges(edge_tuples)
-            _mark("translate_edges_pin")
             writer.write_nodes(tn.nodes)
-            _mark("write_nodes")
             # the rel-as-node frames (their dedup and emptiness probe) only
             # when the schema lets these tuples be reified
             writer.write_edges(te if reify else te.edges)
-            _mark("write_edges")
             writer.write_import_call()
             parts = sorted(
                 os.path.basename(f)
@@ -623,7 +587,6 @@ def stream_kg(
         # state is already durable in the surviving generations, which
         # _drop_old_seen only deletes once a newer FULL gen supersedes them
         _persist_seen(batch_id)
-        _mark("persist_seen")
         tmp = committed_path + ".tmp"
         with open(tmp, "w") as fh:
             _json.dump(
@@ -631,12 +594,6 @@ def stream_kg(
             )
         os.replace(tmp, committed_path)
         _drop_old_seen(batch_id)
-        if _timing:
-            spans = ", ".join(
-                f"{name}={marks[i + 1][1] - marks[i][1]:.2f}s"
-                for i, (name, _) in enumerate(marks[1:])
-            )
-            print(f"[stream_kg] batch={batch_id} total={_t.time() - marks[0][1]:.2f}s {spans}", flush=True)
 
     stream = read_transcript_stream(spark, input_path, max_files_per_trigger)
     builder = stream.writeStream.foreachBatch(handle_batch).option("checkpointLocation", checkpoint_dir)

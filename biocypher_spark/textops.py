@@ -12,6 +12,9 @@ bucket) to stay sub-quadratic; simhash is a linear scan.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -854,19 +857,33 @@ def contamination_check(df: DataFrame, probes: list, text_col: str = "text") -> 
     operator is the small-probe-set fast path.
 
     Degenerate probes (same rule as :func:`contamination_join`): NULL
-    probes are ignored (a null would otherwise poison `exists` into NULL
+    probes are ignored (a null would otherwise poison the OR into NULL
     for every non-matching doc); an empty-string probe marks EVERY document
     contaminated (contains(text, '') is true). NULL text is never
     contaminated.
     """
+    return df.select("doc_id", _probe_list_flag(probes, text_col).alias("contaminated"))
+
+
+def _probe_list_flag(probes: list, text_col: str) -> Column:
+    """Row-local contamination flag for a probe LIST, with the degenerate
+    probe rules of :func:`contamination_check`.
+
+    An OR of ``contains`` terms, not ``exists`` over a literal array: the
+    lambda variable made Catalyst's constraint propagation fail
+    (``Union.rewriteConstraints: key not found: text#N``) when the fused
+    :func:`clean_corpus` stage was the first query of a fresh session. The
+    OR tree is balanced: a left-deep chain of ~1000 terms overflows the
+    analyzer's stack."""
     probes = [p for p in probes if p is not None]
     if "" in probes:
-        return df.select("doc_id", F.lit(True).alias("contaminated"))
-    hit = F.exists(
-        F.array(*[F.lit(p) for p in probes]),
-        lambda p: F.contains(F.col(text_col), p),
-    )
-    return df.select("doc_id", F.coalesce(hit, F.lit(False)).alias("contaminated"))
+        return F.lit(True)
+    hits = [F.col(text_col).contains(p) for p in probes]
+    if not hits:
+        return F.lit(False)
+    while len(hits) > 1:
+        hits = [reduce(operator.or_, hits[i : i + 2]) for i in range(0, len(hits), 2)]
+    return F.coalesce(hits[0], F.lit(False))
 
 
 # contamination_join strategy bounds: <= _PROBE_SCAN_MAX probes evaluate as
@@ -1433,20 +1450,7 @@ def clean_corpus(
                 fused_scan = surv.crossJoin(F.broadcast(_probe_array(probes, "probe")))
                 cont_expr = _contains_any(text_col)
         else:
-            plist = [p for p in probes if p is not None]
-            if "" in plist:
-                cont_expr = F.lit(True)
-            elif not plist:
-                cont_expr = F.lit(False)
-            else:
-                cont_expr = F.coalesce(
-                    F.exists(
-                        F.array(*[F.lit(p) for p in plist]),
-                        lambda p: F.contains(F.col(text_col), p),
-                    ),
-                    F.lit(False),
-                )
-            fused_scan = surv
+            cont_expr, fused_scan = _probe_list_flag(probes, text_col), surv
         if cont_expr is not None:
             toks_q = tokens(F.col(text_col))
             _, score = _quality_exprs(toks_q, F.col(text_col))

@@ -82,10 +82,6 @@ def generate_transcripts(spark: SparkSession, n_turns: int, partitions: int | No
     )
 
 
-def write_transcripts(spark: SparkSession, n_turns: int, path: str) -> None:
-    generate_transcripts(spark, n_turns).write.mode("overwrite").parquet(path)
-
-
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     """Read a transcripts table (Iceberg when the catalog is configured,
     parquet fallback — the sandbox has no Iceberg runtime jar)."""

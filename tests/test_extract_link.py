@@ -109,33 +109,6 @@ def test_prefix_filter_candidates_superset(spark, transcripts):
     assert ("prot7", "protein7") in got
 
 
-def test_zero_shuffle_evidence_equivalence(spark, transcripts):
-    """The zero-shuffle evidence DAG must yield the same distinct triple set
-    as the join-based co-occurrence path."""
-    from pyspark.sql import functions as F
-
-    from biocypher_spark.extract import extract_mentions, extract_mentions_grouped
-    from biocypher_spark.linking import cooccurrence_pairs, link_mentions, zero_shuffle_evidence
-
-    linked = link_mentions(extract_mentions(transcripts))
-    want = cooccurrence_pairs(linked).select("ca", "la", "cb", "lb").distinct()
-
-    grouped = extract_mentions_grouped(transcripts)
-    _l2, pairs = zero_shuffle_evidence(grouped)
-    got = pairs.select("ca", "la", "cb", "lb").distinct()
-
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-    # grouped explode == flat extraction
-    flat = grouped.select("conv_id", "turn_idx", F.explode("ms").alias("m")).select(
-        "conv_id", "turn_idx", "m.input_label", "m.surface", "m.m_pos"
-    )
-    base = extract_mentions(transcripts).select("conv_id", "turn_idx", "input_label", "surface", "m_pos")
-    assert flat.exceptAll(base).count() == 0
-    assert base.exceptAll(flat).count() == 0
-
-
 def test_canonicalize_local_matches_distributed(spark):
     """The zero-Spark-job driver path must produce the identical canonical
     map as the distributed blocking + scoring + CC path."""
@@ -195,9 +168,8 @@ def test_extract_mentions_caller_pattern_with_capturing_group(spark):
 
 def test_extract_mentions_m_pos_and_null_text(spark):
     """m_pos counts occurrences per (turn, label) in match order; null and
-    empty text rows yield no mention rows (and an empty ms array in the
-    grouped shape) without erroring."""
-    from biocypher_spark.extract import extract_mentions, extract_mentions_grouped
+    empty text rows yield no mention rows without erroring."""
+    from biocypher_spark.extract import extract_mentions
 
     df = spark.createDataFrame(
         [
@@ -217,14 +189,6 @@ def test_extract_mentions_m_pos_and_null_text(spark):
         (0, "protein", "PROT1", 2),
         (0, "protein", "PROT3", 1),
     ]
-    grouped = {r["turn_idx"]: r["ms"] for r in extract_mentions_grouped(df).collect()}
-    assert [tuple(m) for m in grouped[0]] == [
-        ("protein", "PROT1", 0),
-        ("disease", "DIS2", 0),
-        ("protein", "PROT3", 1),
-        ("protein", "PROT1", 2),
-    ]
-    assert grouped[1] == [] and grouped[2] == []
 
 
 def test_prefix_candidates_custom_key_col(spark):
@@ -262,10 +226,10 @@ def test_prefix_length_filter_lossless(spark):
 
 
 def test_extraction_tolerates_null_turn_idx(spark):
-    """Both mapInPandas kernels must survive a NULL turn_idx (Arrow hands
+    """The mapInPandas kernel must survive a NULL turn_idx (Arrow hands
     the batch's column over as float64-with-NaN): the mention keeps a NULL
     turn_idx instead of crashing the task."""
-    from biocypher_spark.extract import extract_mentions, extract_mentions_grouped
+    from biocypher_spark.extract import extract_mentions
 
     rows = [
         ("c1", 0, "user", "PROT1 binds PROT2", "", None),
@@ -278,11 +242,6 @@ def test_extraction_tolerates_null_turn_idx(spark):
     flat = extract_mentions(df, balance=False)
     got = {(r["conv_id"], r["turn_idx"], r["surface"]) for r in flat.collect()}
     assert ("c1", None, "DIS3") in got and ("c1", 0, "PROT1") in got
-
-    grouped = extract_mentions_grouped(df)
-    rows2 = {(r["conv_id"], r["turn_idx"]): [m["surface"] for m in r["ms"]] for r in grouped.collect()}
-    assert rows2[("c1", None)] == ["DIS3"]
-    assert rows2[("c2", None)] == []
 
 
 def test_gazetteer_rejects_backreference_patterns():

@@ -67,22 +67,6 @@ def test_dedup_single_shuffle(spark, schema_path):
     assert count_shuffles(kept) == 1
 
 
-def test_zero_shuffle_evidence_plan(spark):
-    """The evidence DAG's corpus-sized path must contain no shuffle
-    exchange: extraction -> array pair expansion -> broadcast map-back."""
-    from biocypher_spark.extract import extract_mentions_grouped
-    from biocypher_spark.linking import zero_shuffle_evidence
-    from biocypher_spark.transcripts import generate_transcripts
-
-    grouped = extract_mentions_grouped(generate_transcripts(spark, 500)).persist()
-    try:
-        _linked, evidence = zero_shuffle_evidence(grouped)
-        assert count_shuffles(evidence) == 0
-        assert uses_broadcast_join(evidence)
-    finally:
-        grouped.unpersist()
-
-
 def test_simhash64_single_shuffle_codegen(spark):
     """simhash64 = explode + ONE partial/final hash aggregate (map-side
     combine: the shuffle carries 64 ints per doc, not exploded tokens), no

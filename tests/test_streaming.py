@@ -57,6 +57,17 @@ def test_stream_windowed_counts(spark, stream_dir):
     assert emitted <= batch_mentions
 
 
+def test_stream_mentions_is_expr_kernel_plus_ts(spark):
+    from biocypher_spark.extract import extract_mentions_expr
+
+    batch = generate_transcripts(spark, 200)
+    got = stream_mentions(batch)
+    assert got.columns == ["conv_id", "turn_idx", "ts", "input_label", "surface", "m_pos"]
+    want = extract_mentions_expr(batch)
+    assert got.drop("ts").exceptAll(want).count() == 0
+    assert want.exceptAll(got.drop("ts")).count() == 0
+
+
 def test_stream_sessions_stateful(spark, stream_dir):
     stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=2)
     sessions = conversation_sessions(stream)

@@ -177,13 +177,14 @@ def test_candidate_pairs_guarded_reroutes_hot_block(spark):
 
 
 def test_candidate_pairs_guarded_small_blocks_unchanged(spark):
-    from biocypher_spark.linking import candidate_pairs
+    """Below max_block_size the guarded generator emits exactly the pairs of
+    distinct keys that share a cheap block key."""
+    from biocypher_spark.linking import _cheap_block_py
 
-    surfaces = spark.createDataFrame(
-        [(f"prot{i}",) for i in range(40)] + [("proteinalpha",), ("proteinalphax",)], "nkey string"
-    )
+    keys = [f"prot{i}" for i in range(40)] + ["proteinalpha", "proteinalphax"]
+    surfaces = spark.createDataFrame([(k,) for k in keys], "nkey string")
     guarded = {(r["ka"], r["kb"]) for r in candidate_pairs_guarded(surfaces, max_block_size=100).collect()}
-    cheap = {(r["ka"], r["kb"]) for r in candidate_pairs(surfaces).collect()}
+    cheap = {(a, b) for a in keys for b in keys if a < b and _cheap_block_py(a) == _cheap_block_py(b)}
     assert guarded == cheap
 
 
@@ -375,6 +376,10 @@ def test_contamination_check(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r["doc_id"]: r["contaminated"] for r in contamination_check(docs, ["brown fox", "zzz"]).collect()}
     assert out == {1: True, 2: False}
+    # a long probe list still plans (the OR of contains terms is balanced)
+    many = [f"probe{i}" for i in range(1200)] + ["entirely"]
+    out = {r["doc_id"]: r["contaminated"] for r in contamination_check(docs, many).collect()}
+    assert out == {1: False, 2: True}
 
 
 def test_contamination_join_equals_literal_path(spark):
