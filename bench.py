@@ -309,14 +309,12 @@ def run_pipeline_job(spark, n_turns: int, input_path: str | None = None) -> dict
 
     if input_path:
         transcripts = spark.read.parquet(input_path)
-        balance = False  # parquet splits are already size-balanced
     else:
         transcripts = generate_transcripts(spark, n_turns)
-        balance = True
 
     t0 = time.time()
     c0 = _jvm_cpu_seconds(spark)
-    mentions = extract_mentions(transcripts, balance=balance).persist()
+    mentions = extract_mentions(transcripts).persist()
     pairs = cooccurrence_pairs(link_mentions(mentions))
     evidence = pairs.select(
         F.col("ca").alias("subj"),
@@ -369,7 +367,7 @@ def scaling_worker(cores: int, n_turns: int, runs: int = 2, job: str = "pipeline
         spark.stop()
         return
     path = materialize_input(spark, n_turns)
-    # warm-up 1: codegen compilation + Python worker spawn are one-time JVM
+    # warm-up 1: JIT and codegen compilation are one-time JVM
     # costs (~10 s) that would otherwise add an equal absolute constant to
     # both core counts and understate the true scaling ratio
     run_pipeline_job(spark, n_turns // 20, input_path=None)
@@ -584,11 +582,8 @@ def main() -> None:
     spark = build_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry.queries()
-    # warm-up: JVM codegen, parquet footers, Python workers — one-time costs
-    # that would otherwise be billed entirely to the first headline query.
-    # kg_extract_mentions is the mapInPandas warm-up: the two SQL-only
-    # queries never spawn the Python worker pool, so without it the first
-    # Arrow query in the timed loop absorbs worker startup
+    # warm-up: JVM codegen and parquet footers — one-time costs that would
+    # otherwise be billed entirely to the first headline query
     _section("warmup")
     queries["q1_pricing_summary"](spark, SF_DIR).write.mode("overwrite").format("noop").save()
     queries["kg_translate_nodes"](spark, SF_DIR).write.mode("overwrite").format("noop").save()

@@ -7,7 +7,7 @@ from .airr import AirrKG
 from .core import BioCypherSpark
 from .dedup import dedup_edges, dedup_nodes, dedup_rel_as_nodes
 from .download import APIRequest, Downloader, FileDownload, Resource
-from .extract import extract_mentions, extract_mentions_expr
+from .extract import extract_mentions
 from .graph import SparkGraph
 from .linking import canonicalize, link_mentions
 from .mapping import SchemaMapping
@@ -37,7 +37,6 @@ __all__ = [
     "dedup_rel_as_nodes",
     "edges_from_tuples",
     "extract_mentions",
-    "extract_mentions_expr",
     "generate_transcripts",
     "link_mentions",
     "nodes_from_tuples",

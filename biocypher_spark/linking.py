@@ -22,9 +22,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .materialize import materialize
 from .extract import normalize_surface
+from .model import local_frame
 from .operators.components import connected_components
 
 
@@ -106,7 +108,7 @@ def candidate_pairs_prefix(surfaces: DataFrame, threshold: float = 0.35, key_col
     freq = {r["g"]: r["_df"] for r in df_counts.collect()}
     order = {g: i for i, (g, _) in enumerate(sorted(freq.items(), key=lambda kv: (kv[1], kv[0])))}
     spark = surfaces.sparkSession
-    order_df = spark.createDataFrame(list(order.items()), "g string, rank int")
+    order_df = local_frame(spark, order.items(), T.StructType.fromDDL("g string, rank int"))
 
     exploded = grams.select("nkey", F.explode("_grams").alias("g"), F.size("_grams").alias("_n"))
     ranked = exploded.join(F.broadcast(order_df), "g")
@@ -249,8 +251,8 @@ def canonicalize(
     keys = [r["nkey"] for r in surfaces.limit(driver_cc_threshold).collect()]
     if len(keys) < driver_cc_threshold:
         comp_map = canonicalize_local(keys, threshold, max_block_size)
-        out = spark.createDataFrame(
-            [(k, comp_map.get(k, k)) for k in keys], "nkey string, canonical_id string"
+        out = local_frame(
+            spark, [(k, comp_map.get(k, k)) for k in keys], T.StructType.fromDDL("nkey string, canonical_id string")
         )
         out._driver_sized = True  # bounded by driver_cc_threshold: safe to broadcast
         return out

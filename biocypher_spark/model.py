@@ -17,9 +17,11 @@ from __future__ import annotations
 import json
 from typing import Iterable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # arrival-order column used for deterministic first-wins dedup
 SEQ = "_seq"
@@ -69,6 +71,20 @@ EDGE_SCHEMA = T.StructType(
 def encode_props(props: dict | None) -> dict[str, str]:
     """JSON-encode each property value (driver-side, test/fixture helper)."""
     return {k: json.dumps(v) for k, v in (props or {}).items()}
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: T.StructType) -> DataFrame:
+    """Rows built in Python -> DataFrame through one Arrow stream.
+
+    ``createDataFrame`` over a Python list pickles the rows through
+    ``parallelize`` and a Python ``map``, so every consumer of the frame
+    starts a Python worker (a ``PythonRDD`` stage). A ``pyarrow.Table`` is
+    read by the JVM directly, whatever ``spark.sql.execution.arrow.*`` says.
+    """
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays([pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema=schema)
 
 
 _NODE_TUPLE_SCHEMA = T.StructType(

@@ -17,7 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
 from ..materialize import materialize
+from ..model import local_frame
 
 
 def connected_components_local(edge_list: list[tuple]) -> dict:
@@ -85,20 +88,9 @@ def connected_components(
         head = e.limit(driver_threshold).collect()
         if len(head) < driver_threshold:
             comp = connected_components_local([(r["a"], r["b"]) for r in head])
-            from pyspark.sql import types as T
-
             node_type = e.schema["a"].dataType
             schema = T.StructType([T.StructField("node", node_type), T.StructField("comp", node_type)])
-            # ship the result back through Arrow (pandas input): for the
-            # ~100k-row label tables this path exists for, the row-by-row
-            # Python->JVM pickle conversion of a plain tuple list was the
-            # single largest driver-invariant cost of the fast path
-            # (~2s at 80k rows; the Arrow batch is ~0.3s)
-            import pandas as pd
-
-            items = sorted(comp.items())
-            pdf = pd.DataFrame(items, columns=["node", "comp"])
-            return edges.sparkSession.createDataFrame(pdf, schema=schema)
+            return local_frame(edges.sparkSession, sorted(comp.items()), schema)
     # distributed path: pin the deduped symmetric edge list the iterations scan
     sym = materialize(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()

@@ -1,6 +1,6 @@
 """End-to-end KG-construction pipeline: the north-rule DAG.
 
-read transcripts -> mention detection (mapInPandas) -> entity linking +
+read transcripts -> mention detection (built-in regexp) -> entity linking +
 canonicalization (blocked similarity join + connected components) ->
 triple construction -> schema translate (broadcast join) -> dedup (shuffle)
 -> Neo4j-admin-import batch layout, with per-partition lineage and metrics

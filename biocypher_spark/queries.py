@@ -486,20 +486,15 @@ def kg_canonicalize_blocking(spark, sf_dir):
     """,
 )
 def kg_extract_mentions(spark, sf_dir):
-    """Flagship extraction (mapInPandas) over documents-as-transcripts.
-
-    ``balance=False``: ``_t`` already round-robin-rebalanced the small scan
-    to cluster width (and at scale the parquet arrives in thousands of
-    splits), so the extractor's salt repartition would be a SECOND full
-    shuffle of the document text for zero extra balance — the plan goes
-    from 2 Exchanges below MapInPandas to 1 (guide §2.4)."""
+    """Flagship extraction (built-in ``regexp_extract_all``) over
+    documents-as-transcripts."""
     docs = _t(spark, sf_dir, "documents")
     transcripts = docs.select(
         F.col("doc_id").cast("string").alias("conv_id"),
         F.lit(0).alias("turn_idx"),
         F.col("text"),
     )
-    mentions = extract_mentions(transcripts, patterns={"op": _GAZETTEER}, balance=False)
+    mentions = extract_mentions(transcripts, patterns={"op": _GAZETTEER})
     return mentions.select(F.col("conv_id").cast("bigint").alias("doc_id"), "surface")
 
 

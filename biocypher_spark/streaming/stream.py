@@ -59,7 +59,7 @@ def read_transcript_stream(spark: SparkSession, path: str, max_files_per_trigger
 
 
 def stream_mentions(transcripts: DataFrame, patterns: Optional[dict[str, str]] = None) -> DataFrame:
-    """Streaming mention extraction: the ``extract_mentions_expr`` kernel,
+    """Streaming mention extraction: the ``extract_mentions`` kernel,
     keeping the event time column ``ts``."""
     return _regexp_mentions(transcripts, patterns, ("conv_id", "turn_idx", "ts"))
 

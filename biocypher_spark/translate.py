@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .model import SEQ, json_decode_str, json_pystr
+from .model import SEQ, json_decode_str, json_pystr, local_frame
 from .naming import sentence_to_pascal, to_list
 from .ontology import NullOntology
 
@@ -155,7 +155,7 @@ class SparkTranslator:
         return {row[0] for row in self._mapping_rows if row[3] == "node"}
 
     def mapping_df(self) -> DataFrame:
-        return self.spark.createDataFrame(self._mapping_rows, _MAPPING_SCHEMA)
+        return local_frame(self.spark, self._mapping_rows, _MAPPING_SCHEMA)
 
     # -- shared pieces ----------------------------------------------------
 

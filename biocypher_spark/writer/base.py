@@ -29,9 +29,10 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..materialize import materialize
-from ..model import SEQ, json_pystr, scrub_newlines
+from ..model import SEQ, json_pystr, local_frame, scrub_newlines
 from ..naming import parse_label, sentence_to_pascal
 
 LONG_TYPES = {"int", "integer", "long"}
@@ -264,7 +265,7 @@ def ordered_file_assignment(lines_df: DataFrame, batch_size: int) -> DataFrame:
     for row in sorted(counts, key=lambda r: (r["_plabel"], r["_pid"])):
         offsets.append((row["_pid"], row["_plabel"], running.get(row["_plabel"], 0)))
         running[row["_plabel"]] = running.get(row["_plabel"], 0) + row["count"]
-    off_df = spark.createDataFrame(offsets, "_pid int, _plabel string, _off long")
+    off_df = local_frame(spark, offsets, T.StructType.fromDDL("_pid int, _plabel string, _off long"))
     # the local-rank window shuffles by (chunk, label) — parallel
     # across all chunks, never one task per label
     w = Window.partitionBy("_pid", "_plabel").orderBy(SEQ)

@@ -1,9 +1,11 @@
 """Extraction + linking + connected-components tests."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from biocypher_spark.extract import extract_mentions, extract_mentions_expr, normalize_surface
+from biocypher_spark.extract import DEFAULT_PATTERNS, extract_mentions, normalize_surface
 from biocypher_spark.linking import canonicalize, link_mentions
 from biocypher_spark.operators.components import connected_components
 from biocypher_spark.transcripts import generate_transcripts
@@ -40,14 +42,18 @@ def test_transcripts_deterministic_across_parallelism(spark):
     assert a == b
 
 
-def test_extract_mentions_pandas_vs_expr(transcripts):
-    got = extract_mentions(transcripts).select("conv_id", "turn_idx", "input_label", "surface", "m_pos")
-    want = extract_mentions_expr(transcripts)
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    labels = {r["input_label"] for r in got.select("input_label").distinct().collect()}
-    assert labels == {"protein", "disease"}
+def test_extract_mentions_per_label(transcripts):
+    # each label's rows are exactly that label's own matches, numbered in
+    # match order per turn (the default patterns read the same in Python)
+    got = sorted(tuple(r) for r in extract_mentions(transcripts).collect())
+    want = sorted(
+        (r["conv_id"], r["turn_idx"], label, m.group(), pos)
+        for r in transcripts.select("conv_id", "turn_idx", "text").collect()
+        for label, pat in DEFAULT_PATTERNS.items()
+        for pos, m in enumerate(re.finditer(pat, r["text"] or ""))
+    )
+    assert got == want
+    assert {w[2] for w in want} == {"protein", "disease"}
 
 
 def test_text_never_mutated(transcripts):
@@ -69,7 +75,7 @@ def test_connected_components(spark):
 
 
 def test_canonicalize_variants(spark, transcripts):
-    mentions = extract_mentions_expr(transcripts)
+    mentions = extract_mentions(transcripts)
     linked = link_mentions(mentions)
     # all three surface variants of protein 7 share one canonical id
     ids = (
@@ -97,10 +103,10 @@ def test_prefix_filter_candidates_superset(spark, transcripts):
     cluster assignments must match the coarse-block path on this corpus."""
     from pyspark.sql import functions as F
 
-    from biocypher_spark.extract import extract_mentions_expr, normalize_surface
+    from biocypher_spark.extract import extract_mentions, normalize_surface
     from biocypher_spark.linking import candidate_pairs_prefix, score_pairs
 
-    mentions = extract_mentions_expr(transcripts)
+    mentions = extract_mentions(transcripts)
     surfaces = mentions.select(normalize_surface(F.col("surface")).alias("nkey")).distinct()
     pairs = candidate_pairs_prefix(surfaces, threshold=0.35)
     accepted = score_pairs(pairs, 0.35)
@@ -151,17 +157,17 @@ def test_canonicalize_local_hot_block_matches(spark):
     assert local == dist
 
 
-def test_extract_mentions_caller_pattern_with_capturing_group(spark):
-    """User-supplied patterns containing capturing groups must resolve to
-    the right label (the kernel's match.lastindex fast path is only valid
-    without inner groups; this pins the groupindex-scan fallback)."""
-    from biocypher_spark.extract import extract_mentions
-
-    df = spark.createDataFrame(
-        [("c1", 0, "user", "gene-12 and GEN7 here", None, None)],
+def _one_turn(spark, text):
+    return spark.createDataFrame(
+        [("c1", 0, "user", text, None, None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    out = extract_mentions(df, patterns={"gene": r"(GEN|gene-)\d+"}, balance=False)
+
+
+def test_extract_mentions_caller_pattern_with_capturing_group(spark):
+    """A user pattern with its own capturing group still yields the whole
+    match as the surface, not the group."""
+    out = extract_mentions(_one_turn(spark, "gene-12 and GEN7 here"), patterns={"gene": r"(GEN|gene-)\d+"})
     got = sorted(r["surface"] for r in out.collect())
     assert got == ["GEN7", "gene-12"]
 
@@ -181,7 +187,7 @@ def test_extract_mentions_m_pos_and_null_text(spark):
     )
     rows = sorted(
         (r["turn_idx"], r["input_label"], r["surface"], r["m_pos"])
-        for r in extract_mentions(df, balance=False).collect()
+        for r in extract_mentions(df).collect()
     )
     assert rows == [
         (0, "disease", "DIS2", 0),
@@ -226,9 +232,7 @@ def test_prefix_length_filter_lossless(spark):
 
 
 def test_extraction_tolerates_null_turn_idx(spark):
-    """The mapInPandas kernel must survive a NULL turn_idx (Arrow hands
-    the batch's column over as float64-with-NaN): the mention keeps a NULL
-    turn_idx instead of crashing the task."""
+    """A NULL turn_idx passes through: the mention keeps a NULL turn_idx."""
     from biocypher_spark.extract import extract_mentions
 
     rows = [
@@ -239,22 +243,38 @@ def test_extraction_tolerates_null_turn_idx(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    flat = extract_mentions(df, balance=False)
+    flat = extract_mentions(df)
     got = {(r["conv_id"], r["turn_idx"], r["surface"]) for r in flat.collect()}
     assert ("c1", None, "DIS3") in got and ("c1", 0, "PROT1") in got
 
 
-def test_gazetteer_rejects_backreference_patterns():
-    """Backreferences can't be renumbered inside the combined alternation —
-    loud error instead of silently dropping mentions."""
-    import pytest as _pytest
+def test_extract_mentions_backreference_patterns(spark):
+    """Patterns are Java regexes compiled per label, so numbered and named
+    backreferences work beside other labels."""
+    df = _one_turn(spark, "abc-abc and abc-abd, PROT1, x-x, k=k")
+    patterns = {"protein": r"PROT\d+", "dup": r"(\w+)-\1", "assign": r"(?<w>\w+)=\k<w>"}
+    rows = sorted((r["input_label"], r["surface"], r["m_pos"]) for r in extract_mentions(df, patterns).collect())
+    assert rows == [
+        ("assign", "k=k", 0),
+        ("dup", "abc-abc", 0),
+        ("dup", "x-x", 1),
+        ("protein", "PROT1", 0),
+    ]
 
-    from biocypher_spark.extract import _compile_gazetteer
 
-    with _pytest.raises(ValueError, match="backreference"):
-        _compile_gazetteer({"protein": r"PROT\d+", "dup": r"(\w+)-\1"})
-    with _pytest.raises(ValueError, match="collides"):
-        _compile_gazetteer({"protein": r"(?P<g0>PROT)\d+"})
+def test_extract_mentions_overlapping_labels(spark):
+    """Labels whose patterns match overlapping spans each report their own
+    matches: a span one label claims is still seen by the others."""
+    df = _one_turn(spark, "PROT12 binds DIS3")
+    patterns = {"protein": r"PROT\d+", "any_id": r"[A-Z]+\d+", "digits": r"\d+"}
+    rows = sorted((r["input_label"], r["m_pos"], r["surface"]) for r in extract_mentions(df, patterns).collect())
+    assert rows == [
+        ("any_id", 0, "PROT12"),
+        ("any_id", 1, "DIS3"),
+        ("digits", 0, "12"),
+        ("digits", 1, "3"),
+        ("protein", 0, "PROT12"),
+    ]
 
 
 def test_canonicalize_ignores_null_surfaces(spark):

@@ -49,12 +49,47 @@ def test_whole_stage_codegen_on_textops(spark):
 
 
 def test_extraction_expr_no_python(spark):
-    from biocypher_spark.extract import extract_mentions_expr
+    from biocypher_spark.extract import extract_mentions
     from biocypher_spark.transcripts import generate_transcripts
 
-    m = extract_mentions_expr(generate_transcripts(spark, 100))
+    m = extract_mentions(generate_transcripts(spark, 100))
     plan = formatted_plan(m)
-    assert "BatchEvalPython" not in plan
+    assert "MapInPandas" not in plan
+    assert "Python" not in plan  # no BatchEvalPython / ArrowEvalPython / MapInArrow node
+
+
+@pytest.fixture
+def arrow_conf_off(spark):
+    """Arrow conversion off, as in a session that never sets it: frames built
+    from Python rows must not depend on it to stay in the JVM."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _rdd_lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_local_frames_start_no_python_worker(spark, schema_path, arrow_conf_off):
+    from biocypher_spark.linking import canonicalize
+    from biocypher_spark.operators.components import connected_components
+
+    surfaces = spark.createDataFrame([("PROT7",), ("prot-7",), ("Protein 7",), ("DIS3",)], "surface string")
+    canon = canonicalize(surfaces)
+    mapping = SparkTranslator(spark, NullOntology(SchemaMapping(schema_path))).mapping_df()
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("d", "e")], "src string, dst string")
+    labels = connected_components(edges)
+    for df in (canon, mapping, labels):
+        assert "PythonRDD" not in _rdd_lineage(df)
+    # the frames still carry the rows computed in Python
+    assert {r["canonical_id"] for r in canon.collect()} == {"prot7", "dis3"}
+    assert mapping.count() > 0
+    assert dict(labels.collect()) == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
 
 
 def test_dedup_single_shuffle(spark, schema_path):

@@ -47,9 +47,9 @@ def test_stream_windowed_counts(spark, stream_dir):
     result = spark.sql("select * from win_counts")
     # batch equivalent for cross-checking totals per surface
     batch = generate_transcripts(spark, 1000)
-    from biocypher_spark.extract import extract_mentions_expr
+    from biocypher_spark.extract import extract_mentions
 
-    batch_mentions = extract_mentions_expr(batch).count()
+    batch_mentions = extract_mentions(batch).count()
     assert batch_mentions > 0
     # sum of emitted window counts can be smaller (open windows withheld in
     # append mode) but never larger
@@ -58,12 +58,12 @@ def test_stream_windowed_counts(spark, stream_dir):
 
 
 def test_stream_mentions_is_expr_kernel_plus_ts(spark):
-    from biocypher_spark.extract import extract_mentions_expr
+    from biocypher_spark.extract import extract_mentions
 
     batch = generate_transcripts(spark, 200)
     got = stream_mentions(batch)
     assert got.columns == ["conv_id", "turn_idx", "ts", "input_label", "surface", "m_pos"]
-    want = extract_mentions_expr(batch)
+    want = extract_mentions(batch)
     assert got.drop("ts").exceptAll(want).count() == 0
     assert want.exceptAll(got.drop("ts")).count() == 0
 
@@ -129,11 +129,11 @@ def test_stream_kg_incremental(spark, stream_dir, tmp_path):
     assert sorted(glob.glob(os.path.join(outdir, "*-part*.csv"))) == parts
 
     # node set matches the identity-canonicalized batch path over the same data
-    from biocypher_spark.extract import extract_mentions_expr, normalize_surface
+    from biocypher_spark.extract import extract_mentions, normalize_surface
     from biocypher_spark.linking import link_mentions
 
     transcripts = spark.read.parquet(stream_dir)
-    mentions = extract_mentions_expr(transcripts)
+    mentions = extract_mentions(transcripts)
     ident = mentions.select(normalize_surface(F.col("surface")).alias("nkey")).distinct().select(
         "nkey", F.col("nkey").alias("canonical_id")
     )

@@ -51,7 +51,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from biocypher_spark.dedup import dedup_nodes
-    from biocypher_spark.extract import extract_mentions_expr
+    from biocypher_spark.extract import extract_mentions
     from biocypher_spark.linking import link_mentions
     from biocypher_spark.mapping import SchemaMapping
     from biocypher_spark.model import nodes_from_tuples
@@ -67,7 +67,7 @@ def main() -> None:
     translated = t.translate_nodes(nodes_in).nodes
     deduped = dedup_nodes(translated).kept
     transcripts = generate_transcripts(spark, 1000)
-    mentions = extract_mentions_expr(transcripts)
+    mentions = extract_mentions(transcripts)
     linked = link_mentions(mentions)
 
     from biocypher_spark.queries import doc_ngram_jaccard, emb_near_dup
