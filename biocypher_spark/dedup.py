@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .model import SEQ
+from .translate import RAN_HIDDEN_COLS, ran_helper_edges
 
 
 @dataclass
@@ -96,16 +97,11 @@ def dedup_rel_as_nodes(ran_nodes: DataFrame, ran_edges: DataFrame, order_cols: S
     """Rel-as-node dedup keyed on the reified node's (label, id) (D3).
 
     The reference skips the whole triplet when the node was seen
-    (``rel_as_node_seen``, /root/reference/biocypher/_deduplicate.py:83-111).
-    When the node frame carries the translator's hidden endpoint columns,
-    the helper edges are REBUILT from the surviving node rows (narrow
-    explode, no extra shuffle) — exactly the first triplet's edges survive
-    even when SEQ ties or a duplicate id arrives with different endpoints.
-    Without them, fall back to a semi-join on (node_id, SEQ), which assumes
-    SEQ is unique per input row.
+    (``rel_as_node_seen``, /root/reference/biocypher/_deduplicate.py:83-111);
+    the helper edges follow the surviving rows (``ran_surviving_edges``), so
+    exactly the first triplet's edges survive even when a duplicate id
+    arrives with different endpoints.
     """
-    from .translate import RAN_HIDDEN_COLS, ran_helper_edges
-
     ranked = _first_wins(ran_nodes, ["node_label", "node_id"], order_cols)
     kept_raw = ranked.filter(F.col("_rn") == 1).drop("_rn")
     dups = (
@@ -117,11 +113,21 @@ def dedup_rel_as_nodes(ran_nodes: DataFrame, ran_edges: DataFrame, order_cols: S
         )
         .distinct()
     )
-    if all(c in ran_nodes.columns for c in RAN_HIDDEN_COLS):
-        kept_edges = ran_helper_edges(kept_raw.select("node_id", *RAN_HIDDEN_COLS, SEQ))
-        kept_nodes = kept_raw.drop(*RAN_HIDDEN_COLS)
-    else:
-        kept_nodes = kept_raw
-        surviving = kept_nodes.select(F.col("node_id").alias("target_id"), F.col(SEQ))
-        kept_edges = ran_edges.join(surviving, ["target_id", SEQ], "left_semi")
+    kept_nodes, kept_edges = ran_surviving_edges(kept_raw, ran_edges)
     return kept_nodes, kept_edges, dups
+
+
+def ran_surviving_edges(kept_nodes: DataFrame, ran_edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The rel-as-node rows that survived a dedup, and their helper edges.
+
+    With the translator's hidden endpoint columns the helper edges are
+    REBUILT from the surviving rows (narrow explode, no shuffle), which is
+    deterministic even when SEQ ties across duplicate triplets; the hidden
+    columns are dropped from the returned rows. Without them, ``ran_edges``
+    is semi-joined on (target_id, SEQ), which assumes SEQ is unique per
+    input row."""
+    if all(c in kept_nodes.columns for c in RAN_HIDDEN_COLS):
+        edges = ran_helper_edges(kept_nodes.select("node_id", *RAN_HIDDEN_COLS, SEQ))
+        return kept_nodes.drop(*RAN_HIDDEN_COLS), edges
+    surviving = kept_nodes.select(F.col("node_id").alias("target_id"), F.col(SEQ))
+    return kept_nodes, ran_edges.join(surviving, ["target_id", SEQ], "left_semi")

@@ -168,8 +168,10 @@ def stream_kg(
     Each micro-batch flows through the SAME batch operators via
     ``foreachBatch``; the batch writer's cross-call machinery supplies the
     incremental semantics — part-file numbering continues across batches and
-    the seen-id anti-join (``track_seen``) dedups node/edge ids across
-    batches. ``foreachBatch`` is AT-LEAST-ONCE, so idempotence is made
+    the writer's one first-wins path (``track_seen``) dedups node/edge ids
+    across batches. Its caches (each call's first rows and seen keys) are
+    filled by the batch's own part and state writes, with no separate count,
+    and released once the batch's state generation is written. ``foreachBatch`` is AT-LEAST-ONCE, so idempotence is made
     durable in ``{output}/_stream_meta``:
 
     - ``committed.json`` (atomic rename) records the last committed batch id
@@ -205,7 +207,7 @@ def stream_kg(
     reify = tuples_reify(translator)
     writer = Neo4jBatchWriter(
         spark, translator, output_directory, strict_mode=False, validate_props=False,
-        ordered_parts=False, track_seen=True, lazy_seen_pins=True,
+        ordered_parts=False, track_seen=True,
     )
 
     def identity_link(mentions: DataFrame) -> DataFrame:
@@ -542,7 +544,7 @@ def stream_kg(
         # plain batch DF inside foreachBatch. Pin the extraction (the
         # per-pattern regexp scans + union over the whole batch) ONCE per
         # micro-batch: the writer path downstream runs several independent
-        # actions (seen-dedup counts, first-row collects, the part write),
+        # actions (the part writes, the state-generation write),
         # each of which would otherwise re-run it (measured 5-7 recomputes
         # per batch; the dominant cost of the stream before pinning)
         mentions = materialize(stream_mentions(batch_df, patterns))

@@ -11,10 +11,13 @@ lowercase booleans, empty field for null) match the reference's golden tests
 
 Spark-first execution: dedup is a keyed shuffle (not driver sets), label
 ancestor strings are precomputed driver-side and inlined as literals, and
-every write call is one partitioned text job per entity kind. Cross-call
-dedup state is an accumulated, persisted id DataFrame, replacing the
-reference's unbounded in-memory sets (/root/reference/biocypher/
-_deduplicate.py:20-29) which cannot exist at 10^12 scale.
+every write call is one partitioned text job per entity kind. Every write
+call dedups through one first-wins path (``_dedup_against_seen``): a window
+over the call's rows, then an anti-join against the keys of earlier calls.
+Cross-call dedup state is an accumulated, persisted key DataFrame, replacing
+the reference's unbounded in-memory sets (/root/reference/biocypher/
+_deduplicate.py:20-29) which cannot exist at 10^12 scale; its caches are
+filled by the jobs that read them, never by a separate count.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..dedup import edge_dedup_key
+from ..dedup import edge_dedup_key, ran_surviving_edges
 from ..materialize import materialize
 from ..model import SEQ
 from ..naming import sentence_to_pascal, to_list
@@ -107,7 +110,6 @@ class Neo4jBatchWriter:
         validate_props: bool = True,
         ordered_parts: bool = True,
         track_seen: bool = True,
-        lazy_seen_pins: bool = False,
     ):
         self.spark = spark
         self.translator = translator
@@ -142,15 +144,6 @@ class Neo4jBatchWriter:
         # track_seen=False skips the cross-call seen-id bookkeeping for
         # single-shot pipelines whose inputs are already unique
         self.track_seen = track_seen
-        # lazy_seen_pins=True defers seen-key evaluation into the first
-        # consuming job (stream_kg's per-batch generation write) instead of
-        # scheduling an eager count per write call — the micro-batch fast
-        # path. Callers opting in MUST release_seen_state_pins() regularly
-        # (the shared batch_first pin holds full post-dedup rows, not just
-        # keys) and feed deterministic (pinned) inputs. The eager default
-        # fixes the seen keys immediately, which is the safe contract for
-        # ad-hoc batch writers over possibly-nondeterministic inputs.
-        self.lazy_seen_pins = lazy_seen_pins
 
         self.node_property_dict: "OrderedDict[str, dict]" = OrderedDict()
         self.edge_property_dict: "OrderedDict[str, dict]" = OrderedDict()
@@ -163,11 +156,14 @@ class Neo4jBatchWriter:
         self.duplicate_nodes: Optional[DataFrame] = None
         self.duplicate_edges: Optional[DataFrame] = None
         self._dup_chain_len: dict[str, int] = {}  # union layers since last collapse
-        # every persist() issued for seen-state bookkeeping, so a caller
+        # every seen-key persist() (one per call), so a caller
         # that repoints the seen frames at durable storage can release the
         # superseded cache entries (Spark's CacheManager never frees them
         # on GC; a long stream would otherwise leak O(batches x total-ids))
         self._seen_pins: list[DataFrame] = []
+        # full-row pins (firsts, batch_first) per seen frame, one list per
+        # write call; see _release_earlier_row_pins
+        self._row_pins: dict[str, list[list[DataFrame]]] = {}
         # per-call STATE DELTAS since the last take_state_deltas(): the new
         # seen keys each _dedup_against_seen call admitted and the
         # duplicate-metrics rows each _note_dups call appended. stream_kg
@@ -312,148 +308,85 @@ class Neo4jBatchWriter:
     # evaluation (a collapse, or get_duplicate_*) scans deleted files.
 
     def _dedup_against_seen(self, df: DataFrame, key_cols: list, seen_attr: str, kind: str, label_col: str) -> DataFrame:
-        """First-wins within the batch + anti-join vs ids from earlier calls;
+        """First-wins within the call + anti-join vs keys of earlier calls;
         replaces the reference's cross-call in-memory seen-sets. Duplicate
-        occurrences are accumulated into metrics frames (D4)."""
+        occurrences are accumulated into metrics frames (D4).
+
+        One window ranks each key group and folds the group's duplicate
+        evidence into its surviving first row as ``_dup_labels`` —
+        ``collect_set(when(_rn > 1, label))``, bounded by the LABEL
+        VOCABULARY, never group size, so a hot key with millions of
+        occurrences stays O(labels) in state (NULL labels on duplicate rows
+        are not representable in the set and are dropped; translated frames
+        always carry labels). Every metrics frame is a projection of
+        ``firsts``:
+
+        - in-call dups: explode ``_dup_labels`` (key-unique, per-key label
+          set => no distinct needed);
+        - cross-call dups: firsts ANTI batch_first keys — the complement of
+          the seen anti-join, with no extra scan of the seen state.
+
+        With ``track_seen``, ``firsts`` and the post-anti-join
+        ``batch_first`` are pinned, so the part write, the new seen keys,
+        the next call's anti-join and the metrics read one window
+        evaluation. Nothing is counted here: each pin is filled by its first
+        consumer's job."""
         w = Window.partitionBy(*key_cols).orderBy(SEQ)
-        if self.lazy_seen_pins and self.track_seen:
-            return self._dedup_lazy(df, key_cols, seen_attr, kind, label_col, w)
-        ranked = df.withColumn("_rn", F.row_number().over(w))
-        # NOTE (negative result): pinning `ranked` pre-filter here (so the
-        # stream's duplicate-metrics delta avoids re-running the window at
-        # state-write time) saved ~0.6s/micro-batch at 32 cores but OOMs
-        # the spark-submit default 1g driver heap at local[8] — the extra
-        # full-row cache (on top of the mentions/edge_tuples/batch_first
-        # pins) doesn't fit; serialized storage didn't fit either. The
-        # window re-run reads the upstream pins, so it's bounded per-batch
-        # work, not a scale hazard.
-        #
-        # The duplicate-metrics side gets its OWN window over a NARROW
-        # (label, key, seq) projection instead of sharing `ranked`: the
-        # dups plan is an independent subtree (only post-filter batch_first
-        # is cached), so every evaluation — notably the stream's per-batch
-        # state-delta write — re-runs the window, and sorting full-width
-        # rows (props maps dominate the row size) cost ~2.5s/micro-batch at
-        # 250k turns where the 3-column sort is ~0.4s. Tie order under
-        # equal SEQ may differ between the two windows, but the metrics
-        # record only the distinct (label, dup_id) pairs of non-first rows,
-        # which is tie-invariant whenever SEQ is unique per row (both tuple
-        # sources stamp a per-row monotonic _seq).
-        narrow_cols = list(dict.fromkeys([label_col, *key_cols, SEQ]))
-        ranked_narrow = df.select(*narrow_cols).withColumn("_rn", F.row_number().over(w))
-        dups = (
-            ranked_narrow.filter(F.col("_rn") > 1)
-            .select(F.lit(kind).alias("kind"), F.col(label_col).alias("label"), F.col(key_cols[-1]).alias("dup_id"))
-            .distinct()
-        )
-        attr = "duplicate_nodes" if kind == "node" else "duplicate_edges"
-        self._note_dups(attr, dups)
-        batch_first = ranked.filter(F.col("_rn") == 1).drop("_rn")
-        if not self.track_seen:
-            return batch_first
-        seen = getattr(self, seen_attr)
-        if seen is not None:
-            cross_dups = (
-                batch_first.join(seen, key_cols, "left_semi")
-                .select(F.lit(kind).alias("kind"), F.col(label_col).alias("label"), F.col(key_cols[-1]).alias("dup_id"))
-                .distinct()
-            )
-            self._note_dups(attr, cross_dups)
-            batch_first = batch_first.join(seen, key_cols, "left_anti")
-        # eager pin: evaluate the seen keys NOW so they are fixed even
-        # when the writer's input plan is nondeterministic (ad-hoc
-        # batch callers), at the cost of one scheduled job per call
-        new_keys = batch_first.select(*key_cols).persist()
-        new_keys.count()
-        # the union needs NO distinct: new_keys is key-unique (row_number==1
-        # keeps one row per key) and disjoint from seen (the anti-join
-        # above), and seen is distinct by this same induction — a distinct
-        # here would re-shuffle the ENTIRE cumulative seen state on every
-        # call, O(all ids ever written) per micro-batch at stream scale
-        merged = new_keys if seen is None else seen.unionByName(new_keys).persist()
-        self._seen_pins.append(new_keys)
-        if merged is not new_keys:
-            self._seen_pins.append(merged)
-        setattr(self, seen_attr, merged)
-        prev_delta = self._seen_deltas.get(seen_attr)
-        self._seen_deltas[seen_attr] = (
-            new_keys if prev_delta is None else prev_delta.unionByName(new_keys)
-        )
-        return batch_first
-
-    def _dedup_lazy(self, df: DataFrame, key_cols: list, seen_attr: str, kind: str, label_col: str, w) -> DataFrame:
-        """Stream fast path (``lazy_seen_pins``): one window evaluation per
-        call, duplicate metrics derived from the CACHED first-rows frame.
-
-        The eager path's duplicate-metrics frames are independent plan
-        subtrees (only post-dedup ``batch_first`` is cached), so the
-        stream's per-batch state-delta write re-ran the whole upstream —
-        mention pins -> triple aggregation -> translate -> window — once
-        per metrics frame (profiled ~2s of a ~8s micro-batch at 250k turns
-        for frames that are usually EMPTY). Here the window additionally
-        folds each key group's duplicate evidence into the surviving first
-        row as ``_dup_labels`` — ``collect_set(when(_rn > 1, label))``,
-        bounded by the LABEL VOCABULARY, never group size, so a hot key
-        with millions of occurrences stays O(labels) in state (NULL labels
-        on duplicate rows are not representable in the set and are
-        dropped; translated frames always carry labels) — and every
-        metrics frame becomes a projection of tiny cached frames:
-
-        - within-batch dups: explode ``_dup_labels`` off the firsts cache
-          (key-unique, per-key label set => no distinct needed);
-        - cross-batch dups: firsts ANTI batch_first keys — the complement
-          of the seen anti-join, read from the two caches with NO extra
-          scan of the cumulative seen generations;
-        - the post-anti-join ``batch_first`` is cached SEPARATELY so the
-          writer's downstream consumers (firsts-collect, part write, seen
-          keys, next call's anti-join, the stream's generation write)
-          share one anti-join evaluation.
-
-        No eager count anywhere: the first consumer's job evaluates each
-        cache. All pins are released by release_seen_state_pins() once the
-        stream repoints the frames at durable generation files."""
-        attr = "duplicate_nodes" if kind == "node" else "duplicate_edges"
-        w_all = Window.partitionBy(*key_cols).orderBy(SEQ).rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
+        w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         ranked = df.withColumn("_rn", F.row_number().over(w))
         ranked = ranked.withColumn(
             "_dup_labels",
             F.collect_set(F.when(F.col("_rn") > 1, F.col(label_col))).over(w_all),
         )
-        firsts = ranked.filter(F.col("_rn") == 1).drop("_rn").persist()
-        self._seen_pins.append(firsts)
-        dups = firsts.filter(F.size("_dup_labels") > 0).select(
-            F.lit(kind).alias("kind"),
-            F.explode("_dup_labels").alias("label"),
-            F.col(key_cols[-1]).alias("dup_id"),
-        )
-        self._note_dups(attr, dups)
+        firsts = ranked.filter(F.col("_rn") == 1).drop("_rn")
+        if self.track_seen:
+            firsts = firsts.persist()
+        attr = "duplicate_nodes" if kind == "node" else "duplicate_edges"
+
+        def metrics(frame: DataFrame, label: Column) -> DataFrame:
+            return frame.select(F.lit(kind).alias("kind"), label.alias("label"), F.col(key_cols[-1]).alias("dup_id"))
+
+        self._note_dups(attr, metrics(firsts.filter(F.size("_dup_labels") > 0), F.explode("_dup_labels")))
+        if not self.track_seen:
+            return firsts.drop("_dup_labels")
+        pins = [firsts]
         seen = getattr(self, seen_attr)
-        if seen is not None:
-            batch_first = firsts.join(seen, key_cols, "left_anti").drop("_dup_labels").persist()
-            self._seen_pins.append(batch_first)
-            cross_dups = firsts.join(
-                batch_first.select(*key_cols), key_cols, "left_anti"
-            ).select(
-                F.lit(kind).alias("kind"),
-                F.col(label_col).alias("label"),
-                F.col(key_cols[-1]).alias("dup_id"),
-            )
-            self._note_dups(attr, cross_dups)
-        else:
+        if seen is None:
             batch_first = firsts.drop("_dup_labels")
+        else:
+            batch_first = firsts.join(seen, key_cols, "left_anti").drop("_dup_labels").persist()
+            pins.append(batch_first)
+            cross = firsts.join(batch_first.select(*key_cols), key_cols, "left_anti")
+            self._note_dups(attr, metrics(cross, F.col(label_col)))
+        self._row_pins.setdefault(seen_attr, []).append(pins)
         new_keys = batch_first.select(*key_cols).persist()
-        merged = new_keys if seen is None else seen.unionByName(new_keys).persist()
         self._seen_pins.append(new_keys)
-        if merged is not new_keys:
-            self._seen_pins.append(merged)
-        setattr(self, seen_attr, merged)
+        # the union needs NO distinct: new_keys is key-unique (row_number==1
+        # keeps one row per key) and disjoint from seen (the anti-join
+        # above), and seen is distinct by this same induction — a distinct
+        # here would re-shuffle the ENTIRE cumulative seen state on every
+        # call, O(all ids ever written) per micro-batch at stream scale.
+        # The union itself is not pinned: Dataset.union flattens nested
+        # unions, so the next call's anti-join reads (and fills) every
+        # call's key cache directly, and a pinned union would be a second
+        # copy of all keys per call.
+        setattr(self, seen_attr, new_keys if seen is None else seen.unionByName(new_keys))
         prev_delta = self._seen_deltas.get(seen_attr)
         self._seen_deltas[seen_attr] = (
             new_keys if prev_delta is None else prev_delta.unionByName(new_keys)
         )
         return batch_first
+
+    def _release_earlier_row_pins(self, *seen_attrs: str) -> None:
+        """Unpersist the full-row pins of all but the latest call on each
+        seen frame. Call after that call wrote its part files: its
+        anti-join has then filled the key caches the earlier rows fed, so
+        only the (lazy) duplicate metrics still reach them."""
+        for seen_attr in seen_attrs:
+            calls = self._row_pins.get(seen_attr, [])
+            while len(calls) > 1:
+                for df in calls.pop(0):
+                    df.unpersist()
 
     def release_seen_state_pins(self) -> None:
         """Unpersist superseded seen-state cache entries.
@@ -465,6 +398,11 @@ class Neo4jBatchWriter:
         for df in self._seen_pins:
             df.unpersist()
         self._seen_pins.clear()
+        for calls in self._row_pins.values():
+            for pins in calls:
+                for df in pins:
+                    df.unpersist()
+        self._row_pins.clear()
         self._seen_deltas.clear()
         self._dup_deltas.clear()
 
@@ -581,6 +519,7 @@ class Neo4jBatchWriter:
             )
 
         self._write_by_label(nodes, "node", line_for)
+        self._release_earlier_row_pins("_seen_nodes")
         self._write_node_headers()
         return True
 
@@ -639,8 +578,6 @@ class Neo4jBatchWriter:
 
         all_edges = plain
         if ran_nodes is not None:
-            from ..translate import RAN_HIDDEN_COLS, ran_helper_edges
-
             ran_nodes = self._dedup_against_seen(
                 ran_nodes.withColumn("_key", F.col("node_id")).withColumn("_klabel", F.col("node_label")),
                 ["_klabel", "_key"],
@@ -648,15 +585,7 @@ class Neo4jBatchWriter:
                 "edge",
                 "node_label",
             ).drop("_key", "_klabel")
-            if all(c in ran_nodes.columns for c in RAN_HIDDEN_COLS):
-                # rebuild helper edges from the SURVIVING node rows (narrow
-                # explode) — deterministic even when SEQ ties across duplicate
-                # triplets, unlike a (target_id, SEQ) semi-join
-                ran_edges = ran_helper_edges(ran_nodes.select("node_id", *RAN_HIDDEN_COLS, SEQ))
-                ran_nodes = ran_nodes.drop(*RAN_HIDDEN_COLS)
-            else:
-                surviving = ran_nodes.select(F.col("node_id").alias("target_id"), SEQ)
-                ran_edges = ran_edges.join(surviving, ["target_id", SEQ], "left_semi")
+            ran_nodes, ran_edges = ran_surviving_edges(ran_nodes, ran_edges)
             if ran_nodes.limit(1).count() > 0:
                 self.write_nodes(ran_nodes)
             all_edges = plain.unionByName(ran_edges) if plain is not None else ran_edges
@@ -684,6 +613,7 @@ class Neo4jBatchWriter:
             )
 
         self._write_by_label(all_edges, "edge", line_for)
+        self._release_earlier_row_pins("_seen_ran", "_seen_edges")
         self._write_edge_headers()
         return True
 

@@ -350,57 +350,104 @@ def test_empty_sanitized_label_gets_placeholder():
     assert pascal_file_label("protein") == "Protein"
 
 
-def test_lazy_dedup_matches_eager(spark, schema_path, tmp_path):
-    """The stream fast path (lazy_seen_pins) must be OBSERVABLY identical
-    to the eager cross-call dedup: same surviving rows in the part files,
-    same within-batch and cross-batch duplicate metrics, same seen state.
-    Two batches: batch 1 carries an in-batch duplicate (p1 twice, second
-    occurrence under a different label); batch 2 replays p1/p2 (cross-batch
-    dups) and introduces p3 with its own in-batch duplicate."""
+def test_first_wins_dedup_across_calls(spark, schema_path, tmp_path):
+    """One writer, two calls: the surviving part-file rows, the in-call and
+    cross-call duplicate metrics, and the seen state. Call 1 carries an
+    in-call duplicate (p1 twice, second occurrence under a different label);
+    call 2 replays p1/p2 (cross-call dups) and introduces p3 with its own
+    in-call duplicate."""
     import glob as _glob
 
     translator = SparkTranslator(spark, NullOntology(SchemaMapping(schema_path)))
-    batch1 = [
+    call1 = [
         ("p1", "protein", {"name": "a", "score": 1.0, "taxon": 1, "genes": []}),
         ("p2", "protein", {"name": "b", "score": 2.0, "taxon": 1, "genes": []}),
         ("p1", "mirna", {"name": "dup", "taxon": 1}),
     ]
-    batch2 = [
+    call2 = [
         ("p1", "protein", {"name": "a2", "score": 3.0, "taxon": 1, "genes": []}),
         ("p3", "protein", {"name": "c", "score": 4.0, "taxon": 1, "genes": []}),
         ("p3", "protein", {"name": "c-dup", "score": 5.0, "taxon": 1, "genes": []}),
         ("p2", "mirna", {"name": "replay", "taxon": 1}),
     ]
+    w = Neo4jBatchWriter(spark, translator, str(tmp_path), ordered_parts=False)
+    for call in (call1, call2):
+        w.write_nodes(translator.translate_nodes(nodes_from_tuples(spark, call)).nodes)
 
-    results = {}
-    for mode, lazy in (("eager", False), ("lazy", True)):
-        outdir = tmp_path / mode
-        outdir.mkdir()
-        w = Neo4jBatchWriter(
-            spark, translator, str(outdir), ordered_parts=False,
-            track_seen=True, lazy_seen_pins=lazy,
-        )
-        for batch in (batch1, batch2):
-            w.write_nodes(translator.translate_nodes(nodes_from_tuples(spark, batch)).nodes)
-        lines = sorted(
-            line
-            for p in _glob.glob(str(outdir / "*-part*.csv"))
-            for line in open(p).read().splitlines()
-        )
-        dups = sorted(
-            (r["kind"], r["label"], r["dup_id"])
-            for r in w.get_duplicate_nodes().distinct().collect()
-        )
-        seen = sorted(r["_key"] for r in w._seen_nodes.collect())
-        results[mode] = (lines, dups, seen)
-
-    assert results["lazy"][0] == results["eager"][0]  # surviving rows
-    assert results["lazy"][1] == results["eager"][1]  # duplicate metrics
-    assert results["lazy"][2] == results["eager"][2] == ["p1", "p2", "p3"]
-    # and the metrics themselves are what the two batches imply
-    assert results["lazy"][1] == [
-        ("node", "microRNA", "p1"),  # batch-1 in-batch dup (second label)
-        ("node", "microRNA", "p2"),  # batch-2 cross-batch replay of p2
-        ("node", "protein", "p1"),   # batch-2 cross-batch replay of p1
-        ("node", "protein", "p3"),   # batch-2 in-batch dup
+    lines = sorted(
+        line
+        for p in _glob.glob(str(tmp_path / "*-part*.csv"))
+        for line in open(p).read().splitlines()
+    )
+    assert lines == [
+        "p1;'a';1.0;1;'';'p1';'uniprot';'Protein'",
+        "p2;'b';2.0;1;'';'p2';'uniprot';'Protein'",
+        "p3;'c';4.0;1;'';'p3';'uniprot';'Protein'",
     ]
+    dups = sorted((r["kind"], r["label"], r["dup_id"]) for r in w.get_duplicate_nodes().collect())
+    assert dups == [
+        ("node", "microRNA", "p1"),  # call-1 in-call dup (second label)
+        ("node", "microRNA", "p2"),  # call-2 cross-call replay of p2
+        ("node", "protein", "p1"),   # call-2 cross-call replay of p1
+        ("node", "protein", "p3"),   # call-2 in-call dup
+    ]
+    assert sorted(r["_key"] for r in w._seen_nodes.collect()) == ["p1", "p2", "p3"]
+
+
+def test_dedup_against_seen_starts_no_job(spark, schema_path, tmp_path):
+    """With seen state from an earlier call, the dedup only builds plans:
+    its caches are filled by the jobs that consume them (the part write)."""
+    from pyspark.sql import functions as F
+
+    translator = SparkTranslator(spark, NullOntology(SchemaMapping(schema_path)))
+    w = Neo4jBatchWriter(spark, translator, str(tmp_path), ordered_parts=False, track_seen=True)
+    w.write_nodes(translator.translate_nodes(nodes_from_tuples(spark, protein_nodes(2))).nodes)
+    assert w._seen_nodes is not None
+    nodes = translator.translate_nodes(nodes_from_tuples(spark, protein_nodes(4))).nodes
+    nodes = nodes.withColumn("_key", F.col("node_id"))
+
+    sc = spark.sparkContext
+    group = "test-dedup-against-seen"
+    sc.setJobGroup(group, "dedup against existing seen state")
+    try:
+        w._dedup_against_seen(nodes, ["_key"], "_seen_nodes", "node", "node_label")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_facade_keeps_row_pins_of_latest_call_only(spark, schema_path, tmp_path, monkeypatch):
+    """The facade never calls release_seen_state_pins(): once a write call
+    has written its part files, no full-row frame persisted by an earlier
+    call may still be cached."""
+    from pyspark.storagelevel import StorageLevel
+
+    from biocypher_spark.core import BioCypherSpark
+
+    frame_cls = type(spark.range(1))
+    persist = frame_cls.persist
+    persisted = []  # (call, frame) for every persisted frame carrying rows
+
+    def spy(self, *args, **kwargs):
+        out = persist(self, *args, **kwargs)
+        if "props" in self.columns:
+            persisted.append((call, out))
+        return out
+
+    monkeypatch.setattr(frame_cls, "persist", spy)
+    bc = BioCypherSpark(spark, output_directory=str(tmp_path), schema_config_path=schema_path)
+    calls = 3
+    for call in range(calls):
+        # each call repeats the previous call's ids and adds new ones
+        bc.write_nodes(protein_nodes(2 * (call + 1)))
+    monkeypatch.undo()
+
+    for earlier in range(calls - 1):
+        frames = [df for c, df in persisted if c == earlier]
+        assert frames, f"call {earlier} persisted no full-row frame"
+        assert all(df.storageLevel == StorageLevel.NONE for df in frames), earlier
+    latest = [df for c, df in persisted if c == calls - 1]
+    assert any(df.storageLevel != StorageLevel.NONE for df in latest)
+    bc.writer.release_seen_state_pins()
+    assert all(df.storageLevel == StorageLevel.NONE for _, df in persisted)
