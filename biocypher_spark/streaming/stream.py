@@ -11,6 +11,8 @@ data, and a stateful per-conversation session aggregator via
 
 from __future__ import annotations
 
+import glob
+import os
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -48,6 +50,38 @@ def _union_generations(spark: SparkSession, paths: list[str]) -> DataFrame:
     for df in dfs[1:]:
         out = out.unionByName(df, allowMissingColumns=True)
     return out
+
+
+# marker file of a FULL (compacted) seen-state generation
+_FULL_MARKER = "_FULL"
+
+
+def _seen_generations(meta_dir: str, prefix: str, upto: int | None = None) -> dict[int, str]:
+    """``{batch id: dir}`` of the ``{prefix}_b{N}`` state generations under
+    ``meta_dir``; with ``upto``, only those with ``N <= upto``."""
+    out = {}
+    for d in glob.glob(os.path.join(meta_dir, f"{prefix}_b*")):
+        try:
+            b = int(os.path.basename(d).rsplit("_b", 1)[1])
+        except ValueError:
+            continue
+        if upto is None or b <= upto:
+            out[b] = d
+    return out
+
+
+def _is_full_gen(d: str) -> bool:
+    return os.path.exists(os.path.join(d, _FULL_MARKER))
+
+
+def _gen_read_set(gens: dict[int, str]) -> list[str]:
+    """Paths whose union is the cumulative state: the newest FULL
+    generation plus every delta after it. A set with no marked member is a
+    single legacy pre-delta snapshot (that engine kept exactly one
+    generation alive) — read it all."""
+    full = [b for b, d in gens.items() if _is_full_gen(d)]
+    start = max(full) if full else min(gens)
+    return [gens[b] for b in sorted(gens) if b >= start]
 
 
 def read_transcript_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 8) -> DataFrame:
@@ -200,8 +234,6 @@ def stream_kg(
     from ..translate import SparkTranslator
     from ..writer.neo4j import Neo4jBatchWriter
 
-    import os
-
     schema_mapping = load_default_schema_mapping()
     translator = SparkTranslator(spark, NullOntology(schema_mapping))
     reify = tuples_reify(translator)
@@ -226,7 +258,6 @@ def stream_kg(
             "canonical_id", F.col("nkey")
         )
 
-    import glob
     import json as _json
     import shutil
 
@@ -240,15 +271,6 @@ def stream_kg(
             with open(committed_path) as fh:
                 return _json.load(fh)
         return {"last_batch": -1, "part_files": []}
-
-    def _seen_generations(prefix: str) -> dict[int, str]:
-        out = {}
-        for d in glob.glob(os.path.join(meta_dir, f"{prefix}_b*")):
-            try:
-                out[int(os.path.basename(d).rsplit("_b", 1)[1])] = d
-            except ValueError:
-                continue
-        return out
 
     # the three seen-id frames (node ids, edge keys, rel-as-node keys) are
     # persisted as ONE combined parquet generation per committed batch with
@@ -273,28 +295,15 @@ def stream_kg(
     # _filebacked/_dup_filebacked (the writer's own frames additionally
     # carry the current batch's pinned layer between persists).
     _COMPACT_EVERY = 16
-    _FULL_MARKER = "_FULL"
     _filebacked: dict[str, Optional[DataFrame]] = {a: None for a in _SEEN_ATTRS}
     _dup_filebacked: dict[str, Optional[DataFrame]] = {}
     _deltas_since_full = [0]
     _have_full_base = [False]  # a combined generation set exists on disk
 
-    def _is_full_gen(d: str) -> bool:
-        return os.path.exists(os.path.join(d, _FULL_MARKER))
-
-    def _gen_read_set(gens: dict[int, str]) -> list[str]:
-        """Paths whose union is the cumulative state: the newest FULL
-        generation plus every delta after it. A set with no marked member
-        is a single legacy pre-delta snapshot (that engine kept exactly one
-        generation alive) — read it all."""
-        full = [b for b, d in gens.items() if _is_full_gen(d)]
-        start = max(full) if full else min(gens)
-        return [gens[b] for b in sorted(gens) if b >= start]
-
     def _restore_seen(last_batch: int) -> None:
         """Load the committed generation set (newest full + later deltas);
         discard generations written by a crashed, uncommitted attempt."""
-        gens = _seen_generations("_seen")
+        gens = _seen_generations(meta_dir, "_seen")
         for b, d in list(gens.items()):
             if b > last_batch:
                 shutil.rmtree(d, ignore_errors=True)
@@ -321,7 +330,7 @@ def stream_kg(
         # combined snapshot (deltas alone would strand the base state in
         # dirs the combined-first restore no longer reads).
         for attr in _SEEN_ATTRS:
-            old = _seen_generations(attr)
+            old = _seen_generations(meta_dir, attr)
             for b, d in list(old.items()):
                 if b > last_batch:
                     shutil.rmtree(d, ignore_errors=True)
@@ -494,7 +503,7 @@ def stream_kg(
         """Delete generations superseded by a committed FULL compaction
         (and legacy per-attr dirs once a combined base exists). Delta
         generations stay until the next compaction absorbs them."""
-        gens = {b: d for b, d in _seen_generations("_seen").items() if b <= batch_id}
+        gens = _seen_generations(meta_dir, "_seen", batch_id)
         if not gens:
             return
         full = [b for b, d in gens.items() if _is_full_gen(d)]
@@ -504,7 +513,7 @@ def stream_kg(
                 if b < cut:
                     shutil.rmtree(d, ignore_errors=True)
         for prefix in _SEEN_ATTRS:
-            for b, d in _seen_generations(prefix).items():
+            for b, d in _seen_generations(meta_dir, prefix).items():
                 if b < batch_id:
                     shutil.rmtree(d, ignore_errors=True)
 
@@ -616,9 +625,7 @@ def read_stream_state(spark: SparkSession, output_directory: str) -> dict:
     finished stream — the generation files are immutable once written and
     the committed marker is atomic. Returns ``{}`` when no batch has
     committed state yet (e.g. an all-empty input)."""
-    import glob
     import json as _json
-    import os
 
     meta_dir = os.path.join(output_directory, "_stream_meta")
     committed_path = os.path.join(meta_dir, "committed.json")
@@ -627,31 +634,13 @@ def read_stream_state(spark: SparkSession, output_directory: str) -> dict:
     with open(committed_path) as fh:
         last_batch = _json.load(fh)["last_batch"]
 
-    def _committed_gens(prefix: str) -> dict[int, str]:
-        out = {}
-        for d in glob.glob(os.path.join(meta_dir, f"{prefix}_b*")):
-            try:
-                b = int(os.path.basename(d).rsplit("_b", 1)[1])
-            except ValueError:
-                continue
-            if b <= last_batch:
-                out[b] = d
-        return out
-
-    gens = _committed_gens("_seen")
+    gens = _seen_generations(meta_dir, "_seen", last_batch)
     if gens:
-        # cumulative state = the newest FULL generation plus every delta
-        # after it (a markerless set is a single legacy full snapshot).
         # Seen keys are disjoint across generations (each delta holds only
         # keys its batch's anti-join admitted); duplicate-metrics rows may
         # recur across delta generations, so they are counted distinct —
         # matching the per-compaction distinct the writer applies on disk.
-        full = [
-            b for b, d in gens.items() if os.path.exists(os.path.join(d, "_FULL"))
-        ]
-        start = max(full) if full else min(gens)
-        paths = [gens[b] for b in sorted(gens) if b >= start]
-        combined = _union_generations(spark, paths)
+        combined = _union_generations(spark, _gen_read_set(gens))
         seen_counts = {
             r["_kind"]: r["n"]
             for r in combined.filter(~F.col("_kind").startswith("_dup::"))
@@ -680,7 +669,7 @@ def read_stream_state(spark: SparkSession, output_directory: str) -> dict:
         ("_seen_edges", "seen_edges"),
         ("_seen_ran", "seen_rel_as_node"),
     ):
-        old = _committed_gens(attr)
+        old = _seen_generations(meta_dir, attr, last_batch)
         out[key] = spark.read.parquet(old[max(old)]).count() if old else 0
     if not any(out.values()):
         return {}

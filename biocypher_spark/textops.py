@@ -363,34 +363,35 @@ def _band_candidates(
     a pair-table exchange that is quadratic in collision density."""
     seeds = bands * rows_per_band
     carry_n = size_ratio_min is not None
-    if est_min_matches > 0:
+    carry_sigs = est_min_matches > 0
+    rows = assigned
+    if carry_sigs:
         # rebuild the band rows WITH the sig columns from the pinned narrow
         # sig table (one extra consumer of the pin, no extra scan of the
         # fat hashed table)
-        wide = sigs.select("doc_id", "_n", *[f"sig{i}" for i in range(seeds)],
+        sig_cols = [f"sig{i}" for i in range(seeds)]
+        rows = sigs.select("doc_id", "_n", *sig_cols,
                            F.explode(_band_struct_array(bands, rows_per_band)).alias("bk")).select(
-            "doc_id", "_n", *[f"sig{i}" for i in range(seeds)],
-            F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
-        a = wide.select("band", "bkey", F.col("doc_id").alias("doc_a"), F.col("_n").alias("_na"),
-                        *[F.col(f"sig{i}").alias(f"_a{i}") for i in range(seeds)])
-        c = wide.select("band", "bkey", F.col("doc_id").alias("doc_b"), F.col("_n").alias("_nb"),
-                        *[F.col(f"sig{i}").alias(f"_b{i}") for i in range(seeds)])
-        pairs = a.join(c, ["band", "bkey"]).filter(F.col("doc_a") < F.col("doc_b"))
-        if carry_n:
-            # cheapest filter first: two int comparisons per collision pair
-            pairs = pairs.filter(F.least("_na", "_nb") / F.greatest("_na", "_nb") >= size_ratio_min)
+            "doc_id", "_n", *sig_cols, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+
+    def side(tag: str) -> DataFrame:
+        # only the columns a prefilter reads ride through the self-join
+        return rows.select(
+            "band", "bkey", F.col("doc_id").alias(f"doc_{tag}"),
+            *([F.col("_n").alias(f"_n{tag}")] if carry_n else []),
+            *([F.col(f"sig{i}").alias(f"_{tag}{i}") for i in range(seeds)] if carry_sigs else []),
+        )
+
+    pairs = side("a").join(side("b"), ["band", "bkey"]).filter(F.col("doc_a") < F.col("doc_b"))
+    if carry_n:
+        # cheapest filter first: two int comparisons per collision pair
+        pairs = pairs.filter(F.least("_na", "_nb") / F.greatest("_na", "_nb") >= size_ratio_min)
+    if carry_sigs:
         agree = sum(
             (F.when(F.col(f"_a{i}") == F.col(f"_b{i}"), 1).otherwise(0) for i in range(seeds)),
             start=F.lit(0),
         )
-        return pairs.filter(agree >= est_min_matches).select("doc_a", "doc_b").distinct()
-    a = assigned.select("band", "bkey", F.col("doc_id").alias("doc_a"), *([F.col("_n").alias("_na")] if carry_n else []))
-    c = assigned.select("band", "bkey", F.col("doc_id").alias("doc_b"), *([F.col("_n").alias("_nb")] if carry_n else []))
-    pairs = a.join(c, ["band", "bkey"]).filter(F.col("doc_a") < F.col("doc_b"))
-    if carry_n:
-        # cheapest filter first: two int comparisons per collision pair
-        ratio = F.least("_na", "_nb") / F.greatest("_na", "_nb")
-        pairs = pairs.filter(ratio >= size_ratio_min)
+        pairs = pairs.filter(agree >= est_min_matches)
     return pairs.select("doc_a", "doc_b").distinct()
 
 
@@ -871,10 +872,10 @@ def _probe_list_flag(probes: list, text_col: str) -> Column:
 
     An OR of ``contains`` terms, not ``exists`` over a literal array: the
     lambda variable made Catalyst's constraint propagation fail
-    (``Union.rewriteConstraints: key not found: text#N``) when the fused
-    :func:`clean_corpus` stage was the first query of a fresh session. The
-    OR tree is balanced: a left-deep chain of ~1000 terms overflows the
-    analyzer's stack."""
+    (``Union.rewriteConstraints: key not found: text#N``) when the
+    :func:`clean_corpus` contamination + quality stage was the first query
+    of a fresh session. The OR tree is balanced: a left-deep chain of
+    ~1000 terms overflows the analyzer's stack."""
     probes = [p for p in probes if p is not None]
     if "" in probes:
         return F.lit(True)
@@ -911,14 +912,17 @@ def _probe_stats(probes: DataFrame, probe_col: str) -> tuple[set, int]:
     return set(row["_ls"]), row["_n"]
 
 
-def _probe_array(probes: DataFrame, probe_col: str) -> DataFrame:
-    """One-row broadcastable frame carrying the whole (small) probe table
-    as an array column ``_ps`` — crossJoin it against a corpus and the
-    contamination flag becomes the ROW-LOCAL expression
-    :func:`_contains_any`, no per-probe row expansion, no hit-id distinct,
-    no join-back. collect_list drops NULL probes (same rule as the check
+def _probe_array(probes: DataFrame, probe_col: str) -> Column:
+    """The whole (small) probe table as ONE array value: a scalar subquery,
+    evaluated once per query. Carried as column ``_ps``, it makes the
+    contamination flag the ROW-LOCAL expression :func:`_contains_any`, with
+    no per-probe row expansion and no join. Not a crossJoin with a one-row
+    array frame: Catalyst then infers the flag, a join condition, as a
+    filter on the probe side, where the text column cannot bind
+    (``INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND`` once a filter on the flag
+    follows). collect_list drops NULL probes (same rule as the check
     path)."""
-    return probes.agg(F.collect_list(F.col(probe_col)).alias("_ps"))
+    return probes.agg(F.collect_list(F.col(probe_col))).scalar()
 
 
 def _contains_any(text_col: str) -> Column:
@@ -934,12 +938,13 @@ def contamination_join(df: DataFrame, probes: DataFrame, text_col: str = "text",
     :func:`contamination_check` — a document is contaminated iff any of its
     length-L substrings equals a probe of length L.
 
-    Scale shape, chosen by probe cardinality (the driver only ever sees a
-    bounded count probe and the distinct probe LENGTHS — a handful of
-    ints, never the probe strings):
+    Scale shape, chosen by probe cardinality (the driver sees the probe
+    count, the distinct probe LENGTHS and, for a table of at most
+    ``_PROBE_SCAN_MAX`` rows, the probes themselves — never a large probe
+    table):
 
-    - ``<= _PROBE_SCAN_MAX`` probes: broadcast the probe table against the
-      corpus and evaluate ``contains`` directly — zero gram
+    - ``<= _PROBE_SCAN_MAX`` probes: the probe table becomes one array
+      value (a scalar subquery) and ``contains`` runs directly — zero gram
       materialization, one linear scan of the bodies per doc x probe.
       ``contains(text, p)`` is exactly "some length-|p| substring equals
       p", so the two strategies are interchangeable; this one wins
@@ -956,59 +961,66 @@ def contamination_join(df: DataFrame, probes: DataFrame, text_col: str = "text",
       planned); beyond that the join shuffles narrow gram rows, never
       bodies.
     """
-    # ONE bounded driver action (or one aggregation pass for genuinely
-    # large tables) decides the strategy — previously three separate
-    # driver jobs (lengths distinct collect + two capped counts)
-    # re-derived the probe table per screen (guide §1.2)
+    scan, flag = _contamination_scan(df, probes, text_col, probe_col)
+    if flag is not None:
+        return scan.select("doc_id", flag.alias("contaminated"))
+    return (
+        df.select("doc_id")
+        .join(scan.withColumn("_hit", F.lit(True)), "doc_id", "left")
+        .select("doc_id", F.coalesce("_hit", F.lit(False)).alias("contaminated"))
+    )
+
+
+def _contamination_scan(
+    df: DataFrame, probes: "DataFrame | list", text_col: str, probe_col: str = "probe"
+) -> tuple[DataFrame, Column | None]:
+    """The one contamination strategy decision, shared by
+    :func:`contamination_join` and :func:`clean_corpus`.
+
+    Returns ``(scan, flag)``. When the screen is ROW-LOCAL — a probe list,
+    an empty-string probe, no non-null probe, or ``<= _PROBE_SCAN_MAX``
+    probe rows — ``flag`` is a boolean column over ``scan`` (``df``, or
+    ``df`` with the probe array column of :func:`_probe_array`). Otherwise
+    ``flag`` is None and ``scan`` is the distinct ``doc_id`` set of the
+    contaminated docs, from the gram semi-join."""
+    if not isinstance(probes, DataFrame):
+        return df, _probe_list_flag(probes, text_col)
+    # ONE aggregation pass over the probe table decides the strategy
     lens, n_probes = _probe_stats(probes, probe_col)
     if 0 in lens:
         # empty-string probe: contains(text, '') is true for every doc —
         # match contamination_check instead of silently dropping the probe
-        return df.select("doc_id", F.lit(True).alias("contaminated"))
+        return df, F.lit(True)
     lengths = sorted(l for l in lens if l)  # NULL probes ignored, like check
     if not lengths:
-        return df.select("doc_id", F.lit(False).alias("contaminated"))
+        return df, F.lit(False)
     if n_probes <= _PROBE_SCAN_MAX:
-        # ROW-LOCAL form: the probe table rides as ONE broadcast array row,
-        # so the flag is computed in place — the earlier doc x probe
-        # crossJoin expansion + hit-id distinct + join-back spent a shuffle
-        # and two extra operators on what one `exists` evaluates per row
-        return (
-            df.select("doc_id", text_col)
-            .crossJoin(F.broadcast(_probe_array(probes, probe_col)))
-            .select("doc_id", _contains_any(text_col).alias("contaminated"))
+        return df.withColumn("_ps", _probe_array(probes, probe_col)), _contains_any(text_col)
+    # grams via explode-positions + substring on the EXPLODED rows:
+    # whole-stage codegen end to end, vs the former per-doc shingle
+    # HOF (transform + substr lambdas run interpreted). Emits per-doc
+    # duplicate grams where the HOF array_distinct'd them — harmless
+    # (hit docs are distinct'd below) and cheaper than the per-doc
+    # distinct (A/B at sf0.1, 5M grams: 1.03 -> 0.90 s warm, identical
+    # output). Bodies still never shuffle: the gram stream feeds only
+    # the (broadcast) semi join.
+    gram_streams = []
+    for n in lengths:
+        pos = F.explode(
+            F.sequence(F.lit(1), F.greatest(F.length(text_col) - (n - 1), F.lit(1)))
+        ).alias("_p")
+        gram_streams.append(
+            df.select("doc_id", text_col, pos)
+            .select("doc_id", F.substr(F.col(text_col), F.col("_p"), F.lit(n)).alias("g"))
+            .filter(F.length("g") == n)
         )
-    else:
-        # grams via explode-positions + substring on the EXPLODED rows:
-        # whole-stage codegen end to end, vs the former per-doc shingle
-        # HOF (transform + substr lambdas run interpreted). Emits per-doc
-        # duplicate grams where the HOF array_distinct'd them — harmless
-        # (hit docs are distinct'd below) and cheaper than the per-doc
-        # distinct (A/B at sf0.1, 5M grams: 1.03 -> 0.90 s warm, identical
-        # output). Bodies still never shuffle: the gram stream feeds only
-        # the (broadcast) semi join.
-        gram_streams = []
-        for n in lengths:
-            pos = F.explode(
-                F.sequence(F.lit(1), F.greatest(F.length(text_col) - (n - 1), F.lit(1)))
-            ).alias("_p")
-            gram_streams.append(
-                df.select("doc_id", text_col, pos)
-                .select("doc_id", F.substr(F.col(text_col), F.col("_p"), F.lit(n)).alias("g"))
-                .filter(F.length("g") == n)
-            )
-        grams = gram_streams[0]
-        for other in gram_streams[1:]:
-            grams = grams.unionByName(other)
-        probe_keys = probes.select(F.col(probe_col).alias("g")).distinct()
-        if n_probes <= _PROBE_BROADCAST_MAX:
-            probe_keys = F.broadcast(probe_keys)
-        hit_docs = grams.join(probe_keys, "g", "semi").select("doc_id").distinct()
-    return (
-        df.select("doc_id")
-        .join(hit_docs.withColumn("_hit", F.lit(True)), "doc_id", "left")
-        .select("doc_id", F.coalesce("_hit", F.lit(False)).alias("contaminated"))
-    )
+    grams = gram_streams[0]
+    for other in gram_streams[1:]:
+        grams = grams.unionByName(other)
+    probe_keys = probes.select(F.col(probe_col).alias("g")).distinct()
+    if n_probes <= _PROBE_BROADCAST_MAX:
+        probe_keys = F.broadcast(probe_keys)
+    return grams.join(probe_keys, "g", "semi").select("doc_id").distinct(), None
 
 
 def exact_dedup_against(df: DataFrame, reference: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1344,8 +1356,9 @@ def clean_corpus(
                                  semantic cluster's representative; catches
                                  paraphrases that share no shingles)
       4. decontamination        (drop docs containing any probe: inline
-                                 ``contains`` scan for a probe list, exact
-                                 shingle semi-join for a probe DataFrame)
+                                 ``contains`` scan for a probe list or a
+                                 small probe DataFrame, exact shingle
+                                 semi-join for a large one)
       5. quality floor          (drop docs with profile score < quality_min)
 
     Returns an AUDIT frame, one row per input doc: ``(doc_id, keep,
@@ -1359,12 +1372,19 @@ def clean_corpus(
 
     Scale shape: every stage reuses the scale-safe single-purpose operator
     (md5-key groupBy, banded LSH + pointer-jumping CC, shingle semi-join,
-    one-pass profile); stage drop-sets are narrow (doc_id, reason) frames,
-    localCheckpointed so each stage's plan anti-joins a materialized id set
-    instead of re-deriving every earlier stage's lineage, and document
-    bodies never shuffle anywhere (each stage scans them linearly at most
-    once). Passing ``near_threshold=None`` / ``probes=None`` /
-    ``quality_min=None`` skips that stage.
+    one-pass profile). Stages 4 and 5 are one projection over one survivor
+    scan when the contamination flag is row-local; a gram semi-join screen
+    runs as its own stage before the quality floor. Stage drop-sets are
+    narrow (doc_id, reason) frames. The exact, semantic and gram-screen
+    drop-sets feed later stages' survivors as well as the final union, so
+    they are pinned (:func:`~biocypher_spark.materialize.materialize`) and
+    later stages anti-join a materialized id set instead of re-deriving
+    their lineage. The near-dup drops derive from the already pinned or
+    driver-built components, and the contamination + quality drops feed
+    only the final union: neither is pinned. Document bodies never shuffle
+    anywhere (each stage scans them linearly at most once). Passing
+    ``near_threshold=None`` / ``probes=None`` / ``quality_min=None`` skips
+    that stage.
     """
     if near_mode not in ("pairs", "star"):
         raise ValueError(f"near_mode must be 'pairs' or 'star', got {near_mode!r}")
@@ -1401,11 +1421,11 @@ def clean_corpus(
         edge_fn = minhash_star_near_dup_edges if near_mode == "star" else minhash_banded_pairs
         pairs = edge_fn(survivors(), text_col=text_col, threshold=near_threshold)
         comp = connected_components(pairs.select("doc_a", "doc_b"), src="doc_a", dst="doc_b")
-        near_drops = materialize(
+        # comp is already a driver-built or pinned frame: no pin here
+        drops.append(
             comp.filter(F.col("node") != F.col("comp"))
             .select(F.col("node").alias("doc_id"), F.lit("near_dup").alias("drop_reason"))
         )
-        drops.append(near_drops)
 
     if embeddings is not None:
         from .similarity import semantic_dedup
@@ -1423,103 +1443,38 @@ def clean_corpus(
         )
         drops.append(sem_drops)
 
-    fused_cq = probes is not None and quality_min is not None
-    if fused_cq:
-        # FUSED contamination+quality: both stages read the same survivor
-        # set, and the sequential form's only cross-effect is precedence
-        # (a doc that is both contaminated and low-quality reports
-        # contaminated, because the quality stage never saw it). When the
-        # contamination flag is expressible ROW-LOCALLY — a probe list, or
-        # a probe table small enough to ride as one broadcast array — both
-        # flags and the precedence resolve in a SINGLE projection over ONE
-        # survivor scan (the union form scanned the survivor text twice,
-        # once per flag; guide §1.2). Only a genuinely large probe table
-        # (gram semi-join) keeps the two-branch union + final precedence
-        # aggregate. Either way: one materialize barrier, identical audit
-        # frames (verified by the unchanged hygiene outcomes + pytest).
-        surv = survivors()
-        cont_expr = None
-        fused_scan = None
-        if isinstance(probes, DataFrame):
-            lens, n_probes = _probe_stats(probes, "probe")
-            if 0 in lens:
-                cont_expr, fused_scan = F.lit(True), surv
-            elif not any(l for l in lens if l):
-                cont_expr, fused_scan = F.lit(False), surv
-            elif n_probes <= _PROBE_SCAN_MAX:
-                fused_scan = surv.crossJoin(F.broadcast(_probe_array(probes, "probe")))
-                cont_expr = _contains_any(text_col)
-        else:
-            cont_expr, fused_scan = _probe_list_flag(probes, text_col), surv
-        if cont_expr is not None:
-            toks_q = tokens(F.col(text_col))
-            _, score = _quality_exprs(toks_q, F.col(text_col))
+    if probes is not None or quality_min is not None:
+        # 4 + 5. decontamination + quality floor read the same survivors, so
+        # one projection over one scan computes both flags; a doc that is
+        # both reports contaminated (first match in pipeline order)
+        scan, cont = survivors(), F.lit(False)
+        if probes is not None:
+            scan, cont = _contamination_scan(scan, probes, text_col)
+        if cont is None:
+            # gram semi-join: the flag is a join, not a row-local column, so
+            # decontamination stays its own stage and the quality floor
+            # runs over its survivors
+            drops.append(materialize(scan.select("doc_id", F.lit("contaminated").alias("drop_reason"))))
+            scan, cont = survivors(), F.lit(False)
+        low_q = F.lit(False)
+        if quality_min is not None:
+            # NULL score = null text = no content: below any quality floor
+            # (a bare `<` comparison would silently keep such docs)
+            _, score = _quality_exprs(tokens(F.col(text_col)), F.col(text_col))
             score = F.round(score, 6)
             low_q = (score < quality_min) | score.isNull()
-            cq_drops = materialize(
-                fused_scan.select("doc_id", cont_expr.alias("_c"), low_q.alias("_q"))
-                .filter(F.col("_c") | F.col("_q"))
-                .select(
-                    "doc_id",
-                    F.when(F.col("_c"), F.lit("contaminated"))
-                    .otherwise(F.lit("low_quality"))
-                    .alias("drop_reason"),
-                )
+        drops.append(
+            scan.select("doc_id", cont.alias("_c"), low_q.alias("_q"))
+            .filter(F.col("_c") | F.col("_q"))
+            .select(
+                "doc_id",
+                F.when(F.col("_c"), F.lit("contaminated")).otherwise(F.lit("low_quality")).alias("drop_reason"),
             )
-            fused_cq = False  # single reason per doc: no precedence agg needed
-        else:
-            flagged = contamination_join(surv, probes, text_col=text_col)
-            cq_drops = materialize(
-                flagged.filter("contaminated")
-                .select("doc_id", F.lit("contaminated").alias("drop_reason"))
-                .unionByName(
-                    text_profile(surv, text_col=text_col)
-                    .filter((F.col("score") < quality_min) | F.col("score").isNull())
-                    .select("doc_id", F.lit("low_quality").alias("drop_reason"))
-                )
-            )
-        drops.append(cq_drops)
-    elif probes is not None:
-        surv = survivors()
-        flagged = (
-            contamination_join(surv, probes, text_col=text_col)
-            if isinstance(probes, DataFrame)
-            else contamination_check(surv, probes, text_col=text_col)
         )
-        cont_drops = materialize(
-            flagged.filter("contaminated")
-            .select("doc_id", F.lit("contaminated").alias("drop_reason"))
-        )
-        drops.append(cont_drops)
-    elif quality_min is not None:
-        # NULL score = null text = no content: below any quality floor
-        # (a bare `<` comparison would silently keep such docs)
-        qual_drops = materialize(
-            text_profile(survivors(), text_col=text_col)
-            .filter((F.col("score") < quality_min) | F.col("score").isNull())
-            .select("doc_id", F.lit("low_quality").alias("drop_reason"))
-        )
-        drops.append(qual_drops)
 
     all_drops = drops[0]
     for d in drops[1:]:
         all_drops = all_drops.unionByName(d)
-    if fused_cq:
-        # only the fused block can emit two reasons for one doc; keep the
-        # pipeline-order winner (contaminated). The agg shuffles only the
-        # narrow drop rows, never the corpus.
-        prec = (
-            F.when(F.col("drop_reason") == "exact_dup", 0)
-            .when(F.col("drop_reason") == "near_dup", 1)
-            .when(F.col("drop_reason") == "semantic_dup", 2)
-            .when(F.col("drop_reason") == "contaminated", 3)
-            .otherwise(4)
-        )
-        all_drops = (
-            all_drops.groupBy("doc_id")
-            .agg(F.min(F.struct(prec.alias("_p"), F.col("drop_reason").alias("drop_reason"))).alias("_s"))
-            .select("doc_id", F.col("_s.drop_reason").alias("drop_reason"))
-        )
     return ids.join(all_drops, "doc_id", "left").select(
         "doc_id", F.col("drop_reason").isNull().alias("keep"), "drop_reason"
     )

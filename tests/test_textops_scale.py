@@ -402,6 +402,9 @@ def test_contamination_join_equals_literal_path(spark):
     joined = {r["doc_id"]: r["contaminated"] for r in contamination_join(docs, probes_df).collect()}
     assert literal == joined
     assert literal == {1: True, 2: False, 3: True, 4: True, 5: True}
+    # a filter on the flag plans and binds (no join for Catalyst to push it into)
+    hits = {r["doc_id"] for r in contamination_join(docs, probes_df).filter("contaminated").collect()}
+    assert hits == {1, 3, 4, 5}
     # empty probe table: nothing is contaminated, no explode runs
     empty = spark.createDataFrame([], "probe string")
     out = {r["doc_id"]: r["contaminated"] for r in contamination_join(docs, empty).collect()}
@@ -649,6 +652,77 @@ def test_clean_corpus_stages_optional(hygiene_docs):
     assert got == {2: "exact_dup"}
 
 
+@pytest.fixture(scope="module")
+def cq_docs(spark):
+    rows = [
+        (1, "a clean and perfectly ordinary document about spark shuffle partitioning strategies"),
+        (2, "a clean and perfectly ordinary document about spark shuffle partitioning strategies"),
+        (3, "this document quotes the secret benchmark answer verbatim for testing purposes"),
+        (4, "!!! secret benchmark answer ???"),  # contaminated AND low quality
+        (5, "!!! ??? ,,, ;;; ..."),  # low quality
+        (6, None),  # null text: never contaminated, below any quality floor
+        (7, "another clean and unique document describing broadcast joins in catalyst"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string").cache()
+
+
+_PROBE = "secret benchmark answer"
+# non-matching padding of two lengths: > _PROBE_SCAN_MAX rows force the
+# gram semi-join
+_PAD = [f"zq{i:02d}" for i in range(40)] + [f"qzzq{i:03d}" for i in range(40)]
+_CQ_EXPECTED = {
+    # doc 4 is contaminated and low quality: first match reports contaminated
+    "probes+quality": {1: None, 2: "exact_dup", 3: "contaminated", 4: "contaminated",
+                       5: "low_quality", 6: "low_quality", 7: None},
+    "probes": {1: None, 2: "exact_dup", 3: "contaminated", 4: "contaminated",
+               5: None, 6: None, 7: None},
+    "quality": {1: None, 2: "exact_dup", 3: None, 4: "low_quality",
+                5: "low_quality", 6: "low_quality", 7: None},
+}
+# an empty-string probe marks every doc contaminated, null text included
+_EMPTY_PROBE_EXPECTED = {i: "exact_dup" if i == 2 else "contaminated" for i in range(1, 8)}
+
+
+@pytest.mark.parametrize(
+    "form,config",
+    [(form, config) for form in ("list", "small_df", "gram_df", "empty_string_df")
+     for config in ("probes+quality", "probes")] + [(None, "quality")],
+)
+def test_clean_corpus_same_audit_for_every_probe_form(spark, cq_docs, monkeypatch, form, config):
+    """Every probe form gives the same audit frame, and the probe table's
+    strategy is decided by one _probe_stats pass."""
+    from biocypher_spark import textops
+
+    probe_rows = {
+        "list": [_PROBE],
+        "small_df": [_PROBE],
+        "gram_df": [_PROBE] + _PAD,
+        "empty_string_df": ["", "zzz"],
+        None: None,
+    }[form]
+    probes = probe_rows
+    if form is not None and form.endswith("_df"):
+        probes = spark.createDataFrame([(p,) for p in probe_rows], "probe string")
+    stats_calls = []
+    real_stats = textops._probe_stats
+    monkeypatch.setattr(
+        textops, "_probe_stats", lambda *a, **k: stats_calls.append(1) or real_stats(*a, **k)
+    )
+    flags = textops.clean_corpus(
+        cq_docs,
+        near_threshold=None,
+        probes=probes if config != "quality" else None,
+        quality_min=0.05 if config != "probes" else None,
+    )
+    rows = flags.collect()
+    expected = _EMPTY_PROBE_EXPECTED if form == "empty_string_df" else _CQ_EXPECTED[config]
+    assert len(rows) == len(expected)
+    assert {r["doc_id"]: (r["keep"], r["drop_reason"]) for r in rows} == {
+        d: (reason is None, reason) for d, reason in expected.items()
+    }
+    assert len(stats_calls) <= 1
+
+
 def test_star_edges_linear_on_dup_clusters(spark):
     # a cluster of k mutual dups: all-pairs emits k(k-1)/2, star emits k-1
     from biocypher_spark.textops import minhash_band_candidates, minhash_band_star_edges
@@ -678,15 +752,23 @@ def test_star_clustering_matches_pairs_on_near_dup_cluster(spark, docs):
     )
 
 
-def test_clean_corpus_star_mode(hygiene_docs):
-    from biocypher_spark.textops import clean_corpus
+def test_clean_corpus_star_mode(hygiene_docs, monkeypatch):
+    """The perfbench-shaped call also pins exactly 4 frames: the exact
+    drops, the star path's hashed-set and signature tables, and the star
+    candidates. The near-dup drops (read off the components frame) and the
+    last stage's drops (one consumer) are not pinned."""
+    from biocypher_spark import textops
 
-    got = {r["doc_id"]: r["drop_reason"] for r in clean_corpus(
+    pinned = []
+    real = textops.materialize
+    monkeypatch.setattr(textops, "materialize", lambda df: pinned.append(df) or real(df))
+    got = {r["doc_id"]: r["drop_reason"] for r in textops.clean_corpus(
         hygiene_docs, near_threshold=0.8, probes=["secret benchmark answer"],
         quality_min=0.05, near_mode="star",
     ).collect()}
     assert got == {1: None, 2: "exact_dup", 3: "near_dup", 4: None,
                    5: "contaminated", 6: "low_quality", 7: None}
+    assert len(pinned) == 4
 
 
 def test_clean_corpus_empty_and_null_text(spark):
