@@ -248,7 +248,7 @@ def run_hygiene_job(spark, input_path: str | None = None) -> dict:
     if input_path:
         docs = spark.read.parquet(input_path)
     else:
-        docs = _t(spark, SF_DIR, "documents", materialize=True)
+        docs = _t(spark, SF_DIR, "documents", mode="pin")
     n_docs = docs.count()
     # probes drawn from the corpus vocabulary so the shingle semi-join does
     # real decontamination work (and some docs actually drop)

@@ -39,12 +39,6 @@ DEFAULTS: dict = {
         "delimiter": "\t",
         "quote_character": '"',
     },
-    "spark": {
-        "shuffle_partitions": None,  # default: 2x cores
-        "max_partition_bytes": "32m",
-        "adaptive": True,
-        "skew_join": True,
-    },
 }
 
 

@@ -37,19 +37,21 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, materialize: bool = False, rebalance: bool = True
-) -> DataFrame:
-    """Read a testdata table; small single-split inputs are rebalanced to
-    the cluster width (see below). ``materialize=True`` additionally
-    localCheckpoints the rebalanced SMALL input — for queries that consume
+_READ_MODES = ("plain", "rebalance", "pin")
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str, mode: str = "rebalance") -> DataFrame:
+    """Read a testdata table. ``mode`` is one of ``_READ_MODES``:
+    ``"rebalance"`` (default) rebalances small single-split inputs to the
+    cluster width (see below); ``"pin"`` additionally localCheckpoints the
+    rebalanced SMALL input — for queries that consume
     the source in several plan branches (candidate generation + both
     verify sides), where the lazy rebalance would otherwise re-execute per
     branch (measured 2.4x on doc_ngram_jaccard at sf0.1). At scale the
     rebalance path never triggers, so nothing is ever materialized there —
     multi-branch scans of a large parquet table are the normal plan.
 
-    ``rebalance=False`` (round 6): queries whose per-row work is trivial —
+    ``"plain"`` (round 6): queries whose per-row work is trivial —
     relational scans feeding an aggregate, a window, or a broadcast join —
     opt out of the guard entirely. For them the round-robin exchange (plus
     its mandatory sort-before-repartition pass) costs more than the
@@ -59,10 +61,10 @@ def _t(
     the rows anyway. CPU-heavy per-row paths (minhash/simhash/shingles,
     embedding folds, Arrow Python stages) keep the default: for them a
     single-split scan serializes the dominant cost on one core."""
-    if materialize and not rebalance:
-        raise ValueError("materialize=True pins the rebalanced input; it needs rebalance=True")
+    if mode not in _READ_MODES:
+        raise ValueError(f"unknown read mode {mode!r}; expected one of {_READ_MODES}")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if not rebalance:
+    if mode == "plain":
         return df
     # a small single-split file would run CPU-heavy per-row work (shingle
     # minhash, simhash votes, embedding math) on ONE core; rebalance rows to
@@ -88,7 +90,7 @@ def _t(
         return df
     if -(-total // max_bytes) < target:
         out = df.repartition(target)
-        return _materialize(out) if materialize else out
+        return _materialize(out) if mode == "pin" else out
     return df
 
 
@@ -166,7 +168,7 @@ def _part_label_map(spark, onto: Ontology) -> dict[str, str]:
 
 
 def _staged_part_nodes(spark, sf_dir) -> DataFrame:
-    part = _t(spark, sf_dir, "part", rebalance=False)
+    part = _t(spark, sf_dir, "part", mode="plain")
     return part.select(
         F.concat(F.lit("p"), F.col("p_partkey").cast("string")).alias("id"),
         F.col("p_type").alias("input_label"),
@@ -222,7 +224,7 @@ def kg_dedup_nodes(spark, sf_dir):
     """D1: global first-wins node dedup keyed on node_id."""
     from .dedup import dedup_nodes
 
-    li = _t(spark, sf_dir, "lineitem", rebalance=False)
+    li = _t(spark, sf_dir, "lineitem", mode="plain")
     staged = li.select(
         F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("node_id"),
         F.lit("part").alias("node_label"),
@@ -243,7 +245,7 @@ def kg_dedup_nodes(spark, sf_dir):
 )
 def kg_dup_metrics(spark, sf_dir):
     """D4: duplicate-occurrence metrics."""
-    li = _t(spark, sf_dir, "lineitem", rebalance=False)
+    li = _t(spark, sf_dir, "lineitem", mode="plain")
     node_id = F.concat(F.lit("p"), F.col("l_partkey").cast("string"))
     return (
         li.groupBy(node_id.alias("dup_id"))
@@ -265,7 +267,7 @@ def kg_dup_metrics(spark, sf_dir):
 )
 def kg_rel_as_node(spark, sf_dir):
     """T2: rel-as-node 1->3 explode with synthesized node ids."""
-    orders = _t(spark, sf_dir, "orders", rebalance=False)
+    orders = _t(spark, sf_dir, "orders", mode="plain")
     staged = orders.select(
         F.lit(None).cast("string").alias("id"),
         F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
@@ -289,15 +291,15 @@ def kg_rel_as_node(spark, sf_dir):
 def kg_statistics(spark, sf_dir):
     """D7: per-type node counts through the graph layer."""
     nodes = (
-        _t(spark, sf_dir, "part", rebalance=False)
+        _t(spark, sf_dir, "part", mode="plain")
         .select(F.concat(F.lit("p"), "p_partkey").alias("node_id"), F.lit("part").alias("node_label"))
         .unionByName(
-            _t(spark, sf_dir, "customer", rebalance=False).select(
+            _t(spark, sf_dir, "customer", mode="plain").select(
                 F.concat(F.lit("c"), "c_custkey").alias("node_id"), F.lit("customer").alias("node_label")
             )
         )
         .unionByName(
-            _t(spark, sf_dir, "supplier", rebalance=False).select(
+            _t(spark, sf_dir, "supplier", mode="plain").select(
                 F.concat(F.lit("s"), "s_suppkey").alias("node_id"), F.lit("supplier").alias("node_label")
             )
         )
@@ -317,7 +319,7 @@ def kg_statistics(spark, sf_dir):
 )
 def kg_topk_types(spark, sf_dir):
     """D8: top-k type summary with deterministic tie-break."""
-    li = _t(spark, sf_dir, "lineitem", rebalance=False)
+    li = _t(spark, sf_dir, "lineitem", mode="plain")
     nodes = li.select(
         F.concat("l_orderkey", F.lit("_"), "l_linenumber").alias("node_id"),
         F.concat("l_returnflag", "l_linestatus").alias("node_label"),
@@ -336,7 +338,7 @@ def kg_topk_types(spark, sf_dir):
 )
 def kg_graph_neighbors(spark, sf_dir):
     """G2: neighbor lookup via edge join."""
-    cust = _t(spark, sf_dir, "customer", rebalance=False)
+    cust = _t(spark, sf_dir, "customer", mode="plain")
     edges = cust.select(
         F.concat(F.lit("c"), "c_custkey").alias("source_id"),
         F.concat(F.lit("n"), "c_nationkey").alias("target_id"),
@@ -358,8 +360,8 @@ def kg_graph_neighbors(spark, sf_dir):
 )
 def kg_graph_paths(spark, sf_dir):
     """G3: bounded path enumeration from 'r0' (region->nation->customer)."""
-    nation = _t(spark, sf_dir, "nation", rebalance=False)
-    cust = _t(spark, sf_dir, "customer", rebalance=False)
+    nation = _t(spark, sf_dir, "nation", mode="plain")
+    cust = _t(spark, sf_dir, "customer", mode="plain")
     edges = nation.select(
         F.concat(F.lit("r"), "n_regionkey").alias("source_id"),
         F.concat(F.lit("n"), "n_nationkey").alias("target_id"),
@@ -389,8 +391,8 @@ def kg_graph_paths(spark, sf_dir):
 )
 def kg_connected_components(spark, sf_dir):
     """G4: iterative-join connected components on the geo forest."""
-    nation = _t(spark, sf_dir, "nation", rebalance=False)
-    cust = _t(spark, sf_dir, "customer", rebalance=False)
+    nation = _t(spark, sf_dir, "nation", mode="plain")
+    cust = _t(spark, sf_dir, "customer", mode="plain")
     edges = nation.select(
         F.concat(F.lit("n"), "n_nationkey").alias("src"), F.concat(F.lit("r"), "n_regionkey").alias("dst")
     ).unionByName(
@@ -417,7 +419,7 @@ def kg_label_closure(spark, sf_dir):
         parent_map={"economy part": "part", "standard part": "part", "part": "named thing"},
     )
     amap = _part_label_map(spark, onto)
-    part = _t(spark, sf_dir, "part", rebalance=False).filter(F.col("p_type").isin(*amap)).select("p_type").distinct()
+    part = _t(spark, sf_dir, "part", mode="plain").filter(F.col("p_type").isin(*amap)).select("p_type").distinct()
     expr = F.when(F.col("p_type") == "ECONOMY", F.lit(amap["ECONOMY"])).otherwise(F.lit(amap["STANDARD"]))
     return part.select(F.col("p_type").alias("input_label"), expr.alias("label_string"))
 
@@ -448,7 +450,7 @@ def kg_ontology_file(spark, sf_dir):
         onto = Ontology(_part_schema_mapping(), hierarchy_file=str(p), root="named_thing")
     amap = _part_label_map(spark, onto)
     depth = {t: len(onto.get_ancestors(t.lower() + " part")) for t in amap}
-    part = _t(spark, sf_dir, "part", rebalance=False).filter(F.col("p_type").isin(*amap)).select("p_type").distinct()
+    part = _t(spark, sf_dir, "part", mode="plain").filter(F.col("p_type").isin(*amap)).select("p_type").distinct()
     lbl = F.when(F.col("p_type") == "ECONOMY", F.lit(amap["ECONOMY"])).otherwise(F.lit(amap["STANDARD"]))
     dep = F.when(F.col("p_type") == "ECONOMY", F.lit(depth["ECONOMY"])).otherwise(F.lit(depth["STANDARD"]))
     return part.select(
@@ -470,7 +472,7 @@ def kg_ontology_file(spark, sf_dir):
 )
 def kg_canonicalize_blocking(spark, sf_dir):
     """Linking stage 1: normalized-key blocking -> canonical representative."""
-    part = _t(spark, sf_dir, "part", rebalance=False)
+    part = _t(spark, sf_dir, "part", mode="plain")
     w = Window.partitionBy(normalize_surface(F.col("p_name")))
     return part.select(
         "p_partkey",
@@ -765,7 +767,7 @@ def _ngram_jaccard_oracle() -> str:
 @register("doc_ngram_jaccard", _ngram_jaccard_oracle())
 def doc_ngram_jaccard(spark, sf_dir):
     return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents", materialize=True),
+        _t(spark, sf_dir, "documents", mode="pin"),
         threshold=_NGRAM_T,
         bands=_NGRAM_BANDS,
         rows_per_band=_NGRAM_ROWS,
@@ -791,7 +793,7 @@ def _minhash_banded_oracle() -> str:
 
 @register("doc_minhash_banded", _minhash_banded_oracle())
 def doc_minhash_banded(spark, sf_dir):
-    pairs = minhash_banded_pairs(_t(spark, sf_dir, "documents", materialize=True), threshold=0.5)
+    pairs = minhash_banded_pairs(_t(spark, sf_dir, "documents", mode="pin"), threshold=0.5)
     return pairs.orderBy(F.desc("jac"), F.asc("doc_a"), F.asc("doc_b")).limit(1000)
 
 
@@ -1075,7 +1077,7 @@ def emb_ivf_trained_topk(spark, sf_dir):
     to emb_ivf_topk with the trained centroids inlined as literals."""
     from .similarity import ivf_topk, train_ivf_centroids
 
-    emb = _t(spark, sf_dir, "embeddings", materialize=True)
+    emb = _t(spark, sf_dir, "embeddings", mode="pin")
     cents = train_ivf_centroids(emb, n_centroids=_IVF_K, iterations=2, round_decimals=6)
     return ivf_topk(emb, query_vec_id=0, k=10, n_centroids=_IVF_K, nprobe=_IVF_NPROBE, cents=cents)
 
@@ -1194,7 +1196,7 @@ def emb_near_dup(spark, sf_dir):
     reference match per flagged vector)."""
     from .similarity import _multi_table_buckets, embedding_dedup_against
 
-    emb = _t(spark, sf_dir, "embeddings", materialize=True)
+    emb = _t(spark, sf_dir, "embeddings", mode="pin")
     # both arms consume the SAME multi-table bucket assignment — the
     # hyperplane projections (the dominant per-row cost) run once, pinned;
     # the 'against' arms are parity filters over the pinned narrow table
@@ -1287,7 +1289,7 @@ def emb_semantic_dedup(spark, sf_dir):
     emb_ivf_topk / emb_ivf_recall / emb_ivf_trained_topk."""
     from .similarity import semantic_dedup
 
-    emb = _t(spark, sf_dir, "embeddings", materialize=True)
+    emb = _t(spark, sf_dir, "embeddings", mode="pin")
     return semantic_dedup(
         emb,
         threshold=_ND_THRESHOLD,
@@ -1405,7 +1407,7 @@ def media_frame_sample(spark, sf_dir):
     """,
 )
 def q1_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem", rebalance=False)
+    li = _t(spark, sf_dir, "lineitem", mode="plain")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -1431,9 +1433,9 @@ def q1_pricing_summary(spark, sf_dir):
     """,
 )
 def q3_top_orders(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer", rebalance=False).filter(F.col("c_mktsegment") == "FURNITURE")
-    o = _t(spark, sf_dir, "orders", rebalance=False)
-    li = _t(spark, sf_dir, "lineitem", rebalance=False)
+    c = _t(spark, sf_dir, "customer", mode="plain").filter(F.col("c_mktsegment") == "FURNITURE")
+    o = _t(spark, sf_dir, "orders", mode="plain")
+    li = _t(spark, sf_dir, "lineitem", mode="plain")
     rev = F.col("l_extendedprice").cast("decimal(18,2)") * (F.lit(1) - F.col("l_discount").cast("decimal(18,2)"))
     return (
         F.broadcast(c)
@@ -1458,7 +1460,7 @@ def q3_top_orders(spark, sf_dir):
     """,
 )
 def events_windowed(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events", rebalance=False)
+    ev = _t(spark, sf_dir, "events", mode="plain")
     win = F.floor(_epoch(F.col("ts")) / 600).cast("long")
     return ev.groupBy("event_type", win.alias("win")).agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -1480,7 +1482,7 @@ def events_windowed(spark, sf_dir):
     """,
 )
 def events_sessionize(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events", rebalance=False)
+    ev = _t(spark, sf_dir, "events", mode="plain")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag(_epoch(F.col("ts"))).over(w)
     new_session = F.when(prev.isNull() | (_epoch(F.col("ts")) - prev > 1800), 1).otherwise(0)
@@ -1506,7 +1508,7 @@ def kg_edge_dedup(spark, sf_dir):
     """D2: per-(type, src_tgt-key) edge dedup through the dedup operator."""
     from .dedup import dedup_edges
 
-    li = _t(spark, sf_dir, "lineitem", rebalance=False)
+    li = _t(spark, sf_dir, "lineitem", mode="plain")
     staged = li.select(
         F.lit(None).cast("string").alias("relationship_id"),
         F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("source_id"),
@@ -1674,7 +1676,7 @@ def doc_neardup_clusters(spark, sf_dir):
     from .operators.components import connected_components
     from .textops import minhash_banded_pairs
 
-    docs = _t(spark, sf_dir, "documents", materialize=True).filter(F.col("doc_id") % _CLUSTER_MOD == 0)
+    docs = _t(spark, sf_dir, "documents", mode="pin").filter(F.col("doc_id") % _CLUSTER_MOD == 0)
     pairs = minhash_banded_pairs(docs, threshold=_CLUSTER_T)
     comp = connected_components(pairs.select("doc_a", "doc_b"), src="doc_a", dst="doc_b")
     return (
@@ -1785,7 +1787,7 @@ def doc_dedup_against_near(spark, sf_dir):
     Jaccard verification."""
     from .textops import near_dedup_against
 
-    docs = _t(spark, sf_dir, "documents", materialize=True)
+    docs = _t(spark, sf_dir, "documents", mode="pin")
     return near_dedup_against(
         docs.filter(F.col("doc_id") % _XC_MOD != 0),
         docs.filter(F.col("doc_id") % _XC_MOD == 0),
@@ -1875,7 +1877,7 @@ def doc_contamination(spark, sf_dir):
     semantics, document bodies never shuffle)."""
     from .textops import contamination_check, contamination_join
 
-    docs = _t(spark, sf_dir, "documents", materialize=True)
+    docs = _t(spark, sf_dir, "documents", mode="pin")
     inline = contamination_check(docs, _CONTAMINATION_PROBES).select(
         F.lit("inline").alias("mode"), "doc_id", "contaminated"
     )
@@ -1940,7 +1942,7 @@ def _kg_hyperedges(spark, sf_dir):
     """G1 hyperedges: per-order hyperedge over its distinct parts, expanded
     back through SparkGraph.hyperedge_membership (reference HyperEdge API,
     _graph.py:99-124, 415-491)."""
-    li = _t(spark, sf_dir, "lineitem", rebalance=False)
+    li = _t(spark, sf_dir, "lineitem", mode="plain")
     part_id = F.concat(F.lit("p"), F.col("l_partkey").cast("string"))
     hyper = (
         li.groupBy("l_orderkey")
@@ -1968,7 +1970,7 @@ def _kg_hyperedges(spark, sf_dir):
 def _kg_remove_node(spark, sf_dir):
     """G1 removal: remove_node drops the nodes and every touching edge via
     anti-joins (reference _graph.py:215-255)."""
-    orders = _t(spark, sf_dir, "orders", rebalance=False)
+    orders = _t(spark, sf_dir, "orders", mode="plain")
     edges = orders.select(
         F.concat(F.lit("c"), "o_custkey").alias("source_id"),
         F.concat(F.lit("o"), "o_orderkey").alias("target_id"),
@@ -1984,7 +1986,7 @@ def _kg_remove_node(spark, sf_dir):
 def _kg_subgraph(spark, sf_dir):
     """G1 subgraph: induced edges where BOTH endpoints are kept
     (reference _graph.py:631-655)."""
-    nation = _t(spark, sf_dir, "nation", rebalance=False)
+    nation = _t(spark, sf_dir, "nation", mode="plain")
     edges = nation.select(
         F.concat(F.lit("n"), "n_nationkey").alias("source_id"),
         F.concat(F.lit("r"), "n_regionkey").alias("target_id"),
@@ -2004,7 +2006,7 @@ def _kg_subgraph(spark, sf_dir):
 
 def _kg_edges_between(spark, sf_dir):
     """G1: get_edges_between via the graph layer (all edges out of c7)."""
-    orders = _t(spark, sf_dir, "orders", rebalance=False)
+    orders = _t(spark, sf_dir, "orders", mode="plain")
     edges = orders.select(
         F.concat(F.lit("c"), "o_custkey").alias("source_id"),
         F.concat(F.lit("o"), "o_orderkey").alias("target_id"),

@@ -14,6 +14,7 @@ from __future__ import annotations
 import glob
 import os
 from typing import Iterator, Optional
+from urllib.parse import quote
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -36,24 +37,23 @@ TRANSCRIPT_SCHEMA = T.StructType(
 )
 
 
-def _union_generations(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Union a set of state-generation parquet dirs into one frame.
-
-    Each generation is its own partitioned (by `_kind`) parquet root, so a
-    single multi-path read trips partition discovery
-    (CONFLICTING_DIRECTORY_STRUCTURES); per-path reads unioned by name are
-    the supported shape. allowMissingColumns tolerates legacy generations
-    written before `_dup_kind` rode along (it reads as null there, which is
-    exactly the seen-row encoding)."""
-    dfs = [spark.read.parquet(p) for p in paths]
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
-    return out
-
-
 # marker file of a FULL (compacted) seen-state generation
 _FULL_MARKER = "_FULL"
+
+# the `_kind` partition of a state generation that holds each of the
+# writer's state frames (keyed by writer attribute): the three seen-key
+# frames and the two duplicate-metrics frames
+_STATE_KINDS = {
+    "_seen_nodes": "_seen_nodes",
+    "_seen_edges": "_seen_edges",
+    "_seen_ran": "_seen_ran",
+    "duplicate_nodes": "_dup::duplicate_nodes",
+    "duplicate_edges": "_dup::duplicate_edges",
+}
+# columns of every kind's partition (`_dup_kind` is null on seen rows)
+_GEN_SCHEMA = "_klabel string, _key string, _dup_kind string"
+# a state write is a FULL compaction once the read set holds this many deltas
+_COMPACT_EVERY = 16
 
 
 def _seen_generations(meta_dir: str, prefix: str, upto: int | None = None) -> dict[int, str]:
@@ -70,18 +70,59 @@ def _seen_generations(meta_dir: str, prefix: str, upto: int | None = None) -> di
     return out
 
 
-def _is_full_gen(d: str) -> bool:
-    return os.path.exists(os.path.join(d, _FULL_MARKER))
+def _state_read_set(meta_dir: str, upto: int) -> list[str]:
+    """Generations up to batch ``upto`` whose union is the cumulative
+    state: the newest FULL generation plus every delta after it (``[]``
+    before the first state write).
+
+    Two layouts written by earlier commits of this engine are refused, not
+    read: the per-attribute ``_seen_nodes_b{N}`` directories, and combined
+    generations with no ``_FULL`` marker (pre-delta snapshots)."""
+    gens = _seen_generations(meta_dir, "_seen", upto)
+    full = [b for b, d in gens.items() if os.path.exists(os.path.join(d, _FULL_MARKER))]
+    layout = None
+    if any(_seen_generations(meta_dir, a) for a in ("_seen_nodes", "_seen_edges", "_seen_ran")):
+        layout = "the pre-combined per-attribute layout (_seen_nodes_b{N} directories)"
+    elif gens and not full:
+        layout = f"the pre-delta snapshot layout (combined generations with no {_FULL_MARKER} marker)"
+    if layout:
+        raise ValueError(
+            f"{meta_dir} holds stream state in {layout}, which this engine no longer "
+            "reads; clear the output directory and replay the stream"
+        )
+    return [gens[b] for b in sorted(gens) if full and b >= max(full)]
 
 
-def _gen_read_set(gens: dict[int, str]) -> list[str]:
-    """Paths whose union is the cumulative state: the newest FULL
-    generation plus every delta after it. A set with no marked member is a
-    single legacy pre-delta snapshot (that engine kept exactly one
-    generation alive) — read it all."""
-    full = [b for b, d in gens.items() if _is_full_gen(d)]
-    start = max(full) if full else min(gens)
-    return [gens[b] for b in sorted(gens) if b >= start]
+def _load_state(spark: SparkSession, meta_dir: str, upto: int) -> dict[str, Optional[DataFrame]]:
+    """The committed state up to batch ``upto`` as the writer's frames,
+    keyed by writer attribute; None for a kind no generation of the read
+    set holds.
+
+    Each frame is one read of the kind's partition directories across the
+    read set, with the fixed generation schema: no schema inference, and at
+    most ``_COMPACT_EVERY`` + 1 paths stay under Spark's parallel-listing
+    threshold, so loading starts no Spark job."""
+    paths = _state_read_set(meta_dir, upto)
+    out: dict[str, Optional[DataFrame]] = {}
+    for attr, kind in _STATE_KINDS.items():
+        # partitionBy escapes the ':' of the duplicate kinds on disk
+        dirs = [os.path.join(p, f"_kind={quote(kind, safe='')}") for p in paths]
+        dirs = [d for d in dirs if os.path.isdir(d)]
+        if not dirs:
+            out[attr] = None
+            continue
+        df = spark.read.schema(_GEN_SCHEMA).parquet(*dirs)
+        if attr == "_seen_nodes":
+            out[attr] = df.select("_key")
+        elif attr.startswith("_seen"):
+            out[attr] = df.select("_klabel", "_key")
+        else:
+            out[attr] = df.select(
+                F.col("_dup_kind").alias("kind"),
+                F.col("_klabel").alias("label"),
+                F.col("_key").alias("dup_id"),
+            )
+    return out
 
 
 def read_transcript_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 8) -> DataFrame:
@@ -205,19 +246,24 @@ def stream_kg(
     the writer's one first-wins path (``track_seen``) dedups node/edge ids
     across batches. Its caches (each call's first rows and seen keys) are
     filled by the batch's own part and state writes, with no separate count,
-    and released once the batch's state generation is written. ``foreachBatch`` is AT-LEAST-ONCE, so idempotence is made
-    durable in ``{output}/_stream_meta``:
+    and released once the batch's state generation is written.
+    ``foreachBatch`` is AT-LEAST-ONCE, so idempotence is made durable in
+    ``{output}/_stream_meta``:
 
     - ``committed.json`` (atomic rename) records the last committed batch id
       plus the part-file inventory; a replayed batch id <= the committed one
       is skipped outright, and part files NOT in the inventory (leftovers of
       a crashed attempt) are wiped before re-emitting.
-    - the writer's three seen-id frames are persisted per committed batch
-      as ONE combined parquet generation (``_seen_b{id}``, a ``_kind``
-      discriminator column; the pre-combined per-attr layout is still
-      restored as a fallback) and reloaded on restart, so a process crash
-      cannot reset cross-batch dedup; generations newer than the committed
-      marker (written but not committed) are discarded.
+    - the writer's seen-id and duplicate-metrics frames are persisted per
+      batch as ONE parquet generation (``_seen_b{id}``, partitioned by
+      ``_kind``): a FULL snapshot every ``_COMPACT_EVERY`` deltas, a delta
+      otherwise. The writer is pointed at the committed generations on
+      restart and after every state write, so a process crash cannot reset
+      cross-batch dedup; generations newer than the committed marker
+      (written but not committed) are discarded. State in a layout that
+      earlier commits of this engine wrote (per-attribute directories, or
+      generations with no ``_FULL`` marker) is refused with a
+      ``ValueError``.
 
     Canonicalization note: cross-batch consistency requires the surface ->
     canonical map to be batch-independent. Pass a precomputed ``mapping``
@@ -264,7 +310,6 @@ def stream_kg(
     meta_dir = os.path.join(output_directory, "_stream_meta")
     os.makedirs(meta_dir, exist_ok=True)
     committed_path = os.path.join(meta_dir, "committed.json")
-    _SEEN_ATTRS = ("_seen_nodes", "_seen_edges", "_seen_ran")
 
     def _read_committed() -> dict:
         if os.path.exists(committed_path):
@@ -272,116 +317,39 @@ def stream_kg(
                 return _json.load(fh)
         return {"last_batch": -1, "part_files": []}
 
-    # the three seen-id frames (node ids, edge keys, rel-as-node keys) are
-    # persisted as ONE combined parquet generation per committed batch with
-    # a `_kind` discriminator — one durable write per micro-batch instead
-    # of three, which is the fixed-latency floor of every micro-batch at
-    # cluster scale. Normalized schema: (_kind, _klabel, _key) with
-    # _klabel null for the node frame (its dedup key is id-only).
-    def _seen_cols(attr: str, df: DataFrame) -> DataFrame:
-        part = df.filter(F.col("_kind") == attr) if "_kind" in df.columns else df
-        return part.select("_key") if attr == "_seen_nodes" else part.select("_klabel", "_key")
-
+    # the writer's five state frames (node ids, edge keys, rel-as-node
+    # keys, and the two duplicate-metrics frames) are persisted as ONE
+    # parquet generation per state-writing batch, partitioned by `_kind`
+    # (see _STATE_KINDS) — one durable write per micro-batch instead of
+    # five, which is the fixed-latency floor of every micro-batch at
+    # cluster scale. Schema _GEN_SCHEMA: _klabel is null for the node frame
+    # (its dedup key is id-only); _dup_kind carries the metrics' own
+    # node/edge discriminator and is null on seen rows.
+    #
     # LSM-style durable state: each committed batch writes only its DELTA
     # (the batch's new seen keys + duplicate-metrics appends) as generation
-    # `_seen_b{N}`; every _COMPACT_EVERY deltas (and on the first write of a
-    # stream / after a legacy restore) a FULL snapshot generation is written
-    # instead (marker file `_FULL`) and the absorbed generations are deleted
-    # after the commit marker advances. Per-batch durable write cost is
-    # O(batch), not O(cumulative corpus) — the previous snapshot-per-batch
-    # design rewrote the whole seen universe every micro-batch, a quadratic
-    # total at 10^12-turn stream scale. The cumulative in-memory view is a
-    # union over at most _COMPACT_EVERY+1 generation reads, tracked in
-    # _filebacked/_dup_filebacked (the writer's own frames additionally
-    # carry the current batch's pinned layer between persists).
-    _COMPACT_EVERY = 16
-    _filebacked: dict[str, Optional[DataFrame]] = {a: None for a in _SEEN_ATTRS}
-    _dup_filebacked: dict[str, Optional[DataFrame]] = {}
-    _deltas_since_full = [0]
-    _have_full_base = [False]  # a combined generation set exists on disk
-
-    def _restore_seen(last_batch: int) -> None:
-        """Load the committed generation set (newest full + later deltas);
-        discard generations written by a crashed, uncommitted attempt."""
-        gens = _seen_generations(meta_dir, "_seen")
-        for b, d in list(gens.items()):
-            if b > last_batch:
-                shutil.rmtree(d, ignore_errors=True)
-                del gens[b]
-        if gens:
-            paths = _gen_read_set(gens)
-            combined = _union_generations(spark, paths)
-            for attr in _SEEN_ATTRS:
-                part = _seen_cols(attr, combined)
-                # an attr with zero rows stays None: anti-join vs an empty
-                # frame is the identity, and None skips the join entirely
-                if part.limit(1).count() > 0:
-                    setattr(writer, attr, part)
-                    _filebacked[attr] = part
-            _point_dups_at(combined)
-            for attr in _DUP_ATTRS:
-                _dup_filebacked[attr] = getattr(writer, attr)
-            _deltas_since_full[0] = len(paths) - 1
-            _have_full_base[0] = True
-            return
-        # legacy layout (pre-combined): one parquet dir per attr — an output
-        # dir written by an older engine restarts without losing dedup state.
-        # _have_full_base stays False, so the next persist writes a FULL
-        # combined snapshot (deltas alone would strand the base state in
-        # dirs the combined-first restore no longer reads).
-        for attr in _SEEN_ATTRS:
-            old = _seen_generations(meta_dir, attr)
-            for b, d in list(old.items()):
-                if b > last_batch:
-                    shutil.rmtree(d, ignore_errors=True)
-                    del old[b]
-            if old:
-                restored = spark.read.parquet(old[max(old)])
-                setattr(writer, attr, restored)
-                _filebacked[attr] = restored
-
-    # the duplicate-metrics frames ride in the SAME combined generation as
-    # the seen-id state (kinds "_dup::duplicate_nodes"/"_dup::duplicate_edges",
-    # with the metrics' own node/edge discriminator in an extra ``_dup_kind``
-    # column that is null on seen rows). This serves two purposes at zero
-    # extra Spark jobs: (1) the layers _note_dups appends inside a batch
-    # lazily reference that batch's pinned frames, which are released after
-    # every persist — writing the appends into the generation evaluates
-    # them while the pins are live and repoints the writer's frames at
-    # generation files (and at compaction time, at files that survive the
-    # absorbed generations' deletion); (2) the metrics tables become
-    # restart-durable alongside the dedup state instead of resetting to
-    # empty on resume.
-    _DUP_ATTRS = ("duplicate_nodes", "duplicate_edges")
-
-    def _point_dups_at(combined: DataFrame) -> None:
-        """Repoint the writer's duplicate-metrics frames at a generation.
-
-        MUST be unconditional for a frame the writer already holds: even an
-        all-EMPTY duplicate frame is a lazy union chain referencing the
-        superseded seen generations (_note_dups appends the cross-batch
-        layer whether or not it has rows), and leaving it un-repointed lets
-        _drop_old_seen delete files the next evaluation still reads — the
-        duplicate-free-stream variant of the crash the ride-along persist
-        exists to prevent. Only a frame the writer does NOT hold (the
-        restore path's fresh writer) keeps its None when the generation has
-        no rows for it, preserving "no metrics yet" semantics."""
-        if "_dup_kind" not in combined.columns:
-            return  # legacy generation written before metrics rode along
-        for attr in _DUP_ATTRS:
-            part = combined.filter(F.col("_kind") == f"_dup::{attr}")
-            if getattr(writer, attr) is not None or part.limit(1).count() > 0:
-                setattr(writer, attr, part.select(
-                    F.col("_dup_kind").alias("kind"),
-                    F.col("_klabel").alias("label"),
-                    F.col("_key").alias("dup_id"),
-                ))
-                writer._dup_chain_len[attr] = 0
+    # `_seen_b{N}`; when the committed read set has no FULL generation yet
+    # or already holds _COMPACT_EVERY deltas, a FULL snapshot generation is
+    # written instead (marker file `_FULL`), and the absorbed generations
+    # are deleted after the commit marker advances. Per-batch durable write
+    # cost is O(batch), not O(cumulative corpus) — the previous
+    # snapshot-per-batch design rewrote the whole seen universe every
+    # micro-batch, a quadratic total at 10^12-turn stream scale.
+    #
+    # After every state write the writer is repointed at the read set
+    # (_load_state): the layers _note_dups appended inside the batch lazily
+    # reference the batch's pinned frames, and writing them into the
+    # generation evaluates them while the pins are live, so the pins can be
+    # released and superseded generations deleted. Every frame is replaced,
+    # including an all-empty duplicate chain (it still references the
+    # batch's pins; no kind directory was written for it, so it loads as
+    # None). The metrics tables are restart-durable alongside the dedup
+    # state.
 
     def _seen_row(attr: str, df: DataFrame) -> DataFrame:
         klabel = F.col("_klabel") if "_klabel" in df.columns else F.lit(None).cast("string").alias("_klabel")
         return df.select(
-            F.lit(attr).alias("_kind"), klabel, "_key",
+            F.lit(_STATE_KINDS[attr]).alias("_kind"), klabel, "_key",
             F.lit(None).cast("string").alias("_dup_kind"),
         )
 
@@ -396,24 +364,18 @@ def stream_kg(
         if dedup:
             df = df.distinct()
         return df.select(
-            F.lit(f"_dup::{attr}").alias("_kind"),
+            F.lit(_STATE_KINDS[attr]).alias("_kind"),
             F.col("label").alias("_klabel"),
             F.col("dup_id").alias("_key"),
             F.col("kind").alias("_dup_kind"),
         )
 
-    def _dup_cols(part: DataFrame) -> DataFrame:
-        return part.select(
-            F.col("_dup_kind").alias("kind"),
-            F.col("_klabel").alias("label"),
-            F.col("_key").alias("dup_id"),
-        )
-
     def _persist_seen(batch_id: int) -> None:
         seen_deltas, dup_deltas = writer.take_state_deltas()
-        if all(getattr(writer, a) is None for a in _SEEN_ATTRS):
+        if all(getattr(writer, a) is None for a in ("_seen_nodes", "_seen_edges", "_seen_ran")):
             return  # no writer state yet (initial empty batches): nothing to roll
-        full = (not _have_full_base[0]) or _deltas_since_full[0] >= _COMPACT_EVERY
+        base = _state_read_set(meta_dir, batch_id)
+        full = not base or len(base) > _COMPACT_EVERY
         if not full and not seen_deltas and not dup_deltas:
             # match-less batch in delta mode: the state is already durable
             # in the existing generations (they are only deleted when a
@@ -422,16 +384,13 @@ def stream_kg(
             return
         frames = []
         if full:
-            # compaction (or first combined write): snapshot the cumulative
-            # state, superseding every older generation
-            for attr in _SEEN_ATTRS:
+            # compaction (or first write): snapshot the cumulative state,
+            # superseding every older generation
+            for attr in _STATE_KINDS:
                 df = getattr(writer, attr)
-                if df is not None:
-                    frames.append(_seen_row(attr, df))
-            for attr in _DUP_ATTRS:
-                df = getattr(writer, attr)
-                if df is not None:
-                    frames.append(_dup_row(attr, df, dedup=True))
+                if df is None:
+                    continue
+                frames.append(_seen_row(attr, df) if attr.startswith("_seen") else _dup_row(attr, df, dedup=True))
         else:
             # steady state: write ONLY this batch's additions — O(batch)
             # durable I/O however large the cumulative seen universe is
@@ -455,67 +414,26 @@ def stream_kg(
         combined = combined.coalesce(width if full else max(1, width // 8))
         new = os.path.join(meta_dir, f"_seen_b{batch_id}")
         # partitionBy keeps the single write job but gives each kind its
-        # own directory, so the per-attr restore/dedup scans
-        # partition-prune instead of decoding the other kinds' row groups
-        # (the edges state typically dominates the cumulative size)
+        # own directory, so _load_state reads each kind's files alone
+        # instead of decoding the other kinds' row groups (the edges state
+        # typically dominates the cumulative size)
         combined.write.mode("overwrite").partitionBy("_kind").parquet(new)
         if full:
             with open(os.path.join(new, _FULL_MARKER), "w") as fh:
                 fh.write("")
-        back = spark.read.parquet(new)
-        if full:
-            for attr in _SEEN_ATTRS:
-                if getattr(writer, attr) is not None:
-                    part = _seen_cols(attr, back)
-                    _filebacked[attr] = part
-                    setattr(writer, attr, part)
-            _point_dups_at(back)
-            for attr in _DUP_ATTRS:
-                _dup_filebacked[attr] = getattr(writer, attr)
-            _deltas_since_full[0] = 0
-            _have_full_base[0] = True
-        else:
-            # extend the file-backed view by this generation; the writer's
-            # frames (cumulative state = file-backed base + this batch's
-            # pinned layer) are repointed at pure file reads so the pins
-            # can be released below
-            for attr in seen_deltas:
-                part = _seen_cols(attr, back)
-                prev = _filebacked[attr]
-                merged = part if prev is None else prev.unionByName(part)
-                _filebacked[attr] = merged
-                setattr(writer, attr, merged)
-            for attr in dup_deltas:
-                part = _dup_cols(back.filter(F.col("_kind") == f"_dup::{attr}"))
-                prev = _dup_filebacked.get(attr)
-                merged = part if prev is None else prev.unionByName(part)
-                _dup_filebacked[attr] = merged
-                setattr(writer, attr, merged)
-                writer._dup_chain_len[attr] = 0
-            _deltas_since_full[0] += 1
-        # every seen frame (and dup chain) now reads from generation
-        # files — the per-call persist() pins are superseded; releasing
-        # them per batch is what keeps a long stream's cache O(state), not
-        # O(batches x state)
-        writer.release_seen_state_pins()
+        # every state frame now reads from generation files, and the
+        # batch's pins are released — what keeps a long stream's cache
+        # O(state), not O(batches x state)
+        writer.repoint_state(_load_state(spark, meta_dir, batch_id))
 
     def _drop_old_seen(batch_id: int) -> None:
-        """Delete generations superseded by a committed FULL compaction
-        (and legacy per-attr dirs once a combined base exists). Delta
-        generations stay until the next compaction absorbs them."""
-        gens = _seen_generations(meta_dir, "_seen", batch_id)
-        if not gens:
-            return
-        full = [b for b, d in gens.items() if _is_full_gen(d)]
-        if full:
-            cut = max(full)
-            for b, d in gens.items():
-                if b < cut:
-                    shutil.rmtree(d, ignore_errors=True)
-        for prefix in _SEEN_ATTRS:
-            for b, d in _seen_generations(meta_dir, prefix).items():
-                if b < batch_id:
-                    shutil.rmtree(d, ignore_errors=True)
+        """Delete committed generations outside the read set: those a FULL
+        compaction superseded. Delta generations stay until the next
+        compaction absorbs them."""
+        keep = set(_state_read_set(meta_dir, batch_id))
+        for d in _seen_generations(meta_dir, "_seen", batch_id).values():
+            if d not in keep:
+                shutil.rmtree(d, ignore_errors=True)
 
     # checkpoint identity: batch ids are only meaningful relative to ONE
     # stream checkpoint. A reset/swapped checkpoint restarts ids at 0, and
@@ -538,7 +456,12 @@ def stream_kg(
             "checkpoint; reuse the original --checkpoint or clear the output directory"
         )
 
-    _restore_seen(_initial["last_batch"])
+    # restart: discard generations written by a crashed, uncommitted
+    # attempt, then point the writer at the committed state
+    for b, d in _seen_generations(meta_dir, "_seen").items():
+        if b > _initial["last_batch"]:
+            shutil.rmtree(d, ignore_errors=True)
+    writer.repoint_state(_load_state(spark, meta_dir, _initial["last_batch"]))
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         state = _read_committed()
@@ -616,15 +539,16 @@ def stream_kg(
 def read_stream_state(spark: SparkSession, output_directory: str) -> dict:
     """Out-of-process readout of a stream's durable state/metrics tables.
 
-    Reads the COMMITTED combined state generations under
-    ``{output}/_stream_meta`` (a full compaction plus per-batch deltas,
-    written by :func:`stream_kg`) and returns row counts per kind:
-    cumulative seen ids
+    Loads the COMMITTED state generations under ``{output}/_stream_meta``
+    (a full compaction plus per-batch deltas, written by
+    :func:`stream_kg`) as ``stream_kg`` does on restart, and returns row
+    counts per kind: cumulative seen ids
     (``_seen_nodes``/``_seen_edges``/``_seen_ran``) and the duplicate-metrics
     tables (``duplicate_nodes``/``duplicate_edges``). Works on a live or
     finished stream — the generation files are immutable once written and
     the committed marker is atomic. Returns ``{}`` when no batch has
-    committed state yet (e.g. an all-empty input)."""
+    committed state yet (e.g. an all-empty input); raises ``ValueError`` on
+    a state layout ``stream_kg`` refuses."""
     import json as _json
 
     meta_dir = os.path.join(output_directory, "_stream_meta")
@@ -634,47 +558,25 @@ def read_stream_state(spark: SparkSession, output_directory: str) -> dict:
     with open(committed_path) as fh:
         last_batch = _json.load(fh)["last_batch"]
 
-    gens = _seen_generations(meta_dir, "_seen", last_batch)
-    if gens:
-        # Seen keys are disjoint across generations (each delta holds only
-        # keys its batch's anti-join admitted); duplicate-metrics rows may
-        # recur across delta generations, so they are counted distinct —
-        # matching the per-compaction distinct the writer applies on disk.
-        combined = _union_generations(spark, _gen_read_set(gens))
-        seen_counts = {
-            r["_kind"]: r["n"]
-            for r in combined.filter(~F.col("_kind").startswith("_dup::"))
-            .groupBy("_kind").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        dup_cols = [c for c in ("_kind", "_klabel", "_key", "_dup_kind") if c in combined.columns]
-        dup_counts = {
-            r["_kind"]: r["n"]
-            for r in combined.filter(F.col("_kind").startswith("_dup::"))
-            .dropDuplicates(dup_cols)
-            .groupBy("_kind").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        return {
-            "seen_nodes": seen_counts.get("_seen_nodes", 0),
-            "seen_edges": seen_counts.get("_seen_edges", 0),
-            "seen_rel_as_node": seen_counts.get("_seen_ran", 0),
-            "duplicate_nodes": dup_counts.get("_dup::duplicate_nodes", 0),
-            "duplicate_edges": dup_counts.get("_dup::duplicate_edges", 0),
-        }
-    # legacy layout (one parquet dir per attr, pre-combined engine): the
-    # dedup state stream_kg would restore from is real — report it.
-    # Duplicate metrics were never persisted by that engine: 0 by fact.
+    state = _load_state(spark, meta_dir, last_batch)
+    if all(df is None for df in state.values()):
+        return {}
+    # Seen keys are disjoint across generations (each delta holds only keys
+    # its batch's anti-join admitted); duplicate-metrics rows may recur
+    # across delta generations, so they are counted distinct — matching
+    # the per-compaction distinct stream_kg applies on disk.
     out = {}
     for attr, key in (
         ("_seen_nodes", "seen_nodes"),
         ("_seen_edges", "seen_edges"),
         ("_seen_ran", "seen_rel_as_node"),
+        ("duplicate_nodes", "duplicate_nodes"),
+        ("duplicate_edges", "duplicate_edges"),
     ):
-        old = _seen_generations(meta_dir, attr, last_batch)
-        out[key] = spark.read.parquet(old[max(old)]).count() if old else 0
-    if not any(out.values()):
-        return {}
-    out["duplicate_nodes"] = 0
-    out["duplicate_edges"] = 0
+        df = state[attr]
+        if df is not None and attr.startswith("duplicate"):
+            df = df.distinct()
+        out[key] = 0 if df is None else df.count()
     return out
 
 

@@ -392,9 +392,9 @@ class Neo4jBatchWriter:
         """Unpersist superseded seen-state cache entries.
 
         Call ONLY after the seen frames were repointed at durable storage
-        (stream_kg does, after each committed generation write) — until
-        then the pins back the live lazy unions, and unpersisting them
-        would force a deep lineage recompute on the next anti-join."""
+        (repoint_state does) — until then the pins back the live lazy
+        unions, and unpersisting them would force a deep lineage recompute
+        on the next anti-join."""
         for df in self._seen_pins:
             df.unpersist()
         self._seen_pins.clear()
@@ -410,12 +410,28 @@ class Neo4jBatchWriter:
         """Hand over (and clear) the seen-key / duplicate-metrics deltas
         accumulated since the last call — the frames a streaming caller
         persists per micro-batch. MUST be consumed (written out) before
-        release_seen_state_pins(): the delta frames reference the batch
-        pins, and after release their lineage points at a foreachBatch
-        input that no longer exists."""
+        repoint_state() or release_seen_state_pins(): the delta frames
+        reference the batch pins, and after release their lineage points
+        at a foreachBatch input that no longer exists."""
         seen, dups = self._seen_deltas, self._dup_deltas
         self._seen_deltas, self._dup_deltas = {}, {}
         return seen, dups
+
+    def repoint_state(self, frames: dict[str, Optional[DataFrame]]) -> None:
+        """Replace the whole seen-key and duplicate-metrics state with
+        ``frames`` read from durable storage, and release the cache
+        entries it supersedes.
+
+        ``frames`` has one entry per attribute (``_seen_nodes``,
+        ``_seen_edges``, ``_seen_ran``, ``duplicate_nodes``,
+        ``duplicate_edges``); None means no state of that kind. It must
+        already hold every call since the last repoint (stream_kg writes
+        their deltas first): those calls' pins are released and the
+        duplicate-metrics chains restart at the stored frames."""
+        for attr in ("_seen_nodes", "_seen_edges", "_seen_ran", "duplicate_nodes", "duplicate_edges"):
+            setattr(self, attr, frames[attr])
+        self._dup_chain_len.clear()
+        self.release_seen_state_pins()
 
     # -- nodes ----------------------------------------------------------------
 

@@ -11,10 +11,13 @@ translate -> Neo4j batch writer); the writer's cross-call seen-id dedup and
 part numbering give incremental append semantics. foreachBatch is
 at-least-once, so {output}/_stream_meta makes replays idempotent: an atomic
 committed-batch marker + part-file inventory (crashed attempts are wiped
-and re-emitted once; committed batches are skipped) and per-batch persisted
-seen-id generations (cross-batch dedup survives process restarts). The
-output directory is owned by its checkpoint — reuse it only with the same
---checkpoint. Build the zip with: python tools/make_pyfiles.py
+and re-emitted once; committed batches are skipped) and per-batch state
+generations holding the seen ids and duplicate metrics (a delta per batch,
+a FULL compaction every 16 deltas), which a restart reloads, so cross-batch
+dedup survives process restarts. State in a layout that earlier commits of
+this engine wrote is refused with a ValueError: clear the output directory
+and replay. The output directory is owned by its checkpoint — reuse it only
+with the same --checkpoint. Build the zip with: python tools/make_pyfiles.py
 """
 
 from __future__ import annotations

@@ -44,10 +44,10 @@ def test_unknown_mode_rejected(conf_guard):
         materialize(spark.range(3))
 
 
-def test_read_table_rejects_materialize_without_rebalance(spark, tmp_path):
-    # materialize pins the rebalanced input; without a rebalance it used to
-    # be ignored silently
+def test_read_table_rejects_unknown_mode(spark, tmp_path):
+    # a mode outside plain / rebalance / pin must fail, not fall back to
+    # one of them silently
     from biocypher_spark.queries import _t
 
-    with pytest.raises(ValueError, match="rebalance"):
-        _t(spark, str(tmp_path), "documents", materialize=True, rebalance=False)
+    with pytest.raises(ValueError, match="materialize"):
+        _t(spark, str(tmp_path), "documents", mode="materialize")

@@ -167,26 +167,48 @@ def test_banded_candidates_no_python_no_cartesian(spark):
 
 
 def test_banded_candidates_est_filter_codegen_and_narrow_join(spark):
-    """Round-3 invariants of the banded-candidate shape: (a) the
+    """Invariants of the banded-candidate shape: (a) the
     signature-agreement prefilter is a codegen sum over individual int
     columns — no interpreted zip_with on the collision pair stream; (b)
-    the band self-join output is NARROW (signatures are attached after
-    the distinct, so no sig column rides through the band join)."""
+    without the prefilter (``est_min_matches=0``) no sig column rides
+    through the band self-join — the renamed ``_a{i}``/``_b{i}`` columns
+    appear nowhere in the plan; (c) with it, the agreement filter runs
+    below the pair distinct, and no join follows the distinct (no sig
+    columns are attached after it)."""
+    import re
+
     from biocypher_spark.plans import formatted_plan
     from biocypher_spark.textops import minhash_band_candidates
 
     docs = spark.createDataFrame(
         [(i, f"w{i % 3} common tail") for i in range(8)], "doc_id long, text string"
     )
-    plan = formatted_plan(
-        minhash_band_candidates(docs, bands=2, rows_per_band=2, est_min_matches=3, size_ratio_min=0.5)
-    )
-    assert "zip_with" not in plan
-    # the band self-join keys on (band, bkey) and outputs only ids + the
-    # one size int; sig columns appear only in the post-distinct attach
-    for line in plan.splitlines():
-        if "Join" in line and "bkey" in line:
-            assert "sig" not in line
+    sig_col = re.compile(r"\b_[ab]\d+#")
+
+    def nodes(est_min_matches):
+        # {node id: (operator, detail block)}; formatted-plan ids number
+        # children before their parents
+        plan = formatted_plan(minhash_band_candidates(
+            docs, bands=2, rows_per_band=2, est_min_matches=est_min_matches, size_ratio_min=0.5
+        ))
+        assert "zip_with" not in plan
+        out = {}
+        for block in re.split(r"\n(?=\(\d+\) )", plan):
+            m = re.match(r"\((\d+)\) (\w+)", block)
+            if m:
+                out[int(m.group(1))] = (m.group(2), block)
+        return out
+
+    narrow = nodes(0)
+    assert any(op.endswith("Join") for op, _ in narrow.values())
+    assert not any(sig_col.search(block) for _, block in narrow.values())
+
+    est = nodes(3)
+    distinct = min(i for i, (op, _) in est.items() if op == "HashAggregate")
+    joins = [i for i, (op, _) in est.items() if op.endswith("Join")]
+    assert joins and max(joins) < distinct
+    agreement = [i for i, (_, block) in est.items() if "CASE WHEN" in block and sig_col.search(block)]
+    assert agreement and max(agreement) < distinct
 
 
 def test_ordered_part_rank_is_distributed(spark):

@@ -295,17 +295,18 @@ def test_stream_kg_refuses_swapped_checkpoint(spark, tmp_path):
         stream_kg(spark, indir, outdir, str(tmp_path / "ckptB"))
 
 
-def test_stream_kg_restores_legacy_seen_layout(spark, tmp_path):
-    """An output dir whose seen-id state was persisted by the older
-    one-parquet-per-attr layout must restart WITHOUT losing cross-batch
-    dedup (the combined `_seen_b{id}` generation is the current format;
-    the per-attr `_seen_nodes_b{id}` dirs are read as a fallback)."""
+def test_stream_kg_refuses_legacy_seen_layout(spark, tmp_path):
+    """Seen state in the per-attribute layout an earlier commit of this
+    engine wrote (``_seen_nodes_b{id}`` directories instead of one
+    ``_seen_b{id}`` generation partitioned by ``_kind``) is refused, not
+    read: ``read_stream_state`` and ``stream_kg`` raise a ValueError naming
+    the layout, and no part file is written."""
     import glob
     import shutil
 
     from pyspark.sql import functions as F
 
-    from biocypher_spark.streaming.stream import stream_kg
+    from biocypher_spark.streaming.stream import read_stream_state, stream_kg
 
     indir = str(tmp_path / "in")
     outdir = str(tmp_path / "kg")
@@ -331,35 +332,97 @@ def test_stream_kg_restores_legacy_seen_layout(spark, tmp_path):
     for d in combined_dirs:
         shutil.rmtree(d)
 
-    # read_stream_state must report the legacy layout's real dedup state
-    # (not {}); duplicate metrics are 0 by fact — that engine never
-    # persisted them
-    from biocypher_spark.streaming.stream import read_stream_state
+    with pytest.raises(ValueError, match="per-attribute layout"):
+        read_stream_state(spark, outdir)
 
-    legacy_state = read_stream_state(spark, outdir)
-    assert legacy_state["seen_nodes"] > 0
-    assert legacy_state["duplicate_nodes"] == 0
+    def part_files():
+        return {p: os.path.getsize(p) for p in glob.glob(os.path.join(outdir, "*-part*.csv"))}
 
-    # the same entities arriving again must still dedup through the
-    # legacy-restored state (no duplicate node ids across all parts)
+    parts_before = part_files()
+    assert parts_before
     generate_transcripts(spark, 300, partitions=1).write.mode("append").parquet(indir)
-    stream_kg(spark, indir, outdir, ckpt, max_files_per_trigger=4).awaitTermination(300)
-    seen: set = set()
-    for p in glob.glob(os.path.join(outdir, "Protein-part*.csv")):
-        for line in open(p):
-            nid = line.split(";")[0]
-            assert nid not in seen, f"duplicate {nid} after legacy restore"
-            seen.add(nid)
+    with pytest.raises(ValueError, match="per-attribute layout"):
+        stream_kg(spark, indir, outdir, ckpt, max_files_per_trigger=4)
+    assert part_files() == parts_before
 
 
-def test_stream_kg_many_batches_survives_dup_chain_collapse(spark, tmp_path):
-    """9 mention-bearing micro-batches at maxFilesPerTrigger=1: enough
-    writer calls that the duplicate-metrics chains hit the 16-layer
-    collapse mid-stream. The chains' cross-batch layers lazily reference
-    superseded ``_seen_b{id}`` generations, which stream_kg deletes after
-    each commit — without the per-batch persist of the chains into the
-    combined state generation (which repoints them at files that survive
-    the drop) the collapse scans deleted files and kills the query."""
+def test_stream_state_refuses_generations_without_full_marker(spark, tmp_path):
+    """A committed combined generation with no ``_FULL`` marker is the
+    pre-delta snapshot layout: ``read_stream_state``, and ``stream_kg``
+    before any batch runs, refuse it with a ValueError naming the layout."""
+    import json
+
+    from biocypher_spark.streaming.stream import read_stream_state, stream_kg
+
+    outdir = str(tmp_path / "kg")
+    meta = os.path.join(outdir, "_stream_meta")
+    spark.createDataFrame(
+        [("_seen_nodes", None, "PROT1", None)], "_kind string, _klabel string, _key string, _dup_kind string"
+    ).write.partitionBy("_kind").parquet(os.path.join(meta, "_seen_b0"))
+    with open(os.path.join(meta, "committed.json"), "w") as fh:
+        json.dump({"last_batch": 0, "part_files": []}, fh)
+
+    with pytest.raises(ValueError, match="pre-delta snapshot layout"):
+        read_stream_state(spark, outdir)
+    with pytest.raises(ValueError, match="pre-delta snapshot layout"):
+        stream_kg(spark, str(tmp_path / "in"), outdir, str(tmp_path / "ckpt"))
+
+
+def test_load_state_starts_no_job(spark, tmp_path):
+    """Loading a committed FULL + delta state only builds plans: each kind
+    is one schema-given read of its partition directories, so neither a
+    restart nor the repoint after a state write starts a Spark job. Each
+    kind's rows equal a plain read of the same generations."""
+    import json
+    from collections import Counter
+
+    from biocypher_spark.streaming.stream import _STATE_KINDS, _load_state, _state_read_set, stream_kg
+
+    indir = str(tmp_path / "in")
+    generate_transcripts(spark, 400, partitions=2).write.mode("overwrite").parquet(indir)
+    outdir = str(tmp_path / "kg")
+    stream_kg(spark, indir, outdir, str(tmp_path / "ckpt"), max_files_per_trigger=1).awaitTermination(300)
+    meta = os.path.join(outdir, "_stream_meta")
+    last = json.load(open(os.path.join(meta, "committed.json")))["last_batch"]
+    paths = _state_read_set(meta, last)
+    assert len(paths) == 2
+    assert os.path.exists(os.path.join(paths[0], "_FULL"))
+    assert not os.path.exists(os.path.join(paths[1], "_FULL"))
+
+    sc = spark.sparkContext
+    group = "test-load-state"
+    sc.setJobGroup(group, "load committed stream state")
+    try:
+        state = _load_state(spark, meta, last)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    plain = spark.read.parquet(paths[0])
+    for p in paths[1:]:
+        plain = plain.unionByName(spark.read.parquet(p))
+    cols = {
+        "_seen_nodes": ["_key"],
+        "_seen_edges": ["_klabel", "_key"],
+        "_seen_ran": ["_klabel", "_key"],
+        "duplicate_nodes": ["_dup_kind", "_klabel", "_key"],
+        "duplicate_edges": ["_dup_kind", "_klabel", "_key"],
+    }
+    assert set(state) == set(cols)
+    for attr, kind in _STATE_KINDS.items():
+        expected = Counter(tuple(r) for r in plain.filter(F.col("_kind") == kind).select(*cols[attr]).collect())
+        if not expected:
+            assert state[attr] is None, attr
+            continue
+        assert Counter(tuple(r) for r in state[attr].collect()) == expected, attr
+    assert state["_seen_nodes"] is not None and state["_seen_edges"] is not None
+
+
+def test_stream_kg_nine_batches_leave_no_duplicate_node_ids(spark, tmp_path):
+    """9 mention-bearing single-file micro-batches (maxFilesPerTrigger=1):
+    every batch commits, and cross-batch dedup through the persisted state
+    generations leaves no node id in two part files."""
     import glob
     import json
 
