@@ -283,8 +283,9 @@ class BioCypherSpark:
         if as_node:
             import json
 
-            # force= is a batch-writer knob (skip the cross-call seen-id
-            # check); DataFrame-interface sinks take the frame alone
+            # force= is a batch-writer knob (the :LABEL string is the
+            # node's own label, without its ancestors); DataFrame-interface
+            # sinks take the frame alone
             force_kw = {"force": True} if isinstance(self.writer, Neo4jBatchWriter) else {}
             self.writer.write_nodes(
                 self.translator.translate_nodes(

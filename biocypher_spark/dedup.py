@@ -2,9 +2,14 @@
 
 The reference keeps unbounded in-memory ``set``s on a single process
 (/root/reference/biocypher/_deduplicate.py:20-111); at 10^12-row scale that
-state must become a shuffle. We use a window over the dedup key ordered by an
-explicit arrival/ordering column so "first occurrence wins" is deterministic
-under parallelism, and emit duplicate-metrics tables instead of log lines.
+state must become a shuffle. One mechanism serves every caller: a
+:class:`KeySpace` ranks each key group by the explicit arrival column
+``SEQ`` (so "first occurrence wins" is deterministic under parallelism),
+folds the group's duplicate labels into its first row, and — when it keeps
+state across calls — anti-joins the keys earlier calls admitted. It emits
+duplicate-metrics rows instead of log lines. The batch writer and
+``InMemoryKG`` hold the three key spaces with state; ``dedup_*`` are
+one-shot calls.
 
 Scale notes:
   * node dedup is **global across labels** (one id namespace,
@@ -17,9 +22,9 @@ Scale notes:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Sequence
+from typing import Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .model import SEQ
@@ -30,32 +35,6 @@ from .translate import RAN_HIDDEN_COLS, ran_helper_edges
 class DedupResult:
     kept: DataFrame
     duplicates: DataFrame  # metrics table: kind, label, dup_id
-
-
-def _first_wins(df: DataFrame, key_cols: Sequence[str], order_cols: Sequence[str]) -> DataFrame:
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return df.withColumn("_rn", F.row_number().over(w))
-
-
-def dedup_nodes(nodes: DataFrame, order_cols: Sequence[str] = (SEQ,)) -> DedupResult:
-    """Global node-id dedup, first occurrence wins (D1).
-
-    Duplicate metrics record the id once and the label(s) under which
-    duplicates appeared, mirroring ``Deduplicator.node_seen`` bookkeeping
-    (/root/reference/biocypher/_deduplicate.py:31-52).
-    """
-    ranked = _first_wins(nodes, ["node_id"], order_cols)
-    kept = ranked.filter(F.col("_rn") == 1).drop("_rn")
-    dups = (
-        ranked.filter(F.col("_rn") > 1)
-        .select(
-            F.lit("node").alias("kind"),
-            F.col("node_label").alias("label"),
-            F.col("node_id").alias("dup_id"),
-        )
-        .distinct()
-    )
-    return DedupResult(kept=kept, duplicates=dups)
 
 
 def edge_dedup_key() -> F.Column:
@@ -76,24 +55,147 @@ def edge_dedup_key() -> F.Column:
     )
 
 
-def dedup_edges(edges: DataFrame, order_cols: Sequence[str] = (SEQ,)) -> DedupResult:
-    """Per-(type, id) edge dedup, first occurrence wins (D2)."""
-    keyed = edges.withColumn("_key", edge_dedup_key())
-    ranked = _first_wins(keyed, ["relationship_label", "_key"], order_cols)
-    kept = ranked.filter(F.col("_rn") == 1).drop("_rn", "_key")
-    dups = (
-        ranked.filter(F.col("_rn") > 1)
-        .select(
-            F.lit("edge").alias("kind"),
-            F.col("relationship_label").alias("label"),
-            F.col("_key").alias("dup_id"),
+# the three key spaces of the reference's Deduplicator, by the name their
+# seen keys carry in stream state: (metrics kind, label column, key column
+# (None: edge_dedup_key), keyed per label)
+_SPACES = {
+    "_seen_nodes": ("node", "node_label", "node_id", False),  # D1: node id, global across labels
+    "_seen_edges": ("edge", "relationship_label", None, True),  # D2: (type, edge key)
+    "_seen_ran": ("edge", "node_label", "node_id", True),  # D3: (type, reified id)
+}
+
+
+class KeySpace:
+    """One first-wins dedup key space; with ``track_seen`` also the keys
+    earlier calls admitted.
+
+    A call's rows carry the key as ``_key`` (and the label as ``_klabel``
+    for a per-label space) while they are deduped; the seen keys are a
+    frame of those columns. The cumulative seen union is never pinned:
+    ``Dataset.union`` flattens nested unions, so each call's anti-join reads
+    (and fills) every call's persisted key frame directly. Each call's
+    full-row pins are released by :meth:`release_earlier_row_pins` once the
+    next call consumed them, and every pin by :meth:`release_pins`."""
+
+    def __init__(self, name: str, track_seen: bool = False):
+        self.kind, self.label_col, self._key_col, per_label = _SPACES[name]
+        self.key_cols = ["_klabel", "_key"] if per_label else ["_key"]
+        self.track_seen = track_seen
+        self.seen: Optional[DataFrame] = None
+        self._delta: Optional[DataFrame] = None  # keys admitted since the last take_delta()
+        self._key_pins: list[DataFrame] = []  # each call's admitted keys
+        self._row_pins: list[list[DataFrame]] = []  # each call's full-row pins
+
+    def _metrics(self, frame: DataFrame, label: Column) -> DataFrame:
+        return frame.select(F.lit(self.kind).alias("kind"), label.alias("label"), F.col("_key").alias("dup_id"))
+
+    def admit(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """``(kept rows, (kind, label, dup_id) duplicate rows)`` of ``df``:
+        the first row of each key by ``SEQ``, minus the keys of earlier
+        calls when the space tracks them.
+
+        One window ranks each key group and folds the group's duplicate
+        labels into its first row as ``_dup_labels`` —
+        ``collect_set(when(_rn > 1, label))``, bounded by the LABEL
+        VOCABULARY, never group size, so a hot key with millions of
+        occurrences stays O(labels) in state (a duplicate row with a NULL
+        label is not representable in the set and goes unreported;
+        translated frames always carry labels). The duplicate rows are
+        projections of those first rows:
+
+        - in-call: explode ``_dup_labels`` (key-unique, per-key label set
+          => no distinct needed);
+        - cross-call: the first rows ANTI the kept keys — the complement of
+          the seen anti-join, with no extra scan of the seen state.
+
+        With ``track_seen`` the first rows and the kept rows are pinned, so
+        the caller's write, the new seen keys, the next call's anti-join
+        and the metrics read one window evaluation. Nothing is counted
+        here: each pin is filled by its first consumer's job."""
+        key = edge_dedup_key() if self._key_col is None else F.col(self._key_col)
+        keyed = df.withColumn("_key", key)
+        if len(self.key_cols) == 2:
+            keyed = keyed.withColumn("_klabel", F.col(self.label_col))
+        w = Window.partitionBy(*self.key_cols).orderBy(SEQ)
+        w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ranked = keyed.withColumn("_rn", F.row_number().over(w))
+        ranked = ranked.withColumn(
+            "_dup_labels",
+            F.collect_set(F.when(F.col("_rn") > 1, F.col(self.label_col))).over(w_all),
         )
-        .distinct()
-    )
-    return DedupResult(kept=kept, duplicates=dups)
+        firsts = ranked.filter(F.col("_rn") == 1).drop("_rn")
+        if self.track_seen:
+            firsts = firsts.persist()
+        dups = self._metrics(firsts.filter(F.size("_dup_labels") > 0), F.explode("_dup_labels"))
+        if not self.track_seen:
+            return firsts.drop("_dup_labels", *self.key_cols), dups
+        pins = [firsts]
+        if self.seen is None:
+            kept = firsts.drop("_dup_labels")
+        else:
+            kept = firsts.join(self.seen, self.key_cols, "left_anti").drop("_dup_labels").persist()
+            pins.append(kept)
+            cross = firsts.join(kept.select(*self.key_cols), self.key_cols, "left_anti")
+            dups = dups.unionByName(self._metrics(cross, F.col(self.label_col)))
+        self._row_pins.append(pins)
+        new_keys = kept.select(*self.key_cols).persist()
+        self._key_pins.append(new_keys)
+        # the union needs NO distinct: new_keys is key-unique (row_number==1
+        # keeps one row per key) and disjoint from seen (the anti-join
+        # above), and seen is distinct by this same induction — a distinct
+        # here would re-shuffle the ENTIRE cumulative seen state on every
+        # call, O(all ids ever admitted) per micro-batch at stream scale
+        self.seen = new_keys if self.seen is None else self.seen.unionByName(new_keys)
+        self._delta = new_keys if self._delta is None else self._delta.unionByName(new_keys)
+        return kept.drop(*self.key_cols), dups
+
+    def take_delta(self) -> Optional[DataFrame]:
+        """Hand over (and clear) the keys admitted since the last call."""
+        delta, self._delta = self._delta, None
+        return delta
+
+    def release_earlier_row_pins(self) -> None:
+        """Unpersist the full-row pins of all but the latest call. Call once
+        the latest call's kept rows were consumed: its anti-join has then
+        filled the key pins the earlier rows fed, so only lazy duplicate
+        metrics still reach them."""
+        while len(self._row_pins) > 1:
+            for df in self._row_pins.pop(0):
+                df.unpersist()
+
+    def release_pins(self) -> None:
+        """Unpersist every pin and drop the delta. Call ONLY once ``seen``
+        no longer reads the key pins (repointed at durable storage): until
+        then they back the live union, and unpersisting them would force a
+        deep lineage recompute on the next anti-join."""
+        for df in self._key_pins + [df for pins in self._row_pins for df in pins]:
+            df.unpersist()
+        self._key_pins.clear()
+        self._row_pins.clear()
+        self._delta = None
 
 
-def dedup_rel_as_nodes(ran_nodes: DataFrame, ran_edges: DataFrame, order_cols: Sequence[str] = (SEQ,)) -> tuple:
+def key_spaces(track_seen: bool) -> dict[str, KeySpace]:
+    """The three key spaces (D1 node id, D2 (type, edge key), D3 (type,
+    reified id)), keyed by the name their seen keys carry in stream state."""
+    return {name: KeySpace(name, track_seen) for name in _SPACES}
+
+
+def dedup_nodes(nodes: DataFrame) -> DedupResult:
+    """Global node-id dedup, first occurrence wins (D1).
+
+    Duplicate metrics record each duplicated id once per label under which
+    duplicates appeared, mirroring ``Deduplicator.node_seen`` bookkeeping
+    (reference ``biocypher/_deduplicate.py:31-52``)."""
+    return DedupResult(*KeySpace("_seen_nodes").admit(nodes))
+
+
+def dedup_edges(edges: DataFrame) -> DedupResult:
+    """Per-(type, id) edge dedup, first occurrence wins (D2)."""
+    return DedupResult(*KeySpace("_seen_edges").admit(edges))
+
+
+def dedup_rel_as_nodes(ran_nodes: DataFrame, ran_edges: DataFrame) -> tuple:
     """Rel-as-node dedup keyed on the reified node's (label, id) (D3).
 
     The reference skips the whole triplet when the node was seen
@@ -102,17 +204,7 @@ def dedup_rel_as_nodes(ran_nodes: DataFrame, ran_edges: DataFrame, order_cols: S
     exactly the first triplet's edges survive even when a duplicate id
     arrives with different endpoints.
     """
-    ranked = _first_wins(ran_nodes, ["node_label", "node_id"], order_cols)
-    kept_raw = ranked.filter(F.col("_rn") == 1).drop("_rn")
-    dups = (
-        ranked.filter(F.col("_rn") > 1)
-        .select(
-            F.lit("edge").alias("kind"),
-            F.col("node_label").alias("label"),
-            F.col("node_id").alias("dup_id"),
-        )
-        .distinct()
-    )
+    kept_raw, dups = KeySpace("_seen_ran").admit(ran_nodes)
     kept_nodes, kept_edges = ran_surviving_edges(kept_raw, ran_edges)
     return kept_nodes, kept_edges, dups
 

@@ -13,16 +13,15 @@ with one typed ``from_json`` per type — no per-row Python.
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import key_spaces, ran_surviving_edges
 from .materialize import materialize
-from .dedup import dedup_edges, dedup_nodes, dedup_rel_as_nodes
 from .model import SEQ
 from .translate import TranslatedEdges
-from .writer.base import infer_prop_types
+from .writer.base import declared_props, infer_prop_types
 
 
 def _typed_props(df: DataFrame, prop_types: dict) -> DataFrame:
@@ -52,16 +51,23 @@ class InMemoryKG:
         self.translator = translator
         self._node_frames: dict[str, DataFrame] = {}
         self._edge_frames: dict[str, DataFrame] = {}
-        # cross-call dedup state (the reference shares ONE Deduplicator
-        # across add() calls, _in_memory_kg.py:62-66): persisted id frames,
-        # not driver sets — anti-joined against each new batch
-        self._seen_nodes: Optional[DataFrame] = None
-        self._seen_edges: Optional[DataFrame] = None
+        # cross-call dedup state: the reference shares ONE Deduplicator
+        # across add() calls (_in_memory_kg.py:62-66); these are the batch
+        # writer's three key spaces
+        self.key_spaces = key_spaces(track_seen=True)
+
+    def _admit(self, space: str, df: DataFrame) -> DataFrame:
+        """The rows of ``df`` the key space ``space`` admits, pinned: the
+        per-type frames built from them outlive the spaces' row pins."""
+        kept = materialize(self.key_spaces[space].admit(df)[0])
+        # the pin just evaluated every anti-join of this call, so the
+        # earlier calls' row pins have fed the key pins they back
+        for keys in self.key_spaces.values():
+            keys.release_earlier_row_pins()
+        return kept
 
     def _prop_types_for(self, label: str, df: DataFrame, kind: str) -> dict:
-        schema = self.translator.ontology.mapping.extended_schema
-        conf = schema.get(label, {})
-        declared = conf.get("properties")
+        declared = declared_props(self.translator.ontology.mapping.extended_schema, label)
         if declared:
             d = dict(declared)
             if kind == "node":
@@ -90,15 +96,7 @@ class InMemoryKG:
         return infer_prop_types(head_props)
 
     def add_nodes(self, nodes: DataFrame) -> None:
-        res = dedup_nodes(nodes)
-        kept = res.kept
-        if self._seen_nodes is not None:
-            kept = kept.join(self._seen_nodes, "node_id", "left_anti")
-        kept = materialize(kept)
-        ids = kept.select("node_id")
-        self._seen_nodes = materialize(
-            ids if self._seen_nodes is None else self._seen_nodes.union(ids)
-        )
+        kept = self._admit("_seen_nodes", nodes)
         for label in [r[0] for r in kept.select("node_label").distinct().collect()]:
             sub = kept.filter(F.col("node_label") == label)
             typed = _typed_props(sub.drop(SEQ), self._prop_types_for(label, sub, "node"))
@@ -108,37 +106,19 @@ class InMemoryKG:
             )
 
     def add_edges(self, edges) -> None:
+        """Edges, or a TranslatedEdges whose rel-as-node triplets go through
+        the writer's path: the reified rows are deduped on (type, id) (D3)
+        and their helper edges rebuilt from the survivors, the reified
+        nodes are added as nodes (D1), and the helper edges are deduped
+        with the plain edges (D2)."""
         if isinstance(edges, TranslatedEdges):
-            kept_nodes, kept_edges, _ = dedup_rel_as_nodes(edges.ran_nodes, edges.ran_edges)
-            # cross-BATCH rel-as-node dedup skips the whole TRIPLET, like
-            # the reference's rel_as_node_seen: when the reified node id was
-            # seen in an earlier add() its helper edges must be dropped too
-            # — deduping nodes and edges independently would admit orphan
-            # helper edges from a duplicate id arriving with new endpoints
-            if self._seen_nodes is not None:
-                kept_nodes = materialize(kept_nodes.join(self._seen_nodes, "node_id", "left_anti"))
-                surviving = kept_nodes.select(F.col("node_id").alias("target_id"))
-                kept_edges = kept_edges.join(surviving, "target_id", "left_semi")
-            if kept_nodes.limit(1).count() > 0:
-                self.add_nodes(kept_nodes)
-                self._add_edge_frames(kept_edges)
-            self._add_edge_frames(edges.edges)
-        else:
-            self._add_edge_frames(edges)
-
-    def _add_edge_frames(self, edges: DataFrame) -> None:
-        from .dedup import edge_dedup_key
-
-        res = dedup_edges(edges)
-        kept = res.kept.withColumn("_key", edge_dedup_key())
-        if self._seen_edges is not None:
-            kept = kept.join(self._seen_edges, ["relationship_label", "_key"], "left_anti")
-        kept = materialize(kept)
-        keys = kept.select("relationship_label", "_key")
-        self._seen_edges = materialize(
-            keys if self._seen_edges is None else self._seen_edges.union(keys)
-        )
-        kept = kept.drop("_key")
+            ran_nodes, ran_edges = ran_surviving_edges(
+                self.key_spaces["_seen_ran"].admit(edges.ran_nodes)[0], edges.ran_edges
+            )
+            if ran_nodes.limit(1).count() > 0:
+                self.add_nodes(ran_nodes)
+            edges = edges.edges.unionByName(ran_edges)
+        kept = self._admit("_seen_edges", edges)
         for label in [r[0] for r in kept.select("relationship_label").distinct().collect()]:
             sub = kept.filter(F.col("relationship_label") == label)
             typed = _typed_props(sub.drop(SEQ), self._prop_types_for(label, sub, "edge"))

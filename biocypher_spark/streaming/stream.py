@@ -41,8 +41,8 @@ TRANSCRIPT_SCHEMA = T.StructType(
 _FULL_MARKER = "_FULL"
 
 # the `_kind` partition of a state generation that holds each of the
-# writer's state frames (keyed by writer attribute): the three seen-key
-# frames and the two duplicate-metrics frames
+# writer's state frames (keyed as Neo4jBatchWriter.state_frames): the three
+# seen-key frames and the two duplicate-metrics frames
 _STATE_KINDS = {
     "_seen_nodes": "_seen_nodes",
     "_seen_edges": "_seen_edges",
@@ -95,8 +95,8 @@ def _state_read_set(meta_dir: str, upto: int) -> list[str]:
 
 def _load_state(spark: SparkSession, meta_dir: str, upto: int) -> dict[str, Optional[DataFrame]]:
     """The committed state up to batch ``upto`` as the writer's frames,
-    keyed by writer attribute; None for a kind no generation of the read
-    set holds.
+    keyed as ``Neo4jBatchWriter.state_frames``; None for a kind no
+    generation of the read set holds.
 
     Each frame is one read of the kind's partition directories across the
     read set, with the fixed generation schema: no schema inference, and at
@@ -356,11 +356,10 @@ def stream_kg(
     def _dup_row(attr: str, df: DataFrame, dedup: bool) -> DataFrame:
         # dedup=True only at compaction: it re-establishes set semantics on
         # disk and bounds the full snapshot. Delta writes skip it — each
-        # _note_dups layer is already distinct within itself (the only
-        # possible overlap is a key that is both an in-batch and a
-        # cross-batch duplicate), and the get_duplicate_* accessors apply
-        # distinct at read; a per-batch distinct would add a shuffle to
-        # every micro-batch to save a handful of written rows
+        # _note_dups layer is distinct except for a key that is both an
+        # in-batch and a cross-batch duplicate, and the get_duplicate_*
+        # accessors apply distinct at read; a per-batch distinct would add
+        # a shuffle to every micro-batch to save a handful of written rows
         if dedup:
             df = df.distinct()
         return df.select(
@@ -372,7 +371,8 @@ def stream_kg(
 
     def _persist_seen(batch_id: int) -> None:
         seen_deltas, dup_deltas = writer.take_state_deltas()
-        if all(getattr(writer, a) is None for a in ("_seen_nodes", "_seen_edges", "_seen_ran")):
+        state = writer.state_frames()
+        if all(state[a] is None for a in ("_seen_nodes", "_seen_edges", "_seen_ran")):
             return  # no writer state yet (initial empty batches): nothing to roll
         base = _state_read_set(meta_dir, batch_id)
         full = not base or len(base) > _COMPACT_EVERY
@@ -386,8 +386,7 @@ def stream_kg(
         if full:
             # compaction (or first write): snapshot the cumulative state,
             # superseding every older generation
-            for attr in _STATE_KINDS:
-                df = getattr(writer, attr)
+            for attr, df in state.items():
                 if df is None:
                     continue
                 frames.append(_seen_row(attr, df) if attr.startswith("_seen") else _dup_row(attr, df, dedup=True))

@@ -196,6 +196,17 @@ def edge_line_expr(
     return F.concat_ws(delim, *pieces)
 
 
+def declared_props(schema: dict, label: str) -> Optional[dict]:
+    """Declared properties of the schema class that ``label`` names, by
+    class name or by its ``label_as_edge``; None when none are declared."""
+    if label in schema:
+        return schema[label].get("properties")
+    for conf in schema.values():
+        if isinstance(conf, dict) and conf.get("label_as_edge") == label:
+            return conf.get("properties")
+    return None
+
+
 def infer_prop_types(props: dict[str, Optional[str]]) -> dict[str, str]:
     """First-entity type inference, Python type names like the reference
     (/root/reference/biocypher/output/write/_batch_writer.py:672-689)."""

@@ -12,12 +12,13 @@ lowercase booleans, empty field for null) match the reference's golden tests
 Spark-first execution: dedup is a keyed shuffle (not driver sets), label
 ancestor strings are precomputed driver-side and inlined as literals, and
 every write call is one partitioned text job per entity kind. Every write
-call dedups through one first-wins path (``_dedup_against_seen``): a window
-over the call's rows, then an anti-join against the keys of earlier calls.
-Cross-call dedup state is an accumulated, persisted key DataFrame, replacing
-the reference's unbounded in-memory sets (/root/reference/biocypher/
-_deduplicate.py:20-29) which cannot exist at 10^12 scale; its caches are
-filled by the jobs that read them, never by a separate count.
+call dedups through the engine's one first-wins mechanism, a
+``dedup.KeySpace`` per key space: a window over the call's rows, then an
+anti-join against the keys of earlier calls. Cross-call dedup state is an
+accumulated, persisted key DataFrame, replacing the reference's unbounded
+in-memory sets (reference ``biocypher/_deduplicate.py:20-29``) which
+cannot exist at 10^12 scale; its caches are filled by the jobs that read
+them, never by a separate count.
 """
 
 from __future__ import annotations
@@ -26,10 +27,10 @@ import os
 from collections import OrderedDict
 from typing import Callable, Optional
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..dedup import edge_dedup_key, ran_surviving_edges
+from ..dedup import key_spaces, ran_surviving_edges
 from ..materialize import materialize
 from ..model import SEQ
 from ..naming import sentence_to_pascal, to_list
@@ -42,6 +43,7 @@ from .base import (
     LONG_ARRAY,
     LONG_TYPES,
     STR_ARRAY,
+    declared_props,
     edge_line_expr,
     infer_prop_types,
     node_line_expr,
@@ -141,39 +143,27 @@ class Neo4jBatchWriter:
         # False is the scale path: content-identical lines, arbitrary
         # file assignment, zero extra shuffle.
         self.ordered_parts = ordered_parts
-        # track_seen=False skips the cross-call seen-id bookkeeping for
-        # single-shot pipelines whose inputs are already unique
-        self.track_seen = track_seen
+        # the D1/D2/D3 key spaces, keyed by the name their seen keys carry
+        # in stream state; track_seen=False makes every call one-shot (no
+        # cross-call seen keys) for single-shot pipelines whose inputs are
+        # already unique
+        self.key_spaces = key_spaces(track_seen)
 
         self.node_property_dict: "OrderedDict[str, dict]" = OrderedDict()
         self.edge_property_dict: "OrderedDict[str, dict]" = OrderedDict()
         self.import_call_nodes: set = set()
         self.import_call_edges: set = set()
         self.parts: dict[str, list[str]] = {}
-        self._seen_nodes: Optional[DataFrame] = None  # accumulated node_id frame
-        self._seen_edges: Optional[DataFrame] = None  # accumulated (label, key) frame
-        self._seen_ran: Optional[DataFrame] = None  # accumulated (label, node_id) frame
         self.duplicate_nodes: Optional[DataFrame] = None
         self.duplicate_edges: Optional[DataFrame] = None
         self._dup_chain_len: dict[str, int] = {}  # union layers since last collapse
-        # every seen-key persist() (one per call), so a caller
-        # that repoints the seen frames at durable storage can release the
-        # superseded cache entries (Spark's CacheManager never frees them
-        # on GC; a long stream would otherwise leak O(batches x total-ids))
-        self._seen_pins: list[DataFrame] = []
-        # full-row pins (firsts, batch_first) per seen frame, one list per
-        # write call; see _release_earlier_row_pins
-        self._row_pins: dict[str, list[list[DataFrame]]] = {}
-        # per-call STATE DELTAS since the last take_state_deltas(): the new
-        # seen keys each _dedup_against_seen call admitted and the
-        # duplicate-metrics rows each _note_dups call appended. stream_kg
-        # persists THESE per micro-batch (O(batch) durable write) instead of
-        # re-snapshotting the cumulative state (O(corpus) per batch — at
-        # 10^12-turn stream scale the snapshot design writes the whole seen
-        # universe once per micro-batch, a quadratic total). Batch callers
-        # that never consume deltas hold only lazy plan objects here; they
-        # are cleared alongside the pins in release_seen_state_pins().
-        self._seen_deltas: dict[str, DataFrame] = {}
+        # the duplicate-metrics rows each _note_dups call appended since the
+        # last take_state_deltas(); the key spaces hold the seen-key deltas.
+        # stream_kg persists THESE per micro-batch (O(batch) durable write)
+        # instead of re-snapshotting the cumulative state (O(corpus) per
+        # batch, a quadratic total over a long stream). Batch callers that
+        # never consume deltas hold only lazy plan objects here; they are
+        # cleared alongside the pins in release_seen_state_pins().
         self._dup_deltas: dict[str, DataFrame] = {}
 
     # -- label strings ------------------------------------------------------
@@ -205,19 +195,10 @@ class Neo4jBatchWriter:
 
     # -- property dict resolution -------------------------------------------
 
-    def _schema_props(self, label: str) -> Optional[dict]:
-        schema = self.translator.ontology.mapping.extended_schema
-        if label in schema:
-            return schema[label].get("properties")
-        for conf in schema.values():
-            if isinstance(conf, dict) and conf.get("label_as_edge") == label:
-                return conf.get("properties")
-        return None
-
     def _resolve_prop_dict(self, label: str, first_props: dict, kind: str) -> dict:
         """Declared schema properties win; else first-entity inference
         (/root/reference/biocypher/output/write/_batch_writer.py:645-689)."""
-        cprops = self._schema_props(label)
+        cprops = declared_props(self.translator.ontology.mapping.extended_schema, label)
         if cprops:
             d = dict(cprops)
             if kind == "node":
@@ -276,11 +257,14 @@ class Neo4jBatchWriter:
     # -- dedup bookkeeping ---------------------------------------------------
 
     # collapse cadence for the duplicate-metrics union chains: every
-    # _DUP_COLLAPSE appended layers the frame is distinct-ed and pinned.
-    # Without this a long-running stream (thousands of micro-batch writer
-    # calls) accumulates an ever-deeper lazy union plan whose eventual
-    # evaluation would pay one shuffle per appended distinct layer — and
-    # whose references keep every old batch's pinned frames alive
+    # _DUP_COLLAPSE appended layers the frame is distinct-ed and pinned, so
+    # a writer's eventual metrics evaluation pays a bounded plan, not one
+    # shuffle per appended distinct layer, and stops referencing the pinned
+    # frames of old calls. It only fires for a writer that is never
+    # repointed, such as the BioCypherSpark facade's: a write call appends
+    # one layer per key space it dedups in, and stream_kg repoints its
+    # writer (repoint_state clears the chain lengths) at every state write,
+    # after at most two layers per duplicate-metrics frame.
     _DUP_COLLAPSE = 16
 
     def _note_dups(self, attr: str, dups: DataFrame) -> None:
@@ -307,86 +291,13 @@ class Neo4jBatchWriter:
     # combined per-batch state generation) — otherwise the next chain
     # evaluation (a collapse, or get_duplicate_*) scans deleted files.
 
-    def _dedup_against_seen(self, df: DataFrame, key_cols: list, seen_attr: str, kind: str, label_col: str) -> DataFrame:
-        """First-wins within the call + anti-join vs keys of earlier calls;
-        replaces the reference's cross-call in-memory seen-sets. Duplicate
-        occurrences are accumulated into metrics frames (D4).
-
-        One window ranks each key group and folds the group's duplicate
-        evidence into its surviving first row as ``_dup_labels`` —
-        ``collect_set(when(_rn > 1, label))``, bounded by the LABEL
-        VOCABULARY, never group size, so a hot key with millions of
-        occurrences stays O(labels) in state (NULL labels on duplicate rows
-        are not representable in the set and are dropped; translated frames
-        always carry labels). Every metrics frame is a projection of
-        ``firsts``:
-
-        - in-call dups: explode ``_dup_labels`` (key-unique, per-key label
-          set => no distinct needed);
-        - cross-call dups: firsts ANTI batch_first keys — the complement of
-          the seen anti-join, with no extra scan of the seen state.
-
-        With ``track_seen``, ``firsts`` and the post-anti-join
-        ``batch_first`` are pinned, so the part write, the new seen keys,
-        the next call's anti-join and the metrics read one window
-        evaluation. Nothing is counted here: each pin is filled by its first
-        consumer's job."""
-        w = Window.partitionBy(*key_cols).orderBy(SEQ)
-        w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ranked = df.withColumn("_rn", F.row_number().over(w))
-        ranked = ranked.withColumn(
-            "_dup_labels",
-            F.collect_set(F.when(F.col("_rn") > 1, F.col(label_col))).over(w_all),
-        )
-        firsts = ranked.filter(F.col("_rn") == 1).drop("_rn")
-        if self.track_seen:
-            firsts = firsts.persist()
-        attr = "duplicate_nodes" if kind == "node" else "duplicate_edges"
-
-        def metrics(frame: DataFrame, label: Column) -> DataFrame:
-            return frame.select(F.lit(kind).alias("kind"), label.alias("label"), F.col(key_cols[-1]).alias("dup_id"))
-
-        self._note_dups(attr, metrics(firsts.filter(F.size("_dup_labels") > 0), F.explode("_dup_labels")))
-        if not self.track_seen:
-            return firsts.drop("_dup_labels")
-        pins = [firsts]
-        seen = getattr(self, seen_attr)
-        if seen is None:
-            batch_first = firsts.drop("_dup_labels")
-        else:
-            batch_first = firsts.join(seen, key_cols, "left_anti").drop("_dup_labels").persist()
-            pins.append(batch_first)
-            cross = firsts.join(batch_first.select(*key_cols), key_cols, "left_anti")
-            self._note_dups(attr, metrics(cross, F.col(label_col)))
-        self._row_pins.setdefault(seen_attr, []).append(pins)
-        new_keys = batch_first.select(*key_cols).persist()
-        self._seen_pins.append(new_keys)
-        # the union needs NO distinct: new_keys is key-unique (row_number==1
-        # keeps one row per key) and disjoint from seen (the anti-join
-        # above), and seen is distinct by this same induction — a distinct
-        # here would re-shuffle the ENTIRE cumulative seen state on every
-        # call, O(all ids ever written) per micro-batch at stream scale.
-        # The union itself is not pinned: Dataset.union flattens nested
-        # unions, so the next call's anti-join reads (and fills) every
-        # call's key cache directly, and a pinned union would be a second
-        # copy of all keys per call.
-        setattr(self, seen_attr, new_keys if seen is None else seen.unionByName(new_keys))
-        prev_delta = self._seen_deltas.get(seen_attr)
-        self._seen_deltas[seen_attr] = (
-            new_keys if prev_delta is None else prev_delta.unionByName(new_keys)
-        )
-        return batch_first
-
-    def _release_earlier_row_pins(self, *seen_attrs: str) -> None:
-        """Unpersist the full-row pins of all but the latest call on each
-        seen frame. Call after that call wrote its part files: its
-        anti-join has then filled the key caches the earlier rows fed, so
-        only the (lazy) duplicate metrics still reach them."""
-        for seen_attr in seen_attrs:
-            calls = self._row_pins.get(seen_attr, [])
-            while len(calls) > 1:
-                for df in calls.pop(0):
-                    df.unpersist()
+    def _admit(self, space: str, df: DataFrame) -> DataFrame:
+        """The rows of ``df`` the key space ``space`` admits; its duplicate
+        rows go to the duplicate-metrics frame of its kind (D4)."""
+        keys = self.key_spaces[space]
+        kept, dups = keys.admit(df)
+        self._note_dups("duplicate_nodes" if keys.kind == "node" else "duplicate_edges", dups)
+        return kept
 
     def release_seen_state_pins(self) -> None:
         """Unpersist superseded seen-state cache entries.
@@ -395,15 +306,8 @@ class Neo4jBatchWriter:
         (repoint_state does) — until then the pins back the live lazy
         unions, and unpersisting them would force a deep lineage recompute
         on the next anti-join."""
-        for df in self._seen_pins:
-            df.unpersist()
-        self._seen_pins.clear()
-        for calls in self._row_pins.values():
-            for pins in calls:
-                for df in pins:
-                    df.unpersist()
-        self._row_pins.clear()
-        self._seen_deltas.clear()
+        for keys in self.key_spaces.values():
+            keys.release_pins()
         self._dup_deltas.clear()
 
     def take_state_deltas(self) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
@@ -413,23 +317,31 @@ class Neo4jBatchWriter:
         repoint_state() or release_seen_state_pins(): the delta frames
         reference the batch pins, and after release their lineage points
         at a foreachBatch input that no longer exists."""
-        seen, dups = self._seen_deltas, self._dup_deltas
-        self._seen_deltas, self._dup_deltas = {}, {}
+        seen = {name: d for name, keys in self.key_spaces.items() if (d := keys.take_delta()) is not None}
+        dups, self._dup_deltas = self._dup_deltas, {}
         return seen, dups
+
+    def state_frames(self) -> dict[str, Optional[DataFrame]]:
+        """The whole seen-key and duplicate-metrics state, keyed as
+        repoint_state takes it: the three key spaces' seen keys
+        (``_seen_nodes``, ``_seen_edges``, ``_seen_ran``) and
+        ``duplicate_nodes``, ``duplicate_edges``; None means no state of
+        that kind."""
+        frames = {name: keys.seen for name, keys in self.key_spaces.items()}
+        return {**frames, "duplicate_nodes": self.duplicate_nodes, "duplicate_edges": self.duplicate_edges}
 
     def repoint_state(self, frames: dict[str, Optional[DataFrame]]) -> None:
         """Replace the whole seen-key and duplicate-metrics state with
         ``frames`` read from durable storage, and release the cache
         entries it supersedes.
 
-        ``frames`` has one entry per attribute (``_seen_nodes``,
-        ``_seen_edges``, ``_seen_ran``, ``duplicate_nodes``,
-        ``duplicate_edges``); None means no state of that kind. It must
-        already hold every call since the last repoint (stream_kg writes
-        their deltas first): those calls' pins are released and the
+        ``frames`` is keyed as state_frames() returns it. It must already
+        hold every call since the last repoint (stream_kg writes their
+        deltas first): those calls' pins are released and the
         duplicate-metrics chains restart at the stored frames."""
-        for attr in ("_seen_nodes", "_seen_edges", "_seen_ran", "duplicate_nodes", "duplicate_edges"):
-            setattr(self, attr, frames[attr])
+        for name, keys in self.key_spaces.items():
+            keys.seen = frames[name]
+        self.duplicate_nodes, self.duplicate_edges = frames["duplicate_nodes"], frames["duplicate_edges"]
         self._dup_chain_len.clear()
         self.release_seen_state_pins()
 
@@ -455,7 +367,7 @@ class Neo4jBatchWriter:
                 if conf.get("represented_as") not in (None, "node")
             }
             known = self.edge_property_dict
-        if not labels or not all(self._schema_props(label) for label in labels):
+        if not labels or not all(declared_props(schema, label) for label in labels):
             return None
         return {label: known.get(label) or self._resolve_prop_dict(label, {}, kind) for label in sorted(labels)}
 
@@ -517,10 +429,7 @@ class Neo4jBatchWriter:
 
     def write_nodes(self, nodes: DataFrame, force: bool = False) -> bool:
         """NODE_SCHEMA DataFrame -> part files + headers. Returns True."""
-        nodes = nodes.filter(F.col("node_id").isNotNull())
-        nodes = self._dedup_against_seen(
-            nodes.withColumn("_key", F.col("node_id")), ["_key"], "_seen_nodes", "node", "node_label"
-        ).drop("_key")
+        nodes = self._admit("_seen_nodes", nodes.filter(F.col("node_id").isNotNull()))
 
         def line_for(label: str, props: dict) -> Column:
             return node_line_expr(
@@ -535,7 +444,7 @@ class Neo4jBatchWriter:
             )
 
         self._write_by_label(nodes, "node", line_for)
-        self._release_earlier_row_pins("_seen_nodes")
+        self.key_spaces["_seen_nodes"].release_earlier_row_pins()
         self._write_node_headers()
         return True
 
@@ -594,26 +503,13 @@ class Neo4jBatchWriter:
 
         all_edges = plain
         if ran_nodes is not None:
-            ran_nodes = self._dedup_against_seen(
-                ran_nodes.withColumn("_key", F.col("node_id")).withColumn("_klabel", F.col("node_label")),
-                ["_klabel", "_key"],
-                "_seen_ran",
-                "edge",
-                "node_label",
-            ).drop("_key", "_klabel")
-            ran_nodes, ran_edges = ran_surviving_edges(ran_nodes, ran_edges)
+            ran_nodes, ran_edges = ran_surviving_edges(self._admit("_seen_ran", ran_nodes), ran_edges)
             if ran_nodes.limit(1).count() > 0:
                 self.write_nodes(ran_nodes)
             all_edges = plain.unionByName(ran_edges) if plain is not None else ran_edges
 
         all_edges = all_edges.filter(F.col("source_id").isNotNull() & F.col("target_id").isNotNull())
-        all_edges = self._dedup_against_seen(
-            all_edges.withColumn("_key", edge_dedup_key()).withColumn("_klabel", F.col("relationship_label")),
-            ["_klabel", "_key"],
-            "_seen_edges",
-            "edge",
-            "relationship_label",
-        ).drop("_key", "_klabel")
+        all_edges = self._admit("_seen_edges", all_edges)
 
         def line_for(label: str, props: dict) -> Column:
             return edge_line_expr(
@@ -629,7 +525,8 @@ class Neo4jBatchWriter:
             )
 
         self._write_by_label(all_edges, "edge", line_for)
-        self._release_earlier_row_pins("_seen_ran", "_seen_edges")
+        for space in ("_seen_ran", "_seen_edges"):
+            self.key_spaces[space].release_earlier_row_pins()
         self._write_edge_headers()
         return True
 

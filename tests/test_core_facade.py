@@ -219,3 +219,121 @@ def test_inmemory_prop_union_across_rows(spark, tmp_path, schema_path):
     assert "taxon" in mirna.columns
     rows = {r["id"]: r for r in mirna.collect()}
     assert rows["m2"]["taxon"] == 9606 and rows["m1"]["taxon"] is None
+
+
+def test_in_memory_add_pins_only_kept_rows(bc, monkeypatch):
+    """Each add() pins the rows it keeps and nothing else: the cumulative
+    seen keys are not re-checkpointed per call, which would cost O(all ids
+    added so far) on every add()."""
+    from biocypher_spark import inmemory
+
+    real = inmemory.materialize
+    pinned = []
+    monkeypatch.setattr(inmemory, "materialize", lambda df: pinned.append(df) or real(df))
+    per_call = []
+    for n in (2, 4, 6):
+        before = len(pinned)
+        bc.add(protein_nodes(n))
+        per_call.append(len(pinned) - before)
+    assert all(c <= 1 for c in per_call), per_call
+    assert bc.get_kg()["protein"].count() == 6
+
+
+def _protein(i):
+    return (i, "protein", {"score": 1.0, "name": i, "taxon": 9606, "genes": []})
+
+
+def _ran(i, src, tgt):
+    return (i, src, tgt, "post_translational", {"directed": True, "effect": -1})
+
+
+def _perturbed(i, src, tgt):
+    return (i, src, tgt, "protein_disease", {"residue": "T253", "level": 4})
+
+
+# three (nodes, edges) calls: in-call and cross-call node replays, replayed
+# edges and rel-as-node triplets, and a reified id (i1) that first arrived
+# as a plain protein node
+_THREE_CALLS = [
+    (
+        [_protein("p1"), _protein("p2"), _protein("p1"), _protein("i1")],
+        [_perturbed("prel1", "p1", "p2"), _perturbed("prel1", "p1", "p2")],
+    ),
+    (
+        [_protein("p2"), _protein("p3")],
+        [_perturbed("prel1", "p1", "p2"), _perturbed("prel2", "p2", "p3"), _ran("i1", "p1", "p2"), _ran("i2", "p2", "p3")],
+    ),
+    (
+        [_protein("p3"), _protein("p4")],
+        [_ran("i2", "p2", "p3"), _ran("i3", "p3", "p4"), _ran("i3", "p3", "p4"), _perturbed("prel3", "p3", "p4")],
+    ),
+]
+
+
+def test_in_memory_kg_keeps_what_the_batch_writer_writes(spark, schema_path, tmp_path):
+    """The batch writer and InMemoryKG run the same first-wins key spaces:
+    fed the same calls they keep the same node ids, edges and rel-as-node
+    helper edges. A reified id that first arrived as a plain node is a node
+    duplicate (D1), but its triplet is new in the (type, id) space (D3), so
+    both keep its helper edges."""
+    from biocypher_spark.writer.base import pascal_file_label
+
+    written = BioCypherSpark(spark, output_directory=str(tmp_path / "csv"), schema_config_path=schema_path)
+    in_memory = BioCypherSpark(spark, output_directory=str(tmp_path / "mem"), schema_config_path=schema_path)
+    for nodes, edges in _THREE_CALLS:
+        written.write_nodes(nodes)
+        written.write_edges(edges)
+        in_memory.add(nodes)
+        in_memory.add(edges)
+
+    def lines(labels):
+        for label in labels:
+            for part in written.writer.parts[pascal_file_label(label)]:
+                yield from open(tmp_path / "csv" / part).read().splitlines()
+
+    csv_nodes = {line.split(";")[0] for line in lines(written.writer.node_property_dict)}
+    csv_edges = {
+        (f[-1].strip("'"), f[0], f[-2]) for f in (line.split(";") for line in lines(written.writer.edge_property_dict))
+    }
+    kg = in_memory.get_kg()
+    kg_nodes = {r["node_id"] for df in kg.values() if "node_id" in df.columns for r in df.collect()}
+    kg_edges = {
+        (r["relationship_label"], r["source_id"], r["target_id"])
+        for df in kg.values()
+        if "source_id" in df.columns
+        for r in df.collect()
+    }
+    assert csv_nodes == kg_nodes == {"p1", "p2", "p3", "p4", "i1", "i2", "i3"}
+    assert csv_edges == kg_edges == {
+        ("PERTURBED_IN_DISEASE", "p1", "p2"),
+        ("PERTURBED_IN_DISEASE", "p2", "p3"),
+        ("PERTURBED_IN_DISEASE", "p3", "p4"),
+        ("IS_SOURCE_OF", "p1", "i1"),
+        ("IS_TARGET_OF", "p2", "i1"),
+        ("IS_SOURCE_OF", "p2", "i2"),
+        ("IS_TARGET_OF", "p3", "i2"),
+        ("IS_SOURCE_OF", "p3", "i3"),
+        ("IS_TARGET_OF", "p4", "i3"),
+    }
+    # i1 stays the protein it first arrived as
+    assert {r["node_id"] for r in kg["protein"].collect()} == {"p1", "p2", "p3", "p4", "i1"}
+
+
+def test_in_memory_label_as_edge_uses_declared_props(spark, tmp_path):
+    """A class routed under its label_as_edge gets its declared property
+    types in the in-memory KG, as in the batch writer's header."""
+    schema = {
+        "protein": {"represented_as": "node", "input_label": "protein", "properties": {"name": "str"}},
+        "interaction": {
+            "represented_as": "edge",
+            "input_label": "interacts",
+            "label_as_edge": "INTERACTS_WITH",
+            "properties": {"score": "float"},
+        },
+    }
+    bc = BioCypherSpark(spark, output_directory=str(tmp_path), schema=schema)
+    edges = [("e1", "p1", "p2", "interacts", {"score": 1})]
+    bc.add(edges)
+    assert dict(bc.get_kg()["INTERACTS_WITH"].dtypes)["score"] == "double"
+    bc.write_edges(edges)
+    assert "score:double" in open(tmp_path / "INTERACTS_WITH-header.csv").read().split(";")

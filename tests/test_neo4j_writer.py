@@ -295,11 +295,12 @@ def test_uri_output_dir_rejected_across_writers(spark, schema_path):
 
 
 def test_duplicate_metrics_chain_collapses(spark, bw):
-    """The duplicate-metrics frames must not grow one lazy union layer per
-    writer call forever: every _DUP_COLLAPSE appends the chain is
-    distinct-ed and pinned, so a long-running stream's eventual metrics
-    evaluation pays a bounded plan, and set semantics still hold through
-    the accessors."""
+    """The duplicate-metrics frames of a writer that is never repointed
+    (such as the facade's) must not grow one lazy union layer per call
+    forever: every _DUP_COLLAPSE appends the chain is distinct-ed and
+    pinned, so the eventual metrics evaluation pays a bounded plan, and set
+    semantics still hold through the accessors. stream_kg never reaches a
+    collapse: repoint_state clears the chain lengths at every state write."""
     rows = [("node", "protein", f"p{i % 7}") for i in range(3)]
     df = spark.createDataFrame(rows, "kind string, label string, dup_id string")
     for _ in range(2 * bw._DUP_COLLAPSE + 3):
@@ -391,26 +392,23 @@ def test_first_wins_dedup_across_calls(spark, schema_path, tmp_path):
         ("node", "protein", "p1"),   # call-2 cross-call replay of p1
         ("node", "protein", "p3"),   # call-2 in-call dup
     ]
-    assert sorted(r["_key"] for r in w._seen_nodes.collect()) == ["p1", "p2", "p3"]
+    assert sorted(r["_key"] for r in w.key_spaces["_seen_nodes"].seen.collect()) == ["p1", "p2", "p3"]
 
 
 def test_dedup_against_seen_starts_no_job(spark, schema_path, tmp_path):
     """With seen state from an earlier call, the dedup only builds plans:
     its caches are filled by the jobs that consume them (the part write)."""
-    from pyspark.sql import functions as F
-
     translator = SparkTranslator(spark, NullOntology(SchemaMapping(schema_path)))
     w = Neo4jBatchWriter(spark, translator, str(tmp_path), ordered_parts=False, track_seen=True)
     w.write_nodes(translator.translate_nodes(nodes_from_tuples(spark, protein_nodes(2))).nodes)
-    assert w._seen_nodes is not None
+    assert w.key_spaces["_seen_nodes"].seen is not None
     nodes = translator.translate_nodes(nodes_from_tuples(spark, protein_nodes(4))).nodes
-    nodes = nodes.withColumn("_key", F.col("node_id"))
 
     sc = spark.sparkContext
     group = "test-dedup-against-seen"
     sc.setJobGroup(group, "dedup against existing seen state")
     try:
-        w._dedup_against_seen(nodes, ["_key"], "_seen_nodes", "node", "node_label")
+        w.key_spaces["_seen_nodes"].admit(nodes)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)

@@ -65,7 +65,7 @@ def main() -> None:
     t = SparkTranslator(spark, NullOntology(SchemaMapping(schema)))
     nodes_in = nodes_from_tuples(spark, [("p1", "protein", {"name": "x", "score": 1.0, "taxon": 1, "genes": []})])
     translated = t.translate_nodes(nodes_in).nodes
-    deduped = dedup_nodes(translated).kept
+    deduped = dedup_nodes(translated)
     transcripts = generate_transcripts(spark, 1000)
     mentions = extract_mentions(transcripts)
     linked = link_mentions(mentions)
@@ -76,7 +76,8 @@ def main() -> None:
     sf = "/root/testdata/sf0.001"
     sections = {
         "Translate (broadcast join, no shuffle)": translated,
-        "Dedup (single hash-partition window)": deduped,
+        "Dedup (single hash-partition window)": deduped.kept,
+        "Dedup duplicate rows (the same window folds each key's duplicate labels; no distinct)": deduped.duplicates,
         "Extraction (built-in regexp, codegen)": mentions,
         "Linking (blocked similarity join + broadcast map-back)": linked,
         "Q3-style join (dimension broadcast)": q3_top_orders(spark, sf),
