@@ -57,11 +57,11 @@ def edge_dedup_key() -> F.Column:
 
 # the three key spaces of the reference's Deduplicator, by the name their
 # seen keys carry in stream state: (metrics kind, label column, key column
-# (None: edge_dedup_key), keyed per label)
+# (None: edge_dedup_key), keyed per label, columns a sink needs non-NULL)
 _SPACES = {
-    "_seen_nodes": ("node", "node_label", "node_id", False),  # D1: node id, global across labels
-    "_seen_edges": ("edge", "relationship_label", None, True),  # D2: (type, edge key)
-    "_seen_ran": ("edge", "node_label", "node_id", True),  # D3: (type, reified id)
+    "_seen_nodes": ("node", "node_label", "node_id", False, ("node_id",)),  # D1: node id, global across labels
+    "_seen_edges": ("edge", "relationship_label", None, True, ("source_id", "target_id")),  # D2: (type, edge key)
+    "_seen_ran": ("edge", "node_label", "node_id", True, ()),  # D3: (type, reified id)
 }
 
 
@@ -78,7 +78,7 @@ class KeySpace:
     next call consumed them, and every pin by :meth:`release_pins`."""
 
     def __init__(self, name: str, track_seen: bool = False):
-        self.kind, self.label_col, self._key_col, per_label = _SPACES[name]
+        self.kind, self.label_col, self._key_col, per_label, self._sink_keys = _SPACES[name]
         self.key_cols = ["_klabel", "_key"] if per_label else ["_key"]
         self.track_seen = track_seen
         self.seen: Optional[DataFrame] = None
@@ -148,6 +148,15 @@ class KeySpace:
         self.seen = new_keys if self.seen is None else self.seen.unionByName(new_keys)
         self._delta = new_keys if self._delta is None else self._delta.unionByName(new_keys)
         return kept.drop(*self.key_cols), dups
+
+    def admit_writable(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """:meth:`admit` over the rows a sink can write: a node with a NULL
+        id (D1) or an edge with a NULL endpoint (D2) is dropped first. The
+        batch writer and ``InMemoryKG`` admit through here; the one-shot
+        ``dedup_*`` calls keep such rows (see :func:`edge_dedup_key`)."""
+        for c in self._sink_keys:
+            df = df.filter(F.col(c).isNotNull())
+        return self.admit(df)
 
     def take_delta(self) -> Optional[DataFrame]:
         """Hand over (and clear) the keys admitted since the last call."""

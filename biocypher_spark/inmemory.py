@@ -59,7 +59,7 @@ class InMemoryKG:
     def _admit(self, space: str, df: DataFrame) -> DataFrame:
         """The rows of ``df`` the key space ``space`` admits, pinned: the
         per-type frames built from them outlive the spaces' row pins."""
-        kept = materialize(self.key_spaces[space].admit(df)[0])
+        kept = materialize(self.key_spaces[space].admit_writable(df)[0])
         # the pin just evaluated every anti-join of this call, so the
         # earlier calls' row pins have fed the key pins they back
         for keys in self.key_spaces.values():
@@ -113,7 +113,7 @@ class InMemoryKG:
         with the plain edges (D2)."""
         if isinstance(edges, TranslatedEdges):
             ran_nodes, ran_edges = ran_surviving_edges(
-                self.key_spaces["_seen_ran"].admit(edges.ran_nodes)[0], edges.ran_edges
+                self.key_spaces["_seen_ran"].admit_writable(edges.ran_nodes)[0], edges.ran_edges
             )
             if ran_nodes.limit(1).count() > 0:
                 self.add_nodes(ran_nodes)

@@ -1,13 +1,16 @@
-"""Training-data text operators: dedup family, language ID, quality scoring,
-token counting, fingerprinting (large-scale pipeline extensions; task brief).
+"""Training-data text operators: the dedup family, the one-pass text profile
+(language ID, quality scoring, token counts, fingerprint), hygiene screens.
 
 All operators are built-in column expressions (whole-stage codegen). Hash
 flavored operators use md5, which is identical in Spark and DuckDB, so every
 operator here is oracle-checkable. Floats are rounded to 6 decimals.
 
 Scale notes: exact dedup and minhash grouping are single hash shuffles on
-the signature; the pairwise n-gram Jaccard is *blocked* (lang, length
-bucket) to stay sub-quadratic; simhash is a linear scan.
+the signature; every near-duplicate pair operator (pairs, star and
+cross-corpus minhash, SimHash Hamming) runs the one band join
+:func:`_band_join` and the minhash ones the one exact verify
+:func:`_verify_hashed_jaccard`, so none is quadratic beyond its LSH
+buckets; simhash is a linear scan.
 """
 
 from __future__ import annotations
@@ -59,17 +62,6 @@ def _exploded_tokens_or_sentinel(df: DataFrame, text_col: str) -> DataFrame:
 def _subword_count(text: Column) -> Column:
     # BPE-ish proxy: alphanumeric runs + punctuation marks counted separately
     return F.size(F.regexp_extract_all(text, F.lit(r"[a-zA-Z0-9]+|[^a-zA-Z0-9\s]"), F.lit(0)))
-
-
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace + BPE-ish subword counting."""
-    toks = tokens(F.col(text_col))
-    return df.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        _subword_count(F.col(text_col)).alias("n_subwords"),
-        F.length(text_col).alias("n_chars_check"),
-    )
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -177,10 +169,61 @@ def hashed_element_set(df: DataFrame, text_col: str = "text", elements: Column |
     ).filter(F.size("_hs") > 0)
 
 
+def _band_join(
+    a: DataFrame,
+    b: DataFrame | None = None,
+    carry: dict[str, str] | None = None,
+    where: tuple[Column, ...] = (),
+    ordered: bool = True,
+    extra: tuple[Column, ...] = (),
+) -> DataFrame:
+    """The one band join of the near-duplicate family: the distinct
+    ``(doc_a, doc_b, *extra)`` rows of the ``(band, bkey)`` equi-join of
+    the doc_a band rows ``a`` with the doc_b band rows ``b`` (default:
+    ``a`` itself, a self-join). Pairs mode and SimHash self-join, star
+    mode passes its hub rows as ``a``, and the cross-corpus screen joins
+    the shard to the reference.
+
+    - ``carry``: band-row columns that ride through the join, each mapped
+      to its name template (``{}`` = side tag ``a``/``b``). Only what the
+      predicate reads rides: every carried byte is copied into each of the
+      pre-filter collision pairs.
+    - ``where``: the row-local predicates (size ratio, signature agreement
+      or Hamming distance) over ``doc_a``/``doc_b`` and the carried
+      columns, cheapest first. They run in the join's output stage, before
+      the distinct.
+    - ``ordered``: keep ``doc_a < doc_b`` only (self-joins and star mode;
+      the two sides of a cross-corpus join are different corpora)."""
+    carry = carry or {}
+
+    def side(rows: DataFrame, tag: str) -> DataFrame:
+        return rows.select(
+            "band", "bkey", F.col("doc_id").alias(f"doc_{tag}"),
+            *[F.col(c).alias(name.format(tag)) for c, name in carry.items()],
+        )
+
+    pairs = side(a, "a").join(side(a if b is None else b, "b"), ["band", "bkey"])
+    if ordered:
+        pairs = pairs.filter(F.col("doc_a") < F.col("doc_b"))
+    for pred in where:
+        pairs = pairs.filter(pred)
+    return pairs.select("doc_a", "doc_b", *extra).distinct()
+
+
+# the hashed-set size carried through a band join for the size-ratio filter
+_CARRY_N = {"_n": "_n{}"}
+
+
+def _size_ratio_at_least(t: float) -> Column:
+    """The LOSSLESS Jaccard prefilter over carried set sizes: for sets,
+    Jaccard >= t implies min/max cardinality ratio >= t."""
+    return F.least("_na", "_nb") / F.greatest("_na", "_nb") >= t
+
+
 def _star_candidates(assigned: DataFrame, size_ratio_min: float | None = None) -> DataFrame:
     """(doc_a=bucket hub, doc_b=member) star edges from a band assignment.
 
-    Hub = min doc_id per (band, bkey), computed as groupBy + join-back
+    Hub = min doc_id per (band, bkey), computed as groupBy + band join back
     rather than min-over-window: a window pins each LSH bucket to ONE sort
     task, and on the dup-dense corpora this path exists for (one
     boilerplate page duplicated millions of times = one mega-bucket) that
@@ -190,21 +233,17 @@ def _star_candidates(assigned: DataFrame, size_ratio_min: float | None = None) -
     as clean_corpus's exact-dedup stage, chosen there for the same reason.
 
     ``size_ratio_min`` (verifying callers pass their Jaccard threshold):
-    the same LOSSLESS prefilter pairs mode applies — Jaccard >= t implies
-    min/max cardinality ratio >= t for sets — so size-incompatible
-    (hub, member) edges drop BEFORE the distinct shuffle and the exact
-    verify join instead of being rejected after it. The hub's set size
-    rides out of the aggregate via min_by (no second join)."""
-    aggs = [F.min("doc_id").alias("doc_a")]
-    if size_ratio_min is not None:
-        aggs.append(F.min_by("_n", "doc_id").alias("_na"))
-    hubs = assigned.groupBy("band", "bkey").agg(*aggs)
-    joined = assigned.join(hubs, ["band", "bkey"]).filter(F.col("doc_a") < F.col("doc_id"))
-    if size_ratio_min is not None:
-        joined = joined.filter(
-            F.least("_na", "_n") / F.greatest("_na", "_n") >= size_ratio_min
-        )
-    return joined.select("doc_a", F.col("doc_id").alias("doc_b")).distinct()
+    the size-ratio prefilter of pairs mode, so size-incompatible (hub,
+    member) edges drop BEFORE the distinct shuffle and the exact verify
+    join. The hub's set size rides out of the aggregate via min_by (no
+    second join)."""
+    # the min_by is pruned from the aggregate when no filter reads it
+    hubs = assigned.groupBy("band", "bkey").agg(
+        F.min("doc_id").alias("doc_id"), F.min_by("_n", "doc_id").alias("_n")
+    )
+    if size_ratio_min is None:
+        return _band_join(hubs, assigned)
+    return _band_join(hubs, assigned, carry=_CARRY_N, where=(_size_ratio_at_least(size_ratio_min),))
 
 
 def minhash_band_star_edges(
@@ -263,11 +302,11 @@ def minhash_star_near_dup_edges(
     are not small."""
     _, assigned, hashed = _sig_band_table(df, text_col, bands, rows_per_band, elements)
     cand = materialize(_star_candidates(assigned, size_ratio_min=threshold))
-    hashed_a = None
     hub_ids = cand.select(F.col("doc_a").alias("doc_id")).distinct()
     if hub_ids.limit(_STAR_HUB_BCAST_MAX + 1).count() <= _STAR_HUB_BCAST_MAX:
-        hashed_a = hashed.join(F.broadcast(hub_ids), "doc_id", "left_semi")
-    return _verify_hashed_jaccard(cand, df, threshold, hashed=hashed, hashed_a=hashed_a)
+        hubs = hashed.join(F.broadcast(hub_ids), "doc_id", "left_semi")
+        return _verify_hashed_jaccard(cand, hubs, hashed, threshold, b_first=True)
+    return _verify_hashed_jaccard(cand, hashed, hashed, threshold)
 
 
 def minhash_band_candidates(
@@ -289,7 +328,7 @@ def minhash_band_candidates(
     round-1 scheme) made 24-seed shingle signatures the slowest headline
     query; one hash + affine transforms is ~5x faster at equal LSH quality.
 
-    Scale: each band key is a short concat, so the per-band self-join is a
+    Scale: each band key is one xxhash64 long, so the band self-join is a
     hash join with bucket sizes bounded by true similarity structure;
     candidates are deduped across bands before the (more expensive) exact
     verification. With ``est_min_matches`` > 0 each band row also carries
@@ -305,16 +344,10 @@ def minhash_band_candidates(
     ``jac >= threshold`` filter over the hashed sets — one int per row buys
     skipping the exact array join for every size-incompatible candidate.
 
-    Join-shape notes:
-    - WITHOUT the agreement prefilter the band self-join carries ONLY
-      (doc_id, _n): every extra column is copied into each of the
-      ~100x-more-numerous pre-filter collision pairs. WITH it, the sig
-      vector rides on the band rows so the (96%-selective at sf0.1)
-      agreement filter runs BEFORE the pair distinct — see
-      :func:`_band_candidates` for the round-6 measurement.
-    - Signatures are INDIVIDUAL int columns, so the agreement estimate
-      compiles to a whole-stage-codegen sum of equality flags; an array +
-      zip_with formulation runs interpreted HOF lambdas per pair.
+    Signatures are INDIVIDUAL int columns, so the agreement estimate
+    compiles to a whole-stage-codegen sum of equality flags; an array +
+    zip_with formulation runs interpreted HOF lambdas per pair. See
+    :func:`_band_candidates` for what rides through the band join.
     """
     sigs, assigned, _ = _sig_band_table(
         df, text_col, bands, rows_per_band, elements, need_hashed=False
@@ -345,27 +378,26 @@ def _band_candidates(
     est_min_matches: int,
     size_ratio_min: float | None,
 ) -> DataFrame:
-    """Candidate-pair core over a prebuilt (sigs, assigned) — see
-    :func:`minhash_band_candidates` for the algorithm and join-shape
-    rationale.
+    """Pairs-mode candidates over a prebuilt (sigs, assigned): the band
+    self-join, carrying only what its prefilters read.
 
     With the signature-agreement prefilter on (``est_min_matches`` > 0),
     the full signature vector rides ON the band rows and both prefilters
-    (size ratio, then agreement) run INLINE in the collision join's output
-    stage, BEFORE the pair distinct — both are row-local predicates, so
-    filter-then-distinct and distinct-then-filter produce the same pair
-    set, but the agreement filter is the selective one (554k -> 21k pairs
-    at sf0.1 on the shingle corpus vs the distinct removing only 10%), so
-    running it first shrinks the distinct exchange ~25x and drops the two
-    post-distinct sig-attach joins entirely (round 6: candidate stage
-    1.5-2.3 s -> ~0.6 s). The wider band rows cost bands × seeds ints per
-    doc in the band-join shuffle — linear in corpus size — traded against
-    a pair-table exchange that is quadratic in collision density."""
+    (size ratio, then agreement) run in the band join's output stage,
+    BEFORE the pair distinct. The agreement filter is the selective one
+    (554k -> 21k pairs at sf0.1 on the shingle corpus vs the distinct
+    removing only 10%), so running it first shrinks the distinct exchange
+    ~25x and needs no post-distinct sig-attach joins (round 6: candidate
+    stage 1.5-2.3 s -> ~0.6 s). The wider band rows cost bands × seeds
+    ints per doc in the band-join shuffle — linear in corpus size —
+    traded against a pair-table exchange that is quadratic in collision
+    density."""
     seeds = bands * rows_per_band
-    carry_n = size_ratio_min is not None
-    carry_sigs = est_min_matches > 0
-    rows = assigned
-    if carry_sigs:
+    rows, carry, where = assigned, {}, []
+    if size_ratio_min is not None:
+        # cheapest filter first: two int comparisons per collision pair
+        carry, where = dict(_CARRY_N), [_size_ratio_at_least(size_ratio_min)]
+    if est_min_matches > 0:
         # rebuild the band rows WITH the sig columns from the pinned narrow
         # sig table (one extra consumer of the pin, no extra scan of the
         # fat hashed table)
@@ -373,26 +405,13 @@ def _band_candidates(
         rows = sigs.select("doc_id", "_n", *sig_cols,
                            F.explode(_band_struct_array(bands, rows_per_band)).alias("bk")).select(
             "doc_id", "_n", *sig_cols, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
-
-    def side(tag: str) -> DataFrame:
-        # only the columns a prefilter reads ride through the self-join
-        return rows.select(
-            "band", "bkey", F.col("doc_id").alias(f"doc_{tag}"),
-            *([F.col("_n").alias(f"_n{tag}")] if carry_n else []),
-            *([F.col(f"sig{i}").alias(f"_{tag}{i}") for i in range(seeds)] if carry_sigs else []),
-        )
-
-    pairs = side("a").join(side("b"), ["band", "bkey"]).filter(F.col("doc_a") < F.col("doc_b"))
-    if carry_n:
-        # cheapest filter first: two int comparisons per collision pair
-        pairs = pairs.filter(F.least("_na", "_nb") / F.greatest("_na", "_nb") >= size_ratio_min)
-    if carry_sigs:
+        carry.update({c: f"_{{}}{i}" for i, c in enumerate(sig_cols)})
         agree = sum(
             (F.when(F.col(f"_a{i}") == F.col(f"_b{i}"), 1).otherwise(0) for i in range(seeds)),
             start=F.lit(0),
         )
-        pairs = pairs.filter(agree >= est_min_matches)
-    return pairs.select("doc_a", "doc_b").distinct()
+        where.append(agree >= est_min_matches)
+    return _band_join(rows, carry=carry, where=tuple(where))
 
 
 def _est_min_matches(threshold: float, est_slack: float, seeds: int) -> int:
@@ -422,36 +441,35 @@ def minhash_banded_pairs(
     emm = _est_min_matches(threshold, est_slack, bands * rows_per_band)
     sigs, assigned, hashed = _sig_band_table(df, text_col, bands, rows_per_band)
     cand = _band_candidates(sigs, assigned, bands, rows_per_band, emm, threshold)
-    return _verify_hashed_jaccard(cand, df, threshold, hashed=hashed)
+    return _verify_hashed_jaccard(cand, hashed, hashed, threshold)
 
 
 def _verify_hashed_jaccard(
     cand: DataFrame,
-    df: DataFrame,
+    hashed_a: DataFrame,
+    hashed_b: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    elements: Column | None = None,
-    hashed: DataFrame | None = None,
-    hashed_a: DataFrame | None = None,
+    b_first: bool = False,
 ) -> DataFrame:
-    """Exact Jaccard re-score of candidate pairs over the hashed element
-    sets; |A ∪ B| = |A| + |B| - |A ∩ B| for sets, so one hash-set build per
-    pair instead of two (array_union was half the verify cost). Pass
-    ``hashed`` (a (doc_id, _hs) frame, e.g. the checkpointed sig table's
-    columns) to verify WITHOUT re-tokenizing the corpus; ``hashed_a``
-    optionally overrides the doc_a side with a pre-pruned (small) frame —
-    star mode prunes it to hub ids. With a pruned a-side the member side
-    joins FIRST: the one unavoidable corpus-fat exchange then happens on
-    narrow candidate rows, and the a-side attach is broadcast-convertible
-    instead of a second shuffle of the array-widened intermediate."""
-    base = hashed if hashed is not None else hashed_element_set(df, text_col=text_col, elements=elements)
-    ta = (hashed_a if hashed_a is not None else base).select(
-        F.col("doc_id").alias("doc_a"), F.col("_hs").alias("_sa")
-    )
-    tb = base.select(F.col("doc_id").alias("doc_b"), F.col("_hs").alias("_sb"))
+    """The one exact verify of the near-duplicate family: (doc_a, doc_b,
+    jac) for the candidate pairs whose hashed element sets have Jaccard
+    (rounded to 6 places) >= ``threshold``.
+
+    ``hashed_a``/``hashed_b`` are the (doc_id, _hs) sets of each side: the
+    corpus's pinned table on both sides in pairs mode, a hub-pruned a side
+    in star mode, and the shard's pinned table against the reference's
+    candidate-only re-read in a cross-corpus screen. |A ∪ B| = |A| + |B| -
+    |A ∩ B| for sets, so one hash-set build per pair instead of two
+    (array_union was half the verify cost). ``b_first`` joins the b side
+    first — for a pruned a side: the one unavoidable corpus-fat exchange
+    then happens on narrow candidate rows, and the a-side attach is
+    broadcast-convertible instead of a second shuffle of the array-widened
+    intermediate."""
+    ta = hashed_a.select(F.col("doc_id").alias("doc_a"), F.col("_hs").alias("_sa"))
+    tb = hashed_b.select(F.col("doc_id").alias("doc_b"), F.col("_hs").alias("_sb"))
     joined = (
         cand.join(tb, "doc_b").join(ta, "doc_a")
-        if hashed_a is not None
+        if b_first
         else cand.join(ta, "doc_a").join(tb, "doc_b")
     )
     inner = (
@@ -467,39 +485,53 @@ def _verify_hashed_jaccard(
     return inner.select("doc_a", "doc_b", jac.alias("jac")).filter(F.col("jac") >= threshold)
 
 
-def simhash(df: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -> DataFrame:
-    """SimHash over the token multiset: bit i set when the sum of ±1 votes
-    from md5-derived token bits is >= 0. Returns (doc_id, simhash).
+def _simhash_votes(df: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, _s0.._s63): per doc, the sums of the 64 SimHash ±1 votes
+    over the token multiset; vote i is bit ``3 - i%4`` of the token's md5
+    hex digit ``i//4 + 1``. :func:`simhash` and :func:`simhash64` are
+    projections of these sums; for ``simhash`` Catalyst prunes the unused
+    sums and the ``_w1`` conversion from the aggregate.
 
-    Same shape as :func:`simhash64` (explode -> md5 once per token -> the
-    first ``bits/4`` hex digits packed into ONE int via conv() -> a single
-    hash aggregate with ``bits`` sum() expressions whose votes are
-    shift/mask extractions). Spark's higher-order-function lambdas evaluate
-    interpreted, outside whole-stage codegen, so the previous 16 per-bit
-    ``F.aggregate`` folds were ~6x slower than this exploded groupBy. Bit
-    semantics are unchanged (bit i = bit ``3 - i%4`` of hex digit
-    ``i//4 + 1``) — the DuckDB oracle still computes the digit-decode form.
-    """
-    assert bits % 4 == 0 and bits <= 32
-    ndigits = bits // 4
-    packed = _exploded_tokens_or_sentinel(df, text_col).select(
-        "doc_id", F.conv(F.substring(F.md5("_t"), 1, ndigits), 16, 10).cast("long").alias("_w")
+    Shape: explode tokens -> md5 once per token -> the first 16 hex digits
+    packed into TWO 32-bit ints (one conv each) -> ONE hash aggregate whose
+    votes are shift/mask extractions of those ints. Spark's
+    higher-order-function lambdas evaluate interpreted (outside whole-stage
+    codegen), so per-bit array aggregates are ~6x slower than this
+    exploded groupBy; extracting bits from packed ints instead of separate
+    instr+substring digit decodes is another ~2x. The bits are identical
+    to the digit-decode formulation, which is what the DuckDB oracle still
+    computes. A doc with no tokens (null/empty text -> the sentinel null
+    token, whose votes are null) gets null sums: both projections map them
+    to the all-zero hash, so every input doc keeps exactly one row."""
+    exploded = _exploded_tokens_or_sentinel(df, text_col).select("doc_id", F.md5("_t").alias("_h"))
+    packed = exploded.select(
+        "doc_id",
+        F.conv(F.substring("_h", 1, 8), 16, 10).cast("long").alias("_w0"),
+        F.conv(F.substring("_h", 9, 8), 16, 10).cast("long").alias("_w1"),
     )
 
     def vote(i: int) -> Column:
         digit = i // 4 + 1  # 1-based hex digit position
         shift = 3 - i % 4  # bit within the digit
-        offset = 4 * (ndigits - digit) + shift
-        return F.shiftright(F.col("_w"), offset).bitwiseAND(F.lit(1)) * 2 - 1
+        word = F.col("_w0") if digit <= 8 else F.col("_w1")
+        offset = 4 * (8 - ((digit - 1) % 8) - 1) + shift
+        return F.shiftright(word, offset).bitwiseAND(F.lit(1)) * 2 - 1
 
-    sums = packed.groupBy("doc_id").agg(*[F.sum(vote(i)).alias(f"_s{i}") for i in range(bits)])
-    total = F.lit(0)
-    for i in range(bits):
-        # null sums (doc had no tokens: null/empty text -> the sentinel
-        # null token, whose votes are null) fall through every WHEN ->
-        # simhash 0; every input doc keeps exactly one output row
-        total = total + F.when(F.col(f"_s{i}") >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sums.select("doc_id", total.alias("simhash"))
+    return packed.groupBy("doc_id").agg(*[F.sum(vote(i)).alias(f"_s{i}") for i in range(64)])
+
+
+def _vote_bit(i: int, value: int) -> Column:
+    """``value`` when vote sum i is >= 0, else 0 (a null sum included)."""
+    return F.when(F.col(f"_s{i}") >= 0, F.lit(value)).otherwise(F.lit(0))
+
+
+def simhash(df: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -> DataFrame:
+    """SimHash over the token multiset as an int: bit i set when vote sum i
+    of :func:`_simhash_votes` is >= 0 — the low ``bits`` bits of
+    :func:`simhash64`, read as an integer. Returns (doc_id, simhash)."""
+    assert bits % 4 == 0 and bits <= 32
+    total = sum((_vote_bit(i, 1 << i) for i in range(bits)), start=F.lit(0))
+    return _simhash_votes(df, text_col).select("doc_id", total.alias("simhash"))
 
 
 def ngram_jaccard_pairs(
@@ -526,7 +558,7 @@ def ngram_jaccard_pairs(
     emm = _est_min_matches(threshold, est_slack, bands * rows_per_band)
     sigs, assigned, hashed = _sig_band_table(df, text_col, bands, rows_per_band, elements=sh)
     cand = _band_candidates(sigs, assigned, bands, rows_per_band, emm, threshold)
-    return _verify_hashed_jaccard(cand, df, threshold, hashed=hashed)
+    return _verify_hashed_jaccard(cand, hashed, hashed, threshold)
 
 
 _HEX = "0123456789abcdef"
@@ -537,46 +569,12 @@ def simhash64(df: DataFrame, text_col: str = "text") -> DataFrame:
     """64-bit SimHash over the token multiset, emitted as a 16-char hex
     string (hex avoids the signed-bigint overflow of bit 63 and is
     engine-portable). Bit i (nibble k = i//4, bit j = i%4 within the nibble)
-    is set when the ±1 votes from md5 hex digit k+1 sum >= 0.
-
-    Shape: explode tokens -> md5 once per token -> the first 16 hex digits
-    packed into TWO 32-bit ints (one conv each) -> ONE hash aggregate with
-    64 sum() expressions whose votes are shift/mask extractions of those
-    ints. Spark's higher-order-function lambdas evaluate interpreted
-    (outside whole-stage codegen), so 64 per-bit array aggregates are ~6x
-    slower than this exploded groupBy; extracting bits from packed ints
-    instead of 64 separate instr+substring digit decodes is another ~2x.
-    The emitted bits are identical to the digit-decode formulation (bit i =
-    bit ``3 - i%4`` of hex digit ``i//4 + 1``), which is what the DuckDB
-    oracle still computes."""
-    exploded = _exploded_tokens_or_sentinel(df, text_col).select("doc_id", F.md5("_t").alias("_h"))
-    packed = exploded.select(
-        "doc_id",
-        F.conv(F.substring("_h", 1, 8), 16, 10).cast("long").alias("_w0"),
-        F.conv(F.substring("_h", 9, 8), 16, 10).cast("long").alias("_w1"),
-    )
-
-    def vote(i: int) -> Column:
-        digit = i // 4 + 1  # 1-based hex digit position
-        shift = 3 - i % 4  # bit within the digit
-        word = F.col("_w0") if digit <= 8 else F.col("_w1")
-        offset = 4 * (8 - ((digit - 1) % 8) - 1) + shift
-        return F.shiftright(word, offset).bitwiseAND(F.lit(1)) * 2 - 1
-
-    sums = packed.groupBy("doc_id").agg(
-        *[F.sum(vote(i)).alias(f"_s{i}") for i in range(64)]
-    )
+    is set when vote sum i of :func:`_simhash_votes` is >= 0."""
     nibbles = []
     for k in range(16):
-        val = F.lit(0)
-        for j in range(4):
-            i = k * 4 + j
-            val = val + F.when(F.col(f"_s{i}") >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+        val = sum((_vote_bit(4 * k + j, 1 << j) for j in range(4)), start=F.lit(0))
         nibbles.append(F.substr(F.lit(_HEX), val + 1, F.lit(1)))
-    # null sums (doc had no tokens: null/empty text -> the sentinel null
-    # token) take every otherwise() branch -> the all-zero hash; every
-    # input doc keeps exactly one output row
-    return sums.select("doc_id", F.concat(*nibbles).alias("simhash64"))
+    return _simhash_votes(df, text_col).select("doc_id", F.concat(*nibbles).alias("simhash64"))
 
 
 def simhash_near_dup(df: DataFrame, text_col: str = "text", max_hamming: int = 3, bands: int = 4) -> DataFrame:
@@ -631,24 +629,15 @@ def simhash_near_dup(df: DataFrame, text_col: str = "text", max_hamming: int = 3
         ],
         F.explode(F.array(*band_structs)).alias("bk"),
     ).select("doc_id", "_w0", "_w1", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
-    a = words.select(
-        "band", "bkey", F.col("doc_id").alias("doc_a"), F.col("_w0").alias("_a0"), F.col("_w1").alias("_a1")
-    )
-    c = words.select(
-        "band", "bkey", F.col("doc_id").alias("doc_b"), F.col("_w0").alias("_b0"), F.col("_w1").alias("_b1")
-    )
     hamming = F.lit(0)
     for w in range(2):
         x = F.col(f"_a{w}").bitwiseXOR(F.col(f"_b{w}"))
         for k in range(8):
             nib = F.shiftright(x, 4 * k).bitwiseAND(F.lit(15))
             hamming = hamming + F.substr(F.lit(_POPCOUNT4), nib + 1, F.lit(1)).cast("int")
-    return (
-        a.join(c, ["band", "bkey"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    return _band_join(
+        words, carry={"_w0": "_{}0", "_w1": "_{}1"}, where=(hamming <= max_hamming,),
+        extra=(hamming.alias("hamming"),),
     )
 
 
@@ -682,26 +671,6 @@ def _quality_exprs(toks: Column, text: Column) -> tuple[Column, Column]:
     return stop_ratio, score
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Marker-word language ID: argmax marker count, alphabetical tie-break,
-    'und' (undetermined) when no marker hits."""
-    toks = tokens(F.col(text_col))
-    return df.select("doc_id", _lang_pred(toks).alias("lang_pred"))
-
-
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic document quality: token count, stopword ratio, punctuation
-    density -> score in [0, 1]."""
-    toks = tokens(F.col(text_col))
-    stop_ratio, score = _quality_exprs(toks, F.col(text_col))
-    return df.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.round(stop_ratio, 6).alias("stop_ratio"),
-        F.round(score, 6).alias("score"),
-    )
-
-
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Document fingerprint: 64-bit prefix of md5 (content-addressed id)."""
     return df.select("doc_id", F.substring(F.md5(text_col), 1, 16).alias("fp"))
@@ -710,10 +679,9 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     """ONE-PASS per-document profile: token/subword/char counts, marker
     language ID, quality signals, and content fingerprint — all row-local
-    column expressions in a single select over one scan. Composing the four
-    single-purpose operators would cost three doc_id shuffle joins for
-    columns that never leave their row; at 100 TB those joins move the
-    whole profile table three times for nothing."""
+    column expressions in a single select over one scan. Computing the four
+    signal groups as separate per-doc frames would cost three doc_id
+    shuffle joins for columns that never leave their row."""
     text = F.col(text_col)
     toks = tokens(text)
     stop_ratio, score = _quality_exprs(toks, text)
@@ -1131,43 +1099,6 @@ def _sig_band_table(
     return sigs, assigned, (hashed if need_hashed else None)
 
 
-REFERENCE_SIGS_COLUMNS = ("doc_id", "_n", "band", "bkey")
-
-
-def reference_band_sigs(
-    reference: DataFrame,
-    text_col: str = "text",
-    bands: int = 4,
-    rows_per_band: int = 3,
-) -> DataFrame:
-    """Precompute a reference corpus's banded minhash signature table for
-    REPEATED cross-corpus screens (columns ``doc_id, _n, band, bkey``).
-
-    Every :func:`near_dedup_against` call otherwise re-tokenizes the full
-    reference to derive its signatures — one linear scan of the 100 TB
-    side per screened shard. Computing this table once and persisting it
-    turns each recurring screen into a hash join against ~``bands`` narrow
-    rows per reference doc. For a standing screening service, write it
-    bucketed on the join keys so the repeated joins run with zero Exchange
-    on the reference side::
-
-        reference_band_sigs(ref).write.bucketBy(256, "band", "bkey") \\
-            .sortBy("band", "bkey").saveAsTable("ref_sigs")
-
-    (see ``operators/bucketing.py`` for the bucketed-join plan contract).
-    The table must be built with the SAME ``bands``/``rows_per_band`` as
-    the screens that consume it — band keys from different banding
-    parameters never collide correctly, they just miss candidates.
-    """
-    # lazy end-to-end (pin_sigs=False): the caller's write/persist is the
-    # single consumer, so an eager localCheckpoint before it would double
-    # the work
-    _, br, _ = _sig_band_table(
-        reference, text_col, bands, rows_per_band, need_hashed=False, pin_sigs=False
-    )
-    return br.select(*REFERENCE_SIGS_COLUMNS)
-
-
 def near_dedup_against(
     df: DataFrame,
     reference: DataFrame,
@@ -1175,13 +1106,13 @@ def near_dedup_against(
     threshold: float = 0.8,
     bands: int = 4,
     rows_per_band: int = 3,
-    reference_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-corpus NEAR dedup: flag documents of ``df`` whose hashed token
-    set has Jaccard >= ``threshold`` with ANY document of ``reference``
-    (banded-minhash candidates between the two corpora, lossless
-    size-ratio prefilter, exact hashed-set verification). Returns
-    (doc_id, dup_of_ref) for every ``df`` row.
+    set has Jaccard (rounded to 6 places, as in every verify here) >=
+    ``threshold`` with ANY document of ``reference`` (banded-minhash
+    candidates between the two corpora, lossless size-ratio prefilter,
+    exact hashed-set verification). Returns (doc_id, dup_of_ref) for every
+    ``df`` row.
 
     Scale shape mirrors :func:`minhash_band_candidates`, asymmetric by
     design: the SHARD side (``df``, bounded by contract) pins its hashed
@@ -1193,71 +1124,29 @@ def near_dedup_against(
     reference's text is scanned once in full (signatures) plus one
     id-pruned re-read of candidate rows — bounded memory beats saving a
     linear scan at that scale. Candidates come from a hash join on short
-    band keys; bodies never shuffle on either side.
-
-    ``reference_sigs``: a precomputed :func:`reference_band_sigs` table
-    (built with the SAME bands/rows_per_band). When given, the reference
-    text is NOT re-tokenized for signatures — its only remaining scan is
-    the id-semi-joined candidate verify — which amortizes the recurring
-    100-TB screen across shards. Persist it bucketed on (band, bkey) to
-    also drop the reference-side Exchange from every screen's join."""
+    band keys; bodies never shuffle on either side."""
     # pin_sigs=False on BOTH sides: each side's band table feeds exactly one
     # join (the cross-corpus candidate join inside the pairs pin), so the
     # sig projections evaluate lazily inside that one job — two fewer eager
     # pin jobs per screen with identical downstream plans. The shard's FAT
     # hashed table stays pinned (its verify join reads it; one tokenize
     # pass per shard, the round-3 invariant).
-    _, ba, hha = _sig_band_table(df, text_col, bands, rows_per_band, pin_sigs=False)
-    if reference_sigs is not None:
-        missing = [c for c in REFERENCE_SIGS_COLUMNS if c not in reference_sigs.columns]
-        if missing:
-            raise ValueError(
-                f"reference_sigs is missing columns {missing}: expected a "
-                "reference_band_sigs() table (doc_id, _n, band, bkey)"
-            )
-        from pyspark.sql import types as _T
-
-        if not isinstance(reference_sigs.schema["bkey"].dataType, _T.LongType):
-            # a table persisted by the pre-hash engine carries string band
-            # keys; Spark would implicitly cast them for the join (string
-            # -> bigint = NULL) and every candidate would silently vanish
-            # — refuse loudly instead
-            raise ValueError(
-                "reference_sigs.bkey must be BIGINT (xxhash64 band keys); "
-                "this table was built by an older engine with string keys — "
-                "rebuild it with reference_band_sigs()"
-            )
-        br = reference_sigs
-    else:
-        _, br, _ = _sig_band_table(
-            reference, text_col, bands, rows_per_band, need_hashed=False, pin_sigs=False
-        )
-    a_side = ba.select("band", "bkey", F.col("doc_id").alias("_da"), F.col("_n").alias("_na"))
-    r_side = br.select("band", "bkey", F.col("doc_id").alias("_dr"), F.col("_n").alias("_nb"))
+    _, ba, hashed_a = _sig_band_table(df, text_col, bands, rows_per_band, pin_sigs=False)
+    _, br, _ = _sig_band_table(
+        reference, text_col, bands, rows_per_band, need_hashed=False, pin_sigs=False
+    )
     pairs = materialize(
-        a_side.join(r_side, ["band", "bkey"])
-        # lossless: Jaccard >= t implies min/max cardinality ratio >= t
-        .filter(F.least("_na", "_nb") / F.greatest("_na", "_nb") >= threshold)
-        .select("_da", "_dr")
-        .distinct()
+        _band_join(ba, br, carry=_CARRY_N, where=(_size_ratio_at_least(threshold),), ordered=False)
     )
-    # shard side: verify against its pinned element-set table (one tokenize
-    # pass, round-3 judge item); reference side: tokenize only the candidate
-    # docs (id semi-join BEFORE the element-set projection)
+    # reference side: tokenize only the candidate docs (id semi-join BEFORE
+    # the element-set projection)
     cand_ref = reference.join(
-        pairs.select(F.col("_dr").alias("doc_id")).distinct(), "doc_id", "left_semi"
+        pairs.select(F.col("doc_b").alias("doc_id")).distinct(), "doc_id", "left_semi"
     )
-    ha = hha.select(F.col("doc_id").alias("_da"), F.col("_hs").alias("_sa"))
-    hr = hashed_element_set(cand_ref, text_col=text_col).select(
-        F.col("doc_id").alias("_dr"), F.col("_hs").alias("_sb")
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    jac = inter / (F.size("_sa") + F.size("_sb") - inter)
+    hashed_b = hashed_element_set(cand_ref, text_col=text_col)
     flagged = (
-        pairs.join(ha, "_da")
-        .join(hr, "_dr")
-        .filter(jac >= threshold)
-        .select(F.col("_da").alias("doc_id"))
+        _verify_hashed_jaccard(pairs, hashed_a, hashed_b, threshold)
+        .select(F.col("doc_a").alias("doc_id"))
         .distinct()
     )
     return (

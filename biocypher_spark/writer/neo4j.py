@@ -292,10 +292,11 @@ class Neo4jBatchWriter:
     # evaluation (a collapse, or get_duplicate_*) scans deleted files.
 
     def _admit(self, space: str, df: DataFrame) -> DataFrame:
-        """The rows of ``df`` the key space ``space`` admits; its duplicate
-        rows go to the duplicate-metrics frame of its kind (D4)."""
+        """The rows of ``df`` the key space ``space`` admits (NULL keys
+        dropped, :meth:`KeySpace.admit_writable`); its duplicate rows go to
+        the duplicate-metrics frame of its kind (D4)."""
         keys = self.key_spaces[space]
-        kept, dups = keys.admit(df)
+        kept, dups = keys.admit_writable(df)
         self._note_dups("duplicate_nodes" if keys.kind == "node" else "duplicate_edges", dups)
         return kept
 
@@ -429,7 +430,7 @@ class Neo4jBatchWriter:
 
     def write_nodes(self, nodes: DataFrame, force: bool = False) -> bool:
         """NODE_SCHEMA DataFrame -> part files + headers. Returns True."""
-        nodes = self._admit("_seen_nodes", nodes.filter(F.col("node_id").isNotNull()))
+        nodes = self._admit("_seen_nodes", nodes)
 
         def line_for(label: str, props: dict) -> Column:
             return node_line_expr(
@@ -508,7 +509,6 @@ class Neo4jBatchWriter:
                 self.write_nodes(ran_nodes)
             all_edges = plain.unionByName(ran_edges) if plain is not None else ran_edges
 
-        all_edges = all_edges.filter(F.col("source_id").isNotNull() & F.col("target_id").isNotNull())
         all_edges = self._admit("_seen_edges", all_edges)
 
         def line_for(label: str, props: dict) -> Column:

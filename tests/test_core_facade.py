@@ -337,3 +337,40 @@ def test_in_memory_label_as_edge_uses_declared_props(spark, tmp_path):
     assert dict(bc.get_kg()["INTERACTS_WITH"].dtypes)["score"] == "double"
     bc.write_edges(edges)
     assert "score:double" in open(tmp_path / "INTERACTS_WITH-header.csv").read().split(";")
+
+
+def test_in_memory_kg_drops_null_keys_like_the_batch_writer(spark, schema_path, tmp_path):
+    """Given the same staged frames, the batch writer and InMemoryKG keep the
+    same rows: a node with a NULL id and an edge with a NULL endpoint have
+    nothing to write, and both sinks drop them before their key spaces."""
+    from biocypher_spark.model import edges_from_tuples, nodes_from_tuples
+    from biocypher_spark.writer.base import pascal_file_label
+
+    def null_where(df, col, value):
+        return df.withColumn(col, F.when(F.col(col) == value, F.lit(None)).otherwise(F.col(col)))
+
+    nodes = null_where(nodes_from_tuples(spark, [_protein("gone"), _protein("p1"), _protein("p2")]), "id", "gone")
+    edges = edges_from_tuples(
+        spark,
+        [_perturbed("e1", "p1", "p2"), _perturbed("e2", "gone", "p2"), _perturbed("e3", "p1", "gone")],
+    )
+    edges = null_where(null_where(edges, "src", "gone"), "tgt", "gone")
+
+    written = BioCypherSpark(spark, output_directory=str(tmp_path / "csv"), schema_config_path=schema_path)
+    in_memory = BioCypherSpark(spark, output_directory=str(tmp_path / "mem"), schema_config_path=schema_path)
+    written.write_nodes(nodes)
+    written.write_edges(edges)
+    in_memory.add(nodes)
+    in_memory.add(edges)
+
+    def lines(labels):
+        for label in labels:
+            for part in written.writer.parts.get(pascal_file_label(label), []):
+                yield from (line.split(";") for line in open(tmp_path / "csv" / part).read().splitlines())
+
+    kg = in_memory.get_kg()
+    csv_nodes = {f[0] for f in lines(written.writer.node_property_dict)}
+    assert csv_nodes == {r["node_id"] for r in kg["protein"].collect()} == {"p1", "p2"}
+    csv_edges = {(f[0], f[-2]) for f in lines(written.writer.edge_property_dict)}
+    kg_edges = {(r["source_id"], r["target_id"]) for r in kg["PERTURBED_IN_DISEASE"].collect()}
+    assert csv_edges == kg_edges == {("p1", "p2")}

@@ -37,10 +37,10 @@ def test_q3_broadcasts_dimension(spark):
 
 
 def test_whole_stage_codegen_on_textops(spark):
-    from biocypher_spark.textops import quality_score
+    from biocypher_spark.textops import text_profile
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = formatted_plan(quality_score(docs))
+    plan = formatted_plan(text_profile(docs))
     # higher-order lambda functions are evaluated JVM-side outside codegen;
     # the requirement is: columnar scan, no Python evaluation anywhere
     assert "codegen id" in plan
@@ -233,32 +233,6 @@ def test_ordered_part_rank_is_distributed(spark):
         "rank window must partition by the range-sort chunk id (_pid), "
         "not by label alone:\n" + "\n".join(window_lines)
     )
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Pre-bucketed tables on the join key -> SortMergeJoin with ZERO
-    Exchange: the write-time shuffle is amortized across every later join
-    (the 100-TB co-location strategy)."""
-    from biocypher_spark.operators.bucketing import bucketed_join, write_bucketed
-    from biocypher_spark.plans import count_shuffles, plan_has
-
-    orders = spark.range(0, 10_000).selectExpr("id AS orderkey", "id % 97 AS custkey")
-    items = spark.range(0, 30_000).selectExpr("id % 10000 AS orderkey", "id AS itemid")
-    write_bucketed(orders, "b_orders", "orderkey", 8, path=str(tmp_path / "bo"))
-    write_bucketed(items, "b_items", "orderkey", 8, path=str(tmp_path / "bi"))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the test exercises the bucketed SortMergeJoin
-        # (at 100 TB neither side broadcasts; that is the case bucketing serves)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "b_orders", "b_items", "orderkey")
-        assert count_shuffles(joined) == 0
-        assert plan_has(joined, "SortMergeJoin")
-        assert joined.count() == 30_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_items")
 
 
 def test_text_profile_single_pass(spark):

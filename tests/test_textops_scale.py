@@ -106,6 +106,25 @@ def test_simhash_keeps_null_and_empty_text_rows(spark):
     assert rows64[2] == "0" * 16
 
 
+def test_simhash_is_the_low_bits_of_simhash64(spark):
+    """simhash is a projection of simhash64's vote sums: for every doc —
+    null, empty and whitespace-only text included — its 16-bit int is
+    simhash64's first four nibbles read low nibble first."""
+    from biocypher_spark.textops import simhash
+
+    texts = [None, "", " ", "   ", "x", "hello world", "a b a b c", "tail  gap ", "ünïcode ✓ 漢字"]
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)]
+        + [(100 + i, " ".join(f"w{(i * j) % 37}" for j in range(i % 9 + 1))) for i in range(60)],
+        "doc_id long, text string",
+    )
+    h64 = {r["doc_id"]: r["simhash64"] for r in simhash64(docs).collect()}
+    h16 = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
+    assert set(h16) == set(h64) and len(h16) == docs.count()
+    for doc_id, h in h64.items():
+        assert h16[doc_id] == int(h[3] + h[2] + h[1] + h[0], 16), (doc_id, h, h16[doc_id])
+
+
 def test_simhash_near_dup_excludes_tokenless_docs(spark):
     """Null / empty / whitespace-only docs each hash to one constant
     simhash; left in the banding they form a single degenerate bucket whose
@@ -502,45 +521,6 @@ def test_cross_corpus_dedup(spark):
         for r in near_dedup_against(crawl, reference, threshold=0.8).collect()
     }
     assert near == {1: True, 2: True, 3: False}
-
-
-def test_near_dedup_against_precomputed_sigs(spark, tmp_path):
-    """A persisted reference_band_sigs table gives the SAME verdicts and
-    removes the reference's full tokenize scan: with sigs supplied, the
-    plan reads the reference parquet exactly once (the id-semi-joined
-    candidate verify) instead of twice."""
-    from biocypher_spark.textops import near_dedup_against, reference_band_sigs
-
-    base = " ".join(f"tok{i}" for i in range(20))
-    ref_path = str(tmp_path / "reference")
-    spark.createDataFrame(
-        [(100, base), (101, "reference only content here")],
-        "doc_id long, text string",
-    ).write.parquet(ref_path)
-    reference = spark.read.parquet(ref_path)
-    crawl = spark.createDataFrame(
-        [(1, base), (2, base.replace("tok7", "changed")), (3, "entirely new material about spark")],
-        "doc_id long, text string",
-    )
-    sigs_path = str(tmp_path / "ref_sigs")
-    reference_band_sigs(reference).write.parquet(sigs_path)
-    sigs = spark.read.parquet(sigs_path)
-
-    out = near_dedup_against(crawl, reference, threshold=0.8, reference_sigs=sigs)
-    assert {r["doc_id"]: r["dup_of_ref"] for r in out.collect()} == {1: True, 2: True, 3: False}
-
-    # the sigs table is the SOLE candidate source — the reference text is
-    # never re-tokenized for signatures. Proof: with an EMPTY sigs table no
-    # doc flags, even though crawl doc 1 is byte-identical to reference doc
-    # 100 (a fallback re-derive from reference text would flag it).
-    empty = near_dedup_against(crawl, reference, threshold=0.8, reference_sigs=sigs.limit(0))
-    assert {r["doc_id"]: r["dup_of_ref"] for r in empty.collect()} == {1: False, 2: False, 3: False}
-
-    # a wrong-shaped sigs table is a loud error, not missed candidates
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="reference_sigs"):
-        near_dedup_against(crawl, reference, reference_sigs=sigs.drop("bkey"))
 
 
 # ---------------------------------------------------------------------------

@@ -71,7 +71,7 @@ def main() -> None:
     linked = link_mentions(mentions)
 
     from biocypher_spark.queries import doc_ngram_jaccard, emb_near_dup
-    from biocypher_spark.textops import simhash64
+    from biocypher_spark.textops import minhash_star_near_dup_edges, simhash64
 
     sf = "/root/testdata/sf0.001"
     sections = {
@@ -84,6 +84,10 @@ def main() -> None:
         "Banded embedding near-dup (checkpointed bucket table, broadcast cap, exact re-score)": emb_near_dup(spark, sf),
         "Shingle n-gram near-dup (banded minhash candidates + est prefilter + exact verify)": doc_ngram_jaccard(spark, sf),
         "SimHash64 (explode + single 64-sum codegen hash aggregate)": simhash64(
+            spark.read.parquet(f"{sf}/documents.parquet")
+        ),
+        "Star-mode near-dup edges (verify of the pinned hub candidates: member sets joined first, "
+        "hub sets pruned by a LeftSemi on the hub ids — clean_corpus near_mode='star')": minhash_star_near_dup_edges(
             spark.read.parquet(f"{sf}/documents.parquet")
         ),
         "Cross-corpus near dedup (asymmetric: shard sets pinned once, reference verify "
