@@ -7,20 +7,25 @@ triple construction -> schema translate (broadcast join) -> dedup (shuffle)
 tables and checkpoint-resume per stage.
 
 Checkpoint model. Stages land in ``{run_dir}/{stage}`` parquet in this
-order: ``mentions``, ``linked``, ``nodes``, ``edges``. The nodes/edges
-checkpoints are written straight from the translated frames (rel-as-node
-dedup applied), and the Neo4j CSVs are then emitted FROM those checkpoints
-read back, so each corpus-scale aggregate runs once, inside its own
-checkpoint write. A ``{run_dir}/csv/_SUCCESS`` marker lands after the
-import-call script; it is the only "CSVs already written" signal. On
-resume, stages with a ``_SUCCESS`` marker are read back instead of
-recomputed (their DataFrames are never built), and the CSVs are
-re-emitted — after wiping stale part files — unless the csv marker AND
-both the nodes and edges checkpoints it was written from are present.
+order: ``mentions``, ``linked``, then {``nodes`` ∥ ``edges``}. The
+nodes/edges checkpoints are written straight from the translated frames
+(rel-as-node dedup applied), and the Neo4j CSVs are then emitted FROM
+those checkpoints read back, so each corpus-scale aggregate runs once,
+inside its own checkpoint write. Node and edge files do not depend on each
+other, so the node chain (translate → checkpoint → CSV) runs on the
+calling thread while the edge chain runs on a second driver thread; both
+finish before ``run()`` returns or raises. A ``{run_dir}/csv/_SUCCESS``
+marker lands after both chains and the import-call script; it is the only
+"CSVs already written" signal. On resume, stages with a ``_SUCCESS``
+marker are read back instead of recomputed (their DataFrames are never
+built), and the CSVs are re-emitted — after wiping stale part files —
+unless the csv marker AND both the nodes and edges checkpoints it was
+written from are present.
 
 Lineage rows (stage, conv_id/node/source hash bucket, rows) are observed on
 the checkpoint writes themselves (``DataFrame.observe``, no extra job); a
-read-back stage is counted with one aggregate instead. The lineage and
+read-back stage is counted with one aggregate instead. The ``nodes`` and
+``edges`` rows may interleave: the lineage table is a set. The lineage and
 metrics tables are tens of driver-side rows, written with pyarrow.
 """
 
@@ -35,6 +40,7 @@ from typing import Callable, Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -213,7 +219,7 @@ class KGPipeline:
         observed.write.mode("overwrite").parquet(path)
         ts = int(time.time())
         # empty buckets are skipped, as the groupBy in _record_lineage does
-        self._lineage_rows += [(stage, k, "done", n, ts) for k, n in obs.get.items() if n or k == "all"]
+        self._lineage_rows.extend([(stage, k, "done", n, ts) for k, n in obs.get.items() if n or k == "all"])
         # the known schema spares a schema-inference job per read-back
         return self.spark.read.schema(df.schema).parquet(path)
 
@@ -285,24 +291,6 @@ class KGPipeline:
 
         t0 = time.time()
         node_tuples, edge_tuples = self._build_tuples(linked)
-        tn = self.translator.translate_nodes(node_tuples)
-        te = self.translator.translate_edges(edge_tuples)
-        missing = tn.missing.unionByName(te.missing)
-
-        # checkpoints must agree with the emitted CSVs, including for
-        # rel-as-node schemas: apply the writer's first-wins dedup of reified
-        # nodes + helper-edge rebuild (dedup_rel_as_nodes is the D3 logic
-        # write_edges applies), so the nodes checkpoint carries the reified
-        # nodes and the edges checkpoint only the SURVIVING helper edges.
-        # Skipped when no edge tuple can be reified: translate_edges always
-        # returns a ran_nodes frame, empty by construction in that case.
-        nodes_out, edges_out, ran_dups = tn.nodes, te.edges, None
-        if tuples_reify(self.translator):
-            from .dedup import dedup_rel_as_nodes
-
-            ran_nodes_kept, ran_edges_kept, ran_dups = dedup_rel_as_nodes(te.ran_nodes, te.ran_edges)
-            nodes_out = nodes_out.unionByName(ran_nodes_kept)
-            edges_out = edges_out.unionByName(ran_edges_kept)
 
         # the CSVs are only reusable alongside the checkpoints they were
         # emitted from; otherwise drop the marker BEFORE rewriting those
@@ -310,9 +298,12 @@ class KGPipeline:
         csv_done = resume and self._is_done("nodes") and self._is_done("edges") and self._is_done("csv")
         if not csv_done:
             shutil.rmtree(self._stage_path("csv"), ignore_errors=True)
-        nodes = self._checkpoint("nodes", lambda: nodes_out, resume, key_col="node_id")
-        edges = self._checkpoint("edges", lambda: edges_out, resume, key_col="source_id")
-
+            # part numbering continues across runs, so parts left by a
+            # crashed run (or a plain re-run into the same outdir) would
+            # survive beside the new emission and the import-call glob
+            # {Label}-part.* would feed duplicated rows to neo4j-admin
+            # import: wipe them first
+            self._wipe_stale_parts()
         writer = Neo4jBatchWriter(
             self.spark,
             self.translator,
@@ -325,15 +316,44 @@ class KGPipeline:
             ordered_parts=False,
             track_seen=False,
         )
+
+        # checkpoints must agree with the emitted CSVs, including for
+        # rel-as-node schemas: apply the writer's first-wins dedup of reified
+        # nodes + helper-edge rebuild (dedup_rel_as_nodes is the D3 logic
+        # write_edges applies), so the nodes checkpoint carries the reified
+        # nodes and the edges checkpoint only the SURVIVING helper edges.
+        # It runs before the fork, so each chain below touches only its own
+        # kind's writer state. Skipped when no edge tuple can be reified:
+        # translate_edges always returns a ran_nodes frame, empty by
+        # construction in that case.
+        te, ran_nodes, ran_edges, ran_dups = None, None, None, None
+        if tuples_reify(self.translator):
+            from .dedup import dedup_rel_as_nodes
+
+            te = self.translator.translate_edges(edge_tuples)
+            ran_nodes, ran_edges, ran_dups = dedup_rel_as_nodes(te.ran_nodes, te.ran_edges)
+
+        def node_chain() -> tuple[DataFrame, DataFrame]:
+            tn = self.translator.translate_nodes(node_tuples)
+            out = tn.nodes if ran_nodes is None else tn.nodes.unionByName(ran_nodes)
+            nodes = self._checkpoint("nodes", lambda: out, resume, key_col="node_id")
+            if not csv_done:
+                writer.write_nodes(nodes)
+            return nodes, tn.missing
+
+        def edge_chain() -> tuple[DataFrame, DataFrame]:
+            tr = te if te is not None else self.translator.translate_edges(edge_tuples)
+            out = tr.edges if ran_edges is None else tr.edges.unionByName(ran_edges)
+            edges = self._checkpoint("edges", lambda: out, resume, key_col="source_id")
+            if not csv_done:
+                writer.write_edges(edges)
+            return edges, tr.missing
+
+        # node and edge files do not depend on each other: their chains
+        # overlap, and the import call and csv marker wait for both
+        (nodes, node_missing), (edges, edge_missing) = _run_concurrently(node_chain, edge_chain)
+        missing = node_missing.unionByName(edge_missing)
         if not csv_done:
-            # part numbering continues across runs, so parts left by a
-            # crashed run (or a plain re-run into the same outdir) would
-            # survive beside the new emission and the import-call glob
-            # {Label}-part.* would feed duplicated rows to neo4j-admin
-            # import: wipe them first
-            self._wipe_stale_parts()
-            writer.write_nodes(nodes)
-            writer.write_edges(edges)
             writer.write_import_call()
             self._mark_done("csv")
         duplicate_edges = writer.get_duplicate_edges()
@@ -360,6 +380,33 @@ class KGPipeline:
             counts=counts,
             metrics_path=metrics_path,
         )
+
+
+def _run_concurrently(here: Callable[[], object], forked: Callable[[], object]) -> tuple:
+    """``(here(), forked())``, with ``forked`` on a ``pyspark.InheritableThread``
+    (its jobs keep the caller's job group and description) while ``here``
+    runs on the calling thread. Both have finished when this returns or
+    raises; the first error either one raised is re-raised."""
+    errors: list[BaseException] = []
+    out: list = []
+
+    def target() -> None:
+        try:
+            out.append(forked())
+        except BaseException as e:  # handed to the caller
+            errors.append(e)
+
+    thread = InheritableThread(target)
+    thread.start()
+    try:
+        mine = here()
+    except BaseException as e:  # re-raised after the join
+        errors.append(e)
+    finally:
+        thread.join()
+    if errors:
+        raise errors[0]
+    return mine, out[0]
 
 
 def tuples_reify(translator: SparkTranslator) -> bool:

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from .base import pascal_file_label
+from .base import pascal_file_label, schema_class
 from .neo4j import Neo4jBatchWriter
 
 
@@ -26,13 +26,8 @@ class ArangoDBBatchWriter(Neo4jBatchWriter):
         return "arangodb-import-call.sh"
 
     def _collection(self, label: str):
-        schema = self.translator.ontology.mapping.extended_schema
-        if schema.get(label):
-            return schema[label].get("db_collection_name")
-        for v in schema.values():
-            if isinstance(v, dict) and v.get("label_as_edge") == label:
-                return v.get("db_collection_name")
-        return None
+        conf = schema_class(self.translator.ontology.mapping.extended_schema, label)
+        return None if conf is None else conf.get("db_collection_name")
 
     def _write_node_headers(self) -> None:
         for label, props in self.node_property_dict.items():

@@ -25,6 +25,8 @@ import json
 import os
 import re
 import shutil
+import tempfile
+import threading
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
@@ -42,6 +44,9 @@ LONG_ARRAY = {"int[]", "integer[]", "long[]"}
 DOUBLE_ARRAY = {"float[]", "double[]"}
 BOOL_ARRAY = {"bool[]", "boolean[]"}
 STR_ARRAY = {"str[]", "string[]"}
+
+# serializes write_part_files' part numbering + rename across threads
+_RENAME_LOCK = threading.Lock()
 
 
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*://")
@@ -196,15 +201,23 @@ def edge_line_expr(
     return F.concat_ws(delim, *pieces)
 
 
-def declared_props(schema: dict, label: str) -> Optional[dict]:
-    """Declared properties of the schema class that ``label`` names, by
-    class name or by its ``label_as_edge``; None when none are declared."""
-    if label in schema:
-        return schema[label].get("properties")
+def schema_class(schema: dict, label: str) -> Optional[dict]:
+    """The schema entry of the class that ``label`` names, by class name or
+    by its ``label_as_edge``; None for a label no class claims (such as a
+    rel-as-node helper-edge label)."""
+    if isinstance(schema.get(label), dict):
+        return schema[label]
     for conf in schema.values():
         if isinstance(conf, dict) and conf.get("label_as_edge") == label:
-            return conf.get("properties")
+            return conf
     return None
+
+
+def declared_props(schema: dict, label: str) -> Optional[dict]:
+    """Declared properties of the schema class that ``label`` names; None
+    when none are declared."""
+    conf = schema_class(schema, label)
+    return None if conf is None else conf.get("properties")
 
 
 def infer_prop_types(props: dict[str, Optional[str]]) -> dict[str, str]:
@@ -305,35 +318,41 @@ def write_part_files(
     part numbering (reference ``_write_next_part``,
     /root/reference/biocypher/output/write/_batch_writer.py:1154-1204).
     """
-    tmp = os.path.join(outdir, "_tmp_parts")
-    shutil.rmtree(tmp, ignore_errors=True)
-    if ordered:
-        df = ordered_file_assignment(lines_df, batch_size)
-    else:
-        # scale path: no global per-label order (neo4j-admin import does not
-        # require one); write from the existing partitioning — zero shuffle,
-        # maxRecordsPerFile still bounds rows per part
-        df = lines_df
-    (
-        df.select("line", "_plabel")
-        .write.option("maxRecordsPerFile", int(batch_size))
-        .partitionBy("_plabel")
-        .mode("overwrite")
-        .text(tmp)
-    )
-    written: dict[str, list[str]] = {}
-    for label_dir in sorted(glob.glob(os.path.join(tmp, "_plabel=*"))):
-        plabel = label_dir.rsplit("=", 1)[-1]
-        existing = glob.glob(os.path.join(outdir, f"{plabel}-part*.csv"))
-        next_part = (
-            max(int(f.rsplit("-part", 1)[-1].split(".")[0]) for f in existing) + 1 if existing else 0
+    # a temp dir of its own per call: concurrent calls into one outdir (the
+    # pipeline's node and edge chains) must not wipe each other's parts
+    tmp = tempfile.mkdtemp(dir=outdir, prefix="_tmp_parts")
+    try:
+        if ordered:
+            df = ordered_file_assignment(lines_df, batch_size)
+        else:
+            # scale path: no global per-label order (neo4j-admin import does
+            # not require one); write from the existing partitioning — zero
+            # shuffle, maxRecordsPerFile still bounds rows per part
+            df = lines_df
+        (
+            df.select("line", "_plabel")
+            .write.option("maxRecordsPerFile", int(batch_size))
+            .partitionBy("_plabel")
+            .mode("overwrite")
+            .text(tmp)
         )
-        for src in sorted(glob.glob(os.path.join(label_dir, "part-*"))):
-            if os.path.getsize(src) == 0:
-                continue
-            name = f"{plabel}-part{str(next_part).zfill(3)}.csv"
-            shutil.move(src, os.path.join(outdir, name))
-            written.setdefault(plabel, []).append(name)
-            next_part += 1
-    shutil.rmtree(tmp, ignore_errors=True)
-    return written
+        written: dict[str, list[str]] = {}
+        # numbering reads the outdir's existing parts, so two calls sharing
+        # a file label must not interleave between that read and the rename
+        with _RENAME_LOCK:
+            for label_dir in sorted(glob.glob(os.path.join(tmp, "_plabel=*"))):
+                plabel = label_dir.rsplit("=", 1)[-1]
+                existing = glob.glob(os.path.join(outdir, f"{plabel}-part*.csv"))
+                next_part = (
+                    max(int(f.rsplit("-part", 1)[-1].split(".")[0]) for f in existing) + 1 if existing else 0
+                )
+                for src in sorted(glob.glob(os.path.join(label_dir, "part-*"))):
+                    if os.path.getsize(src) == 0:
+                        continue
+                    name = f"{plabel}-part{str(next_part).zfill(3)}.csv"
+                    shutil.move(src, os.path.join(outdir, name))
+                    written.setdefault(plabel, []).append(name)
+                    next_part += 1
+        return written
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -49,6 +49,7 @@ from .base import (
     node_line_expr,
     pascal_file_label,
     require_local_dir,
+    schema_class,
     write_part_files,
 )
 
@@ -464,28 +465,11 @@ class Neo4jBatchWriter:
 
     # -- edges ----------------------------------------------------------------
 
-    def _edge_schema_label(self, label: str) -> Optional[str]:
-        """Resolve an edge label back to its schema class (handles
-        label_as_edge); None for rel-as-node helper labels."""
-        if label in _RAN_EDGE_LABELS:
-            return None
-        schema = self.translator.ontology.mapping.extended_schema
-        if schema.get(label):
-            return label
-        for k, v in schema.items():
-            if isinstance(v, dict) and v.get("label_as_edge") == label:
-                return k
-        return None
-
     def _edge_skip_id(self, label: str) -> bool:
         if label in _RAN_EDGE_LABELS:
             return True
-        schema_label = self._edge_schema_label(label)
-        if schema_label:
-            conf = self.translator.ontology.mapping.extended_schema.get(schema_label, {})
-            if conf.get("use_id") is False:
-                return True
-        return False
+        conf = schema_class(self.translator.ontology.mapping.extended_schema, label)
+        return conf is not None and conf.get("use_id") is False
 
     def write_edges(self, edges) -> bool:
         """EDGE_SCHEMA DataFrame or TranslatedEdges -> part files + headers.

@@ -449,3 +449,107 @@ def test_facade_keeps_row_pins_of_latest_call_only(spark, schema_path, tmp_path,
     assert any(df.storageLevel != StorageLevel.NONE for df in latest)
     bc.writer.release_seen_state_pins()
     assert all(df.storageLevel == StorageLevel.NONE for _, df in persisted)
+
+
+def _part_lines_by_label(outdir):
+    """{file label: [(part number, lines)]} of every part file in outdir."""
+    out = {}
+    for name in sorted(os.listdir(outdir)):
+        if "-part" in name:
+            label, part = name[: -len(".csv")].rsplit("-part", 1)
+            out.setdefault(label, []).append((int(part), read(os.path.join(outdir, name)).splitlines()))
+    return out
+
+
+@pytest.mark.parametrize("labels", [("A", "B"), ("S",) * 6], ids=["disjoint", "shared"])
+def test_concurrent_write_part_files_into_one_outdir(spark, tmp_path, monkeypatch, labels):
+    """Threads writing part files into one outdir at once: each call keeps
+    its own temp dir, and calls sharing a file label still get distinct,
+    contiguous part numbers."""
+    import threading
+
+    from biocypher_spark.model import SEQ
+    from biocypher_spark.writer import base
+
+    frames = [
+        spark.createDataFrame(
+            [(label, f"{label}:{k}:{i}", k * 1000 + i) for i in range(60)], f"_plabel string, line string, {SEQ} long"
+        ).repartition(4)
+        for k, label in enumerate(labels)
+    ]
+    outdir = str(tmp_path)
+    start = threading.Barrier(len(frames))
+    errors = []
+    # each call's first rename waits (up to 1 s) for every other call to
+    # reach its own: unserialized numbering would then collide every time,
+    # while the rename lock makes the wait time out
+    meet, met, move = threading.Barrier(len(frames)), set(), base.shutil.move
+
+    def meeting_move(src, dst):
+        if threading.get_ident() not in met:
+            met.add(threading.get_ident())
+            try:
+                meet.wait(timeout=1)
+            except threading.BrokenBarrierError:
+                pass
+        return move(src, dst)
+
+    monkeypatch.setattr(base.shutil, "move", meeting_move)
+
+    def call(df):
+        try:
+            start.wait()
+            base.write_part_files(df, outdir, batch_size=7, ordered=False)
+        except Exception as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=call, args=(df,)) for df in frames]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    parts = _part_lines_by_label(outdir)
+    assert set(parts) == set(labels)
+    for label, files in parts.items():
+        assert [n for n, _ in files] == list(range(len(files)))
+        assert all(0 < len(lines) <= 7 for _, lines in files)
+    written = sorted(line for files in parts.values() for _, lines in files for line in lines)
+    expected = sorted(f"{label}:{k}:{i}" for k, label in enumerate(labels) for i in range(60))
+    assert written == expected
+    assert not [d for d in os.listdir(outdir) if d.startswith("_tmp_parts")]
+
+
+def test_label_as_edge_resolves_to_one_schema_class(spark, tmp_path):
+    """A label_as_edge label resolves to its class alike for the declared
+    properties, the ArangoDB collection name and the use_id: false skip."""
+    from biocypher_spark.writer.arango import ArangoDBBatchWriter
+    from biocypher_spark.writer.base import declared_props, schema_class
+
+    mapping = SchemaMapping(
+        schema={
+            "gene regulates gene": {
+                "represented_as": "edge",
+                "label_as_edge": "REGULATES",
+                "input_label": "regulation",
+                "use_id": False,
+                "db_collection_name": "regulation_edges",
+                "properties": {"weight": "float"},
+            },
+        }
+    )
+    schema = mapping.extended_schema
+    translator = SparkTranslator(spark, NullOntology(mapping))
+    neo = Neo4jBatchWriter(spark, translator, str(tmp_path / "neo4j"))
+    arango = ArangoDBBatchWriter(spark, translator, str(tmp_path / "arango"))
+    for label in ("REGULATES", "gene regulates gene"):
+        assert schema_class(schema, label) is schema["gene regulates gene"]
+        assert declared_props(schema, label) == {"weight": "float"}
+        assert arango._collection(label) == "regulation_edges"
+        assert neo._edge_skip_id(label) is True
+    assert schema_class(schema, "UNKNOWN") is None
+    assert declared_props(schema, "UNKNOWN") is None
+    assert arango._collection("UNKNOWN") is None
+    assert neo._edge_skip_id("UNKNOWN") is False
+    assert neo._edge_skip_id("IS_PART_OF") is True

@@ -253,8 +253,10 @@ def test_run_job_budget(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("kg-job-budget")
     # 50 jobs when the lineage was a groupBy+collect per stage, the tuple
-    # frames were pinned and the writer probed labels; 17 since
-    assert len(jobs) <= 20, f"{len(jobs)} Spark jobs"
+    # frames were pinned and the writer probed labels; 17 since. The lower
+    # bound is this input's count: the edge chain's jobs run on a second
+    # driver thread, and one that lost the job group would go uncounted
+    assert 16 <= len(jobs) <= 20, f"{len(jobs)} Spark jobs"
 
 
 _LINEAGE_KEYS = {"mentions": "conv_id", "linked": "conv_id", "nodes": "node_id", "edges": "source_id"}
@@ -402,3 +404,31 @@ def _part_lines(outdir):
         with open(f) as fh:
             out[os.path.basename(f).rsplit("-part", 1)[0]].update(fh.read().splitlines())
     return dict(out)
+
+
+@pytest.mark.parametrize("method", ["write_edges", "write_nodes"])
+def test_chain_failure_propagates_and_resume_recovers(spark, tmp_path, monkeypatch, method):
+    """A failing CSV write on either chain fails run() with its error once
+    both chains stopped: no csv marker, no thread left behind, and a resume
+    emits the rows of a clean run."""
+    import threading
+
+    from biocypher_spark.writer.neo4j import Neo4jBatchWriter
+
+    transcripts = generate_transcripts(spark, 400)
+    clean = str(tmp_path / "clean")
+    KGPipeline(spark, clean).run(transcripts)
+    outdir = str(tmp_path / "kg")
+
+    def fail(self, df):
+        raise RuntimeError(f"{method} failed")
+
+    threads = threading.active_count()
+    with monkeypatch.context() as m:
+        m.setattr(Neo4jBatchWriter, method, fail)
+        with pytest.raises(RuntimeError, match=f"{method} failed"):
+            KGPipeline(spark, outdir).run(transcripts)
+    assert not os.path.exists(os.path.join(outdir, "_run", "csv", "_SUCCESS"))
+    assert threading.active_count() == threads
+    KGPipeline(spark, outdir).run(transcripts, resume=True)
+    assert _csv_rows(outdir) == _csv_rows(clean)
