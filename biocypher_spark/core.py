@@ -118,36 +118,33 @@ class BioCypherSpark:
 
     # -- offline batch writes (S3) ------------------------------------------------
 
+    def _sized_writer(self, batch_size: int):
+        """The writer, with the batch-CSV family's rows per part file set."""
+        w = self.writer
+        if isinstance(w, Neo4jBatchWriter):
+            w.batch_size = int(batch_size)
+        return w
+
     def write_nodes(self, entities, batch_size: int = int(1e6), force: bool = False) -> bool:
         staged, _ = self._stage(entities, "node")
         if staged is None:
             return True
         out = self.translator.translate_nodes(staged)
         self._accumulate_missing(out.missing)
-        w = self.writer
+        w = self._sized_writer(batch_size)
         if isinstance(w, Neo4jBatchWriter):
-            w.batch_size = int(batch_size)
             return w.write_nodes(out.nodes, force=force)
         return bool(w.write_nodes(out.nodes))
 
     def write_edges(self, entities, batch_size: int = int(1e6)) -> bool:
+        """Every sink takes the translated edges whole: its admission step
+        splits off the rel-as-node rows (``dedup.Admission.edges``)."""
         staged, _ = self._stage(entities, "edge")
         if staged is None:
             return True
         out = self.translator.translate_edges(staged)
         self._accumulate_missing(out.missing)
-        w = self.writer
-        if isinstance(w, Neo4jBatchWriter):
-            w.batch_size = int(batch_size)
-            return w.write_edges(out)
-        # DataFrame-interface sinks (RDF/OWL/BioPathNet): rel-as-node helper
-        # entities are flattened in (the batch family rebuilds them itself)
-        edges = out.edges if out.ran_edges is None else out.edges.unionByName(out.ran_edges)
-        if out.ran_nodes is not None:
-            from .translate import RAN_HIDDEN_COLS
-
-            w.write_nodes(out.ran_nodes.drop(*RAN_HIDDEN_COLS))
-        return bool(w.write_edges(edges))
+        return bool(self._sized_writer(batch_size).write_edges(out))
 
     def write_import_call(self) -> str:
         return self.writer.write_import_call()
@@ -219,10 +216,10 @@ class BioCypherSpark:
             # the translator reifies every edge whose class is
             # represented_as: node, which the schema alone cannot rule out
             # for arbitrary input; helper edges ride in the plain edge write
-            from .translate import RAN_HIDDEN_COLS
-
-            self.online_writer.write_nodes(out.ran_nodes.drop(*RAN_HIDDEN_COLS))
-            self.online_writer.write_edges(out.edges.unionByName(out.ran_edges))
+            # (idempotent upserts: nothing to dedup)
+            ran_nodes, edges = out.flattened()
+            self.online_writer.write_nodes(ran_nodes)
+            self.online_writer.write_edges(edges)
             return True
         if self.offline:
             return self.write_edges(entities)
@@ -247,10 +244,8 @@ class BioCypherSpark:
         return dict(self._missing) or None
 
     def log_duplicates(self) -> None:
-        # duplicate tracking is a batch-writer feature; DataFrame-interface
-        # sinks (RDF/OWL/BioPathNet) have no seen-id state to report
-        if not isinstance(self.writer, Neo4jBatchWriter):
-            return
+        # every sink admits its rows through one dedup.Admission, which
+        # records what it dropped
         for df in (self.writer.get_duplicate_nodes(), self.writer.get_duplicate_edges()):
             if df is not None:
                 df.show(truncate=False)
@@ -260,8 +255,8 @@ class BioCypherSpark:
         /root/reference/biocypher/_core.py:713-793): extended schema plus
         present_in_knowledge_graph / is_relationship flags derived from what
         was actually written."""
-        # property dicts exist on the batch-writer family; other sinks have
-        # no per-class written-state, so everything reads as not-yet-present
+        # the flags read the property dicts, which only the batch-writer
+        # family keeps; under other sinks every class reads as not present
         written_nodes = set(getattr(self.writer, "node_property_dict", {}))
         written_edges = set(getattr(self.writer, "edge_property_dict", {}))
         info: dict = {"is_schema_info": True}

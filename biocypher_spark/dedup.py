@@ -7,9 +7,9 @@ state must become a shuffle. One mechanism serves every caller: a
 ``SEQ`` (so "first occurrence wins" is deterministic under parallelism),
 folds the group's duplicate labels into its first row, and — when it keeps
 state across calls — anti-joins the keys earlier calls admitted. It emits
-duplicate-metrics rows instead of log lines. The batch writer and
-``InMemoryKG`` hold the three key spaces with state; ``dedup_*`` are
-one-shot calls.
+duplicate-metrics rows instead of log lines. Every sink admits its rows
+through one :class:`Admission`, which holds the three key spaces with state
+(the one-shot ``dedup_*`` calls build a space per call).
 
 Scale notes:
   * node dedup is **global across labels** (one id namespace,
@@ -22,13 +22,14 @@ Scale notes:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional
+from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .model import SEQ
-from .translate import RAN_HIDDEN_COLS, ran_helper_edges
+from .materialize import materialize
+from .model import SEQ, with_seq
+from .translate import RAN_HIDDEN_COLS, TranslatedEdges, ran_helper_edges
 
 
 @dataclass
@@ -150,10 +151,9 @@ class KeySpace:
         return kept.drop(*self.key_cols), dups
 
     def admit_writable(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """:meth:`admit` over the rows a sink can write: a node with a NULL
-        id (D1) or an edge with a NULL endpoint (D2) is dropped first. The
-        batch writer and ``InMemoryKG`` admit through here; the one-shot
-        ``dedup_*`` calls keep such rows (see :func:`edge_dedup_key`)."""
+        """:meth:`admit` over the rows a sink can write (:class:`Admission`):
+        a node with a NULL id (D1) or an edge with a NULL endpoint (D2) is
+        dropped first. The one-shot ``dedup_*`` calls keep such rows."""
         for c in self._sink_keys:
             df = df.filter(F.col(c).isNotNull())
         return self.admit(df)
@@ -184,10 +184,149 @@ class KeySpace:
         self._delta = None
 
 
-def key_spaces(track_seen: bool) -> dict[str, KeySpace]:
-    """The three key spaces (D1 node id, D2 (type, edge key), D3 (type,
-    reified id)), keyed by the name their seen keys carry in stream state."""
-    return {name: KeySpace(name, track_seen) for name in _SPACES}
+class Admission:
+    """A sink's one admission step: the rows it may write, first wins.
+
+    It holds the three key spaces (D1 node id, D2 (type, edge key), D3
+    (type, reified id)), keyed by the name their seen keys carry in stream
+    state, and the duplicate-metrics frames they feed (D4). Every sink calls
+    :meth:`nodes` / :meth:`edges` at the top of its node / edge write, and
+    :meth:`release_earlier_row_pins` once it has written what they
+    returned. ``track_seen=False`` makes every call one-shot (no cross-call
+    seen keys) for single-shot pipelines whose inputs are already unique.
+    Cross-call state is an accumulated, persisted key DataFrame per space,
+    replacing the reference's unbounded in-memory sets (reference
+    ``biocypher/_deduplicate.py:20-29``); ``stream_kg`` persists and reloads
+    it through :meth:`take_state_deltas`, :meth:`state_frames` and
+    :meth:`repoint_state`."""
+
+    # every _DUP_COLLAPSE appended layers a duplicate-metrics chain is
+    # distinct-ed and pinned, so its eventual evaluation pays a bounded plan.
+    # It only fires for a sink that is never repointed (the facade's);
+    # stream_kg repoints after at most two layers per frame.
+    _DUP_COLLAPSE = 16
+
+    def __init__(self, track_seen: bool = True):
+        self.key_spaces = {name: KeySpace(name, track_seen) for name in _SPACES}
+        self.duplicate_nodes: Optional[DataFrame] = None
+        self.duplicate_edges: Optional[DataFrame] = None
+        self._dup_chain_len: dict[str, int] = {}  # union layers since last collapse
+        # the metrics rows appended since the last take_state_deltas(), which
+        # stream_kg persists per micro-batch (O(batch), not O(corpus)); lazy
+        # plans only, cleared with the pins in release_seen_state_pins()
+        self._dup_deltas: dict[str, DataFrame] = {}
+
+    def _admit(self, space: str, df: DataFrame) -> DataFrame:
+        """The rows of ``df`` the key space ``space`` admits (NULL keys
+        dropped; a frame with no ``SEQ`` column ranks in its row order); its
+        duplicate rows go to the metrics frame of its kind."""
+        keys = self.key_spaces[space]
+        kept, dups = keys.admit_writable(with_seq(df))
+        self._note_dups("duplicate_nodes" if keys.kind == "node" else "duplicate_edges", dups)
+        return kept
+
+    def nodes(self, nodes: DataFrame) -> DataFrame:
+        """The node rows to write: the first of each id across labels (D1)."""
+        return self._admit("_seen_nodes", nodes)
+
+    def reified(self, edges: TranslatedEdges) -> tuple[DataFrame, DataFrame]:
+        """``(reified nodes, plain and helper edges)``: the first reified row
+        of each (type, id) (D3), and the helper edges of the survivors
+        (:func:`ran_surviving_edges`) beside the plain edges."""
+        ran_nodes, ran_edges = ran_surviving_edges(self._admit("_seen_ran", edges.ran_nodes), edges.ran_edges)
+        return ran_nodes, edges.edges.unionByName(ran_edges)
+
+    def edges(self, edges: Union[DataFrame, TranslatedEdges]) -> tuple[Optional[DataFrame], DataFrame]:
+        """``(reified nodes or None, edge rows to write)``: a TranslatedEdges
+        is split by :meth:`reified`, and its reified nodes (for the sink's
+        node write) are None when one probe finds none; the edge rows are
+        the first of each (type, edge key) (D2) (reference ``write_edges``,
+        ``biocypher/output/write/_batch_writer.py:437-510``)."""
+        ran_nodes = None
+        if isinstance(edges, TranslatedEdges):
+            ran_nodes, edges = self.reified(edges)
+            if ran_nodes.limit(1).count() == 0:
+                ran_nodes = None
+        return ran_nodes, self._admit("_seen_edges", edges)
+
+    def release_earlier_row_pins(self, kind: str) -> None:
+        """:meth:`KeySpace.release_earlier_row_pins` of the spaces of
+        ``kind`` (``"node"``: D1; ``"edge"``: D2 and D3)."""
+        for keys in self.key_spaces.values():
+            if keys.kind == kind:
+                keys.release_earlier_row_pins()
+
+    def _note_dups(self, attr: str, dups: DataFrame) -> None:
+        """Append a (kind, label, dup_id) batch to a duplicate-metrics frame.
+
+        Plain union per call (set semantics are applied lazily by the
+        ``get_duplicate_*`` accessors and eagerly at each collapse) — a
+        distinct per call would add a shuffle layer per sink call to the
+        eventual evaluation plan. The chains reference the seen frames live
+        at append time: a caller that deletes the storage behind superseded
+        state persists them and repoints first (stream_kg writes them into
+        its per-batch state generation)."""
+        prev = getattr(self, attr)
+        merged = dups if prev is None else prev.unionByName(dups)
+        prev_delta = self._dup_deltas.get(attr)
+        self._dup_deltas[attr] = dups if prev_delta is None else prev_delta.unionByName(dups)
+        self._dup_chain_len[attr] = self._dup_chain_len.get(attr, 0) + 1
+        if self._dup_chain_len[attr] >= self._DUP_COLLAPSE:
+            merged = materialize(merged.distinct())
+            self._dup_chain_len[attr] = 0
+        setattr(self, attr, merged)
+
+    def release_seen_state_pins(self) -> None:
+        """Unpersist every pin. Call ONLY once the seen frames were repointed
+        at durable storage (repoint_state does): until then the pins back
+        the live unions, and the next anti-join would recompute them."""
+        for keys in self.key_spaces.values():
+            keys.release_pins()
+        self._dup_deltas.clear()
+
+    def take_state_deltas(self) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
+        """Hand over (and clear) the seen-key / duplicate-metrics deltas
+        accumulated since the last call — the frames a streaming caller
+        persists per micro-batch. MUST be consumed (written out) before
+        repoint_state() or release_seen_state_pins(): the delta frames
+        reference the batch pins, and after release their lineage points
+        at a foreachBatch input that no longer exists."""
+        seen = {name: d for name, keys in self.key_spaces.items() if (d := keys.take_delta()) is not None}
+        dups, self._dup_deltas = self._dup_deltas, {}
+        return seen, dups
+
+    def state_frames(self) -> dict[str, Optional[DataFrame]]:
+        """The whole state, keyed as repoint_state takes it: the key spaces'
+        seen keys (``_seen_nodes``, ``_seen_edges``, ``_seen_ran``) and
+        ``duplicate_nodes``, ``duplicate_edges``; None: no state of that kind."""
+        frames = {name: keys.seen for name, keys in self.key_spaces.items()}
+        return {**frames, "duplicate_nodes": self.duplicate_nodes, "duplicate_edges": self.duplicate_edges}
+
+    def repoint_state(self, frames: dict[str, Optional[DataFrame]]) -> None:
+        """Replace the whole state with ``frames`` (keyed as state_frames())
+        read from durable storage. They must already hold every call since
+        the last repoint (stream_kg writes their deltas first): those calls'
+        pins are released and the metrics chains restart at the frames."""
+        for name, keys in self.key_spaces.items():
+            keys.seen = frames[name]
+        self.duplicate_nodes, self.duplicate_edges = frames["duplicate_nodes"], frames["duplicate_edges"]
+        self._dup_chain_len.clear()
+        self.release_seen_state_pins()
+
+
+class AdmittingSink:
+    """A sink whose rows pass ``self.admission``; it reports what that
+    admission dropped (set semantics: the metrics chains are plain unions)."""
+
+    admission: Admission
+
+    def get_duplicate_nodes(self) -> Optional[DataFrame]:
+        dups = self.admission.duplicate_nodes
+        return None if dups is None else dups.distinct()
+
+    def get_duplicate_edges(self) -> Optional[DataFrame]:
+        dups = self.admission.duplicate_edges
+        return None if dups is None else dups.distinct()
 
 
 def dedup_nodes(nodes: DataFrame) -> DedupResult:

@@ -17,10 +17,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import key_spaces, ran_surviving_edges
+from .dedup import Admission, AdmittingSink
 from .materialize import materialize
 from .model import SEQ
-from .translate import TranslatedEdges
 from .writer.base import declared_props, infer_prop_types
 
 
@@ -44,7 +43,7 @@ def _typed_props(df: DataFrame, prop_types: dict) -> DataFrame:
     return out.drop("props")
 
 
-class InMemoryKG:
+class InMemoryKG(AdmittingSink):
     """dict {type -> Spark DataFrame} knowledge graph with dedup-on-add."""
 
     def __init__(self, translator):
@@ -52,18 +51,16 @@ class InMemoryKG:
         self._node_frames: dict[str, DataFrame] = {}
         self._edge_frames: dict[str, DataFrame] = {}
         # cross-call dedup state: the reference shares ONE Deduplicator
-        # across add() calls (_in_memory_kg.py:62-66); these are the batch
-        # writer's three key spaces
-        self.key_spaces = key_spaces(track_seen=True)
+        # across add() calls (_in_memory_kg.py:62-66)
+        self.admission = Admission()
 
-    def _admit(self, space: str, df: DataFrame) -> DataFrame:
-        """The rows of ``df`` the key space ``space`` admits, pinned: the
-        per-type frames built from them outlive the spaces' row pins."""
-        kept = materialize(self.key_spaces[space].admit_writable(df)[0])
-        # the pin just evaluated every anti-join of this call, so the
-        # earlier calls' row pins have fed the key pins they back
-        for keys in self.key_spaces.values():
-            keys.release_earlier_row_pins()
+    def _pin(self, kept: DataFrame, kind: str) -> DataFrame:
+        """The admitted rows of one add, pinned: the per-type frames built
+        from them outlive the key spaces' row pins. The pin evaluates every
+        anti-join of this call, so the earlier calls' row pins have fed the
+        key pins they back."""
+        kept = materialize(kept)
+        self.admission.release_earlier_row_pins(kind)
         return kept
 
     def _prop_types_for(self, label: str, df: DataFrame, kind: str) -> dict:
@@ -96,7 +93,7 @@ class InMemoryKG:
         return infer_prop_types(head_props)
 
     def add_nodes(self, nodes: DataFrame) -> None:
-        kept = self._admit("_seen_nodes", nodes)
+        kept = self._pin(self.admission.nodes(nodes), "node")
         for label in [r[0] for r in kept.select("node_label").distinct().collect()]:
             sub = kept.filter(F.col("node_label") == label)
             typed = _typed_props(sub.drop(SEQ), self._prop_types_for(label, sub, "node"))
@@ -106,19 +103,12 @@ class InMemoryKG:
             )
 
     def add_edges(self, edges) -> None:
-        """Edges, or a TranslatedEdges whose rel-as-node triplets go through
-        the writer's path: the reified rows are deduped on (type, id) (D3)
-        and their helper edges rebuilt from the survivors, the reified
-        nodes are added as nodes (D1), and the helper edges are deduped
-        with the plain edges (D2)."""
-        if isinstance(edges, TranslatedEdges):
-            ran_nodes, ran_edges = ran_surviving_edges(
-                self.key_spaces["_seen_ran"].admit_writable(edges.ran_nodes)[0], edges.ran_edges
-            )
-            if ran_nodes.limit(1).count() > 0:
-                self.add_nodes(ran_nodes)
-            edges = edges.edges.unionByName(ran_edges)
-        kept = self._admit("_seen_edges", edges)
+        """Edges, or a TranslatedEdges whose surviving reified nodes are
+        added as nodes (:meth:`dedup.Admission.edges`)."""
+        ran_nodes, edges = self.admission.edges(edges)
+        if ran_nodes is not None:
+            self.add_nodes(ran_nodes)
+        kept = self._pin(edges, "edge")
         for label in [r[0] for r in kept.select("relationship_label").distinct().collect()]:
             sub = kept.filter(F.col("relationship_label") == label)
             typed = _typed_props(sub.drop(SEQ), self._prop_types_for(label, sub, "edge"))

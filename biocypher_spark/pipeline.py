@@ -318,20 +318,18 @@ class KGPipeline:
         )
 
         # checkpoints must agree with the emitted CSVs, including for
-        # rel-as-node schemas: apply the writer's first-wins dedup of reified
-        # nodes + helper-edge rebuild (dedup_rel_as_nodes is the D3 logic
-        # write_edges applies), so the nodes checkpoint carries the reified
-        # nodes and the edges checkpoint only the SURVIVING helper edges.
-        # It runs before the fork, so each chain below touches only its own
-        # kind's writer state. Skipped when no edge tuple can be reified:
-        # translate_edges always returns a ran_nodes frame, empty by
-        # construction in that case.
-        te, ran_nodes, ran_edges, ran_dups = None, None, None, None
-        if tuples_reify(self.translator):
-            from .dedup import dedup_rel_as_nodes
-
+        # rel-as-node schemas: the writer's admission step dedups the
+        # reified rows (D3) and rebuilds their surviving helper edges, so the
+        # nodes checkpoint carries the reified nodes and the edges
+        # checkpoint only the SURVIVING helper edges. It runs before the
+        # fork, so each chain below touches only its own kind's state.
+        # Skipped when no edge tuple can be reified (translate_edges always
+        # returns a ran_nodes frame, empty by construction then) and when
+        # the CSVs and both checkpoints are reused.
+        te = ran_nodes = reified_edges = None
+        if tuples_reify(self.translator) and not csv_done:
             te = self.translator.translate_edges(edge_tuples)
-            ran_nodes, ran_edges, ran_dups = dedup_rel_as_nodes(te.ran_nodes, te.ran_edges)
+            ran_nodes, reified_edges = writer.admission.reified(te)
 
         def node_chain() -> tuple[DataFrame, DataFrame]:
             tn = self.translator.translate_nodes(node_tuples)
@@ -343,7 +341,7 @@ class KGPipeline:
 
         def edge_chain() -> tuple[DataFrame, DataFrame]:
             tr = te if te is not None else self.translator.translate_edges(edge_tuples)
-            out = tr.edges if ran_edges is None else tr.edges.unionByName(ran_edges)
+            out = tr.edges if reified_edges is None else reified_edges
             edges = self._checkpoint("edges", lambda: out, resume, key_col="source_id")
             if not csv_done:
                 writer.write_edges(edges)
@@ -356,11 +354,6 @@ class KGPipeline:
         if not csv_done:
             writer.write_import_call()
             self._mark_done("csv")
-        duplicate_edges = writer.get_duplicate_edges()
-        if ran_dups is not None and not csv_done:
-            # reified nodes dropped by the dedup above, recorded as the
-            # writer records its own rel-as-node duplicates
-            duplicate_edges = ran_dups if duplicate_edges is None else duplicate_edges.unionByName(ran_dups).distinct()
         lineage_path = self._flush_lineage()
         stage_secs["write"] = time.time() - t0
 
@@ -375,7 +368,7 @@ class KGPipeline:
             mentions=mentions,
             missing_types=missing,
             duplicate_nodes=writer.get_duplicate_nodes(),
-            duplicate_edges=duplicate_edges,
+            duplicate_edges=writer.get_duplicate_edges(),
             lineage_path=lineage_path,
             counts=counts,
             metrics_path=metrics_path,

@@ -41,7 +41,7 @@ TRANSCRIPT_SCHEMA = T.StructType(
 _FULL_MARKER = "_FULL"
 
 # the `_kind` partition of a state generation that holds each of the
-# writer's state frames (keyed as Neo4jBatchWriter.state_frames): the three
+# writer's state frames (keyed as dedup.Admission.state_frames): the three
 # seen-key frames and the two duplicate-metrics frames
 _STATE_KINDS = {
     "_seen_nodes": "_seen_nodes",
@@ -95,7 +95,7 @@ def _state_read_set(meta_dir: str, upto: int) -> list[str]:
 
 def _load_state(spark: SparkSession, meta_dir: str, upto: int) -> dict[str, Optional[DataFrame]]:
     """The committed state up to batch ``upto`` as the writer's frames,
-    keyed as ``Neo4jBatchWriter.state_frames``; None for a kind no
+    keyed as ``dedup.Admission.state_frames``; None for a kind no
     generation of the read set holds.
 
     Each frame is one read of the kind's partition directories across the
@@ -370,8 +370,8 @@ def stream_kg(
         )
 
     def _persist_seen(batch_id: int) -> None:
-        seen_deltas, dup_deltas = writer.take_state_deltas()
-        state = writer.state_frames()
+        seen_deltas, dup_deltas = writer.admission.take_state_deltas()
+        state = writer.admission.state_frames()
         if all(state[a] is None for a in ("_seen_nodes", "_seen_edges", "_seen_ran")):
             return  # no writer state yet (initial empty batches): nothing to roll
         base = _state_read_set(meta_dir, batch_id)
@@ -423,7 +423,7 @@ def stream_kg(
         # every state frame now reads from generation files, and the
         # batch's pins are released — what keeps a long stream's cache
         # O(state), not O(batches x state)
-        writer.repoint_state(_load_state(spark, meta_dir, batch_id))
+        writer.admission.repoint_state(_load_state(spark, meta_dir, batch_id))
 
     def _drop_old_seen(batch_id: int) -> None:
         """Delete committed generations outside the read set: those a FULL
@@ -460,7 +460,7 @@ def stream_kg(
     for b, d in _seen_generations(meta_dir, "_seen").items():
         if b > _initial["last_batch"]:
             shutil.rmtree(d, ignore_errors=True)
-    writer.repoint_state(_load_state(spark, meta_dir, _initial["last_batch"]))
+    writer.admission.repoint_state(_load_state(spark, meta_dir, _initial["last_batch"]))
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         state = _read_committed()

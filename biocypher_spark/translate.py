@@ -46,6 +46,11 @@ class TranslatedEdges:
     ran_edges: DataFrame  # IS_SOURCE_OF / IS_TARGET_OF / role edges
     missing: DataFrame  # (input_label, count) of unmapped labels
 
+    def flattened(self) -> tuple[DataFrame, DataFrame]:
+        """``(reified nodes, plain and helper edges)`` as translated, with no
+        dedup: for a sink whose writes are idempotent upserts."""
+        return self.ran_nodes.drop(*RAN_HIDDEN_COLS), self.edges.unionByName(self.ran_edges)
+
 
 @dataclass
 class TranslatedNodes:

@@ -6,9 +6,10 @@ Reference: ``_BioPathNetWriter``
 ``entity_types.txt`` (entity_id \\t type), ``entity_names.txt`` (n \\t n),
 ``brg.txt`` (property triples entity \\t prop \\t prop_value plus the used
 ontology sub-hierarchy), ``skg.txt`` (edge triples). The reference appends
-across calls (learning/validation/test splits) — so do we. Lines are built
-as Spark expressions and streamed into the target files driver-side
-(file-append concat, no row collection)."""
+across calls (learning/validation/test splits) — so do we, after the
+sink's ``dedup.Admission``: a node id or an edge key an earlier call wrote
+is not written again. Lines are built as Spark expressions and streamed into
+the target files driver-side (file-append concat, no row collection)."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..dedup import Admission, AdmittingSink
 from ..model import json_pystr
 
 
@@ -33,7 +35,7 @@ def _append_lines(df: DataFrame, outdir: str, filename: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-class BioPathNetWriter:
+class BioPathNetWriter(AdmittingSink):
     def __init__(self, spark, translator, output_directory: str):
         from .base import require_local_dir
 
@@ -41,8 +43,11 @@ class BioPathNetWriter:
         self.translator = translator
         self.outdir = require_local_dir(output_directory, "BioPathNet")
         os.makedirs(self.outdir, exist_ok=True)
+        self.admission = Admission()
+        self._hierarchy_seen: set = set()  # (child, parent) pairs written by any call
 
     def write_nodes(self, nodes: DataFrame) -> bool:
+        nodes = self.admission.nodes(nodes)
         # entity_types: id \t semantic type
         types = nodes.select(
             F.concat_ws("\t", "node_id", "node_label").alias("value")
@@ -66,7 +71,7 @@ class BioPathNetWriter:
         # is_a parent edges for every label's ancestor chain
         labels = [r[0] for r in nodes.select("node_label").distinct().collect()]
         hier, tlines, nlines = [], [], []
-        seen = set()
+        seen = self._hierarchy_seen
         for label in labels:
             try:
                 chain = self.translator.ontology.get_ancestors(label)
@@ -87,9 +92,15 @@ class BioPathNetWriter:
             with open(os.path.join(self.outdir, filename), "a", encoding="utf-8") as fh:
                 for ln in lines:
                     fh.write(ln + "\n")
+        self.admission.release_earlier_row_pins("node")
         return True
 
-    def write_edges(self, edges: DataFrame) -> bool:
+    def write_edges(self, edges) -> bool:
+        """Edges, or a TranslatedEdges whose surviving reified nodes are
+        written as nodes (:meth:`dedup.Admission.edges`)."""
+        ran_nodes, edges = self.admission.edges(edges)
+        if ran_nodes is not None:
+            self.write_nodes(ran_nodes)
         lines = edges.select(
             F.concat_ws(
                 "\t",
@@ -102,4 +113,5 @@ class BioPathNetWriter:
             ).alias("value")
         )
         _append_lines(lines, self.outdir, "skg.txt")
+        self.admission.release_earlier_row_pins("edge")
         return True

@@ -9,16 +9,12 @@ and ``_BatchWriter``, .../_batch_writer.py). Serialization rules
 lowercase booleans, empty field for null) match the reference's golden tests
 (/root/reference/test/output/write/graph/test_neo4j.py:107,298,321,1006).
 
-Spark-first execution: dedup is a keyed shuffle (not driver sets), label
-ancestor strings are precomputed driver-side and inlined as literals, and
-every write call is one partitioned text job per entity kind. Every write
-call dedups through the engine's one first-wins mechanism, a
-``dedup.KeySpace`` per key space: a window over the call's rows, then an
-anti-join against the keys of earlier calls. Cross-call dedup state is an
-accumulated, persisted key DataFrame, replacing the reference's unbounded
-in-memory sets (reference ``biocypher/_deduplicate.py:20-29``) which
-cannot exist at 10^12 scale; its caches are filled by the jobs that read
-them, never by a separate count.
+Spark-first execution: label ancestor strings are precomputed driver-side
+and inlined as literals, and every write call is one partitioned text job
+per entity kind. Every write call first admits its rows through the
+writer's ``dedup.Admission``, the step every sink shares: a window over the
+call's rows, then an anti-join against the keys of earlier calls, whose
+caches are filled by the jobs that read them, never by a separate count.
 """
 
 from __future__ import annotations
@@ -30,11 +26,10 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..dedup import key_spaces, ran_surviving_edges
-from ..materialize import materialize
+from ..dedup import Admission, AdmittingSink
 from ..model import SEQ
 from ..naming import sentence_to_pascal, to_list
-from ..translate import SparkTranslator, TranslatedEdges
+from ..translate import SparkTranslator
 from .base import (
     BOOL_ARRAY,
     BOOL_TYPES,
@@ -77,7 +72,7 @@ def _header_type_suffix(key: str, declared: Optional[str]) -> str:
     return key
 
 
-class Neo4jBatchWriter:
+class Neo4jBatchWriter(AdmittingSink):
     """Write node/edge DataFrames in Neo4j admin-import layout.
 
     Subclasses override the dialect knobs (``quote_mode``, ``array_mode``),
@@ -144,28 +139,13 @@ class Neo4jBatchWriter:
         # False is the scale path: content-identical lines, arbitrary
         # file assignment, zero extra shuffle.
         self.ordered_parts = ordered_parts
-        # the D1/D2/D3 key spaces, keyed by the name their seen keys carry
-        # in stream state; track_seen=False makes every call one-shot (no
-        # cross-call seen keys) for single-shot pipelines whose inputs are
-        # already unique
-        self.key_spaces = key_spaces(track_seen)
+        self.admission = Admission(track_seen)
 
         self.node_property_dict: "OrderedDict[str, dict]" = OrderedDict()
         self.edge_property_dict: "OrderedDict[str, dict]" = OrderedDict()
         self.import_call_nodes: set = set()
         self.import_call_edges: set = set()
         self.parts: dict[str, list[str]] = {}
-        self.duplicate_nodes: Optional[DataFrame] = None
-        self.duplicate_edges: Optional[DataFrame] = None
-        self._dup_chain_len: dict[str, int] = {}  # union layers since last collapse
-        # the duplicate-metrics rows each _note_dups call appended since the
-        # last take_state_deltas(); the key spaces hold the seen-key deltas.
-        # stream_kg persists THESE per micro-batch (O(batch) durable write)
-        # instead of re-snapshotting the cumulative state (O(corpus) per
-        # batch, a quadratic total over a long stream). Batch callers that
-        # never consume deltas hold only lazy plan objects here; they are
-        # cleared alongside the pins in release_seen_state_pins().
-        self._dup_deltas: dict[str, DataFrame] = {}
 
     # -- label strings ------------------------------------------------------
 
@@ -255,98 +235,6 @@ class Neo4jBatchWriter:
                         f"found: {sorted(ks)}."
                     )
 
-    # -- dedup bookkeeping ---------------------------------------------------
-
-    # collapse cadence for the duplicate-metrics union chains: every
-    # _DUP_COLLAPSE appended layers the frame is distinct-ed and pinned, so
-    # a writer's eventual metrics evaluation pays a bounded plan, not one
-    # shuffle per appended distinct layer, and stops referencing the pinned
-    # frames of old calls. It only fires for a writer that is never
-    # repointed, such as the BioCypherSpark facade's: a write call appends
-    # one layer per key space it dedups in, and stream_kg repoints its
-    # writer (repoint_state clears the chain lengths) at every state write,
-    # after at most two layers per duplicate-metrics frame.
-    _DUP_COLLAPSE = 16
-
-    def _note_dups(self, attr: str, dups: DataFrame) -> None:
-        """Append a (kind, label, dup_id) batch to a duplicate-metrics frame.
-
-        Plain union per call (set semantics are applied lazily by the
-        ``get_duplicate_*`` accessors and eagerly at each collapse) — a
-        distinct per call would add a shuffle layer per writer call to the
-        eventual evaluation plan."""
-        prev = getattr(self, attr)
-        merged = dups if prev is None else prev.unionByName(dups)
-        prev_delta = self._dup_deltas.get(attr)
-        self._dup_deltas[attr] = dups if prev_delta is None else prev_delta.unionByName(dups)
-        self._dup_chain_len[attr] = self._dup_chain_len.get(attr, 0) + 1
-        if self._dup_chain_len[attr] >= self._DUP_COLLAPSE:
-            merged = materialize(merged.distinct())
-            self._dup_chain_len[attr] = 0
-        setattr(self, attr, merged)
-
-    # NOTE for callers that DELETE the storage behind superseded seen
-    # state: the lazy chains built by _note_dups reference the seen frames
-    # live at append time, so persist the chains and repoint the
-    # duplicate_* frames BEFORE deleting (stream_kg writes them into its
-    # combined per-batch state generation) — otherwise the next chain
-    # evaluation (a collapse, or get_duplicate_*) scans deleted files.
-
-    def _admit(self, space: str, df: DataFrame) -> DataFrame:
-        """The rows of ``df`` the key space ``space`` admits (NULL keys
-        dropped, :meth:`KeySpace.admit_writable`); its duplicate rows go to
-        the duplicate-metrics frame of its kind (D4)."""
-        keys = self.key_spaces[space]
-        kept, dups = keys.admit_writable(df)
-        self._note_dups("duplicate_nodes" if keys.kind == "node" else "duplicate_edges", dups)
-        return kept
-
-    def release_seen_state_pins(self) -> None:
-        """Unpersist superseded seen-state cache entries.
-
-        Call ONLY after the seen frames were repointed at durable storage
-        (repoint_state does) — until then the pins back the live lazy
-        unions, and unpersisting them would force a deep lineage recompute
-        on the next anti-join."""
-        for keys in self.key_spaces.values():
-            keys.release_pins()
-        self._dup_deltas.clear()
-
-    def take_state_deltas(self) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
-        """Hand over (and clear) the seen-key / duplicate-metrics deltas
-        accumulated since the last call — the frames a streaming caller
-        persists per micro-batch. MUST be consumed (written out) before
-        repoint_state() or release_seen_state_pins(): the delta frames
-        reference the batch pins, and after release their lineage points
-        at a foreachBatch input that no longer exists."""
-        seen = {name: d for name, keys in self.key_spaces.items() if (d := keys.take_delta()) is not None}
-        dups, self._dup_deltas = self._dup_deltas, {}
-        return seen, dups
-
-    def state_frames(self) -> dict[str, Optional[DataFrame]]:
-        """The whole seen-key and duplicate-metrics state, keyed as
-        repoint_state takes it: the three key spaces' seen keys
-        (``_seen_nodes``, ``_seen_edges``, ``_seen_ran``) and
-        ``duplicate_nodes``, ``duplicate_edges``; None means no state of
-        that kind."""
-        frames = {name: keys.seen for name, keys in self.key_spaces.items()}
-        return {**frames, "duplicate_nodes": self.duplicate_nodes, "duplicate_edges": self.duplicate_edges}
-
-    def repoint_state(self, frames: dict[str, Optional[DataFrame]]) -> None:
-        """Replace the whole seen-key and duplicate-metrics state with
-        ``frames`` read from durable storage, and release the cache
-        entries it supersedes.
-
-        ``frames`` is keyed as state_frames() returns it. It must already
-        hold every call since the last repoint (stream_kg writes their
-        deltas first): those calls' pins are released and the
-        duplicate-metrics chains restart at the stored frames."""
-        for name, keys in self.key_spaces.items():
-            keys.seen = frames[name]
-        self.duplicate_nodes, self.duplicate_edges = frames["duplicate_nodes"], frames["duplicate_edges"]
-        self._dup_chain_len.clear()
-        self.release_seen_state_pins()
-
     # -- nodes ----------------------------------------------------------------
 
     def _declared_prop_dicts(self, kind: str) -> Optional[dict]:
@@ -431,7 +319,7 @@ class Neo4jBatchWriter:
 
     def write_nodes(self, nodes: DataFrame, force: bool = False) -> bool:
         """NODE_SCHEMA DataFrame -> part files + headers. Returns True."""
-        nodes = self._admit("_seen_nodes", nodes)
+        nodes = self.admission.nodes(nodes)
 
         def line_for(label: str, props: dict) -> Column:
             return node_line_expr(
@@ -446,7 +334,7 @@ class Neo4jBatchWriter:
             )
 
         self._write_by_label(nodes, "node", line_for)
-        self.key_spaces["_seen_nodes"].release_earlier_row_pins()
+        self.admission.release_earlier_row_pins("node")
         self._write_node_headers()
         return True
 
@@ -474,26 +362,12 @@ class Neo4jBatchWriter:
     def write_edges(self, edges) -> bool:
         """EDGE_SCHEMA DataFrame or TranslatedEdges -> part files + headers.
 
-        A TranslatedEdges carries the rel-as-node split: reified nodes are
-        deduped in the relationship namespace first (D3), then written
-        through the node path, and their helper edges written alongside
-        (reference ``write_edges``,
-        /root/reference/biocypher/output/write/_batch_writer.py:437-510).
-        """
-        if isinstance(edges, TranslatedEdges):
-            ran_nodes, ran_edges = edges.ran_nodes, edges.ran_edges
-            plain = edges.edges
-        else:
-            ran_nodes, ran_edges, plain = None, None, edges
-
-        all_edges = plain
+        The reified nodes of a TranslatedEdges that survive admission are
+        written through the node path, and their helper edges alongside the
+        plain edges (:meth:`dedup.Admission.edges`)."""
+        ran_nodes, edges = self.admission.edges(edges)
         if ran_nodes is not None:
-            ran_nodes, ran_edges = ran_surviving_edges(self._admit("_seen_ran", ran_nodes), ran_edges)
-            if ran_nodes.limit(1).count() > 0:
-                self.write_nodes(ran_nodes)
-            all_edges = plain.unionByName(ran_edges) if plain is not None else ran_edges
-
-        all_edges = self._admit("_seen_edges", all_edges)
+            self.write_nodes(ran_nodes)
 
         def line_for(label: str, props: dict) -> Column:
             return edge_line_expr(
@@ -508,9 +382,8 @@ class Neo4jBatchWriter:
                 self.edge_line_includes_labels,
             )
 
-        self._write_by_label(all_edges, "edge", line_for)
-        for space in ("_seen_ran", "_seen_edges"):
-            self.key_spaces[space].release_earlier_row_pins()
+        self._write_by_label(edges, "edge", line_for)
+        self.admission.release_earlier_row_pins("edge")
         self._write_edge_headers()
         return True
 
@@ -578,12 +451,3 @@ class Neo4jBatchWriter:
         with open(path, "w", encoding="utf-8") as fh:
             fh.write(self.get_import_call())
         return path
-
-    # -- duplicate reporting ----------------------------------------------------
-
-    def get_duplicate_nodes(self):
-        # set semantics: per-call appends are plain unions (see _note_dups)
-        return None if self.duplicate_nodes is None else self.duplicate_nodes.distinct()
-
-    def get_duplicate_edges(self):
-        return None if self.duplicate_edges is None else self.duplicate_edges.distinct()

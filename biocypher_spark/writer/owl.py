@@ -5,8 +5,9 @@ _owl.py:21-567). Behavior re-expressed without rdflib (absent here), in the
 two formats the RDF writer can template (N-Triples = the scale path, Turtle):
 
 - The output is ONE merged file ``{file_stem}.{ext}`` written only once BOTH
-  ``write_nodes`` and ``write_edges`` have been called (reference
-  ``_write_file``, ``_owl.py:562-567``).
+  ``write_nodes`` and ``write_edges`` have been called, and rewritten whole
+  by every later call (reference ``_write_file``, ``_owl.py:562-567``).
+  Rows pass the writer's ``dedup.Admission`` first, as in every sink.
 - The file embeds the ontology vocabulary under the node labels in use: each
   label's ancestor chain becomes ``rdfs:subClassOf`` triples and every class
   is typed ``owl:Class`` (the reference starts from the loaded ontology's
@@ -25,8 +26,9 @@ two formats the RDF writer can template (N-Triples = the scale path, Turtle):
   (``_owl.py:414-499``). The instance IRI is the edge id, or
   ``{source}--{label}--{target}`` when the edge has none (``_owl.py:419-423``).
 
-Vocabulary triples are a driver-side handful of strings; instance triples are
-column expressions over the node/edge DataFrames (no collect, no UDFs).
+Vocabulary triples are a driver-side handful of strings (one Arrow-built
+frame); instance triples are column expressions over the node/edge
+DataFrames (no collect, no UDFs).
 """
 
 from __future__ import annotations
@@ -37,8 +39,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..model import json_pystr
-from .rdf import RDFWriter, _escape_literal, _pascal_term
+from ..model import json_pystr, local_frame
+from .rdf import VALUE_SCHEMA, RDFWriter, _escape_literal, _pascal_term
 
 OWL_NS = "http://www.w3.org/2002/07/owl#"
 RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -48,6 +50,8 @@ EDGE_MODELS = ("Association", "ObjectProperty")
 
 class OWLWriter(RDFWriter):
     """Self-contained OWL export on top of the template RDF writer."""
+
+    _extra_prefixes = f"@prefix owl: <{OWL_NS}> .\n"
 
     def __init__(
         self,
@@ -81,14 +85,6 @@ class OWLWriter(RDFWriter):
         self._written: Optional[str] = None
 
     # -- term helpers ---------------------------------------------------------
-
-    def _header(self) -> str:
-        return (
-            f"@prefix bc: <{self.ns}> .\n"
-            "@prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .\n"
-            f"@prefix rdfs: <{RDFS_NS}> .\n"
-            f"@prefix owl: <{OWL_NS}> .\n\n"
-        )
 
     def _owl(self, term: str) -> str:
         return f"owl:{term}" if self.turtle else f"<{OWL_NS}{term}>"
@@ -131,6 +127,7 @@ class OWLWriter(RDFWriter):
     # -- instances (distributed) --------------------------------------------------
 
     def write_nodes(self, nodes: DataFrame) -> bool:
+        nodes = self.admission.nodes(nodes)
         labels = [r[0] for r in nodes.select("node_label").distinct().collect()]
         self._add_class_vocabulary(labels)
         subject = self._term(F.col("node_id"))
@@ -158,9 +155,15 @@ class OWLWriter(RDFWriter):
         lines = nodes.select(F.explode(F.concat(head, prop_lines)).alias("value"))
         self._node_lines = lines if self._node_lines is None else self._node_lines.union(lines)
         self._write_file()
+        self.admission.release_earlier_row_pins("node")
         return True
 
-    def write_edges(self, edges: DataFrame) -> bool:
+    def write_edges(self, edges) -> bool:
+        """Edges, or a TranslatedEdges whose surviving reified nodes are
+        written as nodes (:meth:`dedup.Admission.edges`)."""
+        ran_nodes, edges = self.admission.edges(edges)
+        if ran_nodes is not None:
+            self.write_nodes(ran_nodes)
         labels = [r[0] for r in edges.select("relationship_label").distinct().collect()]
         label_to_pred = F.create_map(
             *[x for lab in labels for x in (F.lit(lab), F.lit(self._const(_pascal_term(lab))))]
@@ -200,6 +203,7 @@ class OWLWriter(RDFWriter):
             lines = edges.select(F.explode(F.concat(head, prop_lines)).alias("value"))
         self._edge_lines = lines if self._edge_lines is None else self._edge_lines.union(lines)
         self._write_file()
+        self.admission.release_earlier_row_pins("edge")
         return True
 
     # -- output -------------------------------------------------------------------
@@ -209,11 +213,9 @@ class OWLWriter(RDFWriter):
         (mirrors _owl.py:562-567)."""
         if self._node_lines is None or self._edge_lines is None:
             return
-        vocab = self.spark.createDataFrame(
-            [(line,) for line in dict.fromkeys(self._vocab)], "value string"
-        )
+        vocab = local_frame(self.spark, [(line,) for line in dict.fromkeys(self._vocab)], VALUE_SCHEMA)
         merged = vocab.union(self._node_lines).union(self._edge_lines)
-        self._written = self._write_label_file(merged, f"{self.file_stem}.{self._ext}")
+        self._written = self._write_label_file(merged, f"{self.file_stem}.{self._ext}", replace=True)
 
     @property
     def output_path(self) -> Optional[str]:

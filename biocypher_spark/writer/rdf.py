@@ -7,13 +7,15 @@ sandbox, so every format here is emitted directly from column expressions
 the serialization work distributes with the data instead of collecting the
 graph into an rdflib store. N-Triples is fully line-oriented; turtle / xml
 / json-ld add a constant header/footer spliced in during the single-file
-copy. Nodes become ``<id> rdf:type <Class>`` plus one triple per property
-(reference node triples :347-417); edges with an id are reified through
-BIOCYPHER-namespaced ``bc:subject``/``bc:object`` with one triple per edge
-property, and each edge file types its class ``rdfs:Class`` (reference
-edge reification + class typing :183-266, 394-398); id-less edges become
-direct triples (documented deviation: nothing to reify or hang properties
-on)."""
+copy. Rows pass the writer's ``dedup.Admission`` first, and a later call's
+rows are appended to the label's file (its footer cut and rewritten), so
+the file stays one document. Nodes become ``<id> rdf:type <Class>`` plus
+one triple per property (reference node triples :347-417); edges with an
+id are reified through BIOCYPHER-namespaced ``bc:subject``/``bc:object``
+with one triple per edge property, and each edge file types its class
+``rdfs:Class`` (reference edge reification + class typing :183-266,
+394-398); id-less edges become direct triples (documented deviation:
+nothing to reify or hang properties on)."""
 
 from __future__ import annotations
 
@@ -24,14 +26,14 @@ import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..model import json_pystr
+from ..dedup import Admission, AdmittingSink
+from ..model import json_pystr, local_frame
 from ..naming import sentence_to_pascal
 from .base import pascal_file_label, require_local_dir
 
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-RDF_SUBJECT = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#subject>"
-RDF_OBJECT = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#object>"
 
 
 def _escape_literal(col):
@@ -41,23 +43,21 @@ def _escape_literal(col):
     return F.regexp_replace(out, "\r", "\\\\r")
 
 
-def _iri(namespace: str, col):
-    safe = F.regexp_replace(col, "[^a-zA-Z0-9_.:-]", "_")
-    return F.concat(F.lit(f"<{namespace}"), safe, F.lit(">"))
-
-
 def _safe_id(col):
-    """IRI-safe local name (same character policy as :func:`_iri`)."""
+    """IRI-safe local name."""
     return F.regexp_replace(col, "[^a-zA-Z0-9_.:-]", "_")
 
 
+def _iri(namespace: str, col):
+    return F.concat(F.lit(f"<{namespace}"), _safe_id(col), F.lit(">"))
+
+
 def _pn_local(col):
-    """Turtle PN_LOCAL-safe local name — SAME charset as :func:`_iri` (':'
-    and '.' are legal inside PN_LOCAL), so one entity gets one IRI across
-    formats; only the grammar's positional rules differ: no leading '-'
-    or '.', no trailing '.'."""
-    safe = F.regexp_replace(col, "[^a-zA-Z0-9_.:-]", "_")
-    safe = F.regexp_replace(safe, "^[-.]", "_")
+    """Turtle PN_LOCAL-safe local name — SAME charset as :func:`_safe_id`
+    (':' and '.' are legal inside PN_LOCAL), so one entity gets one IRI
+    across formats; only the grammar's positional rules differ: no leading
+    '-' or '.', no trailing '.'."""
+    safe = F.regexp_replace(_safe_id(col), "^[-.]", "_")
     return F.regexp_replace(safe, "\\.$", "_")
 
 
@@ -103,8 +103,11 @@ _RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 _RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
 _TRIX_NS = "http://www.w3.org/2004/03/trix/trix-1/"
 
+# the one column of a frame of file lines
+VALUE_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
 
-class RDFWriter:
+
+class RDFWriter(AdmittingSink):
     """``rdf_format``: ``ntriples`` (default; line-oriented, the scale path),
     ``turtle`` (same triples with @prefix header and prefixed names),
     ``trig`` (turtle inside a default-graph block), ``xml`` (RDF/XML, one
@@ -115,6 +118,8 @@ class RDFWriter:
     expressions, matching the reference ``_RDFWriter``'s rdflib format
     switch without rdflib (n3 is accepted as turtle by rdflib and not
     separately emitted here)."""
+
+    _extra_prefixes = ""  # turtle @prefix lines a subclass adds
 
     def __init__(
         self,
@@ -139,6 +144,8 @@ class RDFWriter:
         self.jsonld = rdf_format in JSONLD_FORMATS
         self.trix = rdf_format in TRIX_FORMATS
         os.makedirs(self.outdir, exist_ok=True)
+        self.admission = Admission()
+        self._files: set[str] = set()  # file names this writer has written
 
     @property
     def _ext(self) -> str:
@@ -172,46 +179,55 @@ class RDFWriter:
                 '"rdfs": "http://www.w3.org/2000/01/rdf-schema#"},\n'
                 '  "@graph": [\n'
             )
+        if not self.turtle:
+            return ""  # N-Triples: lines only
         turtle_header = (
             f"@prefix bc: <{self.ns}> .\n"
             "@prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .\n"
-            "@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .\n\n"
+            f"@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .\n{self._extra_prefixes}\n"
         )
-        if self.trig:
-            # TriG: the same turtle triples inside a default-graph block
-            return turtle_header + "{\n"
-        return turtle_header
+        # TriG: the same turtle triples inside a default-graph block
+        return turtle_header + "{\n" if self.trig else turtle_header
 
-    def _write_label_file(self, lines: DataFrame, filename: str) -> str:
+    def _footer(self) -> str:
+        if self.jsonld:
+            return "\n  ]\n}\n"
+        if self.xml:
+            return "</rdf:RDF>\n"
+        if self.trix:
+            return "  </graph>\n</TriX>\n"
+        return "}\n" if self.trig else ""
+
+    def _write_label_file(self, lines: DataFrame, filename: str, replace: bool = False) -> str:
+        """Write the ``value`` rows of ``lines`` into ``filename`` between
+        the format's header and footer. Into a file this writer wrote
+        before (unless ``replace``) the rows are appended: the known footer
+        is cut, the rows appended and the footer rewritten, so every format
+        stays one document. The copy is a driver-side stream of the one
+        part file; no row is collected."""
         tmp = os.path.join(self.outdir, "_tmp_rdf")
         lines.coalesce(1).write.mode("overwrite").text(tmp)
         part = glob.glob(os.path.join(tmp, "part-*"))[0]
         target = os.path.join(self.outdir, filename)
-        if self.jsonld:
-            # valid JSON needs separators BETWEEN rows: stream the part file
-            # line by line, emitting the comma before every row but the
-            # first (driver-side byte copy, same as the header paths)
-            with open(target, "w") as out, open(part) as src:
+        footer = self._footer()
+        first = replace or filename not in self._files
+        if first:
+            with open(target, "w", encoding="utf-8") as out:
                 out.write(self._header())
-                for i, line in enumerate(src):
-                    if i:
-                        out.write(",\n")
-                    out.write("    " + line.rstrip("\n"))
-                out.write("\n  ]\n}\n")
-            os.remove(part)
-        elif self.turtle or self.xml or self.trix:
-            with open(target, "w") as out, open(part) as src:
-                out.write(self._header())
-                shutil.copyfileobj(src, out)
-                if self.xml:
-                    out.write("</rdf:RDF>\n")
-                elif self.trix:
-                    out.write("  </graph>\n</TriX>\n")
-                elif self.trig:
-                    out.write("}\n")
-            os.remove(part)
         else:
-            shutil.move(part, target)
+            with open(target, "rb+") as out:
+                out.truncate(out.seek(0, os.SEEK_END) - len(footer.encode()))
+        with open(target, "a", encoding="utf-8") as out, open(part, encoding="utf-8") as src:
+            if self.jsonld:
+                # valid JSON needs separators BETWEEN rows: a comma before
+                # every row but the document's first
+                for line in src:
+                    out.write(("    " if first else ",\n    ") + line.rstrip("\n"))
+                    first = False
+            else:
+                shutil.copyfileobj(src, out)
+            out.write(footer)
+        self._files.add(filename)
         shutil.rmtree(tmp, ignore_errors=True)
         return target
 
@@ -230,6 +246,29 @@ class RDFWriter:
         return F.filter(
             F.map_entries("props"),
             lambda e: ~json_pystr(e["value"]).isin("None", ""),
+        )
+
+    def _prop_triples(self, subject):
+        """One N-Triples / Turtle line per property of ``subject``."""
+        return F.transform(
+            self._prop_entries(),
+            lambda e: F.concat(
+                subject, F.lit(" "), self._term(e["key"]),
+                F.lit(' "'), _escape_literal(json_pystr(e["value"])), F.lit('" .'),
+            ),
+        )
+
+    def _xml_props(self):
+        """The property elements of an ``rdf:Description`` block."""
+        return F.concat_ws(
+            "",
+            F.transform(
+                self._prop_entries(),
+                lambda e: F.concat(
+                    F.lit("    <bc:"), _xml_name(e["key"]), F.lit(">"), _escape_xml(json_pystr(e["value"])),
+                    F.lit("</bc:"), _xml_name(e["key"]), F.lit(">\n"),
+                ),
+            ),
         )
 
     def _const(self, pascal_name: str) -> str:
@@ -274,6 +313,7 @@ class RDFWriter:
 
     def write_nodes(self, nodes: DataFrame) -> list[str]:
         written = []
+        nodes = self.admission.nodes(nodes)
         # a NULL props map would otherwise null out concat()/map_concat()
         # chains: the node would vanish from nt/ttl/trix (explode of NULL)
         # and corrupt the JSON-LD array — normalize to the empty map once
@@ -304,11 +344,7 @@ class RDFWriter:
                     )
                 )
                 lines = sub.select(obj.alias("value"))
-                written.append(
-                    self._write_label_file(lines, f"{pascal_file_label(label)}.{self._ext}")
-                )
-                continue
-            if self.trix:
+            elif self.trix:
                 subj = F.concat(
                     F.lit(f"    <triple><uri>{self.ns}"), _safe_id(F.col("node_id")), F.lit("</uri>")
                 )
@@ -329,58 +365,31 @@ class RDFWriter:
                 lines = sub.select(
                     F.explode(F.concat(F.array(type_line), prop_lines)).alias("value")
                 )
-                written.append(
-                    self._write_label_file(lines, f"{pascal_file_label(label)}.{self._ext}")
-                )
-                continue
-            if self.xml:
-                prop_els = F.concat_ws(
-                    "",
-                    F.transform(
-                        self._prop_entries(),
-                        lambda e: F.concat(
-                            F.lit("    <bc:"),
-                            _xml_name(e["key"]),
-                            F.lit(">"),
-                            _escape_xml(json_pystr(e["value"])),
-                            F.lit("</bc:"),
-                            _xml_name(e["key"]),
-                            F.lit(">\n"),
-                        ),
-                    ),
-                )
+            elif self.xml:
                 block = F.concat(
                     F.lit(f'  <rdf:Description rdf:about="{self.ns}'),
                     _safe_id(F.col("node_id")),
                     F.lit('">\n'),
                     F.lit(f'    <rdf:type rdf:resource="{self.ns}{pascal}"/>\n'),
-                    prop_els,
+                    self._xml_props(),
                     F.lit("  </rdf:Description>"),
                 )
                 lines = sub.select(block.alias("value"))
             else:
                 subject = self._term(F.col("node_id"))
-                cls = self._const(pascal)
-                type_line = F.concat(subject, F.lit(f" {self._rdf_type} {cls} ."))
-                prop_lines = F.transform(
-                    self._prop_entries(),
-                    lambda e: F.concat(
-                        subject,
-                        F.lit(" "),
-                        self._term(e["key"]),
-                        F.lit(' "'),
-                        _escape_literal(json_pystr(e["value"])),
-                        F.lit('" .'),
-                    ),
-                )
+                type_line = F.concat(subject, F.lit(f" {self._rdf_type} {self._const(pascal)} ."))
                 lines = sub.select(
-                    F.explode(F.concat(F.array(type_line), prop_lines)).alias("value")
+                    F.explode(F.concat(F.array(type_line), self._prop_triples(subject))).alias("value")
                 )
             written.append(self._write_label_file(lines, f"{pascal_file_label(label)}.{self._ext}"))
+        self.admission.release_earlier_row_pins("node")
         return written
 
-    def write_edges(self, edges: DataFrame) -> list[str]:
-        written = []
+    def write_edges(self, edges) -> list[str]:
+        """Edges, or a TranslatedEdges whose surviving reified nodes are
+        written as nodes (:meth:`dedup.Admission.edges`)."""
+        ran_nodes, edges = self.admission.edges(edges)
+        written = [] if ran_nodes is None else self.write_nodes(ran_nodes)
         edges = edges.withColumn(
             "props", F.coalesce(F.col("props"), F.create_map().cast("map<string,string>"))
         )
@@ -477,21 +486,6 @@ class RDFWriter:
                     res(F.col("target_id")),
                     F.lit("/>\n  </rdf:Description>"),
                 )
-                prop_els = F.concat_ws(
-                    "",
-                    F.transform(
-                        self._prop_entries(),
-                        lambda e: F.concat(
-                            F.lit("    <bc:"),
-                            _xml_name(e["key"]),
-                            F.lit(">"),
-                            _escape_xml(json_pystr(e["value"])),
-                            F.lit("</bc:"),
-                            _xml_name(e["key"]),
-                            F.lit(">\n"),
-                        ),
-                    ),
-                )
                 reified = F.concat(
                     F.lit(f'  <rdf:Description rdf:about="{self.ns}'),
                     _safe_id(F.col("relationship_id")),
@@ -502,7 +496,7 @@ class RDFWriter:
                     F.lit("/>\n    <bc:object "),
                     res(F.col("target_id")),
                     F.lit("/>\n"),
-                    prop_els,
+                    self._xml_props(),
                     F.lit("  </rdf:Description>"),
                 )
                 lines = sub.select(
@@ -521,20 +515,13 @@ class RDFWriter:
                 rel = self._term(F.col("relationship_id"))
                 # one line per triple via explode (props ride on the
                 # reified edge node, reference _rdf.py:254-259)
-                prop_lines = F.transform(
-                    self._prop_entries(),
-                    lambda e: F.concat(
-                        rel, F.lit(" "), self._term(e["key"]),
-                        F.lit(' "'), _escape_literal(json_pystr(e["value"])), F.lit('" .'),
-                    ),
-                )
                 reified_arr = F.concat(
                     F.array(
                         F.concat(rel, F.lit(f" {self._rdf_type} {pred} .")),
                         F.concat(rel, F.lit(f" {self._rdf_subject} "), src, F.lit(" .")),
                         F.concat(rel, F.lit(f" {self._rdf_object} "), tgt, F.lit(" .")),
                     ),
-                    prop_lines,
+                    self._prop_triples(rel),
                 )
                 arr = F.when(F.col("relationship_id").isNotNull(), reified_arr).otherwise(
                     F.array(direct)
@@ -545,8 +532,10 @@ class RDFWriter:
                 else:
                     cls_line = f"<{self.ns}{pascal}> {RDF_TYPE} <{_RDFS_NS}Class> ."
             # the reference types every edge class rdfs:Class in its file
-            # (_rdf.py:394-398) — one driver-literal row unioned in front
-            cls_row = self.spark.createDataFrame([(cls_line,)], "value string")
-            lines = cls_row.union(lines)
-            written.append(self._write_label_file(lines, f"{pascal_file_label(label)}.{self._ext}"))
+            # (_rdf.py:394-398) — one driver-literal row in front, once
+            name = f"{pascal_file_label(label)}.{self._ext}"
+            if name not in self._files:
+                lines = local_frame(self.spark, [(cls_line,)], VALUE_SCHEMA).union(lines)
+            written.append(self._write_label_file(lines, name))
+        self.admission.release_earlier_row_pins("edge")
         return written

@@ -1,11 +1,16 @@
 """Facade + in-memory KG tests (mirror of reference test_core.py surface)."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from biocypher_spark.core import BioCypherSpark
+from biocypher_spark.writer.base import pascal_file_label
+from biocypher_spark.writer.biopathnet import BioPathNetWriter
+from biocypher_spark.writer.neo4j import Neo4jBatchWriter
+from biocypher_spark.writer.registry import DBMS_TO_CLASS
 from fixtures.data_generator import (
     mirna_nodes,
     mutated_edges,
@@ -149,8 +154,8 @@ def test_facade_download(bc, tmp_path):
 
 
 def test_dbms_owl_rel_as_node_flattened(spark, schema_path, tmp_path):
-    """DataFrame-interface sinks receive rel-as-node helper nodes/edges
-    flattened in (the batch family rebuilds them itself)."""
+    """The OWL sink writes rel-as-node triplets: its admission step splits
+    the translated edges into the reified nodes and their helper edges."""
     bc = BioCypherSpark(
         spark, dbms="owl", output_directory=str(tmp_path), schema_config_path=schema_path
     )
@@ -270,53 +275,168 @@ _THREE_CALLS = [
 ]
 
 
-def test_in_memory_kg_keeps_what_the_batch_writer_writes(spark, schema_path, tmp_path):
-    """The batch writer and InMemoryKG run the same first-wins key spaces:
-    fed the same calls they keep the same node ids, edges and rel-as-node
-    helper edges. A reified id that first arrived as a plain node is a node
-    duplicate (D1), but its triplet is new in the (type, id) space (D3), so
-    both keep its helper edges."""
-    from biocypher_spark.writer.base import pascal_file_label
+def _staged_calls(spark):
+    """_THREE_CALLS as staged frames, the third with a node whose id is NULL
+    and two edges with a NULL endpoint, which no sink has anything to write
+    for."""
+    from biocypher_spark.model import edges_from_tuples, nodes_from_tuples
 
-    written = BioCypherSpark(spark, output_directory=str(tmp_path / "csv"), schema_config_path=schema_path)
-    in_memory = BioCypherSpark(spark, output_directory=str(tmp_path / "mem"), schema_config_path=schema_path)
-    for nodes, edges in _THREE_CALLS:
-        written.write_nodes(nodes)
-        written.write_edges(edges)
-        in_memory.add(nodes)
-        in_memory.add(edges)
+    def null_gone(df, *cols):
+        for col in cols:
+            df = df.withColumn(col, F.when(F.col(col) == "gone", F.lit(None)).otherwise(F.col(col)))
+        return df
 
-    def lines(labels):
+    nulls = ([_protein("gone")], [_perturbed("e2", "gone", "p2"), _perturbed("e3", "p1", "gone")])
+    return [
+        (null_gone(nodes_from_tuples(spark, n + nn), "id"), null_gone(edges_from_tuples(spark, e + ne), "src", "tgt"))
+        for (n, e), (nn, ne) in zip(_THREE_CALLS, [([], [])] * 2 + [nulls])
+    ]
+
+
+def _label_key(label):
+    """A label as every layout spells it: Pascal-cased by RDF/OWL terms,
+    upper snake case in the CSV type column."""
+    return re.sub("[^a-z0-9]", "", label.lower())
+
+
+# each reader returns (node ids, edge keys) as lists: a row written twice
+# shows up twice
+
+
+def _read_batch_csv(writer):
+    """The node ids and edge keys of the batch-CSV family's part files."""
+    def rows(labels):
         for label in labels:
-            for part in written.writer.parts[pascal_file_label(label)]:
-                yield from open(tmp_path / "csv" / part).read().splitlines()
+            for part in writer.parts.get(pascal_file_label(label), []):
+                for line in open(os.path.join(writer.outdir, part)).read().splitlines():
+                    yield label, line.split(writer.delim)
 
-    csv_nodes = {line.split(";")[0] for line in lines(written.writer.node_property_dict)}
-    csv_edges = {
-        (f[-1].strip("'"), f[0], f[-2]) for f in (line.split(";") for line in lines(written.writer.edge_property_dict))
-    }
-    kg = in_memory.get_kg()
-    kg_nodes = {r["node_id"] for df in kg.values() if "node_id" in df.columns for r in df.collect()}
-    kg_edges = {
-        (r["relationship_label"], r["source_id"], r["target_id"])
-        for df in kg.values()
+    nodes = [f[0] for _, f in rows(writer.node_property_dict)]
+    target = -2 if writer.edge_line_includes_labels else -1
+    edges = [(_label_key(label), f[0], f[target]) for label, f in rows(writer.edge_property_dict)]
+    return nodes, edges
+
+
+def _read_biopathnet(writer):
+    """The node ids of entity_types.txt (node rows are typed with their node
+    label) and the edge keys of skg.txt."""
+    types = [line.split("\t") for line in open(os.path.join(writer.outdir, "entity_types.txt")).read().splitlines()]
+    skg = [line.split("\t") for line in open(os.path.join(writer.outdir, "skg.txt")).read().splitlines()]
+    labels = {"protein", "post translational interaction"}
+    return [i for i, t in types if t in labels], [(_label_key(lab), s, t) for s, lab, t in skg]
+
+
+def _local(term):
+    return term.strip("<>").rsplit("#", 1)[-1].split(":", 1)[-1]
+
+
+def _read_rdf(writer):
+    """The node ids and edge keys of the RDF / OWL files. N-Triples lines and
+    JSON-LD objects become (s, p, o) local names, literals kept quoted. A
+    node is typed with its class; a reified edge is an RDF bc:subject /
+    bc:object or an OWL edge_source / edge_target instance, typed with its
+    label; a triple between two resources under any other predicate is a
+    direct edge. A JSON-LD file must parse as one document."""
+    import json
+
+    triples = []
+    for name in sorted(os.listdir(writer.outdir)):
+        path = os.path.join(writer.outdir, name)
+        if name.endswith(".jsonld"):
+            for obj in json.load(open(path))["@graph"]:
+                s = _local(obj.pop("@id"))
+                triples += [(s, "type", _local(obj.pop("@type")))] if "@type" in obj else []
+                for k, v in obj.items():
+                    triples.append((s, _local(k), _local(v["@id"]) if isinstance(v, dict) else f'"{v}"'))
+        elif name.endswith(".nt"):
+            for line in open(path).read().splitlines():
+                s, p, o = re.fullmatch(r"(\S+) (\S+) (.+) \.", line).groups()
+                triples.append((_local(s), _local(p), o if o.startswith('"') else _local(o)))
+    sources = [(s, o) for s, p, o in triples if p == "subject"] + [(o, s) for s, p, o in triples if p == "edge_source"]
+    targets = {s: o for s, p, o in triples if p in ("object", "edge_target")}
+    types = [(s, o) for s, p, o in triples if p == "type" and o not in ("Class", "ObjectProperty", "NamedIndividual")]
+    label = dict(types)
+    edges = [(_label_key(label[i]), src, targets[i]) for i, src in sources]
+    vocabulary = {"type", "subject", "object", "edge_source", "edge_target", "label", "subClassOf", "subPropertyOf"}
+    edges += [(_label_key(p), s, o) for s, p, o in triples if p not in vocabulary and not o.startswith('"')]
+    reified = {i for i, _ in sources}
+    return [s for s, _ in types if s not in reified], edges
+
+
+def _read_in_memory(kg):
+    frames = kg.get_kg()
+    nodes = [r["node_id"] for df in frames.values() if "node_id" in df.columns for r in df.collect()]
+    edges = [
+        (_label_key(r["relationship_label"]), r["source_id"], r["target_id"])
+        for df in frames.values()
         if "source_id" in df.columns
         for r in df.collect()
+    ]
+    return nodes, edges
+
+
+# one dbms name per registry class, N-Triples and JSON-LD (a header/footer
+# format with a separator between rows) for RDF, and the in-memory KG
+_SINKS = [pytest.param(dbms, {}, id=dbms) for dbms in {cls: d for d, cls in reversed(DBMS_TO_CLASS.items())}.values()]
+_SINKS += [pytest.param("rdf", {"rdf_format": "json-ld"}, id="rdf-jsonld"), pytest.param(None, {}, id="in-memory")]
+
+
+@pytest.mark.parametrize("dbms, kwargs", _SINKS)
+def test_every_sink_admits_the_same_rows(spark, schema_path, tmp_path, dbms, kwargs):
+    """Every sink admits its rows through one dedup.Admission: fed the same
+    calls, each writes every kept node id and edge key once, and reports the
+    same duplicate rows. The calls replay nodes, edges and rel-as-node
+    triplets within and across calls; a reified id (i1) that first arrived
+    as a plain protein node is a node duplicate (D1), but its triplet is new
+    in the (type, id) space (D3), so its helper edges are kept. A NULL id
+    and a NULL endpoint are dropped, and a later call's rows are added to
+    what earlier calls wrote."""
+    bc = BioCypherSpark(
+        spark, dbms=dbms or "neo4j", output_directory=str(tmp_path), schema_config_path=schema_path, **kwargs
+    )
+    for nodes, edges in _staged_calls(spark):
+        if dbms is None:
+            bc.add(nodes)
+            bc.add(edges)
+        else:
+            bc.write_nodes(nodes)
+            bc.write_edges(edges)
+    sink = bc.kg if dbms is None else bc.writer
+    if dbms is None:
+        read = _read_in_memory
+    elif isinstance(sink, Neo4jBatchWriter):
+        read = _read_batch_csv
+    elif isinstance(sink, BioPathNetWriter):
+        read = _read_biopathnet
+    else:
+        read = _read_rdf
+    nodes, edges = read(sink)
+    assert sorted(nodes) == ["i1", "i2", "i3", "p1", "p2", "p3", "p4"]
+    assert sorted(edges) == sorted([
+        ("perturbedindisease", "p1", "p2"),
+        ("perturbedindisease", "p2", "p3"),
+        ("perturbedindisease", "p3", "p4"),
+        ("issourceof", "p1", "i1"),
+        ("istargetof", "p2", "i1"),
+        ("issourceof", "p2", "i2"),
+        ("istargetof", "p3", "i2"),
+        ("issourceof", "p3", "i3"),
+        ("istargetof", "p4", "i3"),
+    ])
+    # (kind, label, dup_id): p1 in call 1, p2 and p3 across calls, i1 first
+    # seen as a protein (D1); prel1 in and across calls (D2); i2 across
+    # calls and i3 in call 3 (D3)
+    assert {tuple(r) for r in sink.get_duplicate_nodes().collect()} == {
+        ("node", "protein", "p1"),
+        ("node", "protein", "p2"),
+        ("node", "protein", "p3"),
+        ("node", "post translational interaction", "i1"),
     }
-    assert csv_nodes == kg_nodes == {"p1", "p2", "p3", "p4", "i1", "i2", "i3"}
-    assert csv_edges == kg_edges == {
-        ("PERTURBED_IN_DISEASE", "p1", "p2"),
-        ("PERTURBED_IN_DISEASE", "p2", "p3"),
-        ("PERTURBED_IN_DISEASE", "p3", "p4"),
-        ("IS_SOURCE_OF", "p1", "i1"),
-        ("IS_TARGET_OF", "p2", "i1"),
-        ("IS_SOURCE_OF", "p2", "i2"),
-        ("IS_TARGET_OF", "p3", "i2"),
-        ("IS_SOURCE_OF", "p3", "i3"),
-        ("IS_TARGET_OF", "p4", "i3"),
+    assert {tuple(r) for r in sink.get_duplicate_edges().collect()} == {
+        ("edge", "PERTURBED_IN_DISEASE", "prel1"),
+        ("edge", "post translational interaction", "i2"),
+        ("edge", "post translational interaction", "i3"),
     }
-    # i1 stays the protein it first arrived as
-    assert {r["node_id"] for r in kg["protein"].collect()} == {"p1", "p2", "p3", "p4", "i1"}
 
 
 def test_in_memory_label_as_edge_uses_declared_props(spark, tmp_path):
@@ -337,40 +457,3 @@ def test_in_memory_label_as_edge_uses_declared_props(spark, tmp_path):
     assert dict(bc.get_kg()["INTERACTS_WITH"].dtypes)["score"] == "double"
     bc.write_edges(edges)
     assert "score:double" in open(tmp_path / "INTERACTS_WITH-header.csv").read().split(";")
-
-
-def test_in_memory_kg_drops_null_keys_like_the_batch_writer(spark, schema_path, tmp_path):
-    """Given the same staged frames, the batch writer and InMemoryKG keep the
-    same rows: a node with a NULL id and an edge with a NULL endpoint have
-    nothing to write, and both sinks drop them before their key spaces."""
-    from biocypher_spark.model import edges_from_tuples, nodes_from_tuples
-    from biocypher_spark.writer.base import pascal_file_label
-
-    def null_where(df, col, value):
-        return df.withColumn(col, F.when(F.col(col) == value, F.lit(None)).otherwise(F.col(col)))
-
-    nodes = null_where(nodes_from_tuples(spark, [_protein("gone"), _protein("p1"), _protein("p2")]), "id", "gone")
-    edges = edges_from_tuples(
-        spark,
-        [_perturbed("e1", "p1", "p2"), _perturbed("e2", "gone", "p2"), _perturbed("e3", "p1", "gone")],
-    )
-    edges = null_where(null_where(edges, "src", "gone"), "tgt", "gone")
-
-    written = BioCypherSpark(spark, output_directory=str(tmp_path / "csv"), schema_config_path=schema_path)
-    in_memory = BioCypherSpark(spark, output_directory=str(tmp_path / "mem"), schema_config_path=schema_path)
-    written.write_nodes(nodes)
-    written.write_edges(edges)
-    in_memory.add(nodes)
-    in_memory.add(edges)
-
-    def lines(labels):
-        for label in labels:
-            for part in written.writer.parts.get(pascal_file_label(label), []):
-                yield from (line.split(";") for line in open(tmp_path / "csv" / part).read().splitlines())
-
-    kg = in_memory.get_kg()
-    csv_nodes = {f[0] for f in lines(written.writer.node_property_dict)}
-    assert csv_nodes == {r["node_id"] for r in kg["protein"].collect()} == {"p1", "p2"}
-    csv_edges = {(f[0], f[-2]) for f in lines(written.writer.edge_property_dict)}
-    kg_edges = {(r["source_id"], r["target_id"]) for r in kg["PERTURBED_IN_DISEASE"].collect()}
-    assert csv_edges == kg_edges == {("p1", "p2")}

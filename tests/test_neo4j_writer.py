@@ -303,9 +303,10 @@ def test_duplicate_metrics_chain_collapses(spark, bw):
     collapse: repoint_state clears the chain lengths at every state write."""
     rows = [("node", "protein", f"p{i % 7}") for i in range(3)]
     df = spark.createDataFrame(rows, "kind string, label string, dup_id string")
-    for _ in range(2 * bw._DUP_COLLAPSE + 3):
-        bw._note_dups("duplicate_nodes", df)
-    assert bw._dup_chain_len["duplicate_nodes"] < bw._DUP_COLLAPSE
+    admission = bw.admission
+    for _ in range(2 * admission._DUP_COLLAPSE + 3):
+        admission._note_dups("duplicate_nodes", df)
+    assert admission._dup_chain_len["duplicate_nodes"] < admission._DUP_COLLAPSE
     got = {(r["kind"], r["label"], r["dup_id"]) for r in bw.get_duplicate_nodes().collect()}
     assert got == {("node", "protein", f"p{i}") for i in range(3)}
 
@@ -392,7 +393,7 @@ def test_first_wins_dedup_across_calls(spark, schema_path, tmp_path):
         ("node", "protein", "p1"),   # call-2 cross-call replay of p1
         ("node", "protein", "p3"),   # call-2 in-call dup
     ]
-    assert sorted(r["_key"] for r in w.key_spaces["_seen_nodes"].seen.collect()) == ["p1", "p2", "p3"]
+    assert sorted(r["_key"] for r in w.admission.key_spaces["_seen_nodes"].seen.collect()) == ["p1", "p2", "p3"]
 
 
 def test_dedup_against_seen_starts_no_job(spark, schema_path, tmp_path):
@@ -401,14 +402,14 @@ def test_dedup_against_seen_starts_no_job(spark, schema_path, tmp_path):
     translator = SparkTranslator(spark, NullOntology(SchemaMapping(schema_path)))
     w = Neo4jBatchWriter(spark, translator, str(tmp_path), ordered_parts=False, track_seen=True)
     w.write_nodes(translator.translate_nodes(nodes_from_tuples(spark, protein_nodes(2))).nodes)
-    assert w.key_spaces["_seen_nodes"].seen is not None
+    assert w.admission.key_spaces["_seen_nodes"].seen is not None
     nodes = translator.translate_nodes(nodes_from_tuples(spark, protein_nodes(4))).nodes
 
     sc = spark.sparkContext
     group = "test-dedup-against-seen"
     sc.setJobGroup(group, "dedup against existing seen state")
     try:
-        w.key_spaces["_seen_nodes"].admit(nodes)
+        w.admission.key_spaces["_seen_nodes"].admit(nodes)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
@@ -447,7 +448,7 @@ def test_facade_keeps_row_pins_of_latest_call_only(spark, schema_path, tmp_path,
         assert all(df.storageLevel == StorageLevel.NONE for df in frames), earlier
     latest = [df for c, df in persisted if c == calls - 1]
     assert any(df.storageLevel != StorageLevel.NONE for df in latest)
-    bc.writer.release_seen_state_pins()
+    bc.writer.admission.release_seen_state_pins()
     assert all(df.storageLevel == StorageLevel.NONE for _, df in persisted)
 
 

@@ -75,16 +75,37 @@ def _rdd_lineage(df) -> str:
     return df._jdf.queryExecution().toRdd().toDebugString()
 
 
-def test_local_frames_start_no_python_worker(spark, schema_path, arrow_conf_off):
+def test_local_frames_start_no_python_worker(spark, schema_path, arrow_conf_off, tmp_path, monkeypatch):
     from biocypher_spark.linking import canonicalize
+    from biocypher_spark.model import EDGE_SCHEMA, NODE_SCHEMA, local_frame
     from biocypher_spark.operators.components import connected_components
+    from biocypher_spark.writer.owl import OWLWriter
+    from biocypher_spark.writer.rdf import RDFWriter
 
     surfaces = spark.createDataFrame([("PROT7",), ("prot-7",), ("Protein 7",), ("DIS3",)], "surface string")
     canon = canonicalize(surfaces)
-    mapping = SparkTranslator(spark, NullOntology(SchemaMapping(schema_path))).mapping_df()
+    translator = SparkTranslator(spark, NullOntology(SchemaMapping(schema_path)))
+    mapping = translator.mapping_df()
     edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("d", "e")], "src string, dst string")
     labels = connected_components(edges)
-    for df in (canon, mapping, labels):
+    # the frames the RDF and OWL sinks write: RDF's rdfs:Class row and the
+    # OWL vocabulary are driver-built, unioned in front of the rows
+    written = []
+    write = RDFWriter._write_label_file
+
+    def spy(writer, lines, *args, **kwargs):
+        written.append(lines)
+        return write(writer, lines, *args, **kwargs)
+
+    monkeypatch.setattr(RDFWriter, "_write_label_file", spy)
+    kg_nodes = local_frame(spark, [("p1", "protein", "id", [("name", '"a"')], 0)], NODE_SCHEMA)
+    kg_edges = local_frame(spark, [("e1", "p1", "p1", "PERTURBED_IN_DISEASE", [], 0)], EDGE_SCHEMA)
+    RDFWriter(spark, translator, str(tmp_path / "rdf")).write_edges(kg_edges)
+    owl = OWLWriter(spark, translator, str(tmp_path / "owl"))
+    owl.write_nodes(kg_nodes)
+    owl.write_edges(kg_edges)
+    assert len(written) == 2
+    for df in (canon, mapping, labels, *written):
         assert "PythonRDD" not in _rdd_lineage(df)
     # the frames still carry the rows computed in Python
     assert {r["canonical_id"] for r in canon.collect()} == {"prot7", "dis3"}
