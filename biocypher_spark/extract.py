@@ -59,11 +59,23 @@ def extract_mentions(
     return _regexp_mentions(transcripts, patterns, ("conv_id", "turn_idx"))
 
 
+# the code points whose lowercase form holds an ASCII letter or digit: A-Z,
+# U+0130 (İ -> "i" + U+0307) and U+212A (Kelvin sign -> "k")
+_KEY_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ\u0130\u212a"
+_KEY_LOWER = "abcdefghijklmnopqrstuvwxyzik"
+
+
 def normalize_surface(col) -> F.Column:
     """Blocking key: lowercase, strip non-alphanumerics.
 
     ``PROT7`` / ``prot-7`` / ``Protein 7`` -> ``prot7`` / ``prot7`` /
     ``protein7`` — variants collapse either directly or via the similarity
     join in linking.py.
+
+    Equal to ``regexp_replace(lower(col), '[^a-z0-9]', '')`` for every
+    string: only the code points in ``_KEY_UPPER`` lowercase to something
+    that survives the strip, so mapping just those is enough. It skips
+    ``lower``'s ICU case mapping, whose one-off class set-up stalls the
+    first scan of a fresh JVM.
     """
-    return F.regexp_replace(F.lower(col), "[^a-z0-9]", "")
+    return F.regexp_replace(F.translate(col, _KEY_UPPER, _KEY_LOWER), "[^a-z0-9]", "")

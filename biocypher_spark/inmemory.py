@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from .dedup import Admission, AdmittingSink
 from .materialize import materialize
-from .model import SEQ
+from .model import SEQ, json_decode_str
 from .writer.base import declared_props, infer_prop_types
 
 
@@ -38,7 +38,7 @@ def _typed_props(df: DataFrame, prop_types: dict) -> DataFrame:
             elem = {"str": "string", "int": "bigint", "long": "bigint", "float": "double", "double": "double", "bool": "boolean"}.get(declared[:-2], "string")
             col = F.from_json(raw, f"array<{elem}>")
         else:
-            col = F.when(raw.startswith('"'), F.from_json(F.concat(F.lit("["), raw, F.lit("]")), "array<string>")[0]).otherwise(raw)
+            col = F.when(raw.startswith('"'), json_decode_str(raw)).otherwise(raw)
         out = out.withColumn(key, col)
     return out.drop("props")
 

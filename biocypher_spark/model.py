@@ -163,9 +163,32 @@ def edges_from_tuples(spark: SparkSession, tuples: Iterable[tuple]) -> DataFrame
 # -- JSON scalar helpers (all JVM-side expressions) -------------------------
 
 
+# Jackson escapes exactly '"', '\' and U+0000-U+001F in a JSON string;
+# every other character stands as itself (Java regexes)
+_JSON_ESCAPED = r'["\\\x00-\x1f]'
+_JSON_PLAIN = r'^"[^"\\\x00-\x1f]*"\z'  # \z: `$` also matches before a final line break
+
+
+def json_encode_str(col: Column) -> Column:
+    """JSON-encode a string column: ``abc`` -> ``"abc"``, NULL -> ``null``.
+
+    A value with nothing to escape is only wrapped in quotes; any other
+    value, NULL included, goes through Jackson (``to_json``). Both give the
+    same text, and the common plain value skips a JSON generator per row."""
+    arr = F.to_json(F.array(col))
+    jackson = F.substring(arr, F.lit(2), F.length(arr) - F.lit(2))
+    return F.when(~col.rlike(_JSON_ESCAPED), F.concat(F.lit('"'), col, F.lit('"'))).otherwise(jackson)
+
+
 def json_decode_str(col: Column) -> Column:
-    """Decode a JSON-encoded scalar to its string value (null-safe)."""
-    return F.from_json(F.concat(F.lit("["), col, F.lit("]")), T.ArrayType(T.StringType()))[0]
+    """Decode a JSON-encoded scalar to its string value (null-safe).
+
+    A quoted string with no escape and no raw control character is the text
+    between its quotes; anything else, NULL and malformed text included,
+    goes through Jackson (``from_json``). Both give the same value, and the
+    common plain value skips a JSON parser per row."""
+    jackson = F.from_json(F.concat(F.lit("["), col, F.lit("]")), T.ArrayType(T.StringType()))[0]
+    return F.when(col.rlike(_JSON_PLAIN), F.substring(col, F.lit(2), F.length(col) - F.lit(2))).otherwise(jackson)
 
 
 def json_pystr(col: Column) -> Column:

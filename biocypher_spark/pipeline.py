@@ -47,9 +47,9 @@ from pyspark.sql import functions as F
 from .extract import extract_mentions
 from .linking import link_mentions
 from .mapping import SchemaMapping
-from .model import SEQ
+from .model import SEQ, json_encode_str
 from .ontology import NullOntology
-from .translate import SparkTranslator, _json_str
+from .translate import SparkTranslator
 from .writer.neo4j import Neo4jBatchWriter
 
 DEFAULT_SCHEMA = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "config", "transcripts_schema.yaml")
@@ -453,7 +453,7 @@ def build_triple_tuples(linked: DataFrame, edge_labels: "set | None" = None) -> 
         .select(
             ns_id.alias("id"),
             "input_label",
-            F.map_from_arrays(F.array(F.lit("name")), F.array(_json_str(F.col("name")))).alias("props"),
+            F.map_from_arrays(F.array(F.lit("name")), F.array(json_encode_str(F.col("name")))).alias("props"),
             F.xxhash64(ns_id).alias(SEQ),
         )
     )

@@ -18,7 +18,7 @@ from .materialize import materialize as _materialize
 from .extract import extract_mentions, normalize_surface
 from .graph import SparkGraph
 from .mapping import SchemaMapping
-from .model import SEQ
+from .model import SEQ, json_encode_str
 from .ontology import NullOntology, Ontology
 from .operators.components import connected_components
 from .translate import SparkTranslator
@@ -175,7 +175,7 @@ def _staged_part_nodes(spark, sf_dir) -> DataFrame:
         F.map_from_arrays(
             F.array(F.lit("name"), F.lit("retail")),
             F.array(
-                F.to_json(F.array("p_name")).substr(F.lit(2), F.length(F.to_json(F.array("p_name"))) - F.lit(2)),
+                json_encode_str(F.col("p_name")),
                 F.col("p_retailprice").cast("string"),
             ),
         ).alias("props"),

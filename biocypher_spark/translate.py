@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .model import SEQ, json_decode_str, json_pystr, local_frame
+from .model import SEQ, json_decode_str, json_encode_str, json_pystr, local_frame
 from .naming import sentence_to_pascal, to_list
 from .ontology import NullOntology
 
@@ -89,12 +89,6 @@ def ran_helper_edges(nodes_with_endpoints: DataFrame) -> DataFrame:
             )
         ).alias("e")
     ).select("e.*")
-
-
-def _json_str(col: Column) -> Column:
-    """JSON-encode a string column (proper escaping, JVM-side)."""
-    arr = F.to_json(F.array(col))
-    return F.substring(arr, F.lit(2), F.length(arr) - F.lit(2))
 
 
 class SparkTranslator:
@@ -257,8 +251,8 @@ class SparkTranslator:
         props_out = F.map_concat(
             props_out,
             F.create_map(
-                F.lit("id"), _json_str(F.col("id")),
-                F.lit("preferred_id"), _json_str(F.col("preferred_id")),
+                F.lit("id"), json_encode_str(F.col("id")),
+                F.lit("preferred_id"), json_encode_str(F.col("preferred_id")),
             ),
         )
         nodes = matched.select(
@@ -340,7 +334,7 @@ class SparkTranslator:
         node_props = F.map_concat(
             node_props,
             F.create_map(
-                F.lit("id"), _json_str(F.col("ran_id")),
+                F.lit("id"), json_encode_str(F.col("ran_id")),
                 F.lit("preferred_id"), F.lit('"id"'),
             ),
         )

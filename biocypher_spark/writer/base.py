@@ -149,7 +149,7 @@ def serialize_prop(
 
 def node_line_expr(
     prop_dict: dict,
-    label_string: str,
+    label_string: Column,
     delim: str,
     adelim: str,
     quote: str,
@@ -157,8 +157,9 @@ def node_line_expr(
     array_mode: str = "delim",
     include_labels: bool = True,
 ) -> Column:
-    """Build the full CSV line for one node label:
-    ``id ; props... ; :LABEL-string``."""
+    """Build the full CSV line of the nodes with one property layout:
+    ``id ; props... ; :LABEL-string`` (``label_string`` is a column, so
+    labels that share the layout share the line)."""
     pieces: list[Column] = [F.col("node_id")]
     for key, declared in prop_dict.items():
         raw = F.element_at(F.col("props"), key)
@@ -168,13 +169,13 @@ def node_line_expr(
             )
         )
     if include_labels:
-        pieces.append(F.lit(label_string))
+        pieces.append(label_string)
     return F.concat_ws(delim, *pieces)
 
 
 def edge_line_expr(
     prop_dict: dict,
-    label_string: str,
+    label_string: Column,
     delim: str,
     adelim: str,
     quote: str,
@@ -183,7 +184,7 @@ def edge_line_expr(
     array_mode: str = "delim",
     include_labels: bool = True,
 ) -> Column:
-    """CSV line for one edge label:
+    """CSV line of the edges with one property layout:
     ``:START_ID ; [id] ; props... ; :END_ID ; :TYPE``."""
     pieces: list[Column] = [F.col("source_id")]
     if not skip_id:
@@ -197,7 +198,7 @@ def edge_line_expr(
         )
     pieces.append(F.col("target_id"))
     if include_labels:
-        pieces.append(F.lit(label_string))
+        pieces.append(label_string)
     return F.concat_ws(delim, *pieces)
 
 

@@ -261,9 +261,18 @@ class Neo4jBatchWriter(AdmittingSink):
             return None
         return {label: known.get(label) or self._resolve_prop_dict(label, {}, kind) for label in sorted(labels)}
 
-    def _write_by_label(self, df: DataFrame, kind: str, line_for: Callable[[str, dict], Column]) -> None:
-        """Write each row's line (``line_for(label, props)``) to its label's
-        part files; labels that got rows get their headers.
+    def _write_by_label(
+        self,
+        df: DataFrame,
+        kind: str,
+        label_string: Callable[[str], str],
+        line_for: Callable[[str, dict, Column], Column],
+    ) -> None:
+        """Write each row's line to its label's part files; labels that got
+        rows get their headers. ``label_string(label)`` is a label's
+        ``:LABEL`` / ``:TYPE`` text and ``line_for(label, props, labels)``
+        the line of the rows sharing ``label``'s layout, with ``labels`` the
+        column holding each row's label text.
 
         When the schema declares the properties of every label it routes as
         ``kind``, rows of those labels are written without looking at the
@@ -279,7 +288,7 @@ class Neo4jBatchWriter(AdmittingSink):
             hit = F.coalesce(F.col(label_col).isin(list(declared)), F.lit(False))
             obs = Observation()
             observed = df.observe(obs, F.count(F.when(~hit, 1)).alias("other"))
-            self._write_lines(observed.filter(hit), label_col, declared, line_for, known)
+            self._write_lines(observed.filter(hit), kind, declared, known, label_string, line_for)
             if not obs.get["other"]:
                 return
             df = df.filter(~hit)
@@ -291,24 +300,43 @@ class Neo4jBatchWriter(AdmittingSink):
                 for label, first_props in firsts.items()
             }
             self._validate_consistent_props(df, label_col, prop_dicts)
-            self._write_lines(df, label_col, prop_dicts, line_for, known)
+            self._write_lines(df, kind, prop_dicts, known, label_string, line_for)
         df.unpersist()
 
     def _write_lines(
-        self, df: DataFrame, label_col: str, prop_dicts: dict, line_for: Callable[[str, dict], Column], known: dict
+        self,
+        df: DataFrame,
+        kind: str,
+        prop_dicts: dict,
+        known: dict,
+        label_string: Callable[[str], str],
+        line_for: Callable[[str, dict, Column], Column],
     ) -> None:
         """One text job writing each row's line to its label's part files;
-        labels that got rows join ``known`` (their headers are written)."""
+        labels that got rows join ``known`` (their headers are written).
+
+        Labels with one layout (property dict, and for edges whether the id
+        column is written) share one line expression, which looks their
+        label text up in a literal map: each serializer is built and
+        compiled once per layout, not once per label."""
+        label_col = "node_label" if kind == "node" else "relationship_label"
+        layouts: dict[tuple, list[str]] = {}
+        for label, props in prop_dicts.items():
+            layout = (tuple(props.items()), kind == "edge" and self._edge_skip_id(label))
+            layouts.setdefault(layout, []).append(label)
         # a label without a line format fails the job loudly instead of
         # being written under another label's columns
         line = plabel = F.raise_error(
             F.concat(F.lit(f"no line format for {label_col} "), F.coalesce(F.col(label_col), F.lit("NULL")))
         )
+        for labels in layouts.values():
+            texts = F.create_map(*(F.lit(x) for label in labels for x in (label, label_string(label))))
+            line = F.when(
+                F.col(label_col).isin(labels), line_for(labels[0], prop_dicts[labels[0]], texts[F.col(label_col)])
+            ).otherwise(line)
         by_file = {}
-        for label, props in prop_dicts.items():
-            hit = F.col(label_col) == label
-            line = F.when(hit, line_for(label, props)).otherwise(line)
-            plabel = F.when(hit, F.lit(pascal_file_label(label))).otherwise(plabel)
+        for label in prop_dicts:
+            plabel = F.when(F.col(label_col) == label, F.lit(pascal_file_label(label))).otherwise(plabel)
             by_file[pascal_file_label(label)] = label
         lines_df = df.select(plabel.alias("_plabel"), line.alias("line"), F.col(SEQ))
         written = write_part_files(lines_df, self.outdir, self.batch_size, ordered=self.ordered_parts)
@@ -321,10 +349,10 @@ class Neo4jBatchWriter(AdmittingSink):
         """NODE_SCHEMA DataFrame -> part files + headers. Returns True."""
         nodes = self.admission.nodes(nodes)
 
-        def line_for(label: str, props: dict) -> Column:
+        def line_for(label: str, props: dict, labels: Column) -> Column:
             return node_line_expr(
                 props,
-                self._all_labels(label, self.node_labels_order, force),
+                labels,
                 self.delim,
                 self.adelim,
                 self.quote,
@@ -333,7 +361,9 @@ class Neo4jBatchWriter(AdmittingSink):
                 self.node_line_includes_labels,
             )
 
-        self._write_by_label(nodes, "node", line_for)
+        self._write_by_label(
+            nodes, "node", lambda label: self._all_labels(label, self.node_labels_order, force), line_for
+        )
         self.admission.release_earlier_row_pins("node")
         self._write_node_headers()
         return True
@@ -369,10 +399,10 @@ class Neo4jBatchWriter(AdmittingSink):
         if ran_nodes is not None:
             self.write_nodes(ran_nodes)
 
-        def line_for(label: str, props: dict) -> Column:
+        def line_for(label: str, props: dict, labels: Column) -> Column:
             return edge_line_expr(
                 props,
-                self._all_labels(label, self.edge_labels_order),
+                labels,
                 self.delim,
                 self.adelim,
                 self.quote,
@@ -382,7 +412,7 @@ class Neo4jBatchWriter(AdmittingSink):
                 self.edge_line_includes_labels,
             )
 
-        self._write_by_label(edges, "edge", line_for)
+        self._write_by_label(edges, "edge", lambda label: self._all_labels(label, self.edge_labels_order), line_for)
         self.admission.release_earlier_row_pins("edge")
         self._write_edge_headers()
         return True

@@ -98,6 +98,31 @@ def test_canonicalize_variants(spark, transcripts):
     assert n_canon == truth
 
 
+def test_normalize_surface_equals_lowercase_key_for_every_code_point(spark):
+    """The blocking key maps case without ``lower``, yet equals the
+    ``lower``-based key (the one the DuckDB oracle SQL of
+    ``kg_canonicalize_blocking`` computes) for every Unicode scalar value,
+    each set between ASCII letters of both cases."""
+    # UTF-32 text "aB<code point>Zy": a leading BOM-like U+FEFF stays a
+    # character because it is not the first one
+    utf32 = F.concat(F.lit("0000006100000042"), F.lpad(F.hex("id"), 8, "0"), F.lit("0000005A00000079"))
+    surfaces = (
+        spark.range(0x110000)
+        .filter(~F.col("id").between(0xD800, 0xDFFF))
+        .select(F.decode(F.unhex(utf32), "UTF-32").alias("s"))
+    )
+    s = F.col("s")
+    lowercase_key = F.regexp_replace(F.lower(s), "[^a-z0-9]", "")
+    row = surfaces.select(
+        F.count("*").alias("n"),
+        F.count(F.when(F.length(s) != 5, 1)).alias("malformed"),
+        F.count(F.when(~normalize_surface(s).eqNullSafe(lowercase_key), 1)).alias("mismatches"),
+        F.collect_set(F.when(~normalize_surface(s).eqNullSafe(lowercase_key), s)).alias("examples"),
+    ).first()
+    assert (row["n"], row["malformed"]) == (1_112_064, 0)
+    assert row["mismatches"] == 0, row["examples"][:10]
+
+
 def test_prefix_filter_candidates_superset(spark, transcripts):
     """Prefix filtering must retain every pair the scorer would accept:
     cluster assignments must match the coarse-block path on this corpus."""

@@ -58,6 +58,63 @@ def test_extraction_expr_no_python(spark):
     assert "Python" not in plan  # no BatchEvalPython / ArrowEvalPython / MapInArrow node
 
 
+_CASE_MAPPING = ("lower(", "upper(", "initcap(")
+
+
+def test_surface_keys_skip_case_mapping(spark, monkeypatch):
+    """The blocking key of canonicalize's surface scan and of link_mentions
+    maps case by ``translate``: a case-mapping function runs ICU's one-off
+    set-up on a fresh JVM's first scan."""
+    from biocypher_spark.linking import canonicalize, link_mentions
+
+    mentions = spark.createDataFrame([("PROT7",), ("prot-7",), ("DIS3",)], "surface string")
+    plans = []
+    collect = type(mentions).collect
+
+    def spy(df):
+        plans.append(formatted_plan(df))
+        return collect(df)
+
+    monkeypatch.setattr(type(mentions), "collect", spy)
+    mapping = canonicalize(mentions)
+    monkeypatch.undo()
+    assert len(plans) == 1  # the surface frame's limited collect
+    plans.append(formatted_plan(link_mentions(mentions, mapping=mapping)))
+    for plan in plans:
+        assert "translate(" in plan
+        assert not [f for f in _CASE_MAPPING if f in plan.lower()]
+
+
+def test_node_write_builds_each_serializer_once(spark, tmp_path, monkeypatch):
+    """The default schema's node labels share one property layout, so the
+    node write builds (and Spark compiles) one serializer per property,
+    not one per property and label; each label still gets its own
+    ``:LABEL`` text."""
+    from biocypher_spark.model import nodes_from_tuples
+    from biocypher_spark.pipeline import load_default_schema_mapping
+    from biocypher_spark.writer import base
+    from biocypher_spark.writer.neo4j import Neo4jBatchWriter
+
+    built = []
+    serialize_prop = base.serialize_prop
+
+    def counting(raw, *args, **kwargs):
+        built.append(raw)
+        return serialize_prop(raw, *args, **kwargs)
+
+    monkeypatch.setattr(base, "serialize_prop", counting)
+    translator = SparkTranslator(spark, NullOntology(load_default_schema_mapping()))
+    staged = nodes_from_tuples(spark, [("p1", "protein", {"name": "P1"}), ("d1", "disease", {"name": "D1"})])
+    writer = Neo4jBatchWriter(
+        spark, translator, str(tmp_path), validate_props=False, ordered_parts=False, track_seen=False
+    )
+    writer.write_nodes(translator.translate_nodes(staged).nodes)
+    assert len(built) == 3  # name, id, preferred_id
+    for label in ("Protein", "Disease"):
+        (part,) = tmp_path.glob(f"{label}-part*.csv")
+        assert [line.rsplit(";", 1)[1] for line in part.read_text().splitlines()] == [f"'{label}'"]
+
+
 @pytest.fixture
 def arrow_conf_off(spark):
     """Arrow conversion off, as in a session that never sets it: frames built
