@@ -186,8 +186,9 @@ def json_decode_str(col: Column) -> Column:
     A quoted string with no escape and no raw control character is the text
     between its quotes; anything else, NULL and malformed text included,
     goes through Jackson (``from_json``). Both give the same value, and the
-    common plain value skips a JSON parser per row."""
-    jackson = F.from_json(F.concat(F.lit("["), col, F.lit("]")), T.ArrayType(T.StringType()))[0]
+    common plain value skips a JSON parser per row. Text Jackson reads as an
+    empty array (blank, ``]``) decodes to NULL."""
+    jackson = F.get(F.from_json(F.concat(F.lit("["), col, F.lit("]")), T.ArrayType(T.StringType())), 0)
     return F.when(col.rlike(_JSON_PLAIN), F.substring(col, F.lit(2), F.length(col) - F.lit(2))).otherwise(jackson)
 
 

@@ -11,11 +11,11 @@ order: ``mentions``, ``linked``, then {``nodes`` ∥ ``edges``}. The
 nodes/edges checkpoints are written straight from the translated frames
 (rel-as-node dedup applied), and the Neo4j CSVs are then emitted FROM
 those checkpoints read back, so each corpus-scale aggregate runs once,
-inside its own checkpoint write. Node and edge files do not depend on each
-other, so the node chain (translate → checkpoint → CSV) runs on the
-calling thread while the edge chain runs on a second driver thread; both
-finish before ``run()`` returns or raises. A ``{run_dir}/csv/_SUCCESS``
-marker lands after both chains and the import-call script; it is the only
+inside its own checkpoint write. That tail is :func:`kg_chains`, the KG
+chain body ``stream_kg`` shares, with the checkpoint as its pin: the node
+chain (translate → pin → CSV) runs on the calling thread and the edge
+chain on a second driver thread. A ``{run_dir}/csv/_SUCCESS`` marker
+lands after both chains and the import-call script; it is the only
 "CSVs already written" signal. On resume, stages with a ``_SUCCESS``
 marker are read back instead of recomputed (their DataFrames are never
 built), and the CSVs are re-emitted — after wiping stale part files —
@@ -304,55 +304,20 @@ class KGPipeline:
             # {Label}-part.* would feed duplicated rows to neo4j-admin
             # import: wipe them first
             self._wipe_stale_parts()
+        # scale path: content-identical part files without the per-label
+        # global-rank shuffle; inputs are unique by construction so the
+        # cross-call seen-id bookkeeping is skipped too
         writer = Neo4jBatchWriter(
-            self.spark,
-            self.translator,
-            self.outdir,
-            strict_mode=False,
-            validate_props=False,
-            # scale path: content-identical part files without the per-label
-            # global-rank shuffle; inputs are unique by construction so the
-            # cross-call seen-id bookkeeping is skipped too
-            ordered_parts=False,
-            track_seen=False,
+            self.spark, self.translator, self.outdir, strict_mode=False, validate_props=False,
+            ordered_parts=False, track_seen=False,
         )
 
-        # checkpoints must agree with the emitted CSVs, including for
-        # rel-as-node schemas: the writer's admission step dedups the
-        # reified rows (D3) and rebuilds their surviving helper edges, so the
-        # nodes checkpoint carries the reified nodes and the edges
-        # checkpoint only the SURVIVING helper edges. It runs before the
-        # fork, so each chain below touches only its own kind's state.
-        # Skipped when no edge tuple can be reified (translate_edges always
-        # returns a ran_nodes frame, empty by construction then) and when
-        # the CSVs and both checkpoints are reused.
-        te = ran_nodes = reified_edges = None
-        if tuples_reify(self.translator) and not csv_done:
-            te = self.translator.translate_edges(edge_tuples)
-            ran_nodes, reified_edges = writer.admission.reified(te)
+        # the CSVs are emitted from the checkpoints read back
+        def pin(stage: str, df: DataFrame) -> DataFrame:
+            return self._checkpoint(stage, lambda: df, resume, key_col="node_id" if stage == "nodes" else "source_id")
 
-        def node_chain() -> tuple[DataFrame, DataFrame]:
-            tn = self.translator.translate_nodes(node_tuples)
-            out = tn.nodes if ran_nodes is None else tn.nodes.unionByName(ran_nodes)
-            nodes = self._checkpoint("nodes", lambda: out, resume, key_col="node_id")
-            if not csv_done:
-                writer.write_nodes(nodes)
-            return nodes, tn.missing
-
-        def edge_chain() -> tuple[DataFrame, DataFrame]:
-            tr = te if te is not None else self.translator.translate_edges(edge_tuples)
-            out = tr.edges if reified_edges is None else reified_edges
-            edges = self._checkpoint("edges", lambda: out, resume, key_col="source_id")
-            if not csv_done:
-                writer.write_edges(edges)
-            return edges, tr.missing
-
-        # node and edge files do not depend on each other: their chains
-        # overlap, and the import call and csv marker wait for both
-        (nodes, node_missing), (edges, edge_missing) = _run_concurrently(node_chain, edge_chain)
-        missing = node_missing.unionByName(edge_missing)
+        nodes, edges, missing = kg_chains(node_tuples, edge_tuples, self.translator, None if csv_done else writer, pin)
         if not csv_done:
-            writer.write_import_call()
             self._mark_done("csv")
         lineage_path = self._flush_lineage()
         stage_secs["write"] = time.time() - t0
@@ -373,6 +338,45 @@ class KGPipeline:
             counts=counts,
             metrics_path=metrics_path,
         )
+
+
+def kg_chains(
+    node_tuples: DataFrame, edge_tuples: DataFrame, translator: SparkTranslator,
+    writer: Optional[Neo4jBatchWriter], pin: Callable[[str, DataFrame], DataFrame],
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The KG tail of ``KGPipeline.run`` and ``stream_kg``: per kind,
+    translate -> ``pin("nodes" | "edges", frame)`` -> CSV, then the import
+    call. Returns the pinned nodes and edges and the missing types.
+    ``writer=None`` (CSVs reused) writes nothing. Otherwise reifiable
+    tuples pass the writer's D3 admission first, so the pinned stages hold
+    the surviving reified nodes and helper edges, as the CSVs do."""
+    te = ran_nodes = reified_edges = None
+    if writer is not None and tuples_reify(translator):
+        te = translator.translate_edges(edge_tuples)
+        ran_nodes, reified_edges = writer.admission.reified(te)
+
+    def node_chain() -> tuple[DataFrame, DataFrame]:
+        tn = translator.translate_nodes(node_tuples)
+        nodes = pin("nodes", tn.nodes if ran_nodes is None else tn.nodes.unionByName(ran_nodes))
+        if writer is not None:
+            writer.write_nodes(nodes)
+        return nodes, tn.missing
+
+    def edge_chain() -> tuple[DataFrame, DataFrame]:
+        tr = te if te is not None else translator.translate_edges(edge_tuples)
+        edges = pin("edges", tr.edges if reified_edges is None else reified_edges)
+        if writer is not None:
+            writer.write_edges(edges)
+        return edges, tr.missing
+
+    # The chains overlap. The node thread admits only D1 (node id) and the
+    # edge thread only D2 (edge key); D3 ran before this fork. Both threads
+    # write the admission's _dup_deltas / _dup_chain_len under their own
+    # keys, and a stream's take_state_deltas runs after the join.
+    (nodes, node_missing), (edges, edge_missing) = _run_concurrently(node_chain, edge_chain)
+    if writer is not None:
+        writer.write_import_call()
+    return nodes, edges, node_missing.unionByName(edge_missing)
 
 
 def _run_concurrently(here: Callable[[], object], forked: Callable[[], object]) -> tuple:

@@ -2,27 +2,25 @@
 
 The reference is strictly batch (single-process generators; SURVEY.md §2.6
 notes streaming is a design choice, not a compatibility requirement). This
-module adds the Spark-native incremental path: a transcripts directory/table
-consumed with ``readStream``, mention extraction as the same built-in
-expressions used in batch, watermarked windowed mention counts for late
-data, and a stateful per-conversation session aggregator via
-``applyInPandasWithState``.
+module adds the Spark-native incremental path, ``stream_kg``: a transcripts
+directory/table consumed with ``readStream``, mention extraction as the same
+built-in expressions used in batch, and per micro-batch the batch job's KG
+tail (``pipeline.kg_chains``) into one Neo4j batch layout, with durable
+cross-batch dedup state.
 """
 
 from __future__ import annotations
 
 import glob
 import os
-from typing import Iterator, Optional
+from typing import Optional
 from urllib.parse import quote
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..extract import DEFAULT_PATTERNS, _regexp_mentions
+from ..extract import _regexp_mentions
 from ..materialize import materialize
 
 TRANSCRIPT_SCHEMA = T.StructType(
@@ -139,94 +137,6 @@ def stream_mentions(transcripts: DataFrame, patterns: Optional[dict[str, str]] =
     return _regexp_mentions(transcripts, patterns, ("conv_id", "turn_idx", "ts"))
 
 
-def stream_exact_dedup(transcripts: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup: emit only the FIRST occurrence of each text
-    content hash seen within the watermark horizon.
-
-    The dedup state is keyed on ``md5(text)`` (a 32-byte key, not the text
-    itself) and bounded by the watermark — the batch reference's in-memory
-    seen-set has no streaming analogue at 10^12 rows, but a horizon-bounded
-    state store does. Uses ``dropDuplicatesWithinWatermark`` so late
-    duplicates inside the horizon are still dropped while state is evicted
-    past it."""
-    hashed = transcripts.withColumn("content_hash", F.md5("text")).withWatermark(
-        "ts", watermark
-    )
-    return hashed.dropDuplicatesWithinWatermark(["content_hash"])
-
-
-def stream_minhash_dedup(
-    transcripts: DataFrame,
-    watermark: str = "1 hour",
-    seeds: int = 4,
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming NEAR-dup suppression: emit only the first row of each full
-    minhash-signature group seen within the watermark horizon (the
-    streaming analogue of the batch :func:`...textops.minhash_dedup`
-    AND-only grouping — near-identical rewrites share the signature and are
-    dropped).
-
-    State is keyed on ``seeds`` 16-byte signature values (not the text),
-    watermark-bounded exactly like :func:`stream_exact_dedup`; the
-    signature expressions are the same md5-min folds as the batch
-    operator, so batch and streaming agree on what counts as a near-dup."""
-    from ..textops import minhash_signature
-
-    sigs = transcripts.select(
-        "*", *minhash_signature(F.col(text_col), seeds=seeds)
-    ).withWatermark("ts", watermark)
-    return sigs.dropDuplicatesWithinWatermark([f"sig{b}" for b in range(seeds)])
-
-
-def windowed_mention_counts(
-    mentions: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked tumbling-window counts per entity surface (late rows
-    beyond the watermark are dropped, state is bounded)."""
-    return (
-        mentions.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "input_label", "surface")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            "input_label",
-            "surface",
-            "n",
-        )
-    )
-
-
-_SESSION_SCHEMA = "conv_id string, turns bigint, mentions bigint, first_ts timestamp, last_ts timestamp"
-_STATE_SCHEMA = "turns bigint, mentions bigint, first_ts timestamp, last_ts timestamp"
-
-
-def _session_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    turns, mentions, first_ts, last_ts = (
-        state.get if state.exists else (0, 0, None, None)
-    )
-    for pdf in pdfs:
-        turns += len(pdf)
-        mentions += int(pdf["n_mentions"].sum())
-        lo, hi = pdf["ts"].min(), pdf["ts"].max()
-        first_ts = lo if first_ts is None or lo < first_ts else first_ts
-        last_ts = hi if last_ts is None or hi > last_ts else last_ts
-    state.update((turns, mentions, first_ts, last_ts))
-    yield pd.DataFrame(
-        [
-            {
-                "conv_id": key[0],
-                "turns": turns,
-                "mentions": mentions,
-                "first_ts": first_ts,
-                "last_ts": last_ts,
-            }
-        ]
-    )
-
-
 def stream_kg(
     spark: SparkSession,
     input_path: str,
@@ -241,12 +151,15 @@ def stream_kg(
     extract -> link -> translate -> batch-writer append.
 
     Each micro-batch flows through the SAME batch operators via
-    ``foreachBatch``; the batch writer's cross-call machinery supplies the
-    incremental semantics — part-file numbering continues across batches and
-    the writer's one first-wins path (``track_seen``) dedups node/edge ids
-    across batches. Its caches (each call's first rows and seen keys) are
-    filled by the batch's own part and state writes, with no separate count,
-    and released once the batch's state generation is written.
+    ``foreachBatch``, and through the batch job's KG tail,
+    ``pipeline.kg_chains``: its node chain and its edge chain (translate ->
+    CSV) overlap on two driver threads. The batch writer's cross-call
+    machinery supplies the incremental semantics — part-file numbering
+    continues across batches and the writer's one first-wins path
+    (``track_seen``) dedups node/edge ids across batches. Its caches (each
+    call's first rows and seen keys) are filled by the batch's own part and
+    state writes, with no separate count, and released once the batch's
+    state generation is written.
     ``foreachBatch`` is AT-LEAST-ONCE, so idempotence is made durable in
     ``{output}/_stream_meta``:
 
@@ -276,13 +189,12 @@ def stream_kg(
     """
     from ..linking import link_mentions
     from ..ontology import NullOntology
-    from ..pipeline import build_triple_tuples, edge_input_labels, load_default_schema_mapping, tuples_reify
+    from ..pipeline import build_triple_tuples, edge_input_labels, kg_chains, load_default_schema_mapping
     from ..translate import SparkTranslator
     from ..writer.neo4j import Neo4jBatchWriter
 
     schema_mapping = load_default_schema_mapping()
     translator = SparkTranslator(spark, NullOntology(schema_mapping))
-    reify = tuples_reify(translator)
     writer = Neo4jBatchWriter(
         spark, translator, output_directory, strict_mode=False, validate_props=False,
         ordered_parts=False, track_seen=True,
@@ -494,23 +406,15 @@ def stream_kg(
             node_tuples, edge_tuples = build_triple_tuples(
                 linked, edge_labels=edge_input_labels(schema_mapping)
             )
-            # ONE pin below the translate split: edge_tuples feeds both
-            # te.edges and te.ran_nodes, and the translate layer above it is
-            # narrow (broadcast schema join + case conversion), so the
+            # ONE pin below the translate split: edge_tuples feeds both the
+            # plain edges and the reified rows, and the translate layer above
+            # it is narrow (broadcast schema join + case conversion), so the
             # writer's own .persist() at its firsts-collect job caches the
-            # post-dedup frames — dedicated te.edges / te.ran_nodes /
-            # tn.nodes pins were each a full scheduled job per micro-batch
-            # for data the writer caches anyway (3 jobs/batch saved; the
-            # earlier 56s->44s pin profiling predates the identity-link
-            # fast path that made the upstream chain narrow)
-            edge_tuples = materialize(edge_tuples)
-            tn = translator.translate_nodes(node_tuples)
-            te = translator.translate_edges(edge_tuples)
-            writer.write_nodes(tn.nodes)
-            # the rel-as-node frames (their dedup and emptiness probe) only
-            # when the schema lets these tuples be reified
-            writer.write_edges(te if reify else te.edges)
-            writer.write_import_call()
+            # post-dedup frames — dedicated per-stage pins were each a full
+            # scheduled job per micro-batch for data the writer caches
+            # anyway. The node and edge chains then overlap in kg_chains,
+            # which pins nothing more here.
+            kg_chains(node_tuples, materialize(edge_tuples), translator, writer, lambda stage, df: df)
             parts = sorted(
                 os.path.basename(f)
                 for f in glob.glob(os.path.join(output_directory, "*-part*.csv"))
@@ -577,23 +481,3 @@ def read_stream_state(spark: SparkSession, output_directory: str) -> dict:
             df = df.distinct()
         out[key] = 0 if df is None else df.count()
     return out
-
-
-def conversation_sessions(transcripts: DataFrame, patterns: Optional[dict[str, str]] = None) -> DataFrame:
-    """Stateful per-conversation aggregation (custom operator via
-    ``applyInPandasWithState``): running turn count, mention count, and the
-    first/last timestamps of the conversation."""
-    patterns = patterns or DEFAULT_PATTERNS
-    combined = "|".join(f"(?:{p})" for p in patterns.values())
-    with_counts = transcripts.select(
-        "conv_id",
-        "ts",
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(combined), F.lit(0))).alias("n_mentions"),
-    )
-    return with_counts.groupBy("conv_id").applyInPandasWithState(
-        _session_fn,
-        outputStructType=_SESSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -39,3 +39,39 @@ SCHEMA_PATH = os.path.join(os.path.dirname(__file__), "fixtures", "test_schema_c
 @pytest.fixture(scope="session")
 def schema_path():
     return SCHEMA_PATH
+
+
+# the transcripts schema with protein-protein pairs reified as nodes
+# (rel-as-node) and protein-disease pairs as plain edges
+RAN_SCHEMA = """
+protein:
+  represented_as: node
+  preferred_id: canon
+  input_label: protein
+  properties:
+    name: str
+disease:
+  represented_as: node
+  preferred_id: canon
+  input_label: disease
+  properties:
+    name: str
+protein protein interaction:
+  represented_as: node
+  source: protein
+  target: protein
+  input_label: protein_protein
+  properties:
+    turns: int
+protein disease association:
+  represented_as: edge
+  label_as_edge: LINKED_TO
+  input_label: protein_disease
+  properties:
+    turns: int
+"""
+
+
+@pytest.fixture(scope="session")
+def ran_schema():
+    return RAN_SCHEMA

@@ -310,35 +310,6 @@ def _csv_rows(outdir):
     return out
 
 
-_RAN_SCHEMA = """
-protein:
-  represented_as: node
-  preferred_id: canon
-  input_label: protein
-  properties:
-    name: str
-disease:
-  represented_as: node
-  preferred_id: canon
-  input_label: disease
-  properties:
-    name: str
-protein protein interaction:
-  represented_as: node
-  source: protein
-  target: protein
-  input_label: protein_protein
-  properties:
-    turns: int
-protein disease association:
-  represented_as: edge
-  label_as_edge: LINKED_TO
-  input_label: protein_disease
-  properties:
-    turns: int
-"""
-
-
 class _DuplicateTripletPipeline(KGPipeline):
     """Feeds every reified (protein_protein) edge tuple twice, the copy
     arriving later (SEQ + 1), so the rel-as-node dedup has work to do."""
@@ -351,7 +322,7 @@ class _DuplicateTripletPipeline(KGPipeline):
         return nodes, edges.unionByName(again)
 
 
-def test_rel_as_node_schema_csv_matches_checkpoints(spark, tmp_path):
+def test_rel_as_node_schema_csv_matches_checkpoints(spark, tmp_path, ran_schema):
     """A reified edge class: the CSVs hold exactly the rows of the nodes
     and edges checkpoints (reified nodes with the node labels, helper
     edges with the relationship labels), each duplicated triplet is kept
@@ -359,7 +330,7 @@ def test_rel_as_node_schema_csv_matches_checkpoints(spark, tmp_path):
     from biocypher_spark.writer.base import pascal_file_label
 
     schema = tmp_path / "schema.yaml"
-    schema.write_text(_RAN_SCHEMA)
+    schema.write_text(ran_schema)
     outdir = str(tmp_path / "kg")
     pipe = _DuplicateTripletPipeline(spark, outdir, schema_config_path=str(schema))
     res = pipe.run(generate_transcripts(spark, 800))

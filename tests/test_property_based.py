@@ -103,7 +103,7 @@ def test_json_scalar_encoding_roundtrip(spark):
     others = [
         None, "", '"', "\\", '\\"', '""', '"a"', '"\\"', '"\\u0041"', '"\\u001F"', '"a\\nb"', '"a\nb"',
         '"\x7f\u2028\U0001f600"', '"a', 'a"', '"a"b"', '"a","b"', '"abc"\n', '"abc"\u2028', '"abc" ', ' "abc"',
-        "true", "3", "null", "[1,2]", '["a"]', '{"a":1}', "]", "1]", "plain text",
+        "true", "3", "null", "[1,2]", '["a"]', '{"a":1}', "]", "1]", "plain text", " ", "  ", "\t",
     ]
     inputs = code_points.unionByName(spark.createDataFrame([(x,) for x in others], "s string"))
     s = F.col("s")
@@ -111,10 +111,8 @@ def test_json_scalar_encoding_roundtrip(spark):
     encoded = json_encode_str(s)
 
     def decodes_as_jackson(c):
-        # text Jackson reads as an empty array (blank, "]") raises on both
-        # paths under ANSI indexing, so it is left out of the comparison
-        arr = jackson_decode_array(c)
-        return F.when(F.size(arr) == 0, F.lit(True)).otherwise(json_decode_str(c).eqNullSafe(arr[0]))
+        # text Jackson reads as an empty array (blank, "]") decodes to NULL
+        return json_decode_str(c).eqNullSafe(F.get(jackson_decode_array(c), 0))
 
     same = (
         encoded.eqNullSafe(jackson_encode(s))
@@ -125,6 +123,8 @@ def test_json_scalar_encoding_roundtrip(spark):
     got = inputs.select(s, encoded.alias("encoded"), same.alias("same")).toArrow().to_pydict()
     assert len(got["s"]) == 1_112_064 + len(others)
     assert [x for x, ok in zip(got["s"], got["same"]) if not ok] == []
+    blank = spark.createDataFrame([(x,) for x in ("", " ", "]")], "s string").select(json_decode_str(s))
+    assert [r[0] for r in blank.collect()] == [None, None, None]
     # Jackson writes \u001F where Python writes \u001f: compare values, not text
     assert [x for x, enc in zip(got["s"], got["encoded"]) if json.loads(enc) != x] == []
 

@@ -1,18 +1,13 @@
-"""Structured Streaming tests: incremental extraction, watermarked windows,
-stateful sessionization."""
+"""Structured Streaming tests: the streaming mention kernel, and
+``stream_kg``'s incremental KG, its failure and restart behaviour, and its
+durable state."""
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from biocypher_spark.streaming.stream import (
-    conversation_sessions,
-    read_transcript_stream,
-    stream_mentions,
-    windowed_mention_counts,
-)
+from biocypher_spark.streaming.stream import stream_mentions
 from biocypher_spark.transcripts import generate_transcripts
 
 
@@ -21,40 +16,6 @@ def stream_dir(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("stream_in"))
     generate_transcripts(spark, 1000, partitions=4).write.mode("overwrite").parquet(path)
     return path
-
-
-def _run_to_completion(query, timeout=120):
-    deadline = time.time() + timeout
-    while time.time() < deadline:
-        query.processAllAvailable()
-        return
-    raise TimeoutError
-
-
-def test_stream_windowed_counts(spark, stream_dir):
-    stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=2)
-    counts = windowed_mention_counts(stream_mentions(stream))
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode emits only watermark-closed windows; force completion via
-    # one more read of the table after termination
-    result = spark.sql("select * from win_counts")
-    # batch equivalent for cross-checking totals per surface
-    batch = generate_transcripts(spark, 1000)
-    from biocypher_spark.extract import extract_mentions
-
-    batch_mentions = extract_mentions(batch).count()
-    assert batch_mentions > 0
-    # sum of emitted window counts can be smaller (open windows withheld in
-    # append mode) but never larger
-    emitted = result.agg(F.coalesce(F.sum("n"), F.lit(0))).collect()[0][0]
-    assert emitted <= batch_mentions
 
 
 def test_stream_mentions_is_expr_kernel_plus_ts(spark):
@@ -66,29 +27,6 @@ def test_stream_mentions_is_expr_kernel_plus_ts(spark):
     want = extract_mentions(batch)
     assert got.drop("ts").exceptAll(want).count() == 0
     assert want.exceptAll(got.drop("ts")).count() == 0
-
-
-def test_stream_sessions_stateful(spark, stream_dir):
-    stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=2)
-    sessions = conversation_sessions(stream)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    result = spark.sql(
-        "select conv_id, max(turns) as turns from sessions group by conv_id"
-    )
-    got = {r["conv_id"]: r["turns"] for r in result.collect()}
-    want = {
-        r["conv_id"]: r["cnt"]
-        for r in generate_transcripts(spark, 1000).groupBy("conv_id").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    # every conversation's final state matches the batch turn count
-    assert got == want
 
 
 def test_stream_kg_incremental(spark, stream_dir, tmp_path):
@@ -146,59 +84,6 @@ def test_stream_kg_incremental(spark, stream_dir, tmp_path):
     assert got == want
 
 
-def test_stream_exact_dedup(spark, stream_dir):
-    from biocypher_spark.streaming.stream import stream_exact_dedup
-
-    stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=2)
-    deduped = stream_exact_dedup(stream)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        _run_to_completion(q)
-        got = spark.sql("SELECT count(*) AS n, count(DISTINCT content_hash) AS d FROM dedup_sink").head()
-        expected = (
-            spark.read.parquet(stream_dir).select(F.md5("text")).distinct().count()
-        )
-        # one row per distinct content hash, no duplicates emitted
-        assert got["n"] == got["d"] == expected
-    finally:
-        q.stop()
-
-
-def test_stream_minhash_dedup(spark, stream_dir):
-    """Streaming near-dup suppression: one emitted row per distinct full
-    minhash signature, agreeing with the batch minhash_dedup grouping."""
-    from biocypher_spark.streaming.stream import stream_minhash_dedup
-    from biocypher_spark.textops import minhash_signature
-
-    stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=2)
-    deduped = stream_minhash_dedup(stream)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("mh_dedup_sink")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        _run_to_completion(q)
-        got = spark.sql(
-            "SELECT count(*) AS n, count(DISTINCT sig0 || sig1 || sig2 || sig3) AS d FROM mh_dedup_sink"
-        ).head()
-        expected = (
-            spark.read.parquet(stream_dir)
-            .select(*minhash_signature(F.col("text"), seeds=4))
-            .distinct()
-            .count()
-        )
-        assert got["n"] == got["d"] == expected
-    finally:
-        q.stop()
-
-
 def test_stream_kg_crash_replay_idempotent(spark, tmp_path):
     """At-least-once hardening: part files left by a crashed (uncommitted)
     attempt are wiped before the next batch emits, committed batches are
@@ -241,6 +126,109 @@ def test_stream_kg_crash_replay_idempotent(spark, tmp_path):
             nid = line.split(";")[0]
             assert nid not in seen
             seen.add(nid)
+
+
+def _part_lines(outdir):
+    """{file label: Counter of its part files' lines}."""
+    import collections
+    import glob
+
+    out = collections.defaultdict(collections.Counter)
+    for f in glob.glob(os.path.join(outdir, "*-part*.csv")):
+        with open(f) as fh:
+            out[os.path.basename(f).rsplit("-part", 1)[0]].update(fh.read().splitlines())
+    return dict(out)
+
+
+@pytest.fixture(scope="module")
+def two_file_stream(spark, tmp_path_factory):
+    """An input of two files, one micro-batch each, and the part-file lines
+    a clean ``stream_kg`` run over it emits."""
+    from biocypher_spark.streaming.stream import stream_kg
+
+    base = tmp_path_factory.mktemp("two_file_stream")
+    indir = str(base / "in")
+    generate_transcripts(spark, 400, partitions=2).write.parquet(indir)
+    clean = str(base / "clean")
+    stream_kg(spark, indir, clean, str(base / "ckpt"), max_files_per_trigger=1).awaitTermination(300)
+    return indir, _part_lines(clean)
+
+
+@pytest.mark.parametrize("method", ["write_nodes", "write_edges"])
+def test_stream_chain_failure_commits_nothing_and_restart_recovers(
+    spark, tmp_path, monkeypatch, two_file_stream, method
+):
+    """A failing CSV write on either chain of the second micro-batch fails
+    the query with its error once both chains stopped: the committed marker
+    stays at the first batch, no chain thread is left behind, and a restart
+    on the same checkpoint and output emits the rows of a clean run."""
+    import json
+    import threading
+
+    from pyspark import InheritableThread
+
+    from biocypher_spark.streaming.stream import stream_kg
+    from biocypher_spark.writer.neo4j import Neo4jBatchWriter
+
+    indir, clean_lines = two_file_stream
+    outdir, ckpt = str(tmp_path / "kg"), str(tmp_path / "ckpt")
+    committed_path = os.path.join(outdir, "_stream_meta", "committed.json")
+    original = getattr(Neo4jBatchWriter, method)
+    calls = []
+
+    def fail_second_batch(self, df):
+        calls.append(method)
+        if len(calls) > 1:
+            raise RuntimeError(f"{method} failed")
+        return original(self, df)
+
+    with monkeypatch.context() as m:
+        m.setattr(Neo4jBatchWriter, method, fail_second_batch)
+        q = stream_kg(spark, indir, outdir, ckpt, max_files_per_trigger=1)
+        with pytest.raises(Exception, match=f"{method} failed"):
+            q.awaitTermination(300)
+    committed = json.load(open(committed_path))
+    assert committed["last_batch"] == 0
+    assert not [t for t in threading.enumerate() if isinstance(t, InheritableThread)]
+
+    stream_kg(spark, indir, outdir, ckpt, max_files_per_trigger=1).awaitTermination(300)
+    assert json.load(open(committed_path))["last_batch"] == 1
+    assert _part_lines(outdir) == clean_lines
+
+
+def test_stream_kg_rel_as_node(spark, tmp_path, monkeypatch, ran_schema):
+    """With a schema that reifies protein-protein pairs, two micro-batches
+    that share every co-occurring pair write each reified node once, with
+    its two helper edges; the seen rel-as-node state holds each once, and
+    the second batch's copies are reported as duplicate edges."""
+    import json
+
+    import yaml
+
+    from biocypher_spark import pipeline
+    from biocypher_spark.mapping import SchemaMapping
+    from biocypher_spark.streaming.stream import _load_state, read_stream_state, stream_kg
+
+    mapping = SchemaMapping(schema=yaml.safe_load(ran_schema))
+    monkeypatch.setattr(pipeline, "load_default_schema_mapping", lambda: mapping)
+    indir = str(tmp_path / "in")
+    turns = generate_transcripts(spark, 300, partitions=1)
+    turns.write.parquet(indir)
+    turns.write.mode("append").parquet(indir)
+    outdir = str(tmp_path / "kg")
+    stream_kg(spark, indir, outdir, str(tmp_path / "ckpt"), max_files_per_trigger=1).awaitTermination(300)
+
+    meta = os.path.join(outdir, "_stream_meta")
+    last = json.load(open(os.path.join(meta, "committed.json")))["last_batch"]
+    assert last == 1
+    lines = _part_lines(outdir)
+    reified = [line.split(";")[0] for line in lines["ProteinProteinInteraction"].elements()]
+    assert reified and len(set(reified)) == len(reified)
+    assert sum(lines["IS_PART_OF"].values()) == 2 * len(reified)
+    assert read_stream_state(spark, outdir)["seen_rel_as_node"] == len(reified)
+    dups = _load_state(spark, meta, last)["duplicate_edges"]
+    ran_dups = {r["dup_id"] for r in dups.filter(F.col("label") == "protein protein interaction").collect()}
+    assert ran_dups == set(reified)
 
 
 def test_stream_kg_empty_batch_preserves_seen_state(spark, tmp_path):
