@@ -13,8 +13,6 @@ from typing import Optional
 
 import yaml
 
-_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
-
 DEFAULTS: dict = {
     "biocypher": {
         "dbms": "neo4j",

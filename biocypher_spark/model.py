@@ -26,26 +26,6 @@ from pyspark.sql.pandas.types import to_arrow_schema
 # arrival-order column used for deterministic first-wins dedup
 SEQ = "_seq"
 
-NODE_INPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("input_label", T.StringType()),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType())),
-        T.StructField(SEQ, T.LongType()),
-    ]
-)
-
-EDGE_INPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("src", T.StringType()),
-        T.StructField("tgt", T.StringType()),
-        T.StructField("input_label", T.StringType()),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType())),
-        T.StructField(SEQ, T.LongType()),
-    ]
-)
-
 NODE_SCHEMA = T.StructType(
     [
         T.StructField("node_id", T.StringType()),

@@ -1,17 +1,19 @@
 """Multimodal columns: images / audio / video as opaque binary + metadata.
 
 Large-scale training pipelines carry media as ``binary`` columns with typed
-metadata structs. This module provides the Spark-side plumbing — schemas,
-size-balanced partitioning, Arrow-batched ``mapInPandas`` transforms with
-real batch shapes — with the *codec* step stubbed behind a deterministic
-fake (the sandbox has no image/audio libraries): ``decode_image`` produces
-a deterministic pseudo-pixel array from the bytes so the full pipeline is
-testable end-to-end, and raises ``NotImplementedError`` when a real codec
-is requested.
+metadata structs (the shape :func:`media_from_documents` builds). This
+module provides the Spark-side plumbing — size-balanced partitioning and
+Arrow-batched ``mapInPandas`` transforms with real batch shapes — around
+pure stdlib + numpy decoders for binary PPM (P6), 8-bit PNG and 16-bit PCM
+WAV. ``fake/*`` payloads (the oracle corpus, which carries no decodable
+structure) go through a deterministic stub; any other format raises
+``NotImplementedError``. The matching encoders and synthetic media tables
+are test data and live with the tests.
 
 Every transform keeps lineage columns intact and returns one row per input
 row (or per sampled frame), so the operators compose with the dedup /
-similarity stages (e.g. embedding-cosine near-dup over image features).
+similarity stages (e.g. :func:`similarity.embedding_near_dup` over
+:func:`extract_features`).
 """
 
 from __future__ import annotations
@@ -22,29 +24,9 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("content", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("format", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -68,54 +50,6 @@ FRAME_SCHEMA = T.StructType(
 FEATURE_DIM = 16
 
 
-def synthesize_media(spark: SparkSession, n: int, kind: str = "image") -> DataFrame:
-    """Deterministic fake media table (content = compressed seeded bytes)."""
-    rows = []
-    for i in range(n):
-        payload = zlib.compress((f"{kind}-{i}-" * 32).encode())
-        rows.append(
-            (
-                f"{kind[0]}{i}",
-                kind,
-                bytearray(payload),
-                (f"fake/{kind}", 64, 64, 4000 if kind != "image" else None, 16000 if kind == "audio" else None),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthesize_real_media(
-    spark: SparkSession, n: int, kind: str = "image", image_format: str = "ppm"
-) -> DataFrame:
-    """Deterministic media table whose payloads are REAL byte formats
-    (binary PPM or PNG images / 16-bit PCM WAV audio), exercising the
-    actual codecs end-to-end rather than the ``fake/*`` stub protocol.
-    ``image_format``: "ppm" (default — the oracle corpus shape), "png",
-    or "mixed" (alternating, for dispatch tests)."""
-    rows = []
-    for i in range(n):
-        if kind == "image":
-            w, h = 8 + (i % 5), 6 + (i % 3)
-            yy, xx = np.mgrid[0:h, 0:w]
-            px = np.stack(
-                [(yy * 17 + i) % 256, (xx * 31 + i * 7) % 256, (yy * xx + i * 3) % 256],
-                axis=2,
-            ).astype(np.uint8)
-            use_png = image_format == "png" or (image_format == "mixed" and i % 2 == 1)
-            if use_png:
-                content, meta = encode_png(px), ("image/png", w, h, None, None)
-            else:
-                content, meta = encode_ppm(px), ("image/ppm", w, h, None, None)
-        else:
-            rate = 8000
-            dur_ms = 1500 + (i % 3) * 700
-            t = np.arange(rate * dur_ms // 1000, dtype=np.float64)
-            wave_f = np.sin(2 * np.pi * (220 + 20 * (i % 8)) * t / rate) * 12000
-            content, meta = encode_wav(wave_f.astype("<i2"), rate), ("audio/wav", None, None, dur_ms, rate)
-        rows.append((f"{kind[0]}{i}", kind if kind == "image" else "audio", bytearray(content), meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 def _fake_decode(content: bytes) -> np.ndarray:
     """Deterministic stand-in for a codec: bytes -> pseudo-pixel vector.
 
@@ -128,7 +62,7 @@ def _fake_decode(content: bytes) -> np.ndarray:
     return (arr[:FEATURE_DIM] / 255.0).astype(np.float32)
 
 
-# -- real codecs (pure stdlib + numpy: PPM P6 images, 16-bit PCM WAV) ---------
+# -- real decoders (pure stdlib + numpy: PPM P6 / PNG images, 16-bit PCM WAV) --
 
 
 def decode_ppm(content: bytes) -> np.ndarray:
@@ -160,12 +94,6 @@ def decode_ppm(content: bytes) -> np.ndarray:
         raise NotImplementedError("16-bit-per-sample PPM is not supported")
     raster = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos)
     return raster.reshape(h, w, 3)
-
-
-def encode_ppm(pixels: np.ndarray) -> bytes:
-    """Serialize an (h, w, 3) uint8 array as binary PPM (P6)."""
-    h, w, _ = pixels.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(pixels, dtype=np.uint8).tobytes()
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -250,37 +178,6 @@ def decode_png(content: bytes) -> np.ndarray:
     return px
 
 
-def encode_png(pixels: np.ndarray) -> bytes:
-    """Serialize an (h, w, 3) uint8 array as a non-interlaced 8-bit RGB PNG
-    (filter type 0 on every scanline, single zlib-compressed IDAT)."""
-    import binascii
-    import struct
-
-    px = np.ascontiguousarray(pixels, dtype=np.uint8)
-    h, w, channels = px.shape
-    if channels != 3:
-        raise ValueError("encode_png expects an (h, w, 3) RGB array")
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", binascii.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raster = np.concatenate(
-        [np.zeros((h, 1), dtype=np.uint8), px.reshape(h, w * 3)], axis=1
-    ).tobytes()
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raster))
-        + chunk(b"IEND", b"")
-    )
-
-
 def decode_wav(content: bytes) -> tuple[int, np.ndarray]:
     """Parse a 16-bit PCM WAV into (sample_rate, (frames, channels) int16)."""
     import io
@@ -293,23 +190,6 @@ def decode_wav(content: bytes) -> tuple[int, np.ndarray]:
         nch = wf.getnchannels()
         raw = wf.readframes(wf.getnframes())
     return rate, np.frombuffer(raw, dtype="<i2").reshape(-1, nch)
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """Serialize an int16 (frames,) or (frames, channels) array as PCM WAV."""
-    import io
-    import wave
-
-    arr = np.asarray(samples, dtype="<i2")
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    out = io.BytesIO()
-    with wave.open(out, "wb") as wf:
-        wf.setnchannels(arr.shape[1])
-        wf.setsampwidth(2)
-        wf.setframerate(sample_rate)
-        wf.writeframes(np.ascontiguousarray(arr).tobytes())
-    return out.getvalue()
 
 
 def _block_means(flat: np.ndarray, dim: int) -> np.ndarray:
@@ -517,32 +397,3 @@ def resize_media(media: DataFrame, width: int = 4, height: int = 4) -> DataFrame
             )
 
     return media.mapInPandas(run, RESIZED_SCHEMA)
-
-
-def media_near_dup(media: DataFrame) -> DataFrame:
-    """Exact content dedup groups by sha-256 of the payload.
-
-    Computed JVM-side with ``F.sha2`` — the earlier version ran the full
-    Python decode pipeline only to discard the features. For feature-space
-    near-dup use :func:`media_feature_near_dup`."""
-    return (
-        media.select("media_id", F.sha2("content", 256).alias("content_sha"))
-        .groupBy("content_sha")
-        .agg(F.min("media_id").alias("rep_id"), F.count(F.lit(1)).alias("n"))
-    )
-
-
-def media_feature_near_dup(media: DataFrame, threshold: float = 0.95, **lsh_kwargs) -> DataFrame:
-    """Feature-space near-duplicate PAIRS: decode to FEATURE_DIM vectors
-    (Arrow-batched), then the shared banded-LSH operator
-    (:func:`similarity.embedding_near_dup`) — the same sub-quadratic
-    candidate/verify shape as text and embedding dedup. Returns
-    (mode-less) (va, vb, cos) with media_ids as the vector ids."""
-    from .similarity import embedding_near_dup
-
-    feats = extract_features(media).select(
-        F.col("media_id").alias("vec_id"), F.col("feature").alias("embedding")
-    )
-    return embedding_near_dup(
-        feats, threshold=threshold, dims=FEATURE_DIM, **lsh_kwargs
-    ).select(F.col("va").alias("media_a"), F.col("vb").alias("media_b"), "cos")

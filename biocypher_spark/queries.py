@@ -686,8 +686,8 @@ def _band_cte(
     source: str = "documents",
 ) -> str:
     """CTEs 'hashed' + 'sigs' + 'bands' + 'cand' for banded-minhash candidate
-    pairs over the element-list SQL expression (mirrors
-    minhash_band_candidates: one 32-bit md5-derived hash per element, then
+    pairs over the element-list SQL expression (mirrors textops'
+    _sig_band_table: one 32-bit md5-derived hash per element, then
     the shared (a,b) affine family per seed). With ``est_min`` > 0 the
     candidate CTE also applies the signature-agreement prefilter
     (>= est_min matching sigs of bands*rows)."""

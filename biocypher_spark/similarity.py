@@ -1,14 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exactness baseline and an LSH-bucketed
-variant as the scale path. Dot products and norms are computed with
+Brute-force cosine top-k as the exactness baseline and IVF / multi-table
+LSH buckets as the scale paths. Dot products and norms are computed with
 ``zip_with`` + ``aggregate`` folds in double precision, left-to-right, which
 makes them bit-identical to an equivalently-ordered SQL expression — the
 DuckDB oracles exploit that.
 
 Scale: brute-force is a broadcast of the (tiny) query vector over one scan;
-the LSH variant buckets by deterministic hyperplane signs so candidate sets
-shrink by ~2^planes before exact re-scoring.
+LSH buckets by deterministic hyperplane signs so candidate sets shrink by
+~2^planes before exact re-scoring.
 """
 
 from __future__ import annotations
@@ -166,39 +166,6 @@ def _bucket_expr(signs_list: list[list[int]], vec_col: str) -> Column:
                 )
             )
         )
-    )
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    num_planes: int = 2,
-    dims: int = 64,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN: restrict exact cosine scoring to the query's LSH bucket.
-
-    The bucket is a column expression over the embedding itself, so no
-    self-join is needed to attach it — one scan, one broadcast of the
-    single-row query side.
-    """
-    bucket = _bucket_expr(hyperplane_signs(num_planes, dims), vec_col)
-    with_bucket = embeddings.select("vec_id", vec_col, bucket.alias("bucket"))
-    qb = with_bucket.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("bucket").alias("_qb"), F.col(vec_col).alias("_q"), _norm(F.col(vec_col)).alias("_qn")
-    )
-    if not qb.take(1):
-        raise ValueError(f"lsh_topk: query vec_id {query_vec_id} not found")
-    cand = with_bucket.crossJoin(F.broadcast(qb)).filter(
-        (F.col("bucket") == F.col("_qb")) & (F.col("vec_id") != query_vec_id)
-    )
-    cos = _safe_cos(_dot(F.col(vec_col), F.col("_q")), _norm(F.col(vec_col)) * F.col("_qn"))
-    return (
-        cand.select("vec_id", cos.alias("_cos"))
-        .orderBy(F.desc("_cos"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("_cos", 6).alias("cos"))
     )
 
 

@@ -220,7 +220,7 @@ def _size_ratio_at_least(t: float) -> Column:
     return F.least("_na", "_nb") / F.greatest("_na", "_nb") >= t
 
 
-def _star_candidates(assigned: DataFrame, size_ratio_min: float | None = None) -> DataFrame:
+def _star_candidates(assigned: DataFrame, size_ratio_min: float) -> DataFrame:
     """(doc_a=bucket hub, doc_b=member) star edges from a band assignment.
 
     Hub = min doc_id per (band, bkey), computed as groupBy + band join back
@@ -232,46 +232,14 @@ def _star_candidates(assigned: DataFrame, size_ratio_min: float | None = None) -
     shuffle) and the join-back probe is AQE-skew-splittable — same shape
     as clean_corpus's exact-dedup stage, chosen there for the same reason.
 
-    ``size_ratio_min`` (verifying callers pass their Jaccard threshold):
-    the size-ratio prefilter of pairs mode, so size-incompatible (hub,
-    member) edges drop BEFORE the distinct shuffle and the exact verify
-    join. The hub's set size rides out of the aggregate via min_by (no
-    second join)."""
-    # the min_by is pruned from the aggregate when no filter reads it
+    ``size_ratio_min`` (the caller's Jaccard threshold): the size-ratio
+    prefilter of pairs mode, so size-incompatible (hub, member) edges drop
+    BEFORE the distinct shuffle and the exact verify join. The hub's set
+    size rides out of the aggregate via min_by (no second join)."""
     hubs = assigned.groupBy("band", "bkey").agg(
         F.min("doc_id").alias("doc_id"), F.min_by("_n", "doc_id").alias("_n")
     )
-    if size_ratio_min is None:
-        return _band_join(hubs, assigned)
     return _band_join(hubs, assigned, carry=_CARRY_N, where=(_size_ratio_at_least(size_ratio_min),))
-
-
-def minhash_band_star_edges(
-    df: DataFrame,
-    text_col: str = "text",
-    bands: int = 4,
-    rows_per_band: int = 3,
-    elements: Column | None = None,
-) -> DataFrame:
-    """DUP-DENSE-safe near-dup candidate edges: per band bucket, connect
-    every member to the bucket's MIN doc_id (a star) instead of emitting
-    all pairs. A bucket of k mutual near-dups yields k-1 edges, not
-    k(k-1)/2 — on corpora where duplicate clusters are large (crawl snap-
-    shots, templated boilerplate) the all-pairs form is quadratic in
-    cluster size and is THE scale wall, while stars stay O(n x bands).
-
-    Trade-off vs :func:`minhash_band_candidates` (documented, standard
-    LSH-dedup practice): after exact verification of each edge, two docs
-    merge only through verified hub paths, so a pair whose similarity is
-    above threshold but whose bucket hub verifies below it can be missed —
-    connectivity is a lower bound on the all-pairs clustering. Inside a
-    true duplicate cluster every member verifies against the hub, so dedup
-    recall on actual dup clusters is unaffected.
-    """
-    _, assigned, _ = _sig_band_table(
-        df, text_col, bands, rows_per_band, elements, need_hashed=False
-    )
-    return _star_candidates(assigned)
 
 
 def minhash_star_near_dup_edges(
@@ -280,7 +248,6 @@ def minhash_star_near_dup_edges(
     threshold: float = 0.5,
     bands: int = 4,
     rows_per_band: int = 3,
-    elements: Column | None = None,
 ) -> DataFrame:
     """Exactly-verified star edges (doc_a, doc_b, jac >= threshold): the
     scale path for near-dup CLUSTERING on dup-dense corpora. Same
@@ -299,60 +266,16 @@ def minhash_star_near_dup_edges(
     member side is joined FIRST so the one unavoidable fat exchange is
     not followed by a second shuffle of the widened intermediate (see
     _verify_hashed_jaccard). Falls back to the unpruned join when hubs
-    are not small."""
-    _, assigned, hashed = _sig_band_table(df, text_col, bands, rows_per_band, elements)
+    are not small. Docs merge only through verified hub paths, so the
+    clustering is a lower bound on the all-pairs one; every member of a
+    true duplicate cluster verifies against its hub."""
+    _, assigned, hashed = _sig_band_table(df, text_col, bands, rows_per_band)
     cand = materialize(_star_candidates(assigned, size_ratio_min=threshold))
     hub_ids = cand.select(F.col("doc_a").alias("doc_id")).distinct()
     if hub_ids.limit(_STAR_HUB_BCAST_MAX + 1).count() <= _STAR_HUB_BCAST_MAX:
         hubs = hashed.join(F.broadcast(hub_ids), "doc_id", "left_semi")
         return _verify_hashed_jaccard(cand, hubs, hashed, threshold, b_first=True)
     return _verify_hashed_jaccard(cand, hashed, hashed, threshold)
-
-
-def minhash_band_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    bands: int = 4,
-    rows_per_band: int = 3,
-    elements: Column | None = None,
-    est_min_matches: int = 0,
-    size_ratio_min: float | None = None,
-) -> DataFrame:
-    """Banded-LSH candidate pairs: ``bands`` × ``rows_per_band`` minhash
-    signature; a pair is a candidate when ANY band (the concat of its
-    ``rows_per_band`` sig values) matches — the classic b×r OR-of-ANDs.
-
-    Signatures use the datasketch-style universal-hash family: each element
-    is md5-hashed ONCE to a 32-bit int, then every seed is a cheap
-    ``min((a_i*h + b_i) mod p)`` — b*r md5 evaluations per element (the
-    round-1 scheme) made 24-seed shingle signatures the slowest headline
-    query; one hash + affine transforms is ~5x faster at equal LSH quality.
-
-    Scale: each band key is one xxhash64 long, so the band self-join is a
-    hash join with bucket sizes bounded by true similarity structure;
-    candidates are deduped across bands before the (more expensive) exact
-    verification. With ``est_min_matches`` > 0 each band row also carries
-    the full signature vector and pairs whose signature agreement (an
-    unbiased Jaccard estimate) falls below ``est_min_matches``/seeds are
-    dropped BEFORE the dedup+verify join — the two-tier verify that keeps
-    the expensive element arrays off the candidate shuffle.
-
-    With ``size_ratio_min`` set, each band row also carries the hashed-set
-    cardinality and pairs with ``min(n_a,n_b)/max(n_a,n_b) < size_ratio_min``
-    are pruned: for sets, Jaccard <= min/max cardinality ratio, so passing
-    the verification threshold here is LOSSLESS for a downstream
-    ``jac >= threshold`` filter over the hashed sets — one int per row buys
-    skipping the exact array join for every size-incompatible candidate.
-
-    Signatures are INDIVIDUAL int columns, so the agreement estimate
-    compiles to a whole-stage-codegen sum of equality flags; an array +
-    zip_with formulation runs interpreted HOF lambdas per pair. See
-    :func:`_band_candidates` for what rides through the band join.
-    """
-    sigs, assigned, _ = _sig_band_table(
-        df, text_col, bands, rows_per_band, elements, need_hashed=False
-    )
-    return _band_candidates(sigs, assigned, bands, rows_per_band, est_min_matches, size_ratio_min)
 
 
 def _band_struct_array(bands: int, rows_per_band: int) -> Column:
@@ -376,10 +299,12 @@ def _band_candidates(
     bands: int,
     rows_per_band: int,
     est_min_matches: int,
-    size_ratio_min: float | None,
+    size_ratio_min: float,
 ) -> DataFrame:
     """Pairs-mode candidates over a prebuilt (sigs, assigned): the band
-    self-join, carrying only what its prefilters read.
+    self-join (any matching band key), carrying only what its prefilters
+    read. The lossless size-ratio prefilter at the caller's verify
+    threshold ``size_ratio_min`` always runs first.
 
     With the signature-agreement prefilter on (``est_min_matches`` > 0),
     the full signature vector rides ON the band rows and both prefilters
@@ -393,10 +318,7 @@ def _band_candidates(
     traded against a pair-table exchange that is quadratic in collision
     density."""
     seeds = bands * rows_per_band
-    rows, carry, where = assigned, {}, []
-    if size_ratio_min is not None:
-        # cheapest filter first: two int comparisons per collision pair
-        carry, where = dict(_CARRY_N), [_size_ratio_at_least(size_ratio_min)]
+    rows, carry, where = assigned, dict(_CARRY_N), [_size_ratio_at_least(size_ratio_min)]
     if est_min_matches > 0:
         # rebuild the band rows WITH the sig columns from the pinned narrow
         # sig table (one extra consumer of the pin, no extra scan of the
@@ -588,7 +510,7 @@ def simhash_near_dup(df: DataFrame, text_col: str = "text", max_hamming: int = 3
     Returns (doc_a, doc_b, hamming).
 
     Docs with no non-empty token (null / empty / whitespace-only text) are
-    EXCLUDED, mirroring :func:`minhash_band_candidates`'s empty-set
+    EXCLUDED, mirroring :func:`_sig_band_table`'s empty-set
     exclusion: each such boilerplate class hashes to one constant simhash
     (the null sentinel to all-zero, whitespace-only to md5('')'s votes), so
     at crawl scale millions of them would land in a single degenerate
@@ -669,11 +591,6 @@ def _quality_exprs(toks: Column, text: Column) -> tuple[Column, Column]:
     punct_ratio = punct / F.greatest(F.length(text), F.lit(1))
     score = F.least(F.lit(1.0), n / F.lit(100.0)) * (1 - punct_ratio) * (1 - stop_ratio / 2)
     return stop_ratio, score
-
-
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprint: 64-bit prefix of md5 (content-addressed id)."""
-    return df.select("doc_id", F.substring(F.md5(text_col), 1, 16).alias("fp"))
 
 
 def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1045,7 +962,8 @@ def _sig_band_table(
     downstream join output is the ~100x-larger pre-filter collision set,
     so each carried byte multiplies.
 
-    ``need_hashed=False`` (candidate-only callers that never verify): the
+    ``need_hashed=False`` (a side that is never verified from this table:
+    the cross-corpus reference, whose verify sets are re-read by id): the
     fat element-set table is left as a lazy subexpression of the sig
     materialization instead of being checkpointed itself — tokenize+hash
     still runs exactly once (inside the one sig pass), but the per-doc
@@ -1114,7 +1032,7 @@ def near_dedup_against(
     exact hashed-set verification). Returns (doc_id, dup_of_ref) for every
     ``df`` row.
 
-    Scale shape mirrors :func:`minhash_band_candidates`, asymmetric by
+    Scale shape mirrors :func:`minhash_banded_pairs`, asymmetric by
     design: the SHARD side (``df``, bounded by contract) pins its hashed
     element sets once so its text is tokenized exactly once; the
     REFERENCE side (unbounded — the 100 TB training set) is never pinned
@@ -1305,7 +1223,7 @@ def clean_corpus(
         from .operators.components import connected_components
 
         # near_mode="star": linear edge count on dup-dense corpora (see
-        # minhash_band_star_edges) — the right default at crawl scale;
+        # minhash_star_near_dup_edges) — the right default at crawl scale;
         # "pairs" is the exact all-pairs clustering for loose corpora
         edge_fn = minhash_star_near_dup_edges if near_mode == "star" else minhash_banded_pairs
         pairs = edge_fn(survivors(), text_col=text_col, threshold=near_threshold)

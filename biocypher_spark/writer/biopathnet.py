@@ -8,8 +8,9 @@ Reference: ``_BioPathNetWriter``
 ontology sub-hierarchy), ``skg.txt`` (edge triples). The reference appends
 across calls (learning/validation/test splits) — so do we, after the
 sink's ``dedup.Admission``: a node id or an edge key an earlier call wrote
-is not written again. Lines are built as Spark expressions and streamed into
-the target files driver-side (file-append concat, no row collection)."""
+is not written again, nor is a property-value entity any call typed. Lines
+are built as Spark expressions and streamed into the target files
+driver-side (file-append concat, no row collection)."""
 
 from __future__ import annotations
 
@@ -20,8 +21,9 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..dedup import Admission, AdmittingSink
-from ..model import json_pystr
+from ..dedup import Admission, AdmittingSink, KeySpace
+from ..materialize import materialize
+from ..model import SEQ, json_pystr
 
 
 def _append_lines(df: DataFrame, outdir: str, filename: str) -> None:
@@ -44,6 +46,8 @@ class BioPathNetWriter(AdmittingSink):
         self.outdir = require_local_dir(output_directory, "BioPathNet")
         os.makedirs(self.outdir, exist_ok=True)
         self.admission = Admission()
+        # property-value entities ({key}_{value}), first wins across calls
+        self._value_keys = KeySpace("_seen_nodes", track_seen=True)
         self._hierarchy_seen: set = set()  # (child, parent) pairs written by any call
 
     def write_nodes(self, nodes: DataFrame) -> bool:
@@ -56,16 +60,20 @@ class BioPathNetWriter(AdmittingSink):
 
         # property triples into the background graph; values prefixed with
         # the property name, spaces stripped (reference :90-101)
-        entries = nodes.select("node_id", F.explode(F.map_entries("props")).alias("e"))
+        entries = nodes.select("node_id", SEQ, F.explode(F.map_entries("props")).alias("e"))
         pv = F.regexp_replace(json_pystr(F.col("e.value")), " ", "")
+        pv_id = F.concat(F.col("e.key"), F.lit("_"), pv)
         prop_rows = entries.filter(F.col("e.value").isNotNull() & (F.col("e.value") != "null")).select(
-            F.concat_ws("\t", "node_id", F.col("e.key"), F.concat(F.col("e.key"), F.lit("_"), pv)).alias("brg"),
-            F.concat_ws("\t", F.concat(F.col("e.key"), F.lit("_"), pv), F.lit("property_value")).alias("types"),
-            F.concat_ws("\t", F.concat(F.col("e.key"), F.lit("_"), pv), pv).alias("names"),
+            F.concat_ws("\t", "node_id", F.col("e.key"), pv_id).alias("brg"),
+            pv_id.alias("node_id"), F.lit("property_value").alias("node_label"), pv.alias("pv"), SEQ,
         )
+        # pinned so the value key space ranks and anti-joins a shallow plan,
+        # not the node admission's lineage
+        prop_rows = materialize(prop_rows)
         _append_lines(prop_rows.select(F.col("brg").alias("value")), self.outdir, "brg.txt")
-        _append_lines(prop_rows.select(F.col("types").alias("value")), self.outdir, "entity_types.txt")
-        _append_lines(prop_rows.select(F.col("names").alias("value")), self.outdir, "entity_names.txt")
+        values, _ = self._value_keys.admit(prop_rows.drop("brg"))
+        for filename, col in (("entity_types.txt", "node_label"), ("entity_names.txt", "pv")):
+            _append_lines(values.select(F.concat_ws("\t", "node_id", col).alias("value")), self.outdir, filename)
 
         # used ontology sub-hierarchy (driver-side, tiny domain): child
         # is_a parent edges for every label's ancestor chain
@@ -93,6 +101,7 @@ class BioPathNetWriter(AdmittingSink):
                 for ln in lines:
                     fh.write(ln + "\n")
         self.admission.release_earlier_row_pins("node")
+        self._value_keys.release_earlier_row_pins()
         return True
 
     def write_edges(self, edges) -> bool:

@@ -211,8 +211,8 @@ class Neo4jBatchWriter(AdmittingSink):
         /root/reference/biocypher/output/write/_batch_writer.py:785-797)."""
         if not self.validate_props:
             return
-        # a null props map counts as the EMPTY key set (NODE_INPUT_SCHEMA
-        # allows null props) — without the coalesce the collected _keys row
+        # a null props map counts as the EMPTY key set (NODE_SCHEMA's
+        # props is nullable) — without the coalesce the collected _keys row
         # is None and tuple(None) raises TypeError instead of the intended
         # consistency ValueError (or a spurious one for all-null labels)
         keys = F.sort_array(F.map_keys(F.coalesce(F.col("props"), F.create_map())))

@@ -7,10 +7,9 @@ from biocypher_spark.multimodal import (
     FEATURE_DIM,
     decode_image,
     extract_features,
-    media_near_dup,
     sample_frames,
-    synthesize_media,
 )
+from fixtures.media import synthesize_media
 
 
 def test_feature_extraction(spark):
@@ -47,16 +46,9 @@ def test_frame_sampling(spark):
     assert all(sorted(v) == [0, 1000, 2000, 3000] for v in per.values())
 
 
-def test_media_exact_dedup(spark):
-    a = synthesize_media(spark, 5, kind="image")
-    dup = a.unionByName(a.withColumn("media_id", F.concat(F.lit("copy_"), "media_id")))
-    groups = media_near_dup(dup).collect()
-    assert len(groups) == 5
-    assert all(g["n"] == 2 for g in groups)
-
-
 def test_resize_media_plumbing(spark):
-    from biocypher_spark.multimodal import resize_media, synthesize_media
+    from biocypher_spark.multimodal import resize_media
+    from fixtures.media import synthesize_media
 
     media = synthesize_media(spark, 6, kind="image")
     out = resize_media(media, width=4, height=4).collect()
@@ -76,7 +68,8 @@ def test_resize_media_plumbing(spark):
 def test_ppm_roundtrip_and_parser():
     import numpy as np
 
-    from biocypher_spark.multimodal import decode_ppm, encode_ppm
+    from biocypher_spark.multimodal import decode_ppm
+    from fixtures.media import encode_ppm
 
     px = (np.arange(5 * 4 * 3, dtype=np.uint8)).reshape(4, 5, 3)
     assert (decode_ppm(encode_ppm(px)) == px).all()
@@ -92,7 +85,8 @@ def test_ppm_roundtrip_and_parser():
 def test_wav_roundtrip():
     import numpy as np
 
-    from biocypher_spark.multimodal import decode_wav, encode_wav
+    from biocypher_spark.multimodal import decode_wav
+    from fixtures.media import encode_wav
 
     samples = (np.sin(np.linspace(0, 20, 800)) * 10000).astype("<i2")
     rate, frames = decode_wav(encode_wav(samples, 8000))
@@ -103,7 +97,7 @@ def test_wav_roundtrip():
 def test_real_image_features(spark):
     import numpy as np
 
-    from biocypher_spark.multimodal import encode_ppm, synthesize_real_media
+    from fixtures.media import encode_ppm, synthesize_real_media
 
     media = synthesize_real_media(spark, 10, kind="image")
     feats = extract_features(media).collect()
@@ -116,7 +110,7 @@ def test_real_image_features(spark):
 
 
 def test_real_audio_features_and_frames(spark):
-    from biocypher_spark.multimodal import synthesize_real_media
+    from fixtures.media import synthesize_real_media
 
     media = synthesize_real_media(spark, 6, kind="audio")
     feats = extract_features(media).collect()
@@ -137,7 +131,8 @@ def test_real_audio_features_and_frames(spark):
 def test_real_image_resize(spark):
     import numpy as np
 
-    from biocypher_spark.multimodal import resize_media, synthesize_real_media
+    from biocypher_spark.multimodal import resize_media
+    from fixtures.media import synthesize_real_media
 
     media = synthesize_real_media(spark, 5, kind="image")
     out = {r["media_id"]: r for r in resize_media(media, width=4, height=4).collect()}
@@ -175,21 +170,6 @@ def test_resize_thumb_carries_full_dims(spark):
     media = media_from_documents(docs)
     rows = resize_media(media, width=8, height=8).collect()
     assert rows and all(len(r["thumb"]) == 64 for r in rows)
-
-
-def test_media_feature_near_dup_pairs(spark):
-    from biocypher_spark.multimodal import media_feature_near_dup, media_from_documents
-
-    docs = spark.createDataFrame(
-        [(1, "same payload text"), (2, "same payload text"), (3, "totally different !!")],
-        "doc_id long, text string",
-    )
-    media = media_from_documents(docs)
-    pairs = media_feature_near_dup(media, threshold=0.999)
-    got = {(r["media_a"], r["media_b"]) for r in pairs.collect()}
-    # identical payloads -> identical features -> cos 1.0 pair; the
-    # different doc must not pair with both at 0.999
-    assert any(a != b for a, b in got)
 
 
 # -- PNG codec (stdlib zlib + numpy unfiltering) ------------------------------
@@ -266,7 +246,8 @@ def _build_png(px, colortype, filter_type):
 def test_png_roundtrip():
     import numpy as np
 
-    from biocypher_spark.multimodal import decode_png, encode_png
+    from biocypher_spark.multimodal import decode_png
+    from fixtures.media import encode_png
 
     px = _png_pixels()
     assert np.array_equal(decode_png(encode_png(px)), px)
@@ -334,14 +315,8 @@ def test_png_unsupported_shapes_raise():
 def test_png_feature_and_resize_dispatch(spark):
     import numpy as np
 
-    from biocypher_spark.multimodal import (
-        FEATURE_DIM,
-        decode_image,
-        encode_png,
-        encode_ppm,
-        resize_media,
-        synthesize_real_media,
-    )
+    from biocypher_spark.multimodal import FEATURE_DIM, decode_image, resize_media
+    from fixtures.media import encode_png, encode_ppm, synthesize_real_media
 
     # identical pixels through PPM and PNG must produce identical features
     px = _png_pixels(h=6, w=8, seed=4)

@@ -75,3 +75,23 @@ def test_biopathnet_writer(spark, schema_path, tmp_path):
     assert "p1\tPERTURBED_IN_DISEASE\tp2" in skg
     names = open(tmp_path / "entity_names.txt").read()
     assert "name_StringProperty1\tStringProperty1" in names
+
+
+def test_biopathnet_property_value_entities_written_once(spark, schema_path, tmp_path):
+    """A property value is one BioPathNet entity: typed and named once,
+    however many nodes hold it, within a call and across calls. Its brg
+    triple is still written once per node that holds it."""
+    translator = SparkTranslator(spark, Ontology(SchemaMapping(schema_path), parent_map={"protein": "polypeptide"}))
+    w = BioPathNetWriter(spark, translator, str(tmp_path))
+    later = [(f"q{i}", label, props) for i, (_, label, props) in enumerate(protein_nodes(2))]
+    for batch in (protein_nodes(3), later):
+        assert w.write_nodes(translator.translate_nodes(nodes_from_tuples(spark, batch)).nodes)
+    types = open(tmp_path / "entity_types.txt").read().splitlines()
+    names = open(tmp_path / "entity_names.txt").read().splitlines()
+    assert types.count("taxon_9606\tproperty_value") == 1
+    assert names.count("taxon_9606\t9606") == 1
+    values = [line for line in types if line.endswith("\tproperty_value")]
+    assert values and len(values) == len(set(values))
+    assert len(names) == len(set(names))
+    brg = open(tmp_path / "brg.txt").read().splitlines()
+    assert sum(line.endswith("\ttaxon\ttaxon_9606") for line in brg) == 5

@@ -6,11 +6,27 @@ from pyspark.sql import functions as F
 from biocypher_spark.mapping import SchemaMapping
 from biocypher_spark.model import nodes_from_tuples
 from biocypher_spark.ontology import NullOntology
-from biocypher_spark.plans import count_shuffles, formatted_plan, plan_has, uses_broadcast_join
+from biocypher_spark.plans import formatted_plan
 from biocypher_spark.translate import SparkTranslator
 from fixtures.data_generator import protein_nodes
 
 SF = "/root/testdata/sf0.001"
+
+
+def plan_has(df, *needles: str) -> bool:
+    plan = formatted_plan(df)
+    return all(n in plan for n in needles)
+
+
+def count_shuffles(df) -> int:
+    """Number of shuffle exchanges (BroadcastExchange excluded)."""
+    import re
+
+    return len(re.findall(r"^\(\d+\) Exchange\b", formatted_plan(df), re.M))
+
+
+def uses_broadcast_join(df) -> bool:
+    return "BroadcastHashJoin" in formatted_plan(df)
 
 
 def test_translator_uses_broadcast_join(spark, schema_path):
@@ -184,7 +200,6 @@ def test_simhash64_single_shuffle_codegen(spark):
     """simhash64 = explode + ONE partial/final hash aggregate (map-side
     combine: the shuffle carries 64 ints per doc, not exploded tokens), no
     Python on the path."""
-    from biocypher_spark.plans import count_shuffles, plan_has
     from biocypher_spark.textops import simhash64
 
     docs = spark.createDataFrame([(1, "a b c"), (2, "d e f")], "doc_id long, text string")
@@ -235,11 +250,10 @@ def test_embedding_near_dup_plan_bounded(spark):
 
 
 def test_banded_candidates_no_python_no_cartesian(spark):
-    from biocypher_spark.plans import formatted_plan
-    from biocypher_spark.textops import minhash_band_candidates
+    from biocypher_spark.textops import minhash_banded_pairs
 
     docs = spark.createDataFrame([(1, "a b c"), (2, "a b d")], "doc_id long, text string")
-    plan = formatted_plan(minhash_band_candidates(docs))
+    plan = formatted_plan(minhash_banded_pairs(docs))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
 
@@ -251,24 +265,26 @@ def test_banded_candidates_est_filter_codegen_and_narrow_join(spark):
     without the prefilter (``est_min_matches=0``) no sig column rides
     through the band self-join — the renamed ``_a{i}``/``_b{i}`` columns
     appear nowhere in the plan; (c) with it, the agreement filter runs
-    below the pair distinct, and no join follows the distinct (no sig
-    columns are attached after it)."""
+    below the pair distinct, and no band join follows the distinct (no sig
+    columns are attached after it): the only joins above the distinct are
+    the exact verify's two element-set attaches.
+
+    The est=0 shape is planned through ``minhash_banded_pairs``, the
+    est>0 one through ``ngram_jaccard_pairs(est_slack=...)``; both verify
+    at their threshold, so the size-ratio prefilter is on in each."""
     import re
 
-    from biocypher_spark.plans import formatted_plan
-    from biocypher_spark.textops import minhash_band_candidates
+    from biocypher_spark.textops import minhash_banded_pairs, ngram_jaccard_pairs
 
     docs = spark.createDataFrame(
         [(i, f"w{i % 3} common tail") for i in range(8)], "doc_id long, text string"
     )
     sig_col = re.compile(r"\b_[ab]\d+#")
 
-    def nodes(est_min_matches):
+    def nodes(df):
         # {node id: (operator, detail block)}; formatted-plan ids number
         # children before their parents
-        plan = formatted_plan(minhash_band_candidates(
-            docs, bands=2, rows_per_band=2, est_min_matches=est_min_matches, size_ratio_min=0.5
-        ))
+        plan = formatted_plan(df)
         assert "zip_with" not in plan
         out = {}
         for block in re.split(r"\n(?=\(\d+\) )", plan):
@@ -277,14 +293,17 @@ def test_banded_candidates_est_filter_codegen_and_narrow_join(spark):
                 out[int(m.group(1))] = (m.group(2), block)
         return out
 
-    narrow = nodes(0)
+    narrow = nodes(minhash_banded_pairs(docs, threshold=0.5, bands=2, rows_per_band=2))
     assert any(op.endswith("Join") for op, _ in narrow.values())
     assert not any(sig_col.search(block) for _, block in narrow.values())
 
-    est = nodes(3)
+    # est_slack 0.1 at threshold 0.5 over 4 seeds: at least 2 matching sigs
+    est = nodes(ngram_jaccard_pairs(docs, threshold=0.5, bands=2, rows_per_band=2, est_slack=0.1))
     distinct = min(i for i, (op, _) in est.items() if op == "HashAggregate")
     joins = [i for i, (op, _) in est.items() if op.endswith("Join")]
-    assert joins and max(joins) < distinct
+    assert joins and min(joins) < distinct
+    assert len([i for i in joins if i > distinct]) == 2
+    assert not any(sig_col.search(block) for i, (_, block) in est.items() if i > distinct)
     agreement = [i for i, (_, block) in est.items() if "CASE WHEN" in block and sig_col.search(block)]
     assert agreement and max(agreement) < distinct
 
@@ -296,7 +315,6 @@ def test_ordered_part_rank_is_distributed(spark):
     task (round-3 find: 46.8s vs 6.1s at 2M single-label rows)."""
     from pyspark.sql import functions as F
 
-    from biocypher_spark.plans import formatted_plan
     from biocypher_spark.writer.base import ordered_file_assignment
 
     lines = spark.range(500).select(
@@ -346,14 +364,17 @@ def test_star_candidates_have_no_window(spark):
     NOT min-over-window: a window pins each LSH bucket to ONE sort task,
     and the dup-dense corpora this path exists for produce mega-buckets
     (one boilerplate page duplicated millions of times). The groupBy gets
-    map-side combine and the join-back is AQE-skew-splittable."""
-    from biocypher_spark.plans import formatted_plan
-    from biocypher_spark.textops import minhash_band_star_edges
+    map-side combine and the join-back is AQE-skew-splittable.
+
+    Planned on ``_star_candidates`` itself: ``minhash_star_near_dup_edges``
+    pins the candidates, so its own plan starts at the pin."""
+    from biocypher_spark.textops import _sig_band_table, _star_candidates
 
     df = spark.createDataFrame(
         [(i, "a b c d e") for i in range(6)], "doc_id long, text string"
     )
-    plan = formatted_plan(minhash_band_star_edges(df))
+    _, assigned, _ = _sig_band_table(df, "text", bands=4, rows_per_band=3, need_hashed=False)
+    plan = formatted_plan(_star_candidates(assigned, size_ratio_min=0.5))
     assert "Window" not in plan, "star hub must not use a window:\n" + plan
     assert "partial_min" in plan or "HashAggregate" in plan
 

@@ -13,7 +13,6 @@ from biocypher_spark.operators.components import connected_components
 from biocypher_spark.similarity import embedding_near_dup
 from biocypher_spark.textops import (
     exact_dedup,
-    minhash_band_candidates,
     minhash_banded_pairs,
     minhash_dedup,
     ngram_jaccard_pairs,
@@ -61,7 +60,8 @@ def test_minhash_banded_exact_precision_and_dup_recall(docs):
     by_rep = {}
     for r in groups:
         by_rep.setdefault(r["rep_id"], []).append(r["doc_id"])
-    cand = {(r["doc_a"], r["doc_b"]) for r in minhash_band_candidates(docs).collect()}
+    # a verify at threshold 0.0 keeps every banded candidate
+    cand = {(r["doc_a"], r["doc_b"]) for r in minhash_banded_pairs(docs, threshold=0.0).collect()}
     for members in by_rep.values():
         members = sorted(members)
         for i, a in enumerate(members):
@@ -130,7 +130,7 @@ def test_simhash_near_dup_excludes_tokenless_docs(spark):
     simhash; left in the banding they form a single degenerate bucket whose
     self-join (and true pair set) is quadratic in their count. They carry
     no content to be near-duplicate OF, so they are excluded from pairing —
-    mirroring minhash_band_candidates' empty-set exclusion."""
+    mirroring the banded-minhash empty-set exclusion."""
     docs = spark.createDataFrame(
         [(1, None), (2, None), (3, ""), (4, ""), (5, "   "), (6, "real content here"),
          (7, "real content here")],
@@ -348,12 +348,10 @@ def test_winnow_fingerprints_unicode_no_overflow(spark):
 def test_band_candidates_skip_empty_element_docs(spark):
     """Docs with empty shingle sets must not form a degenerate all-NULL
     band bucket (which would self-join quadratically)."""
-    from biocypher_spark.textops import minhash_band_candidates, shingles
-    from pyspark.sql import functions as F
-
     rows = [(i, "ab") for i in range(50)] + [(100, "same long text"), (101, "same long text")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    cand = minhash_band_candidates(docs, elements=shingles(F.col("text"), 3))
+    # a verify at threshold 0.0 keeps every banded 3-shingle candidate
+    cand = ngram_jaccard_pairs(docs, threshold=0.0, n=3)
     got = {(r["doc_a"], r["doc_b"]) for r in cand.collect()}
     assert got == {(100, 101)}  # none of the 50 sub-n-char docs pair up
 
@@ -705,13 +703,14 @@ def test_clean_corpus_same_audit_for_every_probe_form(spark, cq_docs, monkeypatc
 
 def test_star_edges_linear_on_dup_clusters(spark):
     # a cluster of k mutual dups: all-pairs emits k(k-1)/2, star emits k-1
-    from biocypher_spark.textops import minhash_band_candidates, minhash_band_star_edges
+    # (a verify at threshold 0.0 keeps every candidate edge of each mode)
+    from biocypher_spark.textops import minhash_star_near_dup_edges
 
     k = 10
     rows = [(i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(k)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    assert minhash_band_candidates(df).count() == k * (k - 1) // 2
-    star = minhash_band_star_edges(df).collect()
+    assert minhash_banded_pairs(df, threshold=0.0).count() == k * (k - 1) // 2
+    star = minhash_star_near_dup_edges(df, threshold=0.0).collect()
     assert len(star) == k - 1
     assert all(r["doc_a"] == 0 for r in star)  # hub = bucket min
 
@@ -922,15 +921,13 @@ def test_lsh_dims_mismatch_raises(spark):
 def test_topk_missing_query_raises(spark):
     import pytest as _pytest
 
-    from biocypher_spark.similarity import cosine_topk, lsh_topk
+    from biocypher_spark.similarity import cosine_topk
 
     emb = spark.createDataFrame(
         [(i, [float(i)] * 64) for i in range(1, 4)], "vec_id int, embedding array<float>"
     )
     with _pytest.raises(ValueError, match="not found"):
         cosine_topk(emb, 99)
-    with _pytest.raises(ValueError, match="not found"):
-        lsh_topk(emb, 99)
 
 
 def test_pii_counts_agree_with_scrubbed_tags(spark):
