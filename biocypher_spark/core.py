@@ -245,10 +245,13 @@ class BioCypherSpark:
 
     def log_duplicates(self) -> None:
         # every sink admits its rows through one dedup.Admission, which
-        # records what it dropped
-        for df in (self.writer.get_duplicate_nodes(), self.writer.get_duplicate_edges()):
-            if df is not None:
-                df.show(truncate=False)
+        # records what it dropped; report the sinks this facade has built
+        for sink in (self._writer, self._kg):
+            if sink is None:
+                continue
+            for df in (sink.get_duplicate_nodes(), sink.get_duplicate_edges()):
+                if df is not None:
+                    df.show(truncate=False)
 
     def write_schema_info(self, as_node: bool = False) -> dict:
         """Schema-info aggregation (D9; reference ``write_schema_info``,

@@ -6,10 +6,19 @@ state must become a shuffle. One mechanism serves every caller: a
 :class:`KeySpace` ranks each key group by the explicit arrival column
 ``SEQ`` (so "first occurrence wins" is deterministic under parallelism),
 folds the group's duplicate labels into its first row, and — when it keeps
-state across calls — anti-joins the keys earlier calls admitted. It emits
-duplicate-metrics rows instead of log lines. Every sink admits its rows
-through one :class:`Admission`, which holds the three key spaces with state
-(the one-shot ``dedup_*`` calls build a space per call).
+state across calls — marks the keys earlier calls admitted with one left
+join.
+
+The whole dedup state is one **ledger**: a list of frames in the stream
+state's generation schema ``(_kind, _klabel, _key, _dup_kind)``, one frame
+per admit call. A call's frame holds the keys it admitted (``_kind`` = the
+space's name, ``_seen_nodes`` / ``_seen_edges`` / ``_seen_ran``) and the
+duplicate rows it found (``_kind`` = ``_dup::duplicate_nodes`` /
+``_dup::duplicate_edges``, ``_dup_kind`` = the metrics kind). A space's
+seen keys, the duplicate reports (D4) and a stream's durable state are
+filters of that list. Every sink admits its rows through one
+:class:`Admission`, whose three key spaces share one ledger (the one-shot
+``dedup_*`` calls build a space per call).
 
 Scale notes:
   * node dedup is **global across labels** (one id namespace,
@@ -22,12 +31,13 @@ Scale notes:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .materialize import materialize
+from .materialize import materialize_lazily
 from .model import SEQ, with_seq
 from .translate import RAN_HIDDEN_COLS, TranslatedEdges, ran_helper_edges
 
@@ -56,44 +66,89 @@ def edge_dedup_key() -> F.Column:
     )
 
 
-# the three key spaces of the reference's Deduplicator, by the name their
-# seen keys carry in stream state: (metrics kind, label column, key column
+# the three key spaces of the reference's Deduplicator, by the `_kind` of
+# their admitted keys in the ledger: (metrics kind, label column, key column
 # (None: edge_dedup_key), keyed per label, columns a sink needs non-NULL)
 _SPACES = {
     "_seen_nodes": ("node", "node_label", "node_id", False, ("node_id",)),  # D1: node id, global across labels
     "_seen_edges": ("edge", "relationship_label", None, True, ("source_id", "target_id")),  # D2: (type, edge key)
     "_seen_ran": ("edge", "node_label", "node_id", True, ()),  # D3: (type, reified id)
 }
+# the `_kind` of the ledger rows that report duplicates, by metrics kind
+DUP_KINDS = {"node": "_dup::duplicate_nodes", "edge": "_dup::duplicate_edges"}
+LEDGER_COLUMNS = ("_kind", "_klabel", "_key", "_dup_kind")
+
+
+@dataclass
+class LedgerEntry:
+    """One ledger frame: an admit call's, of key space ``space``, or the
+    state loaded from storage (``space`` None, every kind). ``pin`` is the
+    call's persisted rows that ``frame`` reads until its first computation
+    (None for loaded and one-shot entries, and once released); ``cut`` tells
+    that ``frame`` is a lineage-cut copy (:meth:`KeySpace.release_earlier_row_pins`)."""
+
+    space: Optional[str]
+    frame: DataFrame
+    pin: Optional[DataFrame] = None
+    cut: bool = False
+
+
+def _union(frames: list[DataFrame]) -> Optional[DataFrame]:
+    return reduce(DataFrame.unionByName, frames) if frames else None
+
+
+def _metrics(ledger: Optional[DataFrame], kind: str) -> Optional[DataFrame]:
+    """The ``(kind, label, dup_id)`` duplicate rows of ``kind`` in a ledger
+    frame (None: no frame)."""
+    if ledger is None:
+        return None
+    return ledger.filter(F.col("_kind") == DUP_KINDS[kind]).select(
+        F.col("_dup_kind").alias("kind"), F.col("_klabel").alias("label"), F.col("_key").alias("dup_id")
+    )
 
 
 class KeySpace:
     """One first-wins dedup key space; with ``track_seen`` also the keys
     earlier calls admitted.
 
-    A call's rows carry the key as ``_key`` (and the label as ``_klabel``
-    for a per-label space) while they are deduped; the seen keys are a
-    frame of those columns. The cumulative seen union is never pinned:
-    ``Dataset.union`` flattens nested unions, so each call's anti-join reads
-    (and fills) every call's persisted key frame directly. Each call's
-    full-row pins are released by :meth:`release_earlier_row_pins` once the
-    next call consumed them, and every pin by :meth:`release_pins`."""
+    Each call appends one frame to ``ledger`` (shared by an Admission's
+    spaces). A call's rows carry the key as ``_key`` (and the label as
+    ``_klabel`` for a per-label space) while they are deduped. With
+    ``track_seen`` the call pins its marked rows, and
+    :meth:`release_earlier_row_pins` swaps its frame for a lineage-cut copy
+    once the caller consumed them, so the next call's join reads no earlier
+    call's plan: plans grow linearly with the number of calls, not
+    geometrically (every executed cached plan prints its subtree more than
+    once, so nested calls multiply)."""
 
-    def __init__(self, name: str, track_seen: bool = False):
+    def __init__(self, name: str, track_seen: bool = False, ledger: Optional[list[LedgerEntry]] = None):
+        self.name = name
         self.kind, self.label_col, self._key_col, per_label, self._sink_keys = _SPACES[name]
         self.key_cols = ["_klabel", "_key"] if per_label else ["_key"]
         self.track_seen = track_seen
-        self.seen: Optional[DataFrame] = None
-        self._delta: Optional[DataFrame] = None  # keys admitted since the last take_delta()
-        self._key_pins: list[DataFrame] = []  # each call's admitted keys
-        self._row_pins: list[list[DataFrame]] = []  # each call's full-row pins
+        self.ledger: list[LedgerEntry] = [] if ledger is None else ledger
 
-    def _metrics(self, frame: DataFrame, label: Column) -> DataFrame:
-        return frame.select(F.lit(self.kind).alias("kind"), label.alias("label"), F.col("_key").alias("dup_id"))
+    def _frames(self) -> list[DataFrame]:
+        """This space's ledger frames and the loaded state. A snapshot: the
+        other spaces of a shared ledger append from their own threads."""
+        return [e.frame for e in list(self.ledger) if e.space in (None, self.name)]
 
-    def admit(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """``(kept rows, (kind, label, dup_id) duplicate rows)`` of ``df``:
-        the first row of each key by ``SEQ``, minus the keys of earlier
-        calls when the space tracks them.
+    @property
+    def seen(self) -> Optional[DataFrame]:
+        """The keys earlier calls admitted (``key_cols``); None before any."""
+        state = _union(self._frames())
+        return None if state is None else state.filter(F.col("_kind") == self.name).select(*self.key_cols)
+
+    def _dup_struct(self, label: Column) -> Column:
+        return F.struct(
+            F.lit(DUP_KINDS[self.kind]).alias("_kind"), label.alias("_klabel"), F.col("_key"),
+            F.lit(self.kind).alias("_dup_kind"),
+        )
+
+    def admit(self, df: DataFrame) -> DataFrame:
+        """The kept rows of ``df``: the first row of each key by ``SEQ``,
+        minus the keys of earlier calls when the space tracks them. The
+        call's admitted keys and duplicate rows go to its ledger frame.
 
         One window ranks each key group and folds the group's duplicate
         labels into its first row as ``_dup_labels`` —
@@ -101,18 +156,15 @@ class KeySpace:
         VOCABULARY, never group size, so a hot key with millions of
         occurrences stays O(labels) in state (a duplicate row with a NULL
         label is not representable in the set and goes unreported;
-        translated frames always carry labels). The duplicate rows are
-        projections of those first rows:
+        translated frames always carry labels). With earlier keys, one left
+        join marks the first rows they hold as ``_seen``. The ledger frame is
+        one projection of those marked rows: an in-call duplicate per
+        ``_dup_labels`` entry, and per row either its admitted key or, when
+        ``_seen``, a cross-call duplicate.
 
-        - in-call: explode ``_dup_labels`` (key-unique, per-key label set
-          => no distinct needed);
-        - cross-call: the first rows ANTI the kept keys — the complement of
-          the seen anti-join, with no extra scan of the seen state.
-
-        With ``track_seen`` the first rows and the kept rows are pinned, so
-        the caller's write, the new seen keys, the next call's anti-join
-        and the metrics read one window evaluation. Nothing is counted
-        here: each pin is filled by its first consumer's job."""
+        With ``track_seen`` the marked rows are pinned, so the caller's
+        write and the ledger frame read one window evaluation. Nothing is
+        counted here: the pin is filled by its first consumer's job."""
         key = edge_dedup_key() if self._key_col is None else F.col(self._key_col)
         keyed = df.withColumn("_key", key)
         if len(self.key_cols) == 2:
@@ -124,33 +176,30 @@ class KeySpace:
             "_dup_labels",
             F.collect_set(F.when(F.col("_rn") > 1, F.col(self.label_col))).over(w_all),
         )
-        firsts = ranked.filter(F.col("_rn") == 1).drop("_rn")
+        marked = ranked.filter(F.col("_rn") == 1).drop("_rn")
+        seen = self.seen if self.track_seen else None
+        is_seen = F.lit(False)
+        if seen is not None:
+            # no distinct on either side: a call's first rows are key-unique
+            # (row_number == 1), and seen is by induction — each call admits
+            # only keys no earlier call holds
+            marked = marked.join(seen.withColumn("_seen", F.lit(True)), self.key_cols, "left")
+            is_seen = F.col("_seen").isNotNull()
+        rows = F.transform("_dup_labels", self._dup_struct)
         if self.track_seen:
-            firsts = firsts.persist()
-        dups = self._metrics(firsts.filter(F.size("_dup_labels") > 0), F.explode("_dup_labels"))
-        if not self.track_seen:
-            return firsts.drop("_dup_labels", *self.key_cols), dups
-        pins = [firsts]
-        if self.seen is None:
-            kept = firsts.drop("_dup_labels")
-        else:
-            kept = firsts.join(self.seen, self.key_cols, "left_anti").drop("_dup_labels").persist()
-            pins.append(kept)
-            cross = firsts.join(kept.select(*self.key_cols), self.key_cols, "left_anti")
-            dups = dups.unionByName(self._metrics(cross, F.col(self.label_col)))
-        self._row_pins.append(pins)
-        new_keys = kept.select(*self.key_cols).persist()
-        self._key_pins.append(new_keys)
-        # the union needs NO distinct: new_keys is key-unique (row_number==1
-        # keeps one row per key) and disjoint from seen (the anti-join
-        # above), and seen is distinct by this same induction — a distinct
-        # here would re-shuffle the ENTIRE cumulative seen state on every
-        # call, O(all ids ever admitted) per micro-batch at stream scale
-        self.seen = new_keys if self.seen is None else self.seen.unionByName(new_keys)
-        self._delta = new_keys if self._delta is None else self._delta.unionByName(new_keys)
-        return kept.drop(*self.key_cols), dups
+            marked = marked.persist()
+            klabel = F.col("_klabel") if len(self.key_cols) == 2 else F.lit(None).cast("string")
+            admitted = F.struct(
+                F.lit(self.name).alias("_kind"), klabel.alias("_klabel"), F.col("_key"),
+                F.lit(None).cast("string").alias("_dup_kind"),
+            )
+            rows = F.concat(rows, F.array(F.when(is_seen, self._dup_struct(F.col(self.label_col))).otherwise(admitted)))
+        entry = marked.select(F.explode(rows).alias("e")).select("e.*")
+        self.ledger.append(LedgerEntry(self.name, entry, marked if self.track_seen else None))
+        kept = marked if seen is None else marked.filter(~is_seen)
+        return kept.drop("_dup_labels", "_seen", *self.key_cols)
 
-    def admit_writable(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def admit_writable(self, df: DataFrame) -> DataFrame:
         """:meth:`admit` over the rows a sink can write (:class:`Admission`):
         a node with a NULL id (D1) or an edge with a NULL endpoint (D2) is
         dropped first. The one-shot ``dedup_*`` calls keep such rows."""
@@ -158,72 +207,49 @@ class KeySpace:
             df = df.filter(F.col(c).isNotNull())
         return self.admit(df)
 
-    def take_delta(self) -> Optional[DataFrame]:
-        """Hand over (and clear) the keys admitted since the last call."""
-        delta, self._delta = self._delta, None
-        return delta
-
     def release_earlier_row_pins(self) -> None:
-        """Unpersist the full-row pins of all but the latest call. Call once
-        the latest call's kept rows were consumed: its anti-join has then
-        filled the key pins the earlier rows fed, so only lazy duplicate
-        metrics still reach them."""
-        while len(self._row_pins) > 1:
-            for df in self._row_pins.pop(0):
-                df.unpersist()
-
-    def release_pins(self) -> None:
-        """Unpersist every pin and drop the delta. Call ONLY once ``seen``
-        no longer reads the key pins (repointed at durable storage): until
-        then they back the live union, and unpersisting them would force a
-        deep lineage recompute on the next anti-join."""
-        for df in self._key_pins + [df for pins in self._row_pins for df in pins]:
-            df.unpersist()
-        self._key_pins.clear()
-        self._row_pins.clear()
-        self._delta = None
+        """Swap the latest call's ledger frame for a lineage-cut copy and
+        unpersist the row pins of every earlier call. Call once the latest
+        call's kept rows were consumed: its pin is then filled, so the cut
+        (:func:`materialize_lazily`) starts no job, and its next consumer
+        (the next call's join, a report or a stream's state write) fills the
+        copy from the pin. That join filled the earlier calls' copies, so
+        their pins are no longer read."""
+        pinned = [e for e in list(self.ledger) if e.space == self.name and e.pin is not None]
+        for e in pinned[:-1]:
+            pin, e.pin = e.pin, None
+            pin.unpersist()
+        if pinned and not pinned[-1].cut:
+            pinned[-1].frame, pinned[-1].cut = materialize_lazily(pinned[-1].frame), True
 
 
 class Admission:
     """A sink's one admission step: the rows it may write, first wins.
 
     It holds the three key spaces (D1 node id, D2 (type, edge key), D3
-    (type, reified id)), keyed by the name their seen keys carry in stream
-    state, and the duplicate-metrics frames they feed (D4). Every sink calls
-    :meth:`nodes` / :meth:`edges` at the top of its node / edge write, and
+    (type, reified id)) and their one ledger, the whole dedup state: the
+    seen keys and the duplicate rows (D4) are filters of it, replacing the
+    reference's unbounded in-memory sets (reference
+    ``biocypher/_deduplicate.py:20-29``). Every sink calls :meth:`nodes` /
+    :meth:`edges` at the top of its node / edge write, and
     :meth:`release_earlier_row_pins` once it has written what they
     returned. ``track_seen=False`` makes every call one-shot (no cross-call
-    seen keys) for single-shot pipelines whose inputs are already unique.
-    Cross-call state is an accumulated, persisted key DataFrame per space,
-    replacing the reference's unbounded in-memory sets (reference
-    ``biocypher/_deduplicate.py:20-29``); ``stream_kg`` persists and reloads
-    it through :meth:`take_state_deltas`, :meth:`state_frames` and
-    :meth:`repoint_state`."""
+    seen keys, lazy unpinned ledger frames) for single-shot pipelines whose
+    inputs are already unique. ``stream_kg`` writes :meth:`state` as its
+    per-batch generation and reloads it through :meth:`repoint_state`.
 
-    # every _DUP_COLLAPSE appended layers a duplicate-metrics chain is
-    # distinct-ed and pinned, so its eventual evaluation pays a bounded plan.
-    # It only fires for a sink that is never repointed (the facade's);
-    # stream_kg repoints after at most two layers per frame.
-    _DUP_COLLAPSE = 16
+    Threads: ``pipeline.kg_chains`` admits D1 on one thread and D2 on
+    another. Each space appends its own entries (``list.append`` is
+    atomic), reads a snapshot of the list, and cuts only its own entries."""
 
     def __init__(self, track_seen: bool = True):
-        self.key_spaces = {name: KeySpace(name, track_seen) for name in _SPACES}
-        self.duplicate_nodes: Optional[DataFrame] = None
-        self.duplicate_edges: Optional[DataFrame] = None
-        self._dup_chain_len: dict[str, int] = {}  # union layers since last collapse
-        # the metrics rows appended since the last take_state_deltas(), which
-        # stream_kg persists per micro-batch (O(batch), not O(corpus)); lazy
-        # plans only, cleared with the pins in release_seen_state_pins()
-        self._dup_deltas: dict[str, DataFrame] = {}
+        self.ledger: list[LedgerEntry] = []
+        self.key_spaces = {name: KeySpace(name, track_seen, self.ledger) for name in _SPACES}
 
     def _admit(self, space: str, df: DataFrame) -> DataFrame:
         """The rows of ``df`` the key space ``space`` admits (NULL keys
-        dropped; a frame with no ``SEQ`` column ranks in its row order); its
-        duplicate rows go to the metrics frame of its kind."""
-        keys = self.key_spaces[space]
-        kept, dups = keys.admit_writable(with_seq(df))
-        self._note_dups("duplicate_nodes" if keys.kind == "node" else "duplicate_edges", dups)
-        return kept
+        dropped; a frame with no ``SEQ`` column ranks in its row order)."""
+        return self.key_spaces[space].admit_writable(with_seq(df))
 
     def nodes(self, nodes: DataFrame) -> DataFrame:
         """The node rows to write: the first of each id across labels (D1)."""
@@ -256,77 +282,50 @@ class Admission:
             if keys.kind == kind:
                 keys.release_earlier_row_pins()
 
-    def _note_dups(self, attr: str, dups: DataFrame) -> None:
-        """Append a (kind, label, dup_id) batch to a duplicate-metrics frame.
+    def duplicates(self, kind: str) -> Optional[DataFrame]:
+        """The ``(kind, label, dup_id)`` rows the spaces of ``kind`` dropped
+        (a row may repeat: a key can be an in-call and a cross-call
+        duplicate); None before any call of that kind."""
+        frames = [e.frame for e in list(self.ledger) if e.space is None or _SPACES[e.space][0] == kind]
+        return _metrics(_union(frames), kind)
 
-        Plain union per call (set semantics are applied lazily by the
-        ``get_duplicate_*`` accessors and eagerly at each collapse) — a
-        distinct per call would add a shuffle layer per sink call to the
-        eventual evaluation plan. The chains reference the seen frames live
-        at append time: a caller that deletes the storage behind superseded
-        state persists them and repoints first (stream_kg writes them into
-        its per-batch state generation)."""
-        prev = getattr(self, attr)
-        merged = dups if prev is None else prev.unionByName(dups)
-        prev_delta = self._dup_deltas.get(attr)
-        self._dup_deltas[attr] = dups if prev_delta is None else prev_delta.unionByName(dups)
-        self._dup_chain_len[attr] = self._dup_chain_len.get(attr, 0) + 1
-        if self._dup_chain_len[attr] >= self._DUP_COLLAPSE:
-            merged = materialize(merged.distinct())
-            self._dup_chain_len[attr] = 0
-        setattr(self, attr, merged)
+    def state(self, delta: bool = False) -> Optional[DataFrame]:
+        """The ledger as one frame of ``LEDGER_COLUMNS``; with ``delta``,
+        only the calls since the last :meth:`repoint_state`. None: empty."""
+        return _union([e.frame for e in list(self.ledger) if not (delta and e.space is None)])
 
-    def release_seen_state_pins(self) -> None:
-        """Unpersist every pin. Call ONLY once the seen frames were repointed
-        at durable storage (repoint_state does): until then the pins back
-        the live unions, and the next anti-join would recompute them."""
-        for keys in self.key_spaces.values():
-            keys.release_pins()
-        self._dup_deltas.clear()
-
-    def take_state_deltas(self) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
-        """Hand over (and clear) the seen-key / duplicate-metrics deltas
-        accumulated since the last call — the frames a streaming caller
-        persists per micro-batch. MUST be consumed (written out) before
-        repoint_state() or release_seen_state_pins(): the delta frames
-        reference the batch pins, and after release their lineage points
-        at a foreachBatch input that no longer exists."""
-        seen = {name: d for name, keys in self.key_spaces.items() if (d := keys.take_delta()) is not None}
-        dups, self._dup_deltas = self._dup_deltas, {}
-        return seen, dups
-
-    def state_frames(self) -> dict[str, Optional[DataFrame]]:
-        """The whole state, keyed as repoint_state takes it: the key spaces'
-        seen keys (``_seen_nodes``, ``_seen_edges``, ``_seen_ran``) and
-        ``duplicate_nodes``, ``duplicate_edges``; None: no state of that kind."""
-        frames = {name: keys.seen for name, keys in self.key_spaces.items()}
-        return {**frames, "duplicate_nodes": self.duplicate_nodes, "duplicate_edges": self.duplicate_edges}
-
-    def repoint_state(self, frames: dict[str, Optional[DataFrame]]) -> None:
-        """Replace the whole state with ``frames`` (keyed as state_frames())
-        read from durable storage. They must already hold every call since
-        the last repoint (stream_kg writes their deltas first): those calls'
-        pins are released and the metrics chains restart at the frames."""
-        for name, keys in self.key_spaces.items():
-            keys.seen = frames[name]
-        self.duplicate_nodes, self.duplicate_edges = frames["duplicate_nodes"], frames["duplicate_edges"]
-        self._dup_chain_len.clear()
-        self.release_seen_state_pins()
+    def repoint_state(self, state: Optional[DataFrame]) -> None:
+        """Replace the ledger with ``state`` (a ``LEDGER_COLUMNS`` frame read
+        from durable storage; None: no state) and unpersist every pin. It
+        must already hold every call since the last repoint (stream_kg
+        writes :meth:`state` first): their entries read the pins."""
+        pins = [e.pin for e in self.ledger if e.pin is not None]
+        self.ledger[:] = [] if state is None else [LedgerEntry(None, state)]
+        for pin in pins:
+            pin.unpersist()
 
 
 class AdmittingSink:
     """A sink whose rows pass ``self.admission``; it reports what that
-    admission dropped (set semantics: the metrics chains are plain unions)."""
+    admission dropped, with set semantics."""
 
     admission: Admission
 
     def get_duplicate_nodes(self) -> Optional[DataFrame]:
-        dups = self.admission.duplicate_nodes
+        dups = self.admission.duplicates("node")
         return None if dups is None else dups.distinct()
 
     def get_duplicate_edges(self) -> Optional[DataFrame]:
-        dups = self.admission.duplicate_edges
+        dups = self.admission.duplicates("edge")
         return None if dups is None else dups.distinct()
+
+
+def _one_shot(space: str, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(kept rows, (kind, label, dup_id) duplicate rows)`` of one call of a
+    fresh key space."""
+    keys = KeySpace(space)
+    kept = keys.admit(df)
+    return kept, _metrics(keys.ledger[0].frame, keys.kind)
 
 
 def dedup_nodes(nodes: DataFrame) -> DedupResult:
@@ -335,12 +334,12 @@ def dedup_nodes(nodes: DataFrame) -> DedupResult:
     Duplicate metrics record each duplicated id once per label under which
     duplicates appeared, mirroring ``Deduplicator.node_seen`` bookkeeping
     (reference ``biocypher/_deduplicate.py:31-52``)."""
-    return DedupResult(*KeySpace("_seen_nodes").admit(nodes))
+    return DedupResult(*_one_shot("_seen_nodes", nodes))
 
 
 def dedup_edges(edges: DataFrame) -> DedupResult:
     """Per-(type, id) edge dedup, first occurrence wins (D2)."""
-    return DedupResult(*KeySpace("_seen_edges").admit(edges))
+    return DedupResult(*_one_shot("_seen_edges", edges))
 
 
 def dedup_rel_as_nodes(ran_nodes: DataFrame, ran_edges: DataFrame) -> tuple:
@@ -352,7 +351,7 @@ def dedup_rel_as_nodes(ran_nodes: DataFrame, ran_edges: DataFrame) -> tuple:
     exactly the first triplet's edges survive even when a duplicate id
     arrives with different endpoints.
     """
-    kept_raw, dups = KeySpace("_seen_ran").admit(ran_nodes)
+    kept_raw, dups = _one_shot("_seen_ran", ran_nodes)
     kept_nodes, kept_edges = ran_surviving_edges(kept_raw, ran_edges)
     return kept_nodes, kept_edges, dups
 

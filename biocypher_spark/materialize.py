@@ -52,9 +52,22 @@ def materialize(df: DataFrame) -> DataFrame:
     pointer to ``setCheckpointDir`` if none is set, rather than failing
     deep inside a Spark job).
     """
+    return _checkpoint(df, eager=True)
+
+
+def materialize_lazily(df: DataFrame) -> DataFrame:
+    """:func:`materialize` without its own job: the returned frame's plan is
+    already lineage-free, and the first job that reads it computes and pins
+    the rows (in the same mode). Planning it starts no job only when the
+    caches ``df`` reads are already filled: under AQE a cache stage that is
+    not gets filled first."""
+    return _checkpoint(df, eager=False)
+
+
+def _checkpoint(df: DataFrame, eager: bool) -> DataFrame:
     mode = df.sparkSession.conf.get(MATERIALIZE_CONF, "local")
     if mode == "local":
-        return df.localCheckpoint()
+        return df.localCheckpoint(eager=eager)
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
@@ -63,7 +76,7 @@ def materialize(df: DataFrame) -> DataFrame:
                 "directory: call spark.sparkContext.setCheckpointDir(<path on "
                 "HDFS/S3/shared storage>) before running operators"
             )
-        return df.checkpoint(eager=True)
+        return df.checkpoint(eager=eager)
     raise ValueError(
         f"unknown {MATERIALIZE_CONF} mode {mode!r}: expected 'local' or 'reliable'"
     )

@@ -371,8 +371,9 @@ def kg_chains(
 
     # The chains overlap. The node thread admits only D1 (node id) and the
     # edge thread only D2 (edge key); D3 ran before this fork. Both threads
-    # write the admission's _dup_deltas / _dup_chain_len under their own
-    # keys, and a stream's take_state_deltas runs after the join.
+    # append to the admission's one ledger (list.append is atomic), each
+    # reads a snapshot of it and cuts only its own spaces' entries, and a
+    # stream's state write reads the ledger after the join.
     (nodes, node_missing), (edges, edge_missing) = _run_concurrently(node_chain, edge_chain)
     if writer is not None:
         writer.write_import_call()

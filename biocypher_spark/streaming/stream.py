@@ -12,14 +12,18 @@ cross-batch dedup state.
 from __future__ import annotations
 
 import glob
+import json
 import os
+import shutil
+from functools import reduce
 from typing import Optional
-from urllib.parse import quote
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..dedup import DUP_KINDS, LEDGER_COLUMNS
 from ..extract import _regexp_mentions
 from ..materialize import materialize
 
@@ -38,20 +42,32 @@ TRANSCRIPT_SCHEMA = T.StructType(
 # marker file of a FULL (compacted) seen-state generation
 _FULL_MARKER = "_FULL"
 
-# the `_kind` partition of a state generation that holds each of the
-# writer's state frames (keyed as dedup.Admission.state_frames): the three
-# seen-key frames and the two duplicate-metrics frames
-_STATE_KINDS = {
-    "_seen_nodes": "_seen_nodes",
-    "_seen_edges": "_seen_edges",
-    "_seen_ran": "_seen_ran",
-    "duplicate_nodes": "_dup::duplicate_nodes",
-    "duplicate_edges": "_dup::duplicate_edges",
-}
-# columns of every kind's partition (`_dup_kind` is null on seen rows)
+# columns of every kind's partition of a state generation; its `_kind`
+# partitions are the ledger's kinds (dedup.LEDGER_COLUMNS): the three
+# seen-key kinds and the two duplicate-metrics kinds (`_dup_kind` is null on
+# seen rows)
 _GEN_SCHEMA = "_klabel string, _key string, _dup_kind string"
 # a state write is a FULL compaction once the read set holds this many deltas
 _COMPACT_EVERY = 16
+# read_stream_state's count name of each `_kind`
+_COUNTED = {
+    "_seen_nodes": "seen_nodes",
+    "_seen_edges": "seen_edges",
+    "_seen_ran": "seen_rel_as_node",
+    DUP_KINDS["node"]: "duplicate_nodes",
+    DUP_KINDS["edge"]: "duplicate_edges",
+}
+
+
+def _read_committed(meta_dir: str) -> dict:
+    """The stream's commit marker ``committed.json``: ``last_batch`` (-1
+    before the first commit), the ``part_files`` inventory and the
+    ``checkpoint_id``."""
+    path = os.path.join(meta_dir, "committed.json")
+    if not os.path.exists(path):
+        return {"last_batch": -1, "part_files": []}
+    with open(path) as fh:
+        return json.load(fh)
 
 
 def _seen_generations(meta_dir: str, prefix: str, upto: int | None = None) -> dict[int, str]:
@@ -91,36 +107,25 @@ def _state_read_set(meta_dir: str, upto: int) -> list[str]:
     return [gens[b] for b in sorted(gens) if full and b >= max(full)]
 
 
-def _load_state(spark: SparkSession, meta_dir: str, upto: int) -> dict[str, Optional[DataFrame]]:
-    """The committed state up to batch ``upto`` as the writer's frames,
-    keyed as ``dedup.Admission.state_frames``; None for a kind no
-    generation of the read set holds.
+def _load_state(spark: SparkSession, meta_dir: str, upto: int) -> Optional[DataFrame]:
+    """The committed state up to batch ``upto`` as one ledger frame
+    (``dedup.LEDGER_COLUMNS``); None before the first state write.
 
-    Each frame is one read of the kind's partition directories across the
-    read set, with the fixed generation schema: no schema inference, and at
-    most ``_COMPACT_EVERY`` + 1 paths stay under Spark's parallel-listing
-    threshold, so loading starts no Spark job."""
-    paths = _state_read_set(meta_dir, upto)
-    out: dict[str, Optional[DataFrame]] = {}
-    for attr, kind in _STATE_KINDS.items():
-        # partitionBy escapes the ':' of the duplicate kinds on disk
-        dirs = [os.path.join(p, f"_kind={quote(kind, safe='')}") for p in paths]
-        dirs = [d for d in dirs if os.path.isdir(d)]
-        if not dirs:
-            out[attr] = None
-            continue
-        df = spark.read.schema(_GEN_SCHEMA).parquet(*dirs)
-        if attr == "_seen_nodes":
-            out[attr] = df.select("_key")
-        elif attr.startswith("_seen"):
-            out[attr] = df.select("_klabel", "_key")
-        else:
-            out[attr] = df.select(
-                F.col("_dup_kind").alias("kind"),
-                F.col("_klabel").alias("label"),
-                F.col("_key").alias("dup_id"),
-            )
-    return out
+    Each kind is one read of its partition directories across the read
+    set, with the fixed generation schema and ``_kind`` as a literal, so a
+    filter on ``_kind`` reads that kind's files alone: no schema inference,
+    and at most ``_COMPACT_EVERY`` + 1 paths stay under Spark's
+    parallel-listing threshold, so loading starts no Spark job."""
+    dirs: dict[str, list[str]] = {}
+    for gen in _state_read_set(meta_dir, upto):
+        for d in sorted(glob.glob(os.path.join(gen, "_kind=*"))):
+            # partitionBy escapes the ':' of the duplicate kinds on disk
+            dirs.setdefault(unquote(d.rsplit("_kind=", 1)[1]), []).append(d)
+    frames = [
+        spark.read.schema(_GEN_SCHEMA).parquet(*paths).select(F.lit(kind).alias("_kind"), *LEDGER_COLUMNS[1:])
+        for kind, paths in dirs.items()
+    ]
+    return reduce(DataFrame.unionByName, frames) if frames else None
 
 
 def read_transcript_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 8) -> DataFrame:
@@ -157,9 +162,9 @@ def stream_kg(
     machinery supplies the incremental semantics — part-file numbering
     continues across batches and the writer's one first-wins path
     (``track_seen``) dedups node/edge ids across batches. Its caches (each
-    call's first rows and seen keys) are filled by the batch's own part and
-    state writes, with no separate count, and released once the batch's
-    state generation is written.
+    call's marked first rows and ledger frame) are filled by the batch's
+    own part and state writes, with no separate count, and released once
+    the batch's state generation is written.
     ``foreachBatch`` is AT-LEAST-ONCE, so idempotence is made durable in
     ``{output}/_stream_meta``:
 
@@ -167,10 +172,11 @@ def stream_kg(
       plus the part-file inventory; a replayed batch id <= the committed one
       is skipped outright, and part files NOT in the inventory (leftovers of
       a crashed attempt) are wiped before re-emitting.
-    - the writer's seen-id and duplicate-metrics frames are persisted per
-      batch as ONE parquet generation (``_seen_b{id}``, partitioned by
-      ``_kind``): a FULL snapshot every ``_COMPACT_EVERY`` deltas, a delta
-      otherwise. The writer is pointed at the committed generations on
+    - the writer's dedup ledger (its seen ids and duplicate rows, already
+      in the generation schema) is persisted per batch as ONE parquet
+      generation (``_seen_b{id}``, partitioned by ``_kind``): a FULL
+      snapshot every ``_COMPACT_EVERY`` deltas, the batch's own ledger
+      frames otherwise. The writer is pointed at the committed generations on
       restart and after every state write, so a process crash cannot reset
       cross-batch dedup; generations newer than the committed marker
       (written but not committed) are discarded. State in a layout that
@@ -216,102 +222,53 @@ def stream_kg(
             "canonical_id", F.col("nkey")
         )
 
-    import json as _json
-    import shutil
-
     meta_dir = os.path.join(output_directory, "_stream_meta")
     os.makedirs(meta_dir, exist_ok=True)
     committed_path = os.path.join(meta_dir, "committed.json")
 
-    def _read_committed() -> dict:
-        if os.path.exists(committed_path):
-            with open(committed_path) as fh:
-                return _json.load(fh)
-        return {"last_batch": -1, "part_files": []}
-
-    # the writer's five state frames (node ids, edge keys, rel-as-node
-    # keys, and the two duplicate-metrics frames) are persisted as ONE
-    # parquet generation per state-writing batch, partitioned by `_kind`
-    # (see _STATE_KINDS) — one durable write per micro-batch instead of
-    # five, which is the fixed-latency floor of every micro-batch at
-    # cluster scale. Schema _GEN_SCHEMA: _klabel is null for the node frame
-    # (its dedup key is id-only); _dup_kind carries the metrics' own
-    # node/edge discriminator and is null on seen rows.
+    # The writer's ledger (dedup.Admission: one frame per admit call, in the
+    # generation schema — seen node ids, edge keys and rel-as-node keys, and
+    # the two duplicate-metrics kinds) is persisted as ONE parquet
+    # generation per state-writing batch, partitioned by `_kind` — one
+    # durable write per micro-batch, the fixed-latency floor of every
+    # micro-batch at cluster scale. _klabel is null for the node ids (their
+    # dedup key is id-only); _dup_kind carries the metrics' own node/edge
+    # discriminator and is null on seen rows.
     #
     # LSM-style durable state: each committed batch writes only its DELTA
-    # (the batch's new seen keys + duplicate-metrics appends) as generation
+    # (the ledger frames its admit calls appended) as generation
     # `_seen_b{N}`; when the committed read set has no FULL generation yet
-    # or already holds _COMPACT_EVERY deltas, a FULL snapshot generation is
-    # written instead (marker file `_FULL`), and the absorbed generations
-    # are deleted after the commit marker advances. Per-batch durable write
-    # cost is O(batch), not O(cumulative corpus) — the previous
-    # snapshot-per-batch design rewrote the whole seen universe every
-    # micro-batch, a quadratic total at 10^12-turn stream scale.
+    # or already holds _COMPACT_EVERY deltas, a FULL snapshot generation
+    # (the whole ledger) is written instead (marker file `_FULL`), and the
+    # absorbed generations are deleted after the commit marker advances.
+    # Per-batch durable write cost is O(batch), not O(cumulative corpus).
     #
     # After every state write the writer is repointed at the read set
-    # (_load_state): the layers _note_dups appended inside the batch lazily
-    # reference the batch's pinned frames, and writing them into the
-    # generation evaluates them while the pins are live, so the pins can be
-    # released and superseded generations deleted. Every frame is replaced,
-    # including an all-empty duplicate chain (it still references the
-    # batch's pins; no kind directory was written for it, so it loads as
-    # None). The metrics tables are restart-durable alongside the dedup
+    # (_load_state): the batch's ledger frames read its pinned rows, and
+    # writing them into the generation evaluates them while the pins are
+    # live, so the pins can be released and superseded generations
+    # deleted. The metrics tables are restart-durable alongside the dedup
     # state.
 
-    def _seen_row(attr: str, df: DataFrame) -> DataFrame:
-        klabel = F.col("_klabel") if "_klabel" in df.columns else F.lit(None).cast("string").alias("_klabel")
-        return df.select(
-            F.lit(_STATE_KINDS[attr]).alias("_kind"), klabel, "_key",
-            F.lit(None).cast("string").alias("_dup_kind"),
-        )
-
-    def _dup_row(attr: str, df: DataFrame, dedup: bool) -> DataFrame:
-        # dedup=True only at compaction: it re-establishes set semantics on
-        # disk and bounds the full snapshot. Delta writes skip it — each
-        # _note_dups layer is distinct except for a key that is both an
-        # in-batch and a cross-batch duplicate, and the get_duplicate_*
-        # accessors apply distinct at read; a per-batch distinct would add
-        # a shuffle to every micro-batch to save a handful of written rows
-        if dedup:
-            df = df.distinct()
-        return df.select(
-            F.lit(_STATE_KINDS[attr]).alias("_kind"),
-            F.col("label").alias("_klabel"),
-            F.col("dup_id").alias("_key"),
-            F.col("kind").alias("_dup_kind"),
-        )
-
     def _persist_seen(batch_id: int) -> None:
-        seen_deltas, dup_deltas = writer.admission.take_state_deltas()
-        state = writer.admission.state_frames()
-        if all(state[a] is None for a in ("_seen_nodes", "_seen_edges", "_seen_ran")):
-            return  # no writer state yet (initial empty batches): nothing to roll
         base = _state_read_set(meta_dir, batch_id)
         full = not base or len(base) > _COMPACT_EVERY
-        if not full and not seen_deltas and not dup_deltas:
-            # match-less batch in delta mode: the state is already durable
-            # in the existing generations (they are only deleted when a
-            # newer FULL compaction supersedes them), so an empty delta
-            # generation would be pure per-batch write latency
+        state = writer.admission.state(delta=not full)
+        if state is None:
+            # no writer state yet (initial empty batches), or a match-less
+            # batch in delta mode: the state is already durable in the
+            # existing generations (they are only deleted when a newer FULL
+            # compaction supersedes them), so an empty delta generation
+            # would be pure per-batch write latency
             return
-        frames = []
         if full:
-            # compaction (or first write): snapshot the cumulative state,
-            # superseding every older generation
-            for attr, df in state.items():
-                if df is None:
-                    continue
-                frames.append(_seen_row(attr, df) if attr.startswith("_seen") else _dup_row(attr, df, dedup=True))
-        else:
-            # steady state: write ONLY this batch's additions — O(batch)
-            # durable I/O however large the cumulative seen universe is
-            for attr, df in seen_deltas.items():
-                frames.append(_seen_row(attr, df))
-            for attr, df in dup_deltas.items():
-                frames.append(_dup_row(attr, df, dedup=False))
-        combined = frames[0]
-        for other in frames[1:]:
-            combined = combined.unionByName(other)
+            # compaction (or first write): the cumulative state, with set
+            # semantics re-established on the duplicate rows (a key can be
+            # an in-call and a cross-call duplicate; reports apply distinct
+            # at read, so deltas skip a per-batch shuffle for it). Seen keys
+            # are distinct by construction.
+            dup = F.col("_kind").startswith("_dup::")
+            state = state.filter(~dup).unionByName(state.filter(dup).distinct())
         # the union stacks the frames' partitions (3-5 x 32 locally);
         # coalesce (shuffle-free) trims the write back down. FULL snapshots
         # are O(cumulative corpus): keep them at cluster width (on a wide
@@ -322,19 +279,19 @@ def stream_kg(
         # 2.2-2.6s of a ~8.5s micro-batch at 32 cores; 1/8 width cut the
         # persist step to ~1.3s with the same durable contents)
         width = spark.sparkContext.defaultParallelism
-        combined = combined.coalesce(width if full else max(1, width // 8))
+        state = state.coalesce(width if full else max(1, width // 8))
         new = os.path.join(meta_dir, f"_seen_b{batch_id}")
         # partitionBy keeps the single write job but gives each kind its
-        # own directory, so _load_state reads each kind's files alone
+        # own directory, so a filter on _kind reads that kind's files alone
         # instead of decoding the other kinds' row groups (the edges state
         # typically dominates the cumulative size)
-        combined.write.mode("overwrite").partitionBy("_kind").parquet(new)
+        state.write.mode("overwrite").partitionBy("_kind").parquet(new)
         if full:
             with open(os.path.join(new, _FULL_MARKER), "w") as fh:
                 fh.write("")
-        # every state frame now reads from generation files, and the
-        # batch's pins are released — what keeps a long stream's cache
-        # O(state), not O(batches x state)
+        # the ledger now reads from generation files, and the batch's pins
+        # are released — what keeps a long stream's cache O(state), not
+        # O(batches x state)
         writer.admission.repoint_state(_load_state(spark, meta_dir, batch_id))
 
     def _drop_old_seen(batch_id: int) -> None:
@@ -360,7 +317,7 @@ def stream_kg(
             fh.write(str(_time.time_ns()))
     with open(ckpt_id_path) as fh:
         ckpt_id = fh.read().strip()
-    _initial = _read_committed()
+    _initial = _read_committed(meta_dir)
     if _initial["last_batch"] >= 0 and _initial.get("checkpoint_id") not in (None, ckpt_id):
         raise ValueError(
             f"output directory {output_directory} was produced with a different stream "
@@ -375,7 +332,7 @@ def stream_kg(
     writer.admission.repoint_state(_load_state(spark, meta_dir, _initial["last_batch"]))
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state = _read_committed()
+        state = _read_committed(meta_dir)
         if batch_id <= state["last_batch"]:
             return  # at-least-once replay of an already-committed batch
         # wipe part files a crashed attempt left behind (not in the
@@ -426,7 +383,7 @@ def stream_kg(
         _persist_seen(batch_id)
         tmp = committed_path + ".tmp"
         with open(tmp, "w") as fh:
-            _json.dump(
+            json.dump(
                 {"last_batch": batch_id, "part_files": parts, "checkpoint_id": ckpt_id}, fh
             )
         os.replace(tmp, committed_path)
@@ -452,32 +409,13 @@ def read_stream_state(spark: SparkSession, output_directory: str) -> dict:
     the committed marker is atomic. Returns ``{}`` when no batch has
     committed state yet (e.g. an all-empty input); raises ``ValueError`` on
     a state layout ``stream_kg`` refuses."""
-    import json as _json
-
     meta_dir = os.path.join(output_directory, "_stream_meta")
-    committed_path = os.path.join(meta_dir, "committed.json")
-    if not os.path.exists(committed_path):
-        return {}
-    with open(committed_path) as fh:
-        last_batch = _json.load(fh)["last_batch"]
-
-    state = _load_state(spark, meta_dir, last_batch)
-    if all(df is None for df in state.values()):
+    state = _load_state(spark, meta_dir, _read_committed(meta_dir)["last_batch"])
+    if state is None:
         return {}
     # Seen keys are disjoint across generations (each delta holds only keys
-    # its batch's anti-join admitted); duplicate-metrics rows may recur
-    # across delta generations, so they are counted distinct — matching
-    # the per-compaction distinct stream_kg applies on disk.
-    out = {}
-    for attr, key in (
-        ("_seen_nodes", "seen_nodes"),
-        ("_seen_edges", "seen_edges"),
-        ("_seen_ran", "seen_rel_as_node"),
-        ("duplicate_nodes", "duplicate_nodes"),
-        ("duplicate_edges", "duplicate_edges"),
-    ):
-        df = state[attr]
-        if df is not None and attr.startswith("duplicate"):
-            df = df.distinct()
-        out[key] = 0 if df is None else df.count()
-    return out
+    # its batch's join admitted); duplicate rows may recur across delta
+    # generations, so every kind is counted distinct — matching the
+    # per-compaction distinct stream_kg applies on disk.
+    counts = dict(state.distinct().groupBy("_kind").count().collect())
+    return {name: counts.get(kind, 0) for kind, name in _COUNTED.items()}

@@ -71,7 +71,7 @@ class BioPathNetWriter(AdmittingSink):
         # not the node admission's lineage
         prop_rows = materialize(prop_rows)
         _append_lines(prop_rows.select(F.col("brg").alias("value")), self.outdir, "brg.txt")
-        values, _ = self._value_keys.admit(prop_rows.drop("brg"))
+        values = self._value_keys.admit(prop_rows.drop("brg"))
         for filename, col in (("entity_types.txt", "node_label"), ("entity_names.txt", "pv")):
             _append_lines(values.select(F.concat_ws("\t", "node_id", col).alias("value")), self.outdir, filename)
 

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -31,6 +32,21 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), ids of the Spark jobs fn started)``: the jobs are those of a
+    fresh job group (kept by jobs on a ``pyspark.InheritableThread``), whose
+    local properties are cleared afterwards."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, getattr(fn, "__name__", "test jobs"))
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 SCHEMA_PATH = os.path.join(os.path.dirname(__file__), "fixtures", "test_schema_config.yaml")

@@ -11,6 +11,7 @@ from biocypher_spark.writer.base import pascal_file_label
 from biocypher_spark.writer.biopathnet import BioPathNetWriter
 from biocypher_spark.writer.neo4j import Neo4jBatchWriter
 from biocypher_spark.writer.registry import DBMS_TO_CLASS
+from conftest import spark_jobs
 from fixtures.data_generator import (
     mirna_nodes,
     mutated_edges,
@@ -100,6 +101,21 @@ def test_duplicate_logging(bc):
     bc.write_nodes(protein_nodes(2) + protein_nodes(2))
     dups = bc.writer.get_duplicate_nodes()
     assert {r["dup_id"] for r in dups.collect()} == {"p1", "p2"}
+
+
+def test_log_duplicates_reports_the_sinks_built(spark, schema_path, tmp_path, capsys):
+    """log_duplicates reports the sinks the facade has built and builds
+    none: after in-memory adds it prints the KG's duplicate ids, and no
+    batch writer (nor its output directory) appears."""
+    out = tmp_path / "out"
+    bc = BioCypherSpark(spark, output_directory=str(out), schema_config_path=schema_path)
+    bc.add(protein_nodes(2) + protein_nodes(2))
+    capsys.readouterr()
+    bc.log_duplicates()
+    printed = capsys.readouterr().out
+    assert "p1" in printed and "p2" in printed
+    assert bc._writer is None
+    assert not out.exists()
 
 
 def test_dbms_registry_owl(spark, schema_path, tmp_path):
@@ -437,6 +453,32 @@ def test_every_sink_admits_the_same_rows(spark, schema_path, tmp_path, dbms, kwa
         ("edge", "post translational interaction", "i2"),
         ("edge", "post translational interaction", "i3"),
     }
+
+
+def test_duplicate_reports_run_few_jobs(spark, schema_path, tmp_path):
+    """Both duplicate reports read the ledger's lineage-cut frames, never an
+    earlier call's admit window: after the staged calls of
+    test_every_sink_admits_the_same_rows, and again after those calls are
+    repeated, the two run at most 10 Spark jobs together (38 after three
+    calls when each report re-ran every call's window)."""
+    bc = BioCypherSpark(spark, output_directory=str(tmp_path), schema_config_path=schema_path)
+
+    def reports():
+        return [{tuple(r) for r in df.collect()} for df in (bc.kg.get_duplicate_nodes(), bc.kg.get_duplicate_edges())]
+
+    rounds = []
+    for _ in range(2):
+        for nodes, edges in _staged_calls(spark):
+            bc.add(nodes)
+            bc.add(edges)
+        got, jobs = spark_jobs(spark, reports)
+        assert len(jobs) <= 10, (len(rounds), len(jobs))
+        rounds.append(got)
+    (nodes1, edges1), (nodes2, edges2) = rounds
+    assert ("node", "protein", "p1") in nodes1 and ("edge", "PERTURBED_IN_DISEASE", "prel1") in edges1
+    # the repeat adds every id of the first round as a cross-call duplicate
+    assert nodes1 < nodes2 and edges1 < edges2
+    assert {("node", "protein", p) for p in ("p1", "p2", "p3", "p4")} <= nodes2
 
 
 def test_in_memory_label_as_edge_uses_declared_props(spark, tmp_path):

@@ -112,3 +112,28 @@ def test_rel_as_node_dup_id_different_endpoints(spark, translator):
     assert kept_nodes.count() == 1
     srcs = {r["source_id"] for r in kept_edges.filter(F.col("relationship_label") == "IS_SOURCE_OF").collect()}
     assert srcs == {t[1]}  # first triplet's source only, never pX
+
+
+def test_tracking_key_space_plan_grows_linearly(spark):
+    """Ten calls on one tracking key space: each call's kept rows are
+    consumed, then its ledger frame is cut, so the seen state's executed
+    plan grows by a bounded amount per call (it grew about five-fold per
+    call when each call's cached plan nested the earlier calls'), and admit
+    itself starts no Spark job."""
+    from biocypher_spark.dedup import KeySpace
+    from conftest import spark_jobs
+
+    keys = KeySpace("_seen_nodes", track_seen=True)
+    sizes = []
+    for call in range(10):
+        df = spark.createDataFrame(
+            [(f"p{call}", "protein", 3 * call), (f"p{call + 1}", "protein", 3 * call + 1), (f"p{call}", "mirna", 3 * call + 2)],
+            "node_id string, node_label string, _seq long",
+        )
+        kept, jobs = spark_jobs(spark, lambda: keys.admit(df))
+        assert jobs == []
+        assert sorted(r["node_id"] for r in kept.collect()) == ([f"p{call}", f"p{call + 1}"] if call == 0 else [f"p{call + 1}"])
+        keys.release_earlier_row_pins()
+        sizes.append(len(keys.seen._jdf.queryExecution().executedPlan().toString()))
+        assert sizes[-1] <= sizes[0] + 1000 * call, sizes
+    assert sorted(r["_key"] for r in keys.seen.collect()) == sorted(f"p{i}" for i in range(11))

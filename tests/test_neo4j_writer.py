@@ -9,6 +9,7 @@ from biocypher_spark.model import edges_from_tuples, nodes_from_tuples
 from biocypher_spark.ontology import NullOntology, Ontology
 from biocypher_spark.translate import SparkTranslator
 from biocypher_spark.writer.neo4j import Neo4jBatchWriter
+from conftest import spark_jobs
 from fixtures.data_generator import (
     mirna_nodes,
     mutated_edges,
@@ -294,21 +295,27 @@ def test_uri_output_dir_rejected_across_writers(spark, schema_path):
             PandasCSVWriter(bad)
 
 
-def test_duplicate_metrics_chain_collapses(spark, bw):
-    """The duplicate-metrics frames of a writer that is never repointed
-    (such as the facade's) must not grow one lazy union layer per call
-    forever: every _DUP_COLLAPSE appends the chain is distinct-ed and
-    pinned, so the eventual metrics evaluation pays a bounded plan, and set
-    semantics still hold through the accessors. stream_kg never reaches a
-    collapse: repoint_state clears the chain lengths at every state write."""
-    rows = [("node", "protein", f"p{i % 7}") for i in range(3)]
-    df = spark.createDataFrame(rows, "kind string, label string, dup_id string")
-    admission = bw.admission
-    for _ in range(2 * admission._DUP_COLLAPSE + 3):
-        admission._note_dups("duplicate_nodes", df)
-    assert admission._dup_chain_len["duplicate_nodes"] < admission._DUP_COLLAPSE
-    got = {(r["kind"], r["label"], r["dup_id"]) for r in bw.get_duplicate_nodes().collect()}
-    assert got == {("node", "protein", f"p{i}") for i in range(3)}
+def test_duplicate_reports_over_many_calls(spark, schema_path):
+    """An admission that is never repointed (such as the facade's) keeps
+    answering over many calls: the duplicate report holds every in-call and
+    cross-call duplicate once (set semantics), the seen keys hold each id
+    once, and the seen state's plan stays small."""
+    from biocypher_spark.dedup import Admission
+
+    translator = SparkTranslator(spark, NullOntology(SchemaMapping(schema_path)))
+    admission = Admission()
+    calls = 12
+    for call in range(calls):
+        # p{call} twice in the call, p{call - 1} again from the last call
+        rows = [(f"p{i}", "protein", {"name": "x", "score": 1.0, "taxon": 1, "genes": []}) for i in (call, call, call - 1)]
+        nodes = translator.translate_nodes(nodes_from_tuples(spark, rows)).nodes
+        admission.nodes(nodes).count()
+        admission.release_earlier_row_pins("node")
+        seen = admission.key_spaces["_seen_nodes"].seen
+        assert len(seen._jdf.queryExecution().executedPlan().toString()) < 2000 * (call + 1), call
+    got = sorted(tuple(r) for r in admission.duplicates("node").distinct().collect())
+    assert got == sorted(("node", "protein", f"p{i}") for i in range(calls))
+    assert sorted(r["_key"] for r in seen.collect()) == sorted(f"p{i}" for i in range(-1, calls))
 
 
 def test_strict_mode_tolerates_both_license_spellings(spark, schema_path):
@@ -405,19 +412,12 @@ def test_dedup_against_seen_starts_no_job(spark, schema_path, tmp_path):
     assert w.admission.key_spaces["_seen_nodes"].seen is not None
     nodes = translator.translate_nodes(nodes_from_tuples(spark, protein_nodes(4))).nodes
 
-    sc = spark.sparkContext
-    group = "test-dedup-against-seen"
-    sc.setJobGroup(group, "dedup against existing seen state")
-    try:
-        w.admission.key_spaces["_seen_nodes"].admit(nodes)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    _, jobs = spark_jobs(spark, lambda: w.admission.key_spaces["_seen_nodes"].admit(nodes))
+    assert jobs == []
 
 
 def test_facade_keeps_row_pins_of_latest_call_only(spark, schema_path, tmp_path, monkeypatch):
-    """The facade never calls release_seen_state_pins(): once a write call
+    """The facade never repoints its admission's state: once a write call
     has written its part files, no full-row frame persisted by an earlier
     call may still be cached."""
     from pyspark.storagelevel import StorageLevel
@@ -448,7 +448,7 @@ def test_facade_keeps_row_pins_of_latest_call_only(spark, schema_path, tmp_path,
         assert all(df.storageLevel == StorageLevel.NONE for df in frames), earlier
     latest = [df for c, df in persisted if c == calls - 1]
     assert any(df.storageLevel != StorageLevel.NONE for df in latest)
-    bc.writer.admission.release_seen_state_pins()
+    bc.writer.admission.repoint_state(None)
     assert all(df.storageLevel == StorageLevel.NONE for _, df in persisted)
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from biocypher_spark.pipeline import KGPipeline
 from biocypher_spark.transcripts import generate_transcripts
+from conftest import spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -243,15 +244,8 @@ def test_run_job_budget(spark, tmp_path):
     writes, the canonical-map collect, one CSV write per entity kind); the
     lineage comes from observed aggregates on the checkpoint writes, and the
     writer reads the checkpoints without a per-label probe."""
-    sc = spark.sparkContext
     transcripts = generate_transcripts(spark, 3000)
-    sc.setJobGroup("kg-job-budget", "KGPipeline.run job budget")
-    try:
-        KGPipeline(spark, str(tmp_path / "kg")).run(transcripts)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("kg-job-budget")
+    _, jobs = spark_jobs(spark, lambda: KGPipeline(spark, str(tmp_path / "kg")).run(transcripts))
     # 50 jobs when the lineage was a groupBy+collect per stage, the tuple
     # frames were pinned and the writer probed labels; 17 since. The lower
     # bound is this input's count: the edge chain's jobs run on a second

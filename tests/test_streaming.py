@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from biocypher_spark.streaming.stream import stream_mentions
 from biocypher_spark.transcripts import generate_transcripts
+from conftest import spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -226,8 +227,8 @@ def test_stream_kg_rel_as_node(spark, tmp_path, monkeypatch, ran_schema):
     assert reified and len(set(reified)) == len(reified)
     assert sum(lines["IS_PART_OF"].values()) == 2 * len(reified)
     assert read_stream_state(spark, outdir)["seen_rel_as_node"] == len(reified)
-    dups = _load_state(spark, meta, last)["duplicate_edges"]
-    ran_dups = {r["dup_id"] for r in dups.filter(F.col("label") == "protein protein interaction").collect()}
+    dups = _load_state(spark, meta, last).filter(F.col("_kind") == "_dup::duplicate_edges")
+    ran_dups = {r["_key"] for r in dups.filter(F.col("_klabel") == "protein protein interaction").collect()}
     assert ran_dups == set(reified)
 
 
@@ -357,14 +358,14 @@ def test_stream_state_refuses_generations_without_full_marker(spark, tmp_path):
 
 
 def test_load_state_starts_no_job(spark, tmp_path):
-    """Loading a committed FULL + delta state only builds plans: each kind
-    is one schema-given read of its partition directories, so neither a
-    restart nor the repoint after a state write starts a Spark job. Each
-    kind's rows equal a plain read of the same generations."""
+    """Loading a committed FULL + delta state only builds plans: it is one
+    schema-given read of the generations, so neither a restart nor the
+    repoint after a state write starts a Spark job. Each kind's rows equal
+    a plain read of the same generations."""
     import json
     from collections import Counter
 
-    from biocypher_spark.streaming.stream import _STATE_KINDS, _load_state, _state_read_set, stream_kg
+    from biocypher_spark.streaming.stream import _load_state, _state_read_set, stream_kg
 
     indir = str(tmp_path / "in")
     generate_transcripts(spark, 400, partitions=2).write.mode("overwrite").parquet(indir)
@@ -377,15 +378,8 @@ def test_load_state_starts_no_job(spark, tmp_path):
     assert os.path.exists(os.path.join(paths[0], "_FULL"))
     assert not os.path.exists(os.path.join(paths[1], "_FULL"))
 
-    sc = spark.sparkContext
-    group = "test-load-state"
-    sc.setJobGroup(group, "load committed stream state")
-    try:
-        state = _load_state(spark, meta, last)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    state, jobs = spark_jobs(spark, lambda: _load_state(spark, meta, last))
+    assert jobs == []
 
     plain = spark.read.parquet(paths[0])
     for p in paths[1:]:
@@ -394,17 +388,16 @@ def test_load_state_starts_no_job(spark, tmp_path):
         "_seen_nodes": ["_key"],
         "_seen_edges": ["_klabel", "_key"],
         "_seen_ran": ["_klabel", "_key"],
-        "duplicate_nodes": ["_dup_kind", "_klabel", "_key"],
-        "duplicate_edges": ["_dup_kind", "_klabel", "_key"],
+        "_dup::duplicate_nodes": ["_dup_kind", "_klabel", "_key"],
+        "_dup::duplicate_edges": ["_dup_kind", "_klabel", "_key"],
     }
-    assert set(state) == set(cols)
-    for attr, kind in _STATE_KINDS.items():
-        expected = Counter(tuple(r) for r in plain.filter(F.col("_kind") == kind).select(*cols[attr]).collect())
-        if not expected:
-            assert state[attr] is None, attr
-            continue
-        assert Counter(tuple(r) for r in state[attr].collect()) == expected, attr
-    assert state["_seen_nodes"] is not None and state["_seen_edges"] is not None
+    assert {r["_kind"] for r in state.select("_kind").distinct().collect()} <= set(cols)
+    for kind, kind_cols in cols.items():
+        expected = Counter(tuple(r) for r in plain.filter(F.col("_kind") == kind).select(*kind_cols).collect())
+        got = Counter(tuple(r) for r in state.filter(F.col("_kind") == kind).select(*kind_cols).collect())
+        assert got == expected, kind
+    assert state.filter(F.col("_kind") == "_seen_nodes").count() > 0
+    assert state.filter(F.col("_kind") == "_seen_edges").count() > 0
 
 
 def test_stream_kg_nine_batches_leave_no_duplicate_node_ids(spark, tmp_path):
@@ -509,12 +502,11 @@ def test_read_stream_state_counts(spark, tmp_path):
 
 def test_stream_kg_duplicate_free_stream_survives_generation_drop(spark, tmp_path):
     """A stream whose batches contain ONLY unique entities (duplicate-
-    metrics frames stay empty forever) must still survive generation drops:
-    even an all-empty duplicate frame is a lazy union chain referencing
-    superseded ``_seen_b{id}`` files (_note_dups appends its cross-batch
-    layer whether or not it has rows), so the per-batch repoint must be
-    unconditional — guarding it on ``rows > 0`` resurrects the
-    FileNotFoundException crash in the duplicate-free case."""
+    metrics stay empty forever) must still survive generation drops: the
+    ledger's loaded frame reads ``_seen_b{id}`` files that a compaction
+    supersedes, whether or not the batch found duplicates, so the per-batch
+    repoint must be unconditional — guarding it on ``rows > 0`` resurrects
+    the FileNotFoundException crash in the duplicate-free case."""
     import glob
     import json
 
