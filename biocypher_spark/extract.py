@@ -2,9 +2,9 @@
 
 One kernel, built-in expressions only: per gazetteer label,
 ``regexp_extract_all`` + ``posexplode`` (``m_pos`` = occurrence index per
-(row, label)), unioned over labels. It stays in the JVM — no Python worker,
-no Arrow round trip — and is trivially expressible as the DuckDB oracle
-SQL. Patterns are Java regexes (``(?<name>…)`` named groups,
+(row, label)), all labels in one projection, so each input row is scanned
+once. It stays in the JVM — no Python worker, no Arrow round trip — and is
+trivially expressible as the DuckDB oracle SQL. Patterns are Java regexes (``(?<name>…)`` named groups,
 backreferences allowed). Each label's pattern scans the full text, so
 labels whose patterns match overlapping spans each report their own
 matches. ``KGPipeline`` runs :func:`extract_mentions`;
@@ -21,7 +21,6 @@ is the Spark-native adapter for transcript corpora.
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -35,20 +34,25 @@ DEFAULT_PATTERNS: dict[str, str] = {
 
 
 def _regexp_mentions(transcripts: DataFrame, patterns: Optional[dict[str, str]], keys: tuple[str, ...]) -> DataFrame:
-    """The expression kernel: per label, ``regexp_extract_all`` +
-    ``posexplode`` (m_pos = occurrence index per (row, label)), unioned over
-    labels. ``keys`` are the input columns each mention row carries."""
-    per_label = []
-    for label, pat in (patterns or DEFAULT_PATTERNS).items():
-        hits = F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0))
-        per_label.append(
-            transcripts.select(
-                *keys,
+    """The expression kernel: one projection of an array holding, per
+    label, ``struct(label, regexp_extract_all(…))``, then ``explode`` +
+    ``posexplode`` (m_pos = occurrence index per (row, label)), so the input
+    is read once whatever the number of labels. ``keys`` are the input
+    columns each mention row carries."""
+    per_label = F.array(
+        *(
+            F.struct(
                 F.lit(label).alias("input_label"),
-                F.posexplode(hits).alias("m_pos", "surface"),
-            ).select(*keys, "input_label", "surface", "m_pos")
+                F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0)).alias("hits"),
+            )
+            for label, pat in (patterns or DEFAULT_PATTERNS).items()
         )
-    return reduce(DataFrame.unionByName, per_label)
+    )
+    return (
+        transcripts.select(*keys, F.explode(per_label).alias("_m"))
+        .select(*keys, "_m.input_label", F.posexplode("_m.hits").alias("m_pos", "surface"))
+        .select(*keys, "input_label", "surface", "m_pos")
+    )
 
 
 def extract_mentions(

@@ -7,7 +7,10 @@ _csv.py:8-71). The reference json_normalizes each entity dict and concats
 per type; here the KG is a dict of *Spark* DataFrames per type (kept
 distributed), with ``to_df()`` converting to pandas for API parity and
 ``to_networkx()`` collecting into a DiGraph. Property flattening happens
-with one typed ``from_json`` per type — no per-row Python.
+with one typed ``from_json`` per type — no per-row Python. A type's
+columns follow the batch writer's rule (``writer.base.property_layouts``:
+declared properties, else the first entity's by ``SEQ``), widened to the
+key union of its rows like the reference's ``json_normalize``.
 """
 
 from __future__ import annotations
@@ -18,9 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import Admission, AdmittingSink
-from .materialize import materialize
+from .materialize import materialize_lazily
 from .model import SEQ, json_decode_str
-from .writer.base import declared_props, infer_prop_types
+from .writer.base import KEY_SET, LABEL_COL, property_layouts, with_key_set
 
 
 def _typed_props(df: DataFrame, prop_types: dict) -> DataFrame:
@@ -54,53 +57,26 @@ class InMemoryKG(AdmittingSink):
         # across add() calls (_in_memory_kg.py:62-66)
         self.admission = Admission()
 
-    def _pin(self, kept: DataFrame, kind: str) -> DataFrame:
-        """The admitted rows of one add, pinned: the per-type frames built
-        from them outlive the key spaces' row pins. The pin evaluates every
-        anti-join of this call, so the earlier calls' row pins have fed the
-        key pins they back."""
-        kept = materialize(kept)
+    def _add(self, admitted: DataFrame, kind: str) -> None:
+        """Add one call's admitted rows, pinned: the per-type frames (lazy
+        filters of the pin) outlive the key spaces' row pins. The one
+        aggregate of :func:`writer.base.property_layouts` fills the pin and
+        so evaluates every anti-join of this call before the earlier calls'
+        row pins are released. A type's columns are its layout's key union,
+        as the reference's ``json_normalize`` keeps."""
+        kept = materialize_lazily(with_key_set(admitted))
+        schema = self.translator.ontology.mapping.extended_schema
+        layouts = property_layouts(kept, kind, schema, self.translator.strict_mode)
         self.admission.release_earlier_row_pins(kind)
-        return kept
-
-    def _prop_types_for(self, label: str, df: DataFrame, kind: str) -> dict:
-        declared = declared_props(self.translator.ontology.mapping.extended_schema, label)
-        if declared:
-            d = dict(declared)
-            if kind == "node":
-                d.setdefault("id", "str")
-                d.setdefault("preferred_id", "str")
-            return d
-        first = df.select(F.map_keys("props").alias("k"), F.map_values("props").alias("v")).head(1)
-        if not first:
-            return {}
-        # the first row's key order anchors the column order (stable for
-        # homogeneous batches), but the INFERRED SET is the key union of
-        # the whole batch — head(1) alone silently and permanently dropped
-        # properties present only on other rows (the reference's PandasKG
-        # json_normalize keeps the union). min(v) picks a deterministic
-        # sample value per extra key for type inference.
-        head_props = dict(zip(first[0]["k"] or [], first[0]["v"] or []))
-        extra = (
-            df.select(F.explode("props").alias("k", "v"))
-            .filter(~F.col("k").isin(*head_props) if head_props else F.lit(True))
-            .groupBy("k")
-            .agg(F.min("v").alias("v"))
-            .collect()
-        )
-        for r in sorted(extra, key=lambda r: r["k"]):
-            head_props[r["k"]] = r["v"]
-        return infer_prop_types(head_props)
+        frames = self._node_frames if kind == "node" else self._edge_frames
+        for label, layout in layouts.items():
+            sub = kept.filter(F.col(LABEL_COL[kind]) == label).drop(SEQ, KEY_SET)
+            typed = _typed_props(sub, layout.key_union())
+            prev = frames.get(label)
+            frames[label] = typed if prev is None else prev.unionByName(typed, allowMissingColumns=True)
 
     def add_nodes(self, nodes: DataFrame) -> None:
-        kept = self._pin(self.admission.nodes(nodes), "node")
-        for label in [r[0] for r in kept.select("node_label").distinct().collect()]:
-            sub = kept.filter(F.col("node_label") == label)
-            typed = _typed_props(sub.drop(SEQ), self._prop_types_for(label, sub, "node"))
-            prev = self._node_frames.get(label)
-            self._node_frames[label] = (
-                typed if prev is None else prev.unionByName(typed, allowMissingColumns=True)
-            )
+        self._add(self.admission.nodes(nodes), "node")
 
     def add_edges(self, edges) -> None:
         """Edges, or a TranslatedEdges whose surviving reified nodes are
@@ -108,14 +84,7 @@ class InMemoryKG(AdmittingSink):
         ran_nodes, edges = self.admission.edges(edges)
         if ran_nodes is not None:
             self.add_nodes(ran_nodes)
-        kept = self._pin(edges, "edge")
-        for label in [r[0] for r in kept.select("relationship_label").distinct().collect()]:
-            sub = kept.filter(F.col("relationship_label") == label)
-            typed = _typed_props(sub.drop(SEQ), self._prop_types_for(label, sub, "edge"))
-            prev = self._edge_frames.get(label)
-            self._edge_frames[label] = (
-                typed if prev is None else prev.unionByName(typed, allowMissingColumns=True)
-            )
+        self._add(edges, "edge")
 
     def get_kg(self) -> dict[str, DataFrame]:
         return {**self._node_frames, **self._edge_frames}

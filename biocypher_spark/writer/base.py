@@ -9,6 +9,10 @@ part files come from one partitioned ``write.text`` job followed by a
 driver-side rename into the reference's ``{Label}-partNNN.csv`` layout
 (:1154-1204), continuing numbering across runs.
 
+Property columns follow one rule, shared with ``inmemory.InMemoryKG``
+(:func:`property_layouts`): declared schema properties win, else the
+first entity's by ``SEQ`` (reference :645-689).
+
 Scale notes:
   * one shuffle per write call (range partition by (label, seq)) regardless
     of label count; ``maxRecordsPerFile`` enforces the reference's
@@ -27,6 +31,7 @@ import re
 import shutil
 import tempfile
 import threading
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
@@ -226,10 +231,7 @@ def infer_prop_types(props: dict[str, Optional[str]]) -> dict[str, str]:
     (/root/reference/biocypher/output/write/_batch_writer.py:672-689)."""
     out = {}
     for k, raw in props.items():
-        if raw is None:
-            out[k] = None
-            continue
-        v = json.loads(raw)
+        v = None if raw is None else json.loads(raw)
         if v is None:
             out[k] = None
         elif isinstance(v, bool):
@@ -244,6 +246,78 @@ def infer_prop_types(props: dict[str, Optional[str]]) -> dict[str, str]:
         else:
             out[k] = "str"
     return out
+
+
+# the label column of NODE_SCHEMA / EDGE_SCHEMA rows, by kind
+LABEL_COL = {"node": "node_label", "edge": "relationship_label"}
+
+
+def declared_layout(schema: dict, label: str, kind: str, strict: bool) -> Optional[dict]:
+    """The property dict of a label whose schema class declares its
+    properties (None: it declares none): the declared ones, a node's ``id``
+    and ``preferred_id`` as ``str``, and in strict mode ``source`` /
+    ``version`` / ``licence`` (reference
+    ``biocypher/output/write/_batch_writer.py:645-671``)."""
+    cprops = declared_props(schema, label)
+    if not cprops:
+        return None
+    d = dict(cprops)
+    if kind == "node":
+        d["id"] = d["preferred_id"] = "str"
+    if strict:
+        d.update(source="str", version="str", licence="str")
+    return d
+
+
+@dataclass
+class LabelProps:
+    """One label's properties in one sink call. ``types`` (key -> type
+    name, in column order) is the batch writer's layout: the declared one
+    (:func:`declared_layout`), else inferred from the label's first entity
+    by ``SEQ``. ``firsts`` holds the first row (key -> JSON value) of each
+    key set the label's rows carry, in ``SEQ`` order."""
+
+    types: dict
+    firsts: list[dict]
+
+    def key_union(self) -> dict:
+        """``types`` plus every other key the rows carry, in key order, each
+        typed from its first carrier by ``SEQ``."""
+        carriers: dict = {}
+        for row in reversed(self.firsts):
+            carriers.update(row)
+        return {**self.types, **infer_prop_types({k: carriers[k] for k in sorted(carriers.keys() - self.types.keys())})}
+
+
+KEY_SET = "_key_set"
+
+
+def with_key_set(rows: DataFrame) -> DataFrame:
+    """``rows`` with their sorted property keys as ``KEY_SET`` (a NULL props
+    map: the empty set), which :func:`property_layouts` groups by. Add it
+    before pinning the rows: an aggregate grouped by an expression over a
+    pinned input runs 1-2 more jobs when that input is empty."""
+    return rows.withColumn(KEY_SET, F.sort_array(F.map_keys(F.coalesce(F.col("props"), F.create_map()))))
+
+
+def property_layouts(rows: DataFrame, kind: str, schema: dict, strict: bool) -> dict[str, LabelProps]:
+    """The :class:`LabelProps` of each label of ``rows`` (a call's admitted
+    NODE_SCHEMA / EDGE_SCHEMA rows, :func:`with_key_set`), in order of first
+    arrival. One aggregate, collected once: a group per (label, key set)
+    holds its first row by ``SEQ`` (the ``min`` of ``struct(SEQ, keys,
+    values)``, a map-side partial combine). Keys and values are collected as
+    arrays because the Python dict of a collected map column does not keep
+    the JVM map order, which is the column order of an inferred layout."""
+    label_col = LABEL_COL[kind]
+    props = F.coalesce(F.col("props"), F.create_map())
+    first = F.min(F.struct(F.col(SEQ), F.map_keys(props).alias("k"), F.map_values(props).alias("v"))).alias("_f")
+    firsts: dict[str, list[dict]] = {}
+    for r in sorted(rows.groupBy(label_col, KEY_SET).agg(first).collect(), key=lambda r: r["_f"][SEQ]):
+        firsts.setdefault(r[label_col], []).append(dict(zip(r["_f"]["k"], r["_f"]["v"])))
+    return {
+        label: LabelProps(declared_layout(schema, label, kind, strict) or infer_prop_types(carriers[0]), carriers)
+        for label, carriers in firsts.items()
+    }
 
 
 def pascal_file_label(label: str) -> str:

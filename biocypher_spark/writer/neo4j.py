@@ -15,6 +15,9 @@ per entity kind. Every write call first admits its rows through the
 writer's ``dedup.Admission``, the step every sink shares: a window over the
 call's rows, then an anti-join against the keys of earlier calls, whose
 caches are filled by the jobs that read them, never by a separate count.
+Property columns follow ``base.property_layouts``, shared with the
+in-memory KG: one aggregate per call, none when every routed label is
+declared and ``validate_props`` is off.
 """
 
 from __future__ import annotations
@@ -35,16 +38,18 @@ from .base import (
     BOOL_TYPES,
     DOUBLE_ARRAY,
     DOUBLE_TYPES,
+    LABEL_COL,
     LONG_ARRAY,
     LONG_TYPES,
     STR_ARRAY,
-    declared_props,
+    declared_layout,
     edge_line_expr,
-    infer_prop_types,
     node_line_expr,
     pascal_file_label,
+    property_layouts,
     require_local_dir,
     schema_class,
+    with_key_set,
     write_part_files,
 )
 
@@ -174,92 +179,42 @@ class Neo4jBatchWriter(AdmittingSink):
             labels = labels[:1]
         return self._array_string(labels)
 
-    # -- property dict resolution -------------------------------------------
+    # -- property layouts ---------------------------------------------------
 
-    def _resolve_prop_dict(self, label: str, first_props: dict, kind: str) -> dict:
-        """Declared schema properties win; else first-entity inference
-        (/root/reference/biocypher/output/write/_batch_writer.py:645-689)."""
-        cprops = declared_props(self.translator.ontology.mapping.extended_schema, label)
-        if cprops:
-            d = dict(cprops)
-            if kind == "node":
-                d["id"] = "str"
-                d["preferred_id"] = "str"
-            if self.strict_mode:
-                d["source"] = "str"
-                d["version"] = "str"
-                d["licence"] = "str"
-        else:
-            d = infer_prop_types(first_props)
-        return d
-
-    def _first_rows_per_label(self, df: DataFrame, label_col: str) -> dict[str, dict]:
-        # min_by aggregation: map-side partial combine, no single-partition
-        # per-label window. Keys/values collected as arrays because the
-        # Python dict conversion of a collected map column does not
-        # preserve the JVM map order.
-        first = F.min_by(
-            F.struct(F.map_keys("props").alias("_k"), F.map_values("props").alias("_v")),
-            F.col(SEQ),
-        )
-        rows = df.groupBy(label_col).agg(first.alias("_f")).collect()
-        return {r[label_col]: dict(zip(r["_f"]["_k"] or [], r["_f"]["_v"] or [])) for r in rows}
-
-    def _validate_consistent_props(self, df: DataFrame, label_col: str, prop_dicts: dict) -> None:
+    def _validate_consistent_props(self, layouts: dict, known: dict) -> None:
         """Reference hard-errors when entities of one label diverge in
-        property-key sets (order-invariant;
-        /root/reference/biocypher/output/write/_batch_writer.py:785-797)."""
-        if not self.validate_props:
-            return
-        # a null props map counts as the EMPTY key set (NODE_SCHEMA's
-        # props is nullable) — without the coalesce the collected _keys row
-        # is None and tuple(None) raises TypeError instead of the intended
-        # consistency ValueError (or a spurious one for all-null labels)
-        keys = F.sort_array(F.map_keys(F.coalesce(F.col("props"), F.create_map())))
-        sets = (
-            df.select(label_col, keys.alias("_keys"))
-            .groupBy(label_col, "_keys")
-            .count()
-            .collect()
-        )
-        per_label: dict[str, set] = {}
-        for r in sets:
-            per_label.setdefault(r[label_col], set()).add(tuple(r["_keys"]))
-        for label, keysets in per_label.items():
-            ref = set(prop_dicts.get(label, {}).keys())
-            for ks in keysets:
-                if set(ks) != ref:
+        property-key sets (order-invariant; reference
+        ``_batch_writer.py:785-797``), checked over ``layouts``' key sets."""
+        for label, layout in layouts.items():
+            ref = set(known.get(label) or layout.types)
+            for row in layout.firsts:
+                if set(row) != ref:
                     raise ValueError(
                         f"At least one entity of class {label} has more or fewer properties "
                         f"than another. Reference properties: {sorted(ref)}, "
-                        f"found: {sorted(ks)}."
+                        f"found: {sorted(row)}."
                     )
-
-    # -- nodes ----------------------------------------------------------------
 
     def _declared_prop_dicts(self, kind: str) -> Optional[dict]:
         """Property dicts of the labels the schema routes as ``kind`` when
         each of them declares its properties — their line expressions then
         need nothing from the data. None when a label would need
         first-entity inference, or when ``validate_props`` needs the
-        per-label probe's collect anyway."""
+        call's key sets anyway."""
         if self.validate_props:
             return None
         schema = self.translator.ontology.mapping.extended_schema
         routed = {cls: conf for cls, conf in schema.items() if to_list(conf.get("input_label"))}
         if kind == "node":
             labels = {cls for cls, conf in routed.items() if conf.get("represented_as") == "node"}
-            known = self.node_property_dict
         else:
             labels = {
                 conf.get("label_as_edge") or cls
                 for cls, conf in routed.items()
                 if conf.get("represented_as") not in (None, "node")
             }
-            known = self.edge_property_dict
-        if not labels or not all(declared_props(schema, label) for label in labels):
-            return None
-        return {label: known.get(label) or self._resolve_prop_dict(label, {}, kind) for label in sorted(labels)}
+        declared = {label: declared_layout(schema, label, kind, self.strict_mode) for label in sorted(labels)}
+        return declared if labels and all(declared.values()) else None
 
     def _write_by_label(
         self,
@@ -278,10 +233,11 @@ class Neo4jBatchWriter(AdmittingSink):
         ``kind``, rows of those labels are written without looking at the
         data first, and a count observed on that write tells whether any
         row carries another label (rel-as-node helper edges, whose role
-        labels come from the data). Only such rows go through the
-        per-label first-row probe, which infers their property types; it
-        is skipped when there are none."""
-        label_col = "node_label" if kind == "node" else "relationship_label"
+        labels come from the data). Only such rows go through
+        :func:`base.property_layouts`, whose one aggregate gives each
+        label's layout and, for ``validate_props``, its key sets; it is
+        skipped when there are none."""
+        label_col = LABEL_COL[kind]
         known = self.node_property_dict if kind == "node" else self.edge_property_dict
         declared = self._declared_prop_dicts(kind)
         if declared is not None:
@@ -292,14 +248,12 @@ class Neo4jBatchWriter(AdmittingSink):
             if not obs.get["other"]:
                 return
             df = df.filter(~hit)
-        df = df.persist()
-        firsts = self._first_rows_per_label(df, label_col)
-        if firsts:
-            prop_dicts = {
-                label: known.get(label) or self._resolve_prop_dict(label, first_props, kind)
-                for label, first_props in firsts.items()
-            }
-            self._validate_consistent_props(df, label_col, prop_dicts)
+        df = with_key_set(df).persist()
+        layouts = property_layouts(df, kind, self.translator.ontology.mapping.extended_schema, self.strict_mode)
+        if layouts:
+            if self.validate_props:
+                self._validate_consistent_props(layouts, known)
+            prop_dicts = {label: layout.types for label, layout in layouts.items()}
             self._write_lines(df, kind, prop_dicts, known, label_string, line_for)
         df.unpersist()
 
@@ -313,13 +267,15 @@ class Neo4jBatchWriter(AdmittingSink):
         line_for: Callable[[str, dict, Column], Column],
     ) -> None:
         """One text job writing each row's line to its label's part files;
-        labels that got rows join ``known`` (their headers are written).
+        labels that got rows join ``known``, whose layouts win over
+        ``prop_dicts`` (their headers are written).
 
         Labels with one layout (property dict, and for edges whether the id
         column is written) share one line expression, which looks their
         label text up in a literal map: each serializer is built and
         compiled once per layout, not once per label."""
-        label_col = "node_label" if kind == "node" else "relationship_label"
+        label_col = LABEL_COL[kind]
+        prop_dicts = {label: known.get(label) or props for label, props in prop_dicts.items()}
         layouts: dict[tuple, list[str]] = {}
         for label, props in prop_dicts.items():
             layout = (tuple(props.items()), kind == "edge" and self._edge_skip_id(label))

@@ -248,9 +248,9 @@ def test_in_memory_add_pins_only_kept_rows(bc, monkeypatch):
     added so far) on every add()."""
     from biocypher_spark import inmemory
 
-    real = inmemory.materialize
+    real = inmemory.materialize_lazily
     pinned = []
-    monkeypatch.setattr(inmemory, "materialize", lambda df: pinned.append(df) or real(df))
+    monkeypatch.setattr(inmemory, "materialize_lazily", lambda df: pinned.append(df) or real(df))
     per_call = []
     for n in (2, 4, 6):
         before = len(pinned)
@@ -499,3 +499,48 @@ def test_in_memory_label_as_edge_uses_declared_props(spark, tmp_path):
     assert dict(bc.get_kg()["INTERACTS_WITH"].dtypes)["score"] == "double"
     bc.write_edges(edges)
     assert "score:double" in open(tmp_path / "INTERACTS_WITH-header.csv").read().split(";")
+
+
+def test_in_memory_strict_mode_keeps_the_writer_columns(spark, tmp_path):
+    """In strict mode a declared label's in-memory columns are the batch
+    writer's header keys, source / licence / version included."""
+    schema = {
+        "protein": {"represented_as": "node", "input_label": "protein", "properties": {"name": "str", "score": "float"}},
+    }
+    bc = BioCypherSpark(spark, output_directory=str(tmp_path), schema=schema, strict_mode=True)
+    nodes = [("p1", "protein", {"name": "x", "score": 1.5, "source": "s", "licence": "l", "version": "1"})]
+    bc.add(nodes)
+    bc.write_nodes(nodes)
+    header = open(tmp_path / "Protein-header.csv").read().split(";")
+    keys = [column.split(":")[0] for column in header[1:-1]]
+    assert {"source", "licence", "version"} <= set(keys)
+    assert sorted(c for c in bc.get_kg()["protein"].columns if c not in ("node_id", "node_label")) == sorted(keys)
+
+
+def test_in_memory_types_from_the_first_entity_by_arrival(spark, schema_path, tmp_path):
+    """An undeclared label's in-memory types come from its first entity by
+    arrival order, as the writer's header does, not from the row the
+    admission shuffle happens to place first: here every later row
+    carries an int where the first carries 1.5."""
+    bc = BioCypherSpark(spark, output_directory=str(tmp_path), schema_config_path=schema_path)
+    nodes = [("m9", "mirna", {"w": 1.5})] + [(f"m{i}", "mirna", {"w": i}) for i in range(9)]
+    bc.add(nodes)
+    bc.write_nodes(nodes)
+    (label,) = bc.get_kg()
+    assert dict(bc.get_kg()[label].dtypes)["w"] == "double"
+    assert "w:double" in open(tmp_path / f"{pascal_file_label(label)}-header.csv").read().split(";")
+
+
+def test_in_memory_edge_call_job_budget(spark, schema_path, tmp_path):
+    """An in-memory add reads its admitted rows' property layouts with one
+    aggregate, not a distinct-label collect plus per-label probes: the
+    second edge call of _THREE_CALLS, which also adds its reified nodes,
+    runs at most 25 Spark jobs (35 with per-label probes)."""
+    bc = BioCypherSpark(spark, output_directory=str(tmp_path), schema_config_path=schema_path)
+    (nodes1, edges1), (nodes2, edges2), _ = _staged_calls(spark)
+    bc.add(nodes1)
+    bc.add(edges1)
+    bc.add(nodes2)
+    _, jobs = spark_jobs(spark, lambda: bc.add(edges2))
+    assert len(jobs) <= 25, len(jobs)
+    assert sorted(r["node_id"] for r in bc.get_kg()["post translational interaction"].collect()) == ["i2"]

@@ -1,5 +1,7 @@
 """Physical-plan quality assertions: broadcast joins, pushdown, codegen."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,8 +22,6 @@ def plan_has(df, *needles: str) -> bool:
 
 def count_shuffles(df) -> int:
     """Number of shuffle exchanges (BroadcastExchange excluded)."""
-    import re
-
     return len(re.findall(r"^\(\d+\) Exchange\b", formatted_plan(df), re.M))
 
 
@@ -72,6 +72,8 @@ def test_extraction_expr_no_python(spark):
     plan = formatted_plan(m)
     assert "MapInPandas" not in plan
     assert "Python" not in plan  # no BatchEvalPython / ArrowEvalPython / MapInArrow node
+    # one scan of the input for both gazetteer labels, not one per label
+    assert len(re.findall(r"^\(\d+\) Range\b", plan, re.M)) == 1
 
 
 _CASE_MAPPING = ("lower(", "upper(", "initcap(")
